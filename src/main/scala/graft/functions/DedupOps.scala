@@ -1785,17 +1785,9 @@ object DedupOps {
     * (same oracle as q62/q115 on purpose: the lifecycle is the thing
     * under test, not new semantics — the q105/q112/q113 pattern). */
   private def ensureLabelLifecycle(s: SparkSession, d: String): String =
-    synchronized {
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/documents.parquet")
-      val tag = s"${Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-labelstream/$tag"
-      if (graft.sinks.Hfs.readString(s, s"$loc/__done").isEmpty) {
-        graft.sinks.Hfs.deleteRecursive(s, loc)
-        val pairs = shingleJaccardPairs(s, d)
-          .select(col("doc_a"), col("doc_b"),
-            greatest(pmod(col("doc_a"), lit(3)), pmod(col("doc_b"), lit(3)))
-              .as("step"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), "labelstream") {
+      loc =>
+        val pairs = labelCutPairs(s, d)
         try {
           def cut(k: Long) = pairs.filter(col("step") === k)
             .select(col("doc_a"), col("doc_b"))
@@ -1806,11 +1798,18 @@ object DedupOps {
           // at-least-once: replay the tail batch; the head must stay
           // identical (it recomputes from the same predecessor)
           graft.sinks.LabelSink.writer(loc)(cut(2), 2L)
-          graft.sinks.Hfs.writeString(s, s"$loc/__done", "ok")
         } finally pairs.unpersist(false): Unit
-      }
-      loc
     }
+
+  /** The q41 pair set tagged with its three-cut `step` (an edge lands
+    * in the later of its endpoints' doc_id pmod 3 cuts), persisted for
+    * the label lifecycles' several cut passes — the caller unpersists. */
+  private def labelCutPairs(s: SparkSession, d: String): DataFrame =
+    shingleJaccardPairs(s, d)
+      .select(col("doc_a"), col("doc_b"),
+        greatest(pmod(col("doc_a"), lit(3)), pmod(col("doc_b"), lit(3)))
+          .as("step"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   val dedupLabelsStream: Q = (s, d) =>
     graft.sinks.LabelSink.read(s, ensureLabelLifecycle(s, d))
@@ -1835,17 +1834,9 @@ object DedupOps {
     graft.sinks.LabelSink.read(s, ensureLabelRetractLifecycle(s, d))
 
   private def ensureLabelRetractLifecycle(s: SparkSession, d: String): String =
-    synchronized {
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/documents.parquet")
-      val tag = s"${Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-labelretract/$tag"
-      graft.sinks.StagedLayout.ensure(s, loc)(
-        graft.sinks.Hfs.readString(s, s"$loc/__done").nonEmpty) { stage =>
-        val pairs = shingleJaccardPairs(s, d)
-          .select(col("doc_a"), col("doc_b"),
-            greatest(pmod(col("doc_a"), lit(3)), pmod(col("doc_b"), lit(3)))
-              .as("step"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), "labelretract") {
+      stage =>
+        val pairs = labelCutPairs(s, d)
         try {
           def cut(k: Long) = pairs.filter(col("step") === k)
             .select(col("doc_a"), col("doc_b"))
@@ -1872,9 +1863,7 @@ object DedupOps {
           graft.sinks.LabelSink.compact(s, stage)
           graft.sinks.LabelSink.retract(stage)(
             universe.filter(pmod(col("doc_id"), lit(40)) === 3), 5L)
-          graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
         } finally pairs.unpersist(false): Unit
-      }
     }
 
   /** q151: dup-cluster size histogram — the audit view a dedup run is
@@ -2244,7 +2233,7 @@ object DedupOps {
   /** The shared three-cut substring-index lifecycle state (fold of the
     * first two cuts + a live tail) — q156/q160/q161 all serve from the
     * SAME store, the q62/q111/q151 shared-layout convention applied to
-    * the span family. Idempotent via the __done marker. */
+    * the span family. Built once through [[graft.sinks.Lifecycle]]. */
   private def ensureSubstrLifecycle(s: SparkSession, d: String): String =
     // kind carries the layout version (the __buckets geometry-pin
     // convention): r16 added the persisted `ing` column + tombstone
@@ -2516,10 +2505,7 @@ object DedupOps {
       graft.functions.TextOps.ensureRetractLifecycle(s, d, "substrretract",
         graft.sinks.SubstrIndexSink.writer,
         graft.sinks.SubstrIndexSink.retract,
-        loc => graft.sinks.SubstrIndexSink.compact(s, loc),
-        retract1 = pmod(col("doc_id"), lit(10)) === 3,
-        resurrect = pmod(col("doc_id"), lit(20)) === 3,
-        retract2 = pmod(col("doc_id"), lit(40)) === 3))
+        loc => graft.sinks.SubstrIndexSink.compact(s, loc)))
 
   /** q168: registry RETRACTION — q164's stored eval registry through
     * the same worst retractable state, because eval suites RETIRE
@@ -2542,9 +2528,7 @@ object DedupOps {
           graft.sinks.BenchRegistrySink.writer,
           graft.sinks.BenchRegistrySink.retract,
           loc => graft.sinks.BenchRegistrySink.compact(s, loc),
-          retract1 = pmod(col("doc_id"), lit(4)) === 1,
-          resurrect = pmod(col("doc_id"), lit(8)) === 1,
-          retract2 = pmod(col("doc_id"), lit(16)) === 1)),
+          graft.sinks.Lifecycle.halvingMasks(col("doc_id"), 4, 1))),
       train, 4)._1)
   }
 

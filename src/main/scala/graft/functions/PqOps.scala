@@ -307,17 +307,6 @@ object PqOps {
   private def pqTombstones(s: SparkSession, path: String): DataFrame =
     graft.sinks.IngestSegments.readTombstones(s, s"$path/tomb", "vec_id")
 
-  /** foreachBatch writer: append each micro-batch of (vec_id, v) to the
-    * PQ index keyed by batchId. Pure ingest — admission/dedup belongs
-    * upstream (the LSH index writers); this is the serving-index tail
-    * of that pipeline. Compaction cadence mirrors the other families. */
-  def streamingPqIngestWriter(indexPath: String, compactEvery: Long = 8L)(
-      batch: DataFrame, batchId: Long): Unit = {
-    ingestPqSegment(batch, indexPath, batchId)
-    if (batchId % compactEvery == (compactEvery - 1))
-      compactPqIndex(batch.sparkSession, indexPath)
-  }
-
   /** Fold old code segments (latest ingest wins per vec_id), keeping
     * the cell partitioning — the IngestSegments contract bounds file
     * count after thousands of micro-batches. */
@@ -761,25 +750,17 @@ object PqOps {
     * streaming segments encoded against the frozen model, and
     * compaction folds bootstrap+cut1 while cut 2 stays the replayable
     * tail — the worst readable state, which the probe must read
-    * correctly. Same fixture-tag + __done gating as
-    * [[graft.functions.SimilarityOps.ensureAnnLshLifecycle]] (torn
-    * builds are cleared and rebuilt, never served). */
+    * correctly. Built and published by [[graft.sinks.Lifecycle]]
+    * (torn builds are cleared and rebuilt, never served). */
   private def ensurePqLifecycle(s: SparkSession, d: String): String =
-    synchronized {
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-stream/" +
-        s"${SimilarityOps.sourceTag(s, d, "embeddings")}-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters-v2ing"
-      if (graft.sinks.Hfs.readString(s, s"$path/__done").isEmpty) {
-        graft.sinks.Hfs.deleteRecursive(s, path)
-        val emb = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
-        buildPqIndex(cut(0), path, pqIters = DefaultPqIters, trainOn = Some(emb))
-        ingestPqSegment(cut(1), path, 0L)
-        ingestPqSegment(cut(2), path, 1L)
-        compactPqIndex(s, path) // folds bootstrap + cut 1; 2 stays the tail
-        graft.sinks.Hfs.writeString(s, s"$path/__done", "ok")
-      }
-      path
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "ivfpq-stream",
+        s"-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters-v2ing") { path =>
+      val emb = SimilarityOps.annVectors(s, d)
+      def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
+      buildPqIndex(cut(0), path, pqIters = DefaultPqIters, trainOn = Some(emb))
+      ingestPqSegment(cut(1), path, 0L)
+      ingestPqSegment(cut(2), path, 1L)
+      compactPqIndex(s, path) // folds bootstrap + cut 1; 2 stays the tail
     }
 
   @volatile private var pqStreamOracleState: Option[PqOracleModel] = None
@@ -805,24 +786,18 @@ object PqOps {
     * (tombstoned codes drop, the side table keeps its tombstones),
     * then a final live-tail retraction of the ≡ 3 (mod 40) quarter. */
   private def ensurePqRetractLifecycle(s: SparkSession, d: String): String =
-    synchronized {
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-retract/" +
-        s"${SimilarityOps.sourceTag(s, d, "embeddings")}-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters"
-      graft.sinks.StagedLayout.ensure(s, path)(
-        graft.sinks.Hfs.readString(s, s"$path/__done").nonEmpty) { stage =>
-        val emb = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
-        buildPqIndex(cut(0), stage, pqIters = DefaultPqIters, trainOn = Some(emb))
-        ingestPqSegment(cut(1), stage, 0L)
-        ingestPqSegment(cut(2), stage, 1L)
-        compactPqIndex(s, stage)
-        retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(10)) === 3), 2L)
-        ingestPqSegment(emb.filter(pmod(col("vec_id"), lit(20)) === 3), stage, 3L)
-        compactPqIndex(s, stage)
-        retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(40)) === 3), 4L)
-        graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
-      }
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "ivfpq-retract",
+        s"-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters") { stage =>
+      val emb = SimilarityOps.annVectors(s, d)
+      def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
+      buildPqIndex(cut(0), stage, pqIters = DefaultPqIters, trainOn = Some(emb))
+      ingestPqSegment(cut(1), stage, 0L)
+      ingestPqSegment(cut(2), stage, 1L)
+      compactPqIndex(s, stage)
+      retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(10)) === 3), 2L)
+      ingestPqSegment(emb.filter(pmod(col("vec_id"), lit(20)) === 3), stage, 3L)
+      compactPqIndex(s, stage)
+      retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(40)) === 3), 4L)
     }
 
   @volatile private var pqRetractOracleState: Option[PqOracleModel] = None

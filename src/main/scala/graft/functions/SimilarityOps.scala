@@ -382,34 +382,31 @@ object SimilarityOps {
   }
 
   /** The three-cut fold+tail lifecycle state for q105, built once per
-    * fixture generation (the ensureCutLifecycle pattern of q102/q103:
-    * tag = fixture (len, mtime) so regeneration rebuilds; __done-gated
-    * so a torn build never serves). Cuts by pmod(vec_id, 3) — each
-    * vector in exactly one ingest. All three segments are written
-    * FIRST, then compacted: IngestSegments' contract keeps the newest
-    * batch id replayable and folds the rest, so the post-compact state
-    * is fold(cuts 0+1) + live tail(cut 2) — the worst readable state,
-    * which the q105 probe must read correctly. */
+    * fixture generation through [[graft.sinks.Lifecycle]] (the
+    * ensureCutLifecycle pattern of q102/q103). Cuts by pmod(vec_id, 3)
+    * — each vector in exactly one ingest. All three segments are
+    * written FIRST, then compacted: IngestSegments' contract keeps the
+    * newest batch id replayable and folds the rest, so the post-compact
+    * state is fold(cuts 0+1) + live tail(cut 2) — the worst readable
+    * state, which the q105 probe must read correctly. */
   private def ensureAnnLshLifecycle(s: SparkSession, d: String,
-      bits: Int): String = synchronized {
+      bits: Int): String =
     // -v2ing: r16 added the persisted logical `ing` column (tombstone
     // convention) — a pre-r16 layout must rebuild, not feed the probe
     // a schema without it
-    val path =
-      s"${sys.props("java.io.tmpdir")}/graft-annlsh-stream/${sourceTag(s, d, "embeddings")}-b$bits-v2ing"
-    if (graft.sinks.Hfs.readString(s, s"$path/__done").isEmpty) {
-      graft.sinks.Hfs.deleteRecursive(s, path)
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "annlsh-stream",
+        s"-b$bits-v2ing") { path =>
+      val emb = annVectors(s, d)
       def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
       ingestAnnSegment(cut(0), path, 0L, bits)
       ingestAnnSegment(cut(1), path, 1L, bits)
       ingestAnnSegment(cut(2), path, 2L, bits)
       compactAnnLshIndex(s, path) // folds ingests 0+1; 2 stays the tail
-      graft.sinks.Hfs.writeString(s, s"$path/__done", "ok")
     }
-    path
-  }
+
+  private[functions] def annVectors(s: SparkSession, d: String): DataFrame =
+    t(s, d, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** q105: q38's answer through the ingest lifecycle — the probe over
     * the folded+tail segment state must hash-equal the one-shot batch
@@ -424,36 +421,20 @@ object SimilarityOps {
   }
 
   /** The ANN retraction lifecycle — q105's worst retractable state
-    * (the q167 convention applied to vectors): three ingest cuts with
-    * a mid-lifecycle fold, retract vec ≡ 3 (mod 10), resurrect the
+    * (the q167 convention applied to vectors, through the shared
+    * [[graft.sinks.Lifecycle.retractCuts]] script): three ingest cuts
+    * with a mid-lifecycle fold, retract vec ≡ 3 (mod 10), resurrect the
     * ≡ 3 (mod 20) half, fold again (tombstoned versions drop, the side
     * table's tombstones survive with their logical ing), then a final
-    * live-tail retraction of the ≡ 3 (mod 40) quarter. Built once per
-    * fixture via the StagedLayout publish. */
+    * live-tail retraction of the ≡ 3 (mod 40) quarter. */
   private def ensureAnnLshRetractLifecycle(s: SparkSession, d: String,
-      bits: Int): String = synchronized {
-    val path =
-      s"${sys.props("java.io.tmpdir")}/graft-annlsh-retract/${sourceTag(s, d, "embeddings")}-b$bits"
-    graft.sinks.StagedLayout.ensure(s, path)(
-      graft.sinks.Hfs.readString(s, s"$path/__done").nonEmpty) { stage =>
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
-      ingestAnnSegment(cut(0), stage, 0L, bits)
-      ingestAnnSegment(cut(1), stage, 1L, bits)
-      ingestAnnSegment(cut(2), stage, 2L, bits)
-      // after THREE ingests, so the fold is real (IngestSegments keeps
-      // the max batch id as the replayable tail: a compact after two
-      // would fold nothing — folded = {0}, size 1, early return)
-      compactAnnLshIndex(s, stage)
-      retractAnnVecs(stage)(emb.filter(pmod(col("vec_id"), lit(10)) === 3), 3L)
-      ingestAnnSegment(
-        emb.filter(pmod(col("vec_id"), lit(20)) === 3), stage, 4L, bits)
-      compactAnnLshIndex(s, stage)
-      retractAnnVecs(stage)(emb.filter(pmod(col("vec_id"), lit(40)) === 3), 5L)
-      graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
-    }
-  }
+      bits: Int): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "annlsh-retract",
+      s"-b$bits")(graft.sinks.Lifecycle.retractCuts(annVectors(s, d),
+        col("vec_id"),
+        stage => (df, id) => ingestAnnSegment(df, stage, id, bits),
+        retractAnnVecs, compactAnnLshIndex(s, _),
+        graft.sinks.Lifecycle.halvingMasks(col("vec_id"))))
 
   /** q169: retraction through the ANN ingest lifecycle — a vector
     * deleted upstream must leave the index (the probe must NEVER

@@ -958,10 +958,7 @@ object TextOps {
       ensureRetractLifecycle(s, d, "vocabretract",
         graft.sinks.VocabSink.writer,
         graft.sinks.VocabSink.retract,
-        loc => graft.sinks.VocabSink.compact(s, loc),
-        retract1 = pmod(col("doc_id"), lit(10)) === 3,
-        resurrect = pmod(col("doc_id"), lit(20)) === 3,
-        retract2 = pmod(col("doc_id"), lit(40)) === 3)), 200)
+        loc => graft.sinks.VocabSink.compact(s, loc))), 200)
 
   /** q103: the live PHRASE INVERTED INDEX ≡ the q65 batch build through
     * the same three-cut lifecycle as q102. Since r17 the store is a
@@ -993,10 +990,7 @@ object TextOps {
       ensureRetractLifecycle(s, d, "phraseretract",
         graft.sinks.PhraseIndexSink.writer,
         graft.sinks.PhraseIndexSink.retract,
-        loc => graft.sinks.PhraseIndexSink.compact(s, loc),
-        retract1 = pmod(col("doc_id"), lit(10)) === 3,
-        resurrect = pmod(col("doc_id"), lit(20)) === 3,
-        retract2 = pmod(col("doc_id"), lit(40)) === 3), minDf = 3L)
+        loc => graft.sinks.PhraseIndexSink.compact(s, loc)), minDf = 3L)
 
   /** q174: RETRACTION through the source-stats lifecycle, served as
     * the q84 mixture PLAN — the dataset-card decision a retired
@@ -1010,10 +1004,7 @@ object TextOps {
       ensureRetractLifecycle(s, d, "sourcestatsretract",
         graft.sinks.SourceStatsSink.writer,
         graft.sinks.SourceStatsSink.retract,
-        loc => graft.sinks.SourceStatsSink.compact(s, loc),
-        retract1 = pmod(col("doc_id"), lit(10)) === 3,
-        resurrect = pmod(col("doc_id"), lit(20)) === 3,
-        retract2 = pmod(col("doc_id"), lit(40)) === 3), 1000000L)
+        loc => graft.sinks.SourceStatsSink.compact(s, loc)), 1000000L)
 
   /** Build (once per fixture generation) a three-cut streaming-sink
     * lifecycle state over the documents table: batches 0/1 written,
@@ -1025,81 +1016,39 @@ object TextOps {
     * max batch id out, so folded = {0} early-returns; the row-store
     * fold+tail road is exercised by [[ensureRetractLifecycle]]'s
     * three-then-compact order and by the per-store specs instead.
-    * Tagged by the documents fixture's (len, mtime) so a regenerated
-    * fixture rebuilds instead of serving stale counts; a crashed prior
-    * attempt (no __done marker) is cleared and redone — every write is
-    * marker-gated, so a torn state never serves. */
+    * Tagged by the documents fixture and published by
+    * [[graft.sinks.Lifecycle]], so a regenerated fixture rebuilds
+    * instead of serving stale counts and a torn state never serves. */
   private[graft] def ensureCutLifecycle(s: SparkSession, d: String, kind: String,
       writer: String => (DataFrame, Long) => Unit,
       compact: String => Unit): String =
-    synchronized {
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/documents.parquet")
-      val tag =
-        s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-$kind/$tag"
-      // stage-then-rename (StagedLayout): the whole fold+tail state is
-      // built privately and published atomically, so a concurrent
-      // driver can never read (or interleave writes into) a
-      // half-built lifecycle — the same-input builds are deterministic,
-      // a lost race serves the winner's identical copy
-      graft.sinks.StagedLayout.ensure(s, loc)(
-        graft.sinks.Hfs.readString(s, s"$loc/__done").nonEmpty) { stage =>
-        val docs = t(s, d, "documents")
-        def cut(b: Long) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        writer(stage)(cut(0), 0L)
-        writer(stage)(cut(1), 1L)
-        compact(stage)
-        writer(stage)(cut(2), 2L)
-        graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
-      }
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), kind) { stage =>
+      val docs = t(s, d, "documents")
+      def cut(b: Long) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
+      writer(stage)(cut(0), 0L)
+      writer(stage)(cut(1), 1L)
+      compact(stage)
+      writer(stage)(cut(2), 2L)
     }
 
   /** The retraction lifecycle twin of [[ensureCutLifecycle]] — the
-    * worst RETRACTABLE state a store can serve from: three ingest
-    * cuts, a compaction AFTER the third (after only two it folds
-    * nothing — IngestSegments keeps the max batch id as the replayable
-    * tail, so folded = {0} early-returns; the r16 review caught the
-    * two-then-compact order claiming a fold it never built), then a
-    * retraction batch, a resurrection batch (a retracted slice
-    * re-ingested — the CDC insert-after-delete), a SECOND compaction
-    * (so tombstones cross a fold boundary: dead rows dropped,
-    * tombstones carried with their logical `ing`), and a final
-    * retraction left LIVE in the tail (so the read-time resolve must
-    * mask fold rows and re-kill a resurrected doc). Batches: 0/1/2
-    * ingest cuts (pmod 3), compact, 3 = retract(`retract1`), 4 =
-    * re-ingest(`resurrect` — MUST be ⊆ retract1: re-ingesting a live
-    * doc would violate the one-doc-one-admission contract and
-    * double-count additive partials), compact, 5 =
-    * retract(`retract2`); additive sub-stores then serve a fold PLUS
-    * live partial tails (batches 3+), so the merged read is exercised
-    * on both store kinds. Same tag/__done idempotence and StagedLayout
-    * publish as the plain lifecycle. */
+    * worst RETRACTABLE state a store can serve from
+    * ([[graft.sinks.Lifecycle.retractCuts]]: three ingest cuts by
+    * doc_id, compact, retract(`retract1`), re-ingest(`resurrect`),
+    * compact, live-tail retract(`retract2`) — by default q167's doc_id
+    * ≡ 3 mod 10/20/40 masks); additive sub-stores then serve a fold
+    * PLUS live partial tails (batches 3+), so the merged read is
+    * exercised on both store kinds. */
   private[graft] def ensureRetractLifecycle(s: SparkSession, d: String,
       kind: String,
       writer: String => (DataFrame, Long) => Unit,
       retractor: String => (DataFrame, Long) => Unit,
       compact: String => Unit,
-      retract1: Column, resurrect: Column, retract2: Column): String =
-    synchronized {
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/documents.parquet")
-      val tag =
-        s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-$kind/$tag"
-      graft.sinks.StagedLayout.ensure(s, loc)(
-        graft.sinks.Hfs.readString(s, s"$loc/__done").nonEmpty) { stage =>
-        val docs = t(s, d, "documents")
-        def cut(b: Long) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        writer(stage)(cut(0), 0L)
-        writer(stage)(cut(1), 1L)
-        writer(stage)(cut(2), 2L)
-        compact(stage)
-        retractor(stage)(docs.filter(retract1), 3L)
-        writer(stage)(docs.filter(resurrect), 4L)
-        compact(stage)
-        retractor(stage)(docs.filter(retract2), 5L)
-        graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
-      }
-    }
+      masks: (Column, Column, Column) =
+        graft.sinks.Lifecycle.halvingMasks(col("doc_id"))): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), kind)(
+      graft.sinks.Lifecycle.retractCuts(t(s, d, "documents"), col("doc_id"),
+        writer, retractor, compact, masks))
 
   /** Unigram-LM quality score (q88) — the cheap statistical tier of the
     * CCNet/Gopher-style quality cascade: score every document by its

@@ -459,16 +459,11 @@ object Analytics {
     * batch 2 as the replayable tail and folds 0+1 — writing all three
     * BEFORE the compact is load-bearing, the r16 lifecycle-order
     * lesson), then batch 2 REPLAYED (idempotence under the same gate).
-    * Tagged by the events fixture's (len, mtime); a crashed prior
-    * attempt (no __done marker) is cleared and redone. */
+    * Tagged by the events fixture and published by
+    * [[graft.sinks.Lifecycle]]. */
   private def ensureEventCutLifecycle(s: SparkSession, d: String,
-      kind: String): String = synchronized {
-    val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/events.parquet")
-    val tag =
-      s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-    val loc = s"${sys.props("java.io.tmpdir")}/graft-$kind/$tag"
-    if (graft.sinks.Hfs.readString(s, s"$loc/__done").isEmpty) {
-      graft.sinks.Hfs.deleteRecursive(s, loc)
+      kind: String): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("events"), kind) { loc =>
       val ev = t(s, d, "events")
       def cut(b: Long) = ev.filter(pmod(col("event_id"), lit(3)) === b)
       val w = graft.sinks.RetentionSink.writer(loc)(_, _)
@@ -477,10 +472,7 @@ object Analytics {
       w(cut(2), 2L)
       graft.sinks.RetentionSink.compact(s, loc) // folds 0+1, 2 = tail
       w(cut(2), 2L) // at-least-once replay of the live tail
-      graft.sinks.Hfs.writeString(s, s"$loc/__done", "ok")
     }
-    loc
-  }
 
   /** q175: USER-level retraction through the retention store — the
     * GDPR-shaped request (the reference's user_info dim CDC delete,
@@ -520,37 +512,18 @@ object Analytics {
     * ingestable frame (raw events, or batch-built sessions), cut into
     * three batches by `cutCol` pmod 3 — a USER's rows straddle every
     * cut on purpose; these stores' set semantics never needed the
-    * one-key-one-batch admission contract — then compact (fold of
-    * 0+1 + tail), retract users ≡ 3 (mod 10), re-ingest ALL rows of
-    * the ≡ 3 (mod 20) half (must be ⊆ the retracted set: resurrection
-    * is insert-after-delete), compact again, and a final live-tail
-    * retraction of ≡ 3 (mod 40). Masks match q167's, applied to
-    * user_id. Same (len, mtime) tag + __done idempotence + StagedLayout
-    * publish as every cut lifecycle. */
+    * one-key-one-batch admission contract — through the shared
+    * [[graft.sinks.Lifecycle.retractCuts]] script with q167's masks
+    * applied to user_id (retract ≡ 3 mod 10, re-ingest ALL rows of the
+    * ≡ 3 mod 20 half, live-tail re-retract ≡ 3 mod 40). */
   private def ensureUserRetractLifecycle(s: SparkSession, d: String,
       kind: String, rows: => DataFrame, cutCol: Column,
       writer: String => (DataFrame, Long) => Unit,
       retractor: String => (DataFrame, Long) => Unit,
-      compact: String => Unit): String = synchronized {
-    val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/events.parquet")
-    val tag =
-      s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-    val loc = s"${sys.props("java.io.tmpdir")}/graft-$kind/$tag"
-    graft.sinks.StagedLayout.ensure(s, loc)(
-      graft.sinks.Hfs.readString(s, s"$loc/__done").nonEmpty) { stage =>
-      val r = rows
-      def cut(b: Long) = r.filter(pmod(cutCol, lit(3)) === b)
-      writer(stage)(cut(0), 0L)
-      writer(stage)(cut(1), 1L)
-      writer(stage)(cut(2), 2L)
-      compact(stage)
-      retractor(stage)(r.filter(pmod(col("user_id"), lit(10)) === 3), 3L)
-      writer(stage)(r.filter(pmod(col("user_id"), lit(20)) === 3), 4L)
-      compact(stage)
-      retractor(stage)(r.filter(pmod(col("user_id"), lit(40)) === 3), 5L)
-      graft.sinks.Hfs.writeString(s, s"$stage/__done", "ok")
-    }
-  }
+      compact: String => Unit): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("events"), kind)(
+      graft.sinks.Lifecycle.retractCuts(rows, cutCol, writer, retractor,
+        compact, graft.sinks.Lifecycle.halvingMasks(col("user_id"))))
 
   /** q121: ordered funnel over the event stream — per user, a click
     * counts only AFTER a view, a purchase only after such a click (the
@@ -689,7 +662,7 @@ object Analytics {
     * exactly; same-ts groups cannot straddle cuts out of order because
     * the cut key IS the total order. Batch 1's sink write is issued
     * twice (at-least-once replay), and the store is compacted before
-    * __done. */
+    * the state is marked complete. */
   private def ensureTransitionLifecycle(s: SparkSession, d: String): String =
     // delay is NOT zero: with delay=0 a same-ts group straddling a cut
     // boundary would sit exactly ON the next batch's watermark, where
@@ -697,81 +670,81 @@ object Analytics {
     // tie survives — 1 hour of slack keeps every cut-N event strictly
     // inside the admission line, and the sentinels' +1/+2 days still
     // flush everything (shared by all four sequence lifecycles)
-    ensureOrderedFeedLifecycle(s, d, "transstream") { (feed, loc, schema) =>
-      runSeqLifecycle(s, feed, loc, schema)(ds =>
-        graft.streaming.Streams.transitionPairs(ds, delay = "1 hour").toDF())(
-        graft.sinks.TransitionSink.writer, graft.sinks.TransitionSink.compact)
-    }
+    ensureOrderedFeedLifecycle(s, d, "transstream")(ds =>
+      graft.streaming.Streams.transitionPairs(ds, delay = "1 hour").toDF())(
+      graft.sinks.TransitionSink.writer, graft.sinks.TransitionSink.compact)
 
   /** Stages (once per fixture generation) the shared ordered-feed
-    * lifecycle state and hands the staged feed to the operator-specific
-    * `run` — which must stream it into `loc`/store (see
+    * lifecycle state, streams the staged feed through the
+    * operator-specific `op` into `writer`'s store — duplicating batch
+    * 1's write (at-least-once) — and compacts it (see
     * [[ensureTransitionLifecycle]] / [[ensureFunnelLifecycle]]).
     * Returns the store path. */
   private def ensureOrderedFeedLifecycle(s: SparkSession, d: String,
       kind: String, project: DataFrame => DataFrame = identity)(
-      run: (String, String, org.apache.spark.sql.types.StructType) => Unit)
-      : String =
-    synchronized {
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/events.parquet")
-      val tag =
-        s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${len}_$mtime"
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-$kind/$tag"
-      // NOT on StagedLayout (unlike the cut lifecycles): this build
-      // runs REAL checkpointed streams whose offset logs embed the
-      // feed's absolute path — publishable by rename only because
-      // nothing ever resumes them, a subtlety not worth the coupling.
-      // Cross-driver torn-read residual = the Bucketing lifecycles'
-      // (delete-then-rebuild under a per-JVM lock, __done-gated).
-      if (graft.sinks.Hfs.readString(s, s"$loc/__done").isEmpty) {
-        graft.sinks.Hfs.deleteRecursive(s, loc)
-        val feed = s"$loc/__feed"
-        graft.sinks.Hfs.mkdirs(s, feed)
-        val ev = project(t(s, d, "events")).filter(col("ts").isNotNull)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-        val cutW = Window.orderBy(col("ts"), col("event_id"))
-        // ntile over the total order → three contiguous, ordered cuts.
-        // The single-partition window is lifecycle HARNESS cost, not
-        // operator cost (it stages the fixture into arrival order once
-        // per generation); production arrival order comes from the
-        // source.
-        val cut = ev.withColumn("__cut", ntile(3).over(cutW))
-        def sentinel(uid: Long, plusMs: Long) = {
-          import s.implicits._
-          Seq((uid, new java.sql.Timestamp(maxTs.getTime + plusMs),
-            // "heartbeat" is outside every sequence operator's alphabet:
-            // the funnel fold must no-op it (a "view" would open step 1
-            // for the synthetic user); the pair fold never cared (a
-            // single-event user emits no pair whatever its type)
-            -1L, "heartbeat")).toDF("user_id", "ts", "event_id", "event_type")
-        }
-        val chunks = (1 to 3).map(i =>
-          cut.filter(col("__cut") === i).drop("__cut")
-            .sortWithinPartitions(col("ts"), col("event_id"))) ++
-          Seq(sentinel(-1L, 86400000L), sentinel(-2L, 172800000L))
-        // staging through Hfs like every sink path (a bare java.io.File
-        // listing silently returns empty on a non-local default FS, and
-        // an assert-wrapped setLastModified is elided under
-        // -Xdisable-assertions — scrambling the arrival order instead
-        // of failing loudly)
-        chunks.zipWithIndex.foreach { case (df, i) =>
-          val stage = s"$loc/__stage$i"
-          df.coalesce(1).write.parquet(stage)
-          val part = graft.sinks.Hfs.childFiles(s, stage)
-            .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-            .head
-          val target = f"$feed/c$i%02d.parquet"
-          graft.sinks.Hfs.rename(s, s"$stage/$part", target)
-          // the file source orders its backlog by mtime — pin it
-          graft.sinks.Hfs.setMtime(s, target, 1000000000000L + i * 60000L)
-          graft.sinks.Hfs.deleteRecursive(s, stage)
-        }
-        run(feed, loc, ev.schema)
-        graft.sinks.Hfs.writeString(s, s"$loc/__done", "ok")
+      op: org.apache.spark.sql.Dataset[graft.streaming.Streams.TransEvent]
+        => DataFrame)(
+      writer: String => (DataFrame, Long) => Unit,
+      compact: (SparkSession, String) => Unit): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("events"), kind) { loc =>
+      val feed = s"$loc/__feed"
+      graft.sinks.Hfs.mkdirs(s, feed)
+      val ev = project(t(s, d, "events")).filter(col("ts").isNotNull)
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
+      val cutW = Window.orderBy(col("ts"), col("event_id"))
+      // ntile over the total order → three contiguous, ordered cuts.
+      // The single-partition window is lifecycle HARNESS cost, not
+      // operator cost (it stages the fixture into arrival order once
+      // per generation); production arrival order comes from the
+      // source.
+      val cut = ev.withColumn("__cut", ntile(3).over(cutW))
+      def sentinel(uid: Long, plusMs: Long) = {
+        import s.implicits._
+        Seq((uid, new java.sql.Timestamp(maxTs.getTime + plusMs),
+          // "heartbeat" is outside every sequence operator's alphabet:
+          // the funnel fold must no-op it (a "view" would open step 1
+          // for the synthetic user); the pair fold never cared (a
+          // single-event user emits no pair whatever its type)
+          -1L, "heartbeat")).toDF("user_id", "ts", "event_id", "event_type")
       }
-      s"$loc/store"
-    }
+      val chunks = (1 to 3).map(i =>
+        cut.filter(col("__cut") === i).drop("__cut")
+          .sortWithinPartitions(col("ts"), col("event_id"))) ++
+        Seq(sentinel(-1L, 86400000L), sentinel(-2L, 172800000L))
+      // staging through Hfs like every sink path (a bare java.io.File
+      // listing silently returns empty on a non-local default FS, and
+      // an assert-wrapped setLastModified is elided under
+      // -Xdisable-assertions — scrambling the arrival order instead
+      // of failing loudly)
+      chunks.zipWithIndex.foreach { case (df, i) =>
+        val stage = s"$loc/__stage$i"
+        df.coalesce(1).write.parquet(stage)
+        val part = graft.sinks.Hfs.childFiles(s, stage)
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+          .head
+        val target = f"$feed/c$i%02d.parquet"
+        graft.sinks.Hfs.rename(s, s"$stage/$part", target)
+        // the file source orders its backlog by mtime — pin it
+        graft.sinks.Hfs.setMtime(s, target, 1000000000000L + i * 60000L)
+        graft.sinks.Hfs.deleteRecursive(s, stage)
+      }
+      val q = op(
+        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
+          .parquet(feed)
+          .as[graft.streaming.Streams.TransEvent](
+            org.apache.spark.sql.Encoders.product))
+        .writeStream
+        .option("checkpointLocation", s"$loc/__ckpt")
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          writer(s"$loc/store")(batch, bid)
+          if (bid == 1L) // at-least-once: duplicate one delivery
+            writer(s"$loc/store")(batch, bid)
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      compact(s, s"$loc/store")
+    } + "/store"
 
   /** q140: the LIVE funnel ≡ the q121 batch answer, through the same
     * stateful ordered-replay engine as q133 ([[graft.streaming.Streams
@@ -797,11 +770,9 @@ object Analytics {
     * its synthetic user and shifted n_view by two; q133 never cared
     * because a single-event user emits no pair either way). */
   private def ensureFunnelLifecycle(s: SparkSession, d: String): String =
-    ensureOrderedFeedLifecycle(s, d, "funnelstream") { (feed, loc, schema) =>
-      runSeqLifecycle(s, feed, loc, schema)(ds =>
-        graft.streaming.Streams.funnelAdvance(ds, delay = "1 hour").toDF())(
-        graft.sinks.FunnelSink.writer, graft.sinks.FunnelSink.compact)
-    }
+    ensureOrderedFeedLifecycle(s, d, "funnelstream")(ds =>
+      graft.streaming.Streams.funnelAdvance(ds, delay = "1 hour").toDF())(
+      graft.sinks.FunnelSink.writer, graft.sinks.FunnelSink.compact)
 
   /** q144: the LIVE dwell report — q138's gap set produced by the
     * dwellPairs fold (transitionPairs carrying time: the buffer holds
@@ -813,11 +784,9 @@ object Analytics {
     * dwell — an event count is the q02 scan, not dwell state). */
   val dwellStream: Q = (s, d) => {
     val pairs = graft.sinks.DwellSink.read(s,
-      ensureOrderedFeedLifecycle(s, d, "dwellstream") { (feed, loc, schema) =>
-        runSeqLifecycle(s, feed, loc, schema)(ds =>
-          graft.streaming.Streams.dwellPairs(ds, delay = "1 hour").toDF())(
-          graft.sinks.DwellSink.writer, graft.sinks.DwellSink.compact)
-      })
+      ensureOrderedFeedLifecycle(s, d, "dwellstream")(ds =>
+        graft.streaming.Streams.dwellPairs(ds, delay = "1 hour").toDF())(
+        graft.sinks.DwellSink.writer, graft.sinks.DwellSink.compact))
     pairs.groupBy(col("from_type"))
       .agg(count(lit(1)).as("n_with_next"),
         // raw quotients, matching dwellTimeOver exactly (q143 class)
@@ -844,42 +813,13 @@ object Analytics {
         .when(col("event_type") === "purchase", lit("purchase"))
         .otherwise(lit("other")))
     val reads = graft.sinks.PitSink.read(s,
-      ensureOrderedFeedLifecycle(s, d, "pitstream", tagged) {
-        (feed, loc, schema) =>
-          runSeqLifecycle(s, feed, loc, schema)(ds =>
-            graft.streaming.Streams.pitReads(ds, delay = "1 hour").toDF())(
-            graft.sinks.PitSink.writer, graft.sinks.PitSink.compact)
-      })
+      ensureOrderedFeedLifecycle(s, d, "pitstream", tagged)(ds =>
+        graft.streaming.Streams.pitReads(ds, delay = "1 hour").toDF())(
+        graft.sinks.PitSink.writer, graft.sinks.PitSink.compact))
     reads.select(col("event_id"), col("user_id"),
       date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd HH:mm:ss")
         .as("purchase_ts"),
       col("state_version"), col("state_k"))
-  }
-
-  /** The shared stream-run step of every ordered-feed lifecycle: start
-    * the operator over the staged feed, duplicate batch 1's write
-    * (at-least-once), compact before __done. */
-  private def runSeqLifecycle(s: SparkSession, feed: String, loc: String,
-      schema: org.apache.spark.sql.types.StructType)(
-      op: org.apache.spark.sql.Dataset[graft.streaming.Streams.TransEvent]
-        => DataFrame)(
-      writer: String => (DataFrame, Long) => Unit,
-      compact: (SparkSession, String) => Unit): Unit = {
-    val q = op(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .as[graft.streaming.Streams.TransEvent](
-          org.apache.spark.sql.Encoders.product))
-      .writeStream
-      .option("checkpointLocation", s"$loc/__ckpt")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        writer(s"$loc/store")(batch, bid)
-        if (bid == 1L) // at-least-once: duplicate one delivery
-          writer(s"$loc/store")(batch, bid)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    compact(s, s"$loc/store")
   }
 
   /** q129: SCD type-2 history build from the CDC stream — each upsert
@@ -1574,12 +1514,10 @@ object Analytics {
     sessionSummaryOf(graft.sinks.SessionSink.read(s,
       // -v2ing: r17 moved the session store to an IngestSegments row
       // store (user-retraction support) — pre-r17 layouts rebuild
-      ensureOrderedFeedLifecycle(s, d, "sessionstream-v2ing") {
-        (feed, loc, schema) =>
-          runSeqLifecycle(s, feed, loc, schema)(ds =>
-            graft.streaming.Streams.sessionAgg(ds, delay = "1 hour"))(
-            graft.sinks.SessionSink.writer, graft.sinks.SessionSink.compact)
-      }).filter(col("user_id") >= 0))
+      ensureOrderedFeedLifecycle(s, d, "sessionstream-v2ing")(ds =>
+        graft.streaming.Streams.sessionAgg(ds, delay = "1 hour"))(
+        graft.sinks.SessionSink.writer, graft.sinks.SessionSink.compact))
+      .filter(col("user_id") >= 0))
 
   /** q148: time-to-convert — for each user completing the q121 funnel,
     * the exact-micro span from their first view to their FIRST

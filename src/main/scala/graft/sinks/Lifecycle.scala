@@ -1,0 +1,92 @@
+package graft.sinks
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The ONE build-once protocol behind every stored ingest lifecycle
+  * (the fold+tail, replay and retraction states the `_stream` and
+  * `_retract` queries serve): a builder supplies only its own
+  * write/compact/retract script, and this object decides the rest.
+  *
+  *  - Location: `<java.io.tmpdir>/graft-<kind>/<tag>`, the tag being the
+  *    sf dir's md5 prefix plus the (len, mtime) of every source table,
+  *    then the builder's layout `variant`. A regenerated fixture gets a
+  *    fresh tag dir, so an old generation is never served.
+  *  - Completeness: the `__done` marker, written LAST, inside the stage.
+  *  - Publication: [[StagedLayout]] stage-then-rename. A build that
+  *    crashes or throws never leaves a served dir, and a torn leftover
+  *    (no `__done`) is cleared and rebuilt. Streams that ran inside the
+  *    stage move with the rename: nothing ever resumes their
+  *    checkpoints, so the absolute feed paths baked into them are inert.
+  *  - One per-JVM monitor serializes builds, so two threads asking for
+  *    the same state run `build` once; cross-process races are
+  *    StagedLayout's (the loser serves the winner's identical copy —
+  *    every script here is input-determined).
+  */
+object Lifecycle {
+
+  /** The served dir of `kind`'s state over `sourceTables` of `d`. */
+  def location(s: SparkSession, d: String, sourceTables: Seq[String],
+      kind: String, variant: String = ""): String = {
+    val stats = sourceTables.map { t =>
+      val (len, mtime) = Hfs.stat(s, s"$d/$t.parquet")
+      s"_${len}_$mtime"
+    }
+    val id = graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)
+    s"${sys.props("java.io.tmpdir")}/graft-$kind/$id${stats.mkString}$variant"
+  }
+
+  /** Ensure `kind`'s state is built and published, returning its
+    * served dir. `build` writes the whole state into the stage dir it
+    * is given. */
+  def ensure(s: SparkSession, d: String, sourceTables: Seq[String],
+      kind: String, variant: String = "")(build: String => Unit): String =
+    synchronized {
+      val loc = location(s, d, sourceTables, kind, variant)
+      StagedLayout.ensure(s, loc)(Hfs.readString(s, s"$loc/__done").nonEmpty) {
+        stage =>
+          build(stage)
+          Hfs.writeString(s, s"$stage/__done", "ok")
+      }
+    }
+
+  /** The worst RETRACTABLE state a store can serve from, shared by the
+    * doc-, user- and vector-keyed retraction lifecycles: `rows` cut into
+    * three ingests by `cutCol` pmod 3, a compaction AFTER the third
+    * (after only two it folds nothing — IngestSegments keeps the max
+    * batch id as the replayable tail, so folded = {0} early-returns),
+    * then retract(`retract1`) as batch 3, re-ingest(`resurrect`) as
+    * batch 4 (the CDC insert-after-delete), a SECOND compaction
+    * (tombstones cross a fold boundary: dead rows dropped, tombstones
+    * carried with their logical `ing`), and a final retract(`retract2`)
+    * left LIVE in the tail as batch 5 (the read-time resolve must mask
+    * fold rows and re-kill a resurrected key). The masks come from
+    * [[halvingMasks]]. */
+  def retractCuts(rows: => DataFrame, cutCol: Column,
+      writer: String => (DataFrame, Long) => Unit,
+      retractor: String => (DataFrame, Long) => Unit,
+      compact: String => Unit, masks: (Column, Column, Column))(
+      stage: String): Unit = {
+    val (retract1, resurrect, retract2) = masks
+    val r = rows
+    def cut(b: Long) = r.filter(pmod(cutCol, lit(3)) === b)
+    writer(stage)(cut(0), 0L)
+    writer(stage)(cut(1), 1L)
+    writer(stage)(cut(2), 2L)
+    compact(stage)
+    retractor(stage)(r.filter(retract1), 3L)
+    writer(stage)(r.filter(resurrect), 4L)
+    compact(stage)
+    retractor(stage)(r.filter(retract2), 5L)
+  }
+
+  /** [[retractCuts]]' masks over `key`: retract ≡ `residue` (mod
+    * `mod`), resurrect the ≡ `residue` (mod 2·`mod`) half — a subset of
+    * the retracted keys by construction, as it must be: re-ingesting a
+    * LIVE key would break the additive stores' one-key-one-admission
+    * contract — and re-retract the ≡ `residue` (mod 4·`mod`) quarter. */
+  def halvingMasks(key: Column, mod: Int = 10,
+      residue: Int = 3): (Column, Column, Column) =
+    (pmod(key, lit(mod)) === residue, pmod(key, lit(2 * mod)) === residue,
+      pmod(key, lit(4 * mod)) === residue)
+}

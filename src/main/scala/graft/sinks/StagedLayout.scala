@@ -3,10 +3,11 @@ package graft.sinks
 import org.apache.spark.sql.SparkSession
 
 /** Cross-process atomic publication of a derived layout directory —
-  * the ONE copy of the stage-then-rename protocol the stored-layout
-  * ensure* builders share (cluster labels, IVF/PQ indexes, the cut
-  * lifecycles). Before r15 each builder overwrote INTO its served
-  * path: `synchronized` is per-JVM only, so two concurrent DRIVERS
+  * the ONE copy of the stage-then-rename protocol every stored layout
+  * shares: the one-shot builders (cluster labels, incremental labels,
+  * IVF/PQ indexes) call it directly, and every ingest lifecycle reaches
+  * it through [[Lifecycle]]. Before r15 each builder overwrote INTO its
+  * served path: `synchronized` is per-JVM only, so two concurrent DRIVERS
   * could interleave overwrite writes into the same path and serve a
   * torn directory (the r14 ensureClusterLabels fix, generalized here
   * per that round's self-review).

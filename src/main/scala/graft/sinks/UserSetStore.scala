@@ -1,0 +1,112 @@
+package graft.sinks
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** A USER-RETRACTABLE set store: an [[IngestSegments]] row store of
+  * (user_id, payload…, tomb, ing). Each batch lands its distinct
+  * `partial` rows as ingest=N (overwrite-by-own-id, replay-idempotent);
+  * a user retraction lands one tombstone row per user, its payload
+  * columns filled by `tombFill` (every payload value is legitimate, so
+  * the explicit `tomb` flag marks it — no sentinel exists). Reads and
+  * folds resolve latest-wins per USER: a tombstone kills every row of
+  * the user with ing ≤ it, and rows re-ingested later (higher ing)
+  * serve again. The read is the distinct payload set, and the fold
+  * dedups on that same payload, so a compaction never changes what a
+  * read serves. The two stores below differ only in their partial and
+  * their payload columns. */
+abstract class UserSetStore(tombFill: (String, Column)*) {
+
+  private val payload = "user_id" +: tombFill.map(_._1)
+
+  /** The batch's distinct (user_id, payload…) rows. */
+  protected def partial(batch: DataFrame): DataFrame =
+    batch.select(payload.map(col): _*).distinct()
+
+  private def tombRows(users: DataFrame, ing: Column): DataFrame =
+    users.select(col("user_id") +: tombFill.map { case (n, c) => c.as(n) } :+
+      lit(true).as("tomb") :+ ing.as("ing"): _*)
+
+  /** foreachBatch hook: append batch N's rows as ingest=N. */
+  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
+    partial(batch)
+      .withColumn("tomb", lit(false)).withColumn("ing", lit(batchId))
+      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
+
+  /** User retraction hook: `batch` carries the deleted user_ids; one
+    * tombstone row per user. */
+  def retract(path: String)(batch: DataFrame, batchId: Long): Unit =
+    tombRows(batch.select(col("user_id")).distinct(), lit(batchId))
+      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
+
+  /** Merge-on-read: the LIVE distinct payload set. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    IngestSegments.readLive(spark, path) match {
+      case None =>
+        throw new IllegalArgumentException(s"no index segments under $path")
+      case Some(raw) =>
+        IngestSegments.resolveTombstones(raw, "user_id", "ing", col("tomb"),
+            IngestSegments.TombStat.NeverTrue("tomb"))
+          .select(payload.map(col): _*).distinct()
+    }
+
+  /** Fold: dead rows drop, tombstones are KEPT (newest per user) —
+    * the [[IngestSegments]] crash-window argument. */
+  def compact(spark: SparkSession, path: String): Unit =
+    IngestSegments.compact(spark, path,
+      fold = IngestSegments.foldWithTombstones(_, "user_id", "ing",
+        col("tomb"), liveCols = payload ++ Seq("tomb", "ing"),
+        dedupCols = payload, mkTomb = tombRows(_, col("ing"))),
+      Seq.empty)
+}
+
+/** Incrementally-maintained user-activity set — the streaming twin of
+  * the q118 cohort matrix. USER-RETRACTABLE since r17 (the GDPR-shaped
+  * user_info CDC delete, reference `app/OdsBaseDbApp.scala:121-139`):
+  * a deleted user's (user, day) activity must leave the cohort matrix,
+  * which an AdditiveSegments set store could never serve.
+  *
+  * A [[UserSetStore]] of (user_id, day). The reconciling semantics
+  * stay SET UNION over the RESOLVED rows — a (user, day) pair may
+  * arrive in ANY number of batches (a user's events straddle batch
+  * boundaries; at-least-once delivery duplicates whole events) and
+  * duplicates collapse on read. Retraction is latest-wins per USER:
+  * activity re-ingested later (higher ing — the user re-signed-up)
+  * re-accumulates from scratch, which also re-cohorts them at read time
+  * (first-seen day derives from the LIVE set — exactly the GDPR
+  * semantics: the old history is gone, the new account is a new cohort
+  * member).
+  *
+  * The cohort matrix itself stays derive-at-read (see the pre-r17
+  * note, unchanged): a later batch can reveal an earlier first-seen
+  * day, so the stored state is the activity set, never the matrix. */
+object RetentionSink extends UserSetStore("day" -> lit(null).cast("date")) {
+
+  override protected def partial(batch: DataFrame): DataFrame =
+    // a timestampless event is no evidence of activity (the q118
+    // batch side applies the same refusal, so stream ≡ batch holds)
+    batch.filter(col("ts").isNotNull)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+}
+
+/** Incrementally-maintained finalized-session store — the landing
+  * store of [[graft.streaming.Streams.sessionAgg]] and the state
+  * behind the q149 live session stats. USER-RETRACTABLE since r17:
+  * the GDPR-shaped request (the reference routes user_info as a dim
+  * whose CDC `D` op deletes the user, `app/OdsBaseDbApp.scala:121-139`)
+  * must remove every session of a user from the served stats.
+  *
+  * A [[UserSetStore]] of (user_id, start_us, n_events, dur_us,
+  * converted) — the BenchRegistrySink shape: set semantics (rows
+  * uniquely keyed by (user_id, start_us); the streaming session
+  * operator emits each session exactly once on finalization with a
+  * deterministic payload, so replay/crash-window duplicates collapse
+  * under distinct), re-ingested sessions (higher ing — the user signed
+  * up again, or a backfill restored them) serve again.
+  *
+  * No additive sub-store and no negative partials: the read derives
+  * the summary from the resolved row set, so deletion needs only the
+  * tombstone — the same only-rows-can-serve-deletion argument as the
+  * phrase ledger, with the store already row-shaped. */
+object SessionSink extends UserSetStore("start_us" -> lit(0L),
+  "n_events" -> lit(0L), "dur_us" -> lit(0L), "converted" -> lit(0L))

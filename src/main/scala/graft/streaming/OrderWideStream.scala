@@ -68,6 +68,8 @@ object OrderWideStream {
   type Q = (SparkSession, String) => DataFrame
 
   private val Delay = "24 hours"
+  private val Sources = Seq("orders", "lineitem")
+  private val Kind = "orderwidestream"
 
   val orderWideStream: Q = (s, d) => {
     val store = ensureLifecycle(s, d)
@@ -151,43 +153,32 @@ object OrderWideStream {
   }
 
   /** The lifecycle's tag dir for the CURRENT fixture content —
-    * mtime/length-fingerprinted, so a regenerated fixture gets fresh
-    * state. Exposed for the torn-build spec (a prefix search could pick
-    * a STALE generation's dir and tear the wrong state). */
-  private[graft] def lifecycleLoc(s: SparkSession, d: String): String = {
-    val (ol, om) = graft.sinks.Hfs.stat(s, s"$d/orders.parquet")
-    val (ll, lm) = graft.sinks.Hfs.stat(s, s"$d/lineitem.parquet")
-    val tag = s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8"))
-      .take(12)}_${ol}_${om}_${ll}_$lm"
-    s"${sys.props("java.io.tmpdir")}/graft-orderwidestream/$tag"
-  }
+    * fingerprinted by both source tables, so a regenerated fixture gets
+    * fresh state. Exposed for the torn-build spec (a prefix search could
+    * pick a STALE generation's dir and tear the wrong state). */
+  private[graft] def lifecycleLoc(s: SparkSession, d: String): String =
+    graft.sinks.Lifecycle.location(s, d, Sources, Kind)
 
   private def ensureLifecycle(s: SparkSession, d: String): String =
-    synchronized {
-      val loc = lifecycleLoc(s, d)
-      if (graft.sinks.Hfs.readString(s, s"$loc/__done").isEmpty) {
-        graft.sinks.Hfs.deleteRecursive(s, loc)
-        val (info, detail) = sides(s, d)
-        // filler ts pins to the corpus minimum so a filler can never
-        // advance a side's watermark past a later real cut (built
-        // in-plan: no driver-side Timestamp materialization)
-        val minTs = info.agg(min(col("ts")).as("ts"))
-        val infoFill = minTs.select(lit(-1L).as("order_id"), col("ts"),
-          lit(-1L).as("user_id"))
-        val detailFill = minTs.select(lit(-2L).as("order_id"), col("ts"),
-          lit(-1L).as("detail_id"), lit(-1L).as("line_uid"),
-          lit(0.0).as("split_total_amount"))
-        val infoFeed = s"$loc/__feed_info"
-        val detailFeed = s"$loc/__feed_detail"
-        stageSide(s, loc, infoFeed, info, infoFill,
-          Seq(Some(1), None, Some(2), None, Some(3)))
-        stageSide(s, loc, detailFeed, detail, detailFill,
-          Seq(None, Some(1), Some(2), Some(3), None))
-        runJoin(s, d, loc, infoFeed, detailFeed)
-        graft.sinks.Hfs.writeString(s, s"$loc/__done", "ok")
-      }
-      s"$loc/store"
-    }
+    graft.sinks.Lifecycle.ensure(s, d, Sources, Kind) { loc =>
+      val (info, detail) = sides(s, d)
+      // filler ts pins to the corpus minimum so a filler can never
+      // advance a side's watermark past a later real cut (built
+      // in-plan: no driver-side Timestamp materialization)
+      val minTs = info.agg(min(col("ts")).as("ts"))
+      val infoFill = minTs.select(lit(-1L).as("order_id"), col("ts"),
+        lit(-1L).as("user_id"))
+      val detailFill = minTs.select(lit(-2L).as("order_id"), col("ts"),
+        lit(-1L).as("detail_id"), lit(-1L).as("line_uid"),
+        lit(0.0).as("split_total_amount"))
+      val infoFeed = s"$loc/__feed_info"
+      val detailFeed = s"$loc/__feed_detail"
+      stageSide(s, loc, infoFeed, info, infoFill,
+        Seq(Some(1), None, Some(2), None, Some(3)))
+      stageSide(s, loc, detailFeed, detail, detailFill,
+        Seq(None, Some(1), Some(2), Some(3), None))
+      runJoin(s, d, loc, infoFeed, detailFeed)
+    } + "/store"
 
   private def runJoin(s: SparkSession, d: String, loc: String,
       infoFeed: String, detailFeed: String): Unit = {
@@ -229,9 +220,8 @@ object OrderWideStream {
     * overwrite leave ~2 900 tiny files over ~170 month dirs, and every
     * store read pays a footer fetch per file (measured 1.3 s/read at
     * sf0.1; ~0.3 s compacted). One task per month rewrites the store,
-    * then the usual delete-then-rename swap. Build-once state, single
-    * owner — no reader can race the swap inside ensureLifecycle's
-    * critical section. At 100 TB this is the per-day compaction cadence
+    * then the usual delete-then-rename swap. Build-once state inside
+    * the lifecycle's private stage dir — no reader can race the swap. At 100 TB this is the per-day compaction cadence
     * every serving table runs, not a fixture hack. */
   private def compactStore(s: SparkSession, loc: String): Unit = {
     val store = s"$loc/store"

@@ -367,6 +367,29 @@ class StreamingSpec extends SparkSpec {
     assert(readSet() == s1, "compaction changed the pair set")
   }
 
+  test("q133 lifecycle: a torn build (missing __done) is cleared and rebuilt, never served") {
+    // the ordered-feed family (q133/q140/q144/q145/q149): its checkpoint
+    // and feed live inside the published dir, so a rebuild must replace
+    // the whole generation, not patch it
+    def answer() = graft.operators.Analytics.transitionsStream(spark, sf0001)
+      .as[(String, String, Long, Double)].collect().toSeq.sorted
+    val first = answer()
+    // THIS fixture generation's tag dir, by exact stat fingerprint
+    val loc = graft.sinks.Lifecycle.location(spark, sf0001, Seq("events"),
+      "transstream")
+    assert(graft.sinks.Hfs.readString(spark, s"$loc/__done").nonEmpty,
+      "fixture lifecycle not built")
+    // tear it: kill the marker and plant junk in the store — the next
+    // read must rebuild from scratch (junk gone), not serve torn state
+    graft.sinks.Hfs.deleteRecursive(spark, s"$loc/__done")
+    graft.sinks.Hfs.writeString(spark, s"$loc/store/__JUNK", "torn")
+    val again = answer()
+    assert(again == first, "rebuild must reproduce the store exactly")
+    assert(!graft.sinks.Hfs.exists(spark, s"$loc/store/__JUNK"),
+      "torn-state junk survived the rebuild")
+    assert(graft.sinks.Hfs.readString(spark, s"$loc/__done").nonEmpty)
+  }
+
   test("funnelAdvance: strictly-prior qualification — a click before any view never advances, same-ts earlier-id views qualify, steps emit once, heartbeats no-op") {
     import Streams.{TransEvent, FunnelStep}
     implicit val sqlCtx = spark.sqlContext
