@@ -222,16 +222,15 @@ object SimilarityOps {
       .limit(k)
   }
 
+  /** The one-shot bucket layout, published through
+    * [[graft.sinks.Lifecycle]]: its `__done` follows the geometry pin,
+    * the build's LAST write (`corpus/_SUCCESS` precedes the pin). */
   private def ensureAnnLshIndex(s: SparkSession, d: String, bits: Int): String =
-    synchronized {
-      val path =
-        s"${sys.props("java.io.tmpdir")}/graft-annlsh/${sourceTag(s, d, "embeddings")}-b$bits"
-      if (!graft.sinks.Hfs.exists(s, s"$path/corpus/_SUCCESS")) {
-        val emb = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        buildAnnLshIndex(emb, path, bits)
-      }
-      path
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "annlsh-index",
+        s"-b$bits") { stage =>
+      val emb = t(s, d, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      buildAnnLshIndex(emb, stage, bits)
     }
 
   /** q38 runs against the stored bucket layout (built on first use per

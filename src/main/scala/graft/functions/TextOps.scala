@@ -439,10 +439,11 @@ object TextOps {
     * carries (phrase, doc_id) pairs only; hot-phrase skew is bounded by
     * the df cap a production build would add (AQE skew-split covers the
     * rest), and postings would be delta-encoded per term shard. */
-  /** The five-aggregate phrase build over (doc_id, text) rows — q65,
-    * the streaming sink's per-batch partial (PhraseIndexSink.partial)
-    * and ScaleProbe all run THIS code, so the batch query, the
-    * incremental index, and the scale probe cannot drift apart. */
+  /** The five-aggregate phrase build over (doc_id, text) rows — q65
+    * and ScaleProbe run THIS code, and PhraseIndexSink runs its two
+    * steps apart (phraseDocRows at write, phraseFromRows at read), so
+    * the batch query, the incremental index, and the scale probe cannot
+    * drift apart. */
   def phraseAggregate(docs: DataFrame): DataFrame =
     phraseFromRows(phraseDocRows(docs))
 

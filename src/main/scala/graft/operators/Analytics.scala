@@ -1300,30 +1300,18 @@ object Analytics {
     * the SAME combiner-collapsed pair aggregate, so a production
     * deployment materializes that aggregate once per corpus snapshot
     * and derives every shelf from it instead of re-paying the basket
-    * explode per view. Keyed by the lineitem fingerprint (len+mtime) +
-    * cap, gated by _SUCCESS; the over-cap refusal telemetry runs ONCE
-    * here at build time — never inside a serving query's measured
-    * path (the advisor's round-12 note). */
+    * explode per view. Published through [[graft.sinks.Lifecycle]]
+    * (keyed by the lineitem fingerprint + cap); the over-cap refusal
+    * telemetry runs ONCE here at build time — never inside a serving
+    * query's measured path (the advisor's round-12 note). */
   def basketPairCounts(s: SparkSession, d: String,
       cap: Int = 32): DataFrame =
-    s.read.parquet(ensureBasketPairCounts(s, d, cap))
-
-  def basketPairPath(s: SparkSession, d: String, cap: Int): String = {
-    val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/lineitem.parquet")
-    val id = graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)
-    s"${sys.props("java.io.tmpdir")}/graft-basketpairs/$id-$len-$mtime-c$cap"
-  }
-
-  private def ensureBasketPairCounts(s: SparkSession, d: String,
-      cap: Int): String = synchronized {
-    val path = basketPairPath(s, d, cap)
-    if (!graft.sinks.Hfs.exists(s, s"$path/_SUCCESS")) {
+    s.read.parquet(graft.sinks.Lifecycle.ensure(s, d, Seq("lineitem"),
+        "basket-pairs", s"-c$cap") { stage =>
       val l = t(s, d, "lineitem")
       logOverCapBaskets(l, cap, s"basket_pairs(cap=$cap)")
-      basketPairCountsOver(l, cap).write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+      basketPairCountsOver(l, cap).write.parquet(stage)
+    })
 
   /** The capped basket-pair counts shared by q142 (global top pairs)
     * and q150 (per-part shelf). */

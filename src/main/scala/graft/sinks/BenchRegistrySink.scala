@@ -17,11 +17,15 @@ import org.apache.spark.sql.functions._
   * eval suites also RETIRE (a benchmark pulled for license or leakage
   * reasons must stop cutting training docs): retraction is per doc,
   * and a gram shared by a retracted and a surviving benchmark doc must
-  * survive — only the pair rows tell those apart. [[retract]] writes
-  * tombstone rows (explicit `tomb` flag — `h` spans the full hash
-  * range, so no sentinel exists) under the [[IngestSegments]]
-  * retraction convention, and [[registry]] resolves latest-wins per
-  * doc before projecting the hash set.
+  * survive — only the pair rows tell those apart. A [[LedgerStore]]
+  * declaration with no aggregate: `retract` writes tombstone rows
+  * (explicit `tomb` flag — `h` spans the full hash range, so no
+  * sentinel exists) under the [[IngestSegments]] retraction
+  * convention, a later `writer` batch re-admitting a doc resurrects it
+  * (higher `ing`), `cdc` is the delete-wins mixed hook, and
+  * [[registry]] resolves latest-wins per doc before projecting the hash
+  * set. All ledger content derives from the batch alone (no store read
+  * on any path), so replay idempotence is trivial.
   *
   * The served registry is a SET, which buys the simplest possible
   * serving contract: replay/crash-window duplicates across segments —
@@ -43,70 +47,26 @@ import org.apache.spark.sql.functions._
   * serving join reads) — re-expressed for the decontamination
   * registry.
   */
-object BenchRegistrySink {
+object BenchRegistrySink extends LedgerStore("doc_id",
+    IngestSegments.TombStat.NeverTrue("tomb"),
+    fill = Seq("h" -> lit(0L), "tomb" -> lit(true)),
+    dedup = Seq("doc_id", "h"),
+    // the q162 benchmark cut — the ONE shared boundary constant: the
+    // hooks filter it so lifecycle batches can feed the raw mixed
+    // table, and the serving side filters train with the same value, so
+    // a one-sided retune cannot make docs both registry members and cut
+    // targets
+    scope = col("doc_id") < graft.functions.DedupOps.DecontamBenchCut) {
 
   /** q162's decontamination witness length — registry geometry; a
     * retune requires a rebuild (stored hashes are L-specific). */
   private val L = 4
 
-  /** The q162 benchmark cut — the ONE shared boundary constant
-    * (graft.functions.DedupOps.DecontamBenchCut); the writer filters
-    * it so lifecycle batches can feed the raw mixed table, and the
-    * serving side filters train with the same value, so a one-sided
-    * retune cannot make docs both registry members and cut targets. */
-  private def BenchCut: Long = graft.functions.DedupOps.DecontamBenchCut
-
-  /** foreachBatch hook: the batch's benchmark docs reduce to their
-    * distinct (doc_id, gram-hash) pairs — batch-bounded work, keyed by
-    * batchId (replay-idempotent: a replayed batch overwrites its own
-    * segment with identical content). */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path, batch,
-      batch.sparkSession.range(0).select(col("id").as("doc_id")), batchId)
-
-  /** Retraction hook: a benchmark doc retired from the eval suite
-    * stops contributing grams. One tombstone row per doc — the
-    * resolve drops its pairs at read/fold time; a later [[writer]]
-    * batch re-admitting the doc resurrects it (higher `ing`).
-    * Overwrite-by-own-id, content independent of store state →
-    * replay-idempotent trivially. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    cdcCore(path,
-      s.range(0).select(col("id").as("doc_id"), lit("").as("text")),
-      batch.select(col("doc_id")), batchId)
-  }
-
-  /** foreachBatch hook for a MIXED CDC stream (`op = 'D'` rows retire
-    * their doc, every other row ingests — the SubstrIndexSink.cdc
-    * shape applied to the registry). Within one batch DELETE WINS. */
-  def cdc(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path,
-      batch.filter(col("op") =!= "D").select(col("doc_id"), col("text")),
-      batch.filter(col("op") === "D").select(col("doc_id")), batchId)
-
-  /** The one write path all three hooks share: ONE segment carrying
-    * the batch's distinct (doc_id, h) pairs plus its tombstone rows.
-    * All content derives from the batch alone (no store read — the
-    * registry has no additive sub-store to reconcile), so replay
-    * idempotence is trivial. */
-  private def cdcCore(path: String, ins: DataFrame, dels: DataFrame,
-      batchId: Long): Unit = {
-    val docs = dels.filter(col("doc_id") < BenchCut)
-      .select(col("doc_id")).distinct()
-    graft.functions.DedupOps
-      .gramPositions(
-        ins.filter(col("doc_id") < BenchCut)
-          // delete-wins within the batch: an in-batch-deleted doc's
-          // pairs are never admitted
-          .join(broadcast(docs), Seq("doc_id"), "left_anti"), L)
+  /** The batch's benchmark docs reduce to their distinct
+    * (doc_id, gram-hash) pairs — batch-bounded work. */
+  protected def rows(docs: DataFrame): DataFrame =
+    graft.functions.DedupOps.gramPositions(docs, L)
       .select(col("doc_id"), col("h")).distinct()
-      .select(col("doc_id"), col("h"), lit(false).as("tomb"),
-        lit(batchId).as("ing"))
-      .unionByName(docs.select(col("doc_id"), lit(0L).as("h"),
-        lit(true).as("tomb"), lit(batchId).as("ing")))
-      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
-  }
 
   /** The live registry — gram hashes of the resolved (non-retracted)
     * benchmark docs, with possible duplicates (a gram shared by two
@@ -115,23 +75,6 @@ object BenchRegistrySink {
     * registry cuts nothing, so decontamination passes every doc
     * through — the correct cold-start semantic. */
   def registry(spark: SparkSession, path: String): DataFrame =
-    IngestSegments.readLive(spark, path) match {
-      case None => spark.range(0).select(col("id").as("h"))
-      case Some(rows) =>
-        IngestSegments.resolveTombstones(rows, "doc_id", "ing", col("tomb"),
-            IngestSegments.TombStat.NeverTrue("tomb"))
-          .select(col("h"))
-    }
-
-  /** Fold: dead pairs drop, tombstones are KEPT (newest per doc,
-    * `ing` preserved) — the [[IngestSegments]] retraction convention's
-    * crash-window argument. */
-  def compact(spark: SparkSession, path: String): Unit =
-    IngestSegments.compact(spark, path,
-      fold = IngestSegments.foldWithTombstones(_, "doc_id", "ing",
-        col("tomb"),
-        liveCols = Seq("doc_id", "h", "tomb", "ing"),
-        dedupCols = Seq("doc_id", "h"),
-        mkTomb = _.select(col("doc_id"), lit(0L).as("h"),
-          lit(true).as("tomb"), col("ing"))), Seq.empty)
+    live(spark, path).map(_.select(col("h")))
+      .getOrElse(spark.range(0).select(col("id").as("h")))
 }

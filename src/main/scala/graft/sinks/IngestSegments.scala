@@ -224,9 +224,9 @@ object IngestSegments {
 
   /** How a store's in-row tombstone indicator shows up in parquet
     * column statistics, for [[resolveTombstones]]' footer fast path.
-    * The two shapes the sinks use: a numeric sentinel (tombstones are
-    * `column < 0` — SubstrIndexSink's pos, the additive text stores'
-    * negative partials) and a boolean flag (`column` true —
+    * The two shapes the [[LedgerStore]]s use: a numeric sentinel
+    * (tombstones are `column < 0` — SubstrIndexSink's pos, the text
+    * ledgers' tf/n/occ) and a boolean flag (`column` true —
     * SessionSink/RetentionSink/BenchRegistrySink's tomb). */
   sealed trait TombStat { def column: String }
   object TombStat {
@@ -446,25 +446,6 @@ object IngestSegments {
     }
   }
 
-  /** The tombstone-keeping compaction fold shared by the single-key
-    * retractable row stores (substring positions, benchmark registry —
-    * LabelSink's two-endpoint edge fold stays bespoke): resolve the
-    * fold input latest-wins, project the live schema, dedup
-    * crash-window copies, and union the tombstones back (newest per
-    * key, `ing` preserved) via the caller's schema-shaping `mkTomb`.
-    * One definition so a future change to the keep-tombstones
-    * crash-window rule cannot drift between stores. */
-  def foldWithTombstones(src: DataFrame, keyCol: String, ingCol: String,
-      isTomb: Column, liveCols: Seq[String], dedupCols: Seq[String],
-      mkTomb: DataFrame => DataFrame): DataFrame = {
-    val live = resolveTombstones(src, keyCol, ingCol, isTomb)
-      .select(liveCols.map(col): _*)
-      .dropDuplicates(dedupCols)
-    val tombs = src.filter(isTomb)
-      .groupBy(col(keyCol)).agg(max(col(ingCol)).as(ingCol))
-    live.unionByName(mkTomb(tombs))
-  }
-
   /** Side-table tombstone segment writer: the batch's retracted keys
     * as (keyCol, ing = batchId) rows at `tablePath/ingest=batchId` —
     * overwrite-by-own-id, content independent of store state, so
@@ -474,8 +455,8 @@ object IngestSegments {
     * ing is STRICTLY above the key's newest tombstone, so a row
     * ingested under the SAME batch id as a tombstone for its key is
     * dead — the delete-wins-within-batch rule the mixed-CDC writers
-    * (SubstrIndexSink.cdc, BenchRegistrySink.cdc) enforce upstream by
-    * anti-joining in-batch-deleted keys out of the insert side. Side
+    * ([[LedgerStore]]'s `cdc`) enforce upstream by anti-joining
+    * in-batch-deleted keys out of the insert side. Side
     * table callers (the ANN/PQ stores) must uphold the same contract:
     * never reuse one batch id across a retract*() and an ingest*()
     * call for the same store unless the delete is meant to win. */
@@ -511,7 +492,7 @@ object IngestSegments {
     *    listing, so crash-window leftovers of a racing row-store
     *    compact (rename-before-delete) still carry their dead rows and
     *    KEEP their tombstone — the transient-resurrection hazard that
-    *    forbids purging inside [[foldWithTombstones]] cannot arise
+    *    forbids purging inside [[LedgerStore]]'s fold cannot arise
     *    here, because this check happens strictly AFTER the row
     *    store's own delete phase (the caller sequences corpus compact
     *    → tombstone compact, and cross-process concurrency is excluded

@@ -150,7 +150,7 @@ object LabelSink {
   }
 
   /** foreachBatch hook for a MIXED CDC stream — one micro-batch can
-    * carry edges and deletes together (the SubstrIndexSink.cdc shape
+    * carry edges and deletes together (the LedgerStore.cdc shape
     * applied to the chain): rows with `op = 'D'` retract doc_a, every
     * other row is an edge (doc_a, doc_b). Within the batch DELETE
     * WINS — an edge touching a doc deleted in the same batch is never
@@ -181,7 +181,7 @@ object LabelSink {
       val prev = prevLabels(spark, path, batchId)
       // the retraction splice exists only for deletes — the
       // overwhelmingly common pure-edge batch must not pay the edge
-      // store scan + checkpoints (the SubstrIndexSink.cdcCore guard)
+      // store scan + checkpoints (the LedgerStore write-path guard)
       val spliced =
         if (dels.isEmpty) prev
         else retractedTable(spark, path, prev, dels, batchId)

@@ -10,38 +10,22 @@ import org.apache.spark.sql.functions._
   * FIRST carried it — min(cut) survives compaction folds precisely
   * because rows keep their cut, where a plain vocabulary fold
   * (VocabSink) would erase arrival order. Everything here is a
-  * decomposable sum, so the [[AdditiveSegments]] replay/fold contract
-  * applies unchanged; like the vocabulary, segment size converges to
-  * per-batch vocabulary size (Heaps' law), not batch size.
+  * decomposable sum — a [[SumStore]] keyed (cut, token) — so the
+  * [[AdditiveSegments]] replay/fold contract applies unchanged; like
+  * the vocabulary, segment size converges to per-batch vocabulary size
+  * (Heaps' law), not batch size.
   *
   * State growth note for 100 TB: the merged state is (cuts × their
   * vocab) rows. A production monitor caps `cut` at a rolling window
   * (drop cuts older than the horizon in compact's reconcile) — the
   * report semantics stay identical over the surviving window. */
-object NoveltySink {
-
-  private[graft] def partial(batch: DataFrame, batchId: Long): DataFrame =
-    batch
+object NoveltySink extends SumStore(Seq("cut", "token"), Seq("c"))(
+    (batch, batchId) => batch
       .select(explode(graft.functions.TextOps.tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .select(lit(batchId).as("cut"), col("token"), col("c"))
-
-  private def reconcile(segs: DataFrame): DataFrame =
-    segs.groupBy(col("cut"), col("token")).agg(sum(col("c")).as("c"))
-
-  /** foreachBatch hook: append batch N's (cut=N, token, c) partial as
-    * segment seq=N (replay-idempotent per [[AdditiveSegments]]). */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    AdditiveSegments.write(partial(batch, batchId), path, batchId)
-
-  /** Merge-on-read: the live (cut, token, c) table. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    AdditiveSegments.read(spark, path, reconcile)
+      .select(lit(batchId).as("cut"), col("token"), col("c"))) {
 
   /** The q110-shaped per-cut novelty report over the live state. */
   def report(spark: SparkSession, path: String): DataFrame =
     graft.functions.TextOps.noveltyFromCutCounts(read(spark, path))
-
-  def compact(spark: SparkSession, path: String): Unit =
-    AdditiveSegments.compact(spark, path, reconcile)
 }

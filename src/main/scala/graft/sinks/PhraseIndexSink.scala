@@ -28,74 +28,29 @@ import org.apache.spark.sql.functions._
   * df, occ, id_sum AND the min/max posting bounds, which no additive
   * store can do.
   *
-  * Replay idempotence is the row-store protocol (overwrite-by-own-id;
-  * ledger content derives from the batch alone — no store read on any
-  * path, like BenchRegistrySink and unlike the counting sinks' negative
+  * A [[LedgerStore]] declaration with no aggregate: replay idempotence
+  * is the row-store protocol (overwrite-by-own-id; ledger content
+  * derives from the batch alone — no store read on any path, like
+  * BenchRegistrySink and unlike the counting sinks' negative
   * partials). df stays exact under the one-doc-one-admission contract,
   * and under retraction + higher-ing re-ingest (the resolve leaves one
   * admission live).
   */
-object PhraseIndexSink {
+object PhraseIndexSink extends LedgerStore("doc_id",
+    IngestSegments.TombStat.NonNegative("occ"),
+    fill = Seq("phrase" -> lit(""), "occ" -> lit(-1L)),
+    dedup = Seq("doc_id", "phrase")) {
 
   /** q65's per-doc ledger rows over one batch of (doc_id, text) — the
     * SAME builder the batch query aggregates (shared, cannot drift). */
-  private[graft] def partial(batch: DataFrame): DataFrame =
-    graft.functions.TextOps.phraseDocRows(batch)
-
-  /** foreachBatch hook for pure-ingest streams. */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path, batch,
-      batch.sparkSession.range(0).select(col("id").as("doc_id")), batchId)
-
-  /** Retraction hook (the CDC `D` route): `batch` carries the deleted
-    * doc_ids; one tombstone row per doc, aggregates re-derive at read. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    cdcCore(path,
-      s.range(0).select(col("id").as("doc_id"), lit("").as("text")),
-      batch.select(col("doc_id")), batchId)
-  }
-
-  /** Mixed CDC hook — delete-wins within the batch. */
-  def cdc(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path,
-      batch.filter(col("op") =!= "D").select(col("doc_id"), col("text")),
-      batch.filter(col("op") === "D").select(col("doc_id")), batchId)
-
-  private def cdcCore(path: String, ins: DataFrame, dels: DataFrame,
-      batchId: Long): Unit = {
-    val docs = dels.select(col("doc_id")).distinct()
-    graft.functions.TextOps.phraseDocRows(
-        ins.join(broadcast(docs), Seq("doc_id"), "left_anti"))
-      .withColumn("ing", lit(batchId))
-      .unionByName(docs.select(col("doc_id"), lit("").as("phrase"),
-        lit(-1L).as("occ"), lit(batchId).as("ing")))
-      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
-  }
+  protected def rows(docs: DataFrame): DataFrame =
+    graft.functions.TextOps.phraseDocRows(docs)
 
   /** Merge-on-read: resolve the ledger latest-wins, dedup crash-window
     * copies on the (doc, phrase) key, aggregate. `minDf` mirrors q65's
     * published df floor. */
   def read(spark: SparkSession, path: String, minDf: Long = 0L): DataFrame =
-    IngestSegments.readLive(spark, path) match {
-      case None =>
-        throw new IllegalArgumentException(s"no index segments under $path")
-      case Some(raw) =>
-        graft.functions.TextOps.phraseFromRows(
-          IngestSegments.resolveTombstones(raw, "doc_id", "ing",
-              col("occ") < 0, IngestSegments.TombStat.NonNegative("occ"))
-            .dropDuplicates("doc_id", "phrase"))
-          .filter(col("df") >= minDf)
-    }
-
-  /** Fold: dead pairs drop, tombstones are KEPT (newest per doc) — the
-    * [[IngestSegments]] crash-window argument. */
-  def compact(spark: SparkSession, path: String): Unit =
-    IngestSegments.compact(spark, path,
-      fold = IngestSegments.foldWithTombstones(_, "doc_id", "ing",
-        col("occ") < 0,
-        liveCols = Seq("doc_id", "phrase", "occ", "ing"),
-        dedupCols = Seq("doc_id", "phrase"),
-        mkTomb = _.select(col("doc_id"), lit("").as("phrase"),
-          lit(-1L).as("occ"), col("ing"))), Seq.empty)
+    graft.functions.TextOps.phraseFromRows(
+        liveOrThrow(spark, path).dropDuplicates("doc_id", "phrase"))
+      .filter(col("df") >= minDf)
 }

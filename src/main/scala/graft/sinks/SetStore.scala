@@ -1,34 +1,16 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A SET-UNION segment store over [[AdditiveSegments]]: each batch
+/** A SET-UNION segment store: the no-value [[SumStore]]. Each batch
   * lands its distinct `columns` projection as segment seq=N, and both
   * the read and the compaction fold reconcile with `distinct`. Legal
   * for any row set whose rows are uniquely keyed and carry a
   * deterministic payload: a replayed batch re-emits identical rows and
   * set union collapses them. The four stores below differ only in
   * their columns. */
-abstract class SetStore(columns: String*) {
-
-  private def partial(rows: DataFrame): DataFrame =
-    rows.select(columns.map(col): _*).distinct()
-
-  private def reconcile(segs: DataFrame): DataFrame = segs.distinct()
-
-  /** foreachBatch hook: append batch N's rows as segment seq=N
-    * (replay-idempotent — see [[AdditiveSegments]]). */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    AdditiveSegments.write(partial(batch), path, batchId)
-
-  /** Merge-on-read: the full distinct row set. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    AdditiveSegments.read(spark, path, reconcile)
-
-  def compact(spark: SparkSession, path: String): Unit =
-    AdditiveSegments.compact(spark, path, reconcile)
-}
+class SetStore(columns: String*) extends SumStore(columns, Nil)(
+  (rows, _) => rows.select(columns.map(col): _*).distinct())
 
 /** Incrementally-maintained transition-pair set — the landing store of
   * [[graft.streaming.Streams.transitionPairs]] and the state behind the

@@ -20,91 +20,26 @@ import org.apache.spark.sql.functions._
   *    SOURCES-sized.
   *
   * Replay/idempotence, delete-wins-within-batch, and the
-  * exclude-own-batch negative partial follow SubstrIndexSink.cdcCore
-  * (the canonical write-up). `mixturePlan` runs q84's α=0.5 tempered
+  * exclude-own-batch negative partial are [[LedgerStore]]'s (the
+  * canonical write-up). `mixturePlan` runs q84's α=0.5 tempered
   * planner over the live reconciled table.
   */
-object SourceStatsSink {
+object SourceStatsSink extends LedgerStore("doc_id",
+    IngestSegments.TombStat.NonNegative("n"),
+    fill = Seq("source" -> lit(""), "n" -> lit(-1L)),
+    dedup = Seq("doc_id"), ledger = "/rows",
+    agg = Some("agg" -> new SumStore(Seq("source"), Seq("n_docs", "n_tokens"))(
+      (rows, _) => graft.functions.TextOps.sourceStatsFromRows(rows)))) {
 
-  private[graft] def partial(batch: DataFrame): DataFrame =
-    graft.functions.TextOps.sourceStatsAggregate(batch)
-
-  private def reconcile(segs: DataFrame): DataFrame =
-    segs.groupBy(col("source"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-
-  /** foreachBatch hook for pure-ingest streams. */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path, batch,
-      batch.sparkSession.range(0).select(col("id").as("doc_id")), batchId)
-
-  /** Retraction hook (the CDC `D` route): `batch` carries the deleted
-    * doc_ids. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    cdcCore(path,
-      s.range(0).select(col("id").as("doc_id"), lit("").as("text"),
-        lit("").as("source")),
-      batch.select(col("doc_id")), batchId)
-  }
-
-  /** Mixed CDC hook — delete-wins within the batch. */
-  def cdc(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path,
-      batch.filter(col("op") =!= "D")
-        .select(col("doc_id"), col("text"), col("source")),
-      batch.filter(col("op") === "D").select(col("doc_id")), batchId)
-
-  private def cdcCore(path: String, ins: DataFrame, dels: DataFrame,
-      batchId: Long): Unit = {
-    val docs = dels.select(col("doc_id")).distinct().persist()
-    val rows = graft.functions.TextOps.sourceStatsDocRows(
-      ins.join(broadcast(docs), Seq("doc_id"), "left_anti")).persist()
-    try {
-      val neg = if (docs.isEmpty) None
-      else IngestSegments.readLive(rows.sparkSession, s"$path/rows") match {
-        case None => None
-        case Some(raw) =>
-          val live = IngestSegments.resolveTombstones(
-            raw.filter(col("ing") =!= batchId), "doc_id", "ing",
-            col("n") < 0, IngestSegments.TombStat.NonNegative("n"))
-            .dropDuplicates("doc_id")
-          Some(live.join(broadcast(docs), Seq("doc_id"), "left_semi")
-            .groupBy(col("source"))
-            .agg((-count(lit(1))).as("n_docs"), (-sum(col("n"))).as("n_tokens")))
-      }
-      rows.withColumn("ing", lit(batchId))
-        .unionByName(docs.select(col("doc_id"), lit("").as("source"),
-          lit(-1L).as("n"), lit(batchId).as("ing")))
-        .write.mode("overwrite").parquet(s"$path/rows/ingest=$batchId")
-      val pos = graft.functions.TextOps.sourceStatsFromRows(rows)
-      AdditiveSegments.write(
-        neg.map(n => pos.unionByName(n).groupBy(col("source"))
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("n_tokens")).as("n_tokens")))
-          .getOrElse(pos),
-        s"$path/agg", batchId)
-    } finally { rows.unpersist(false); docs.unpersist(false); () }
-  }
+  protected def rows(docs: DataFrame): DataFrame =
+    graft.functions.TextOps.sourceStatsDocRows(docs)
 
   /** Merge-on-read: the LIVE (source, n_docs, n_tokens) table; a
     * source whose docs all retracted telescopes to zero and leaves. */
   def read(spark: SparkSession, path: String): DataFrame =
-    AdditiveSegments.read(spark, s"$path/agg", reconcile)
-      .filter(col("n_docs") > 0)
+    aggregate(spark, path).filter(col("n_docs") > 0)
 
   /** The q84-shaped planning view over the live statistics. */
   def mixturePlan(spark: SparkSession, path: String, budget: Long): DataFrame =
     graft.functions.TextOps.temperedPlan(read(spark, path), budget)
-
-  def compact(spark: SparkSession, path: String): Unit = {
-    IngestSegments.compact(spark, s"$path/rows",
-      fold = IngestSegments.foldWithTombstones(_, "doc_id", "ing",
-        col("n") < 0,
-        liveCols = Seq("doc_id", "source", "n", "ing"),
-        dedupCols = Seq("doc_id"),
-        mkTomb = _.select(col("doc_id"), lit("").as("source"),
-          lit(-1L).as("n"), col("ing"))), Seq.empty)
-    AdditiveSegments.compact(spark, s"$path/agg", reconcile)
-  }
 }

@@ -38,96 +38,24 @@ import org.apache.spark.sql.functions._
   * tombstone resolution leaves exactly one admission's rows live, and
   * the count partials telescope to that admission's counts). Per-batch
   * grams are persisted across the two writes so the text is
-  * tokenized/hashed once per batch.
+  * tokenized/hashed once per batch. The hooks, the write path (delete
+  * wins within a batch; the negative partial is read back from the pos
+  * store itself, excluding this batch's own rows) and the folds are
+  * [[LedgerStore]]'s.
   */
-object SubstrIndexSink {
+object SubstrIndexSink extends LedgerStore("doc_id",
+    IngestSegments.TombStat.NonNegative("pos"),
+    fill = Seq("pos" -> lit(-1L), "h" -> lit(0L)),
+    dedup = Seq("doc_id", "pos"), ledger = "/pos",
+    agg = Some("counts" -> new SumStore(Seq("h"), Seq("n"))(
+      (g, _) => g.groupBy(col("h")).agg(count(lit(1)).as("n"))))) {
 
   /** q154's witness length — the stored layout's geometry; a retune
     * requires a rebuild (positions and counts are L-specific). */
   private val L = 8
 
-  private def reconcile(segs: DataFrame): DataFrame =
-    segs.groupBy(col("h")).agg(sum(col("n")).as("n"))
-
-  /** foreachBatch hook for pure-ingest streams: positions segment +
-    * count partial, both keyed by batchId (replay-idempotent in both
-    * sub-stores). */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path, batch,
-      batch.sparkSession.range(0).select(col("id").as("doc_id")), batchId)
-
-  /** Retraction hook (the CDC `D` route applied to the index): `batch`
-    * carries the doc_ids deleted upstream. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    cdcCore(path,
-      s.range(0).select(col("id").as("doc_id"), lit("").as("text")),
-      batch.select(col("doc_id")), batchId)
-  }
-
-  /** foreachBatch hook for a MIXED CDC stream — one micro-batch can
-    * carry inserts and deletes together (the reference's OdsBaseDbApp
-    * batch shape): rows with `op = 'D'` retract their doc_id, every
-    * other row ingests. Within one batch DELETE WINS: a doc both
-    * inserted and deleted in the same batch is never admitted (its
-    * insert rows are anti-joined away before tokenization, so the
-    * counts partial stays consistent with the tombstoned positions),
-    * and its tombstone still kills any prior admission. */
-  def cdc(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path,
-      batch.filter(col("op") =!= "D").select(col("doc_id"), col("text")),
-      batch.filter(col("op") === "D").select(col("doc_id")), batchId)
-
-  /** The one write path all three hooks share — ONE pos segment (this
-    * batch's gram positions + tombstone rows) and ONE count partial
-    * (the inserts' positive counts unioned with the deletes' NEGATIVE
-    * live-occurrence counts, read back from the pos store itself:
-    * doc-keyed, the corpus text is never touched — it may no longer
-    * exist upstream, which is exactly why the subtraction must come
-    * from the store).
-    *
-    * Replay/idempotence: both writes are overwrite-by-own-id, and the
-    * negative partial is computed over the store EXCLUDING this
-    * batch's own rows (`ing != batchId`), so a crash between the two
-    * writes — or after either — replays to byte-identical content.
-    * Retracting an already-retracted or never-ingested doc resolves to
-    * zero live positions → no subtraction and a harmless tombstone:
-    * double-subtraction is impossible by construction. */
-  private def cdcCore(path: String, ins: DataFrame, dels: DataFrame,
-      batchId: Long): Unit = {
-    val docs = dels.select(col("doc_id")).distinct().persist()
-    // delete-wins within the batch: an in-batch-deleted doc is never
-    // admitted, so its grams inflate neither positions nor counts
-    val g = graft.functions.DedupOps.gramPositions(
-      ins.join(broadcast(docs), Seq("doc_id"), "left_anti"), L).persist()
-    try {
-      // the store read exists only for deletes — a pure-ingest batch
-      // (the overwhelmingly common one) must not pay a store scan
-      val neg = if (docs.isEmpty) None
-      else IngestSegments.readLive(g.sparkSession, s"$path/pos") match {
-        case None => None
-        case Some(raw) =>
-          val live = IngestSegments.resolveTombstones(
-            raw.filter(col("ing") =!= batchId), "doc_id", "ing",
-            col("pos") < 0, IngestSegments.TombStat.NonNegative("pos"))
-            // duplicate-tolerant store read (compact-race double-reads):
-            // a crash-window copy must not double the subtraction
-            .dropDuplicates("doc_id", "pos")
-          Some(live.join(broadcast(docs), Seq("doc_id"), "left_semi")
-            .groupBy(col("h")).agg((-count(lit(1))).as("n")))
-      }
-      g.withColumn("ing", lit(batchId))
-        .unionByName(docs.select(col("doc_id"), lit(-1L).as("pos"),
-          lit(0L).as("h"), lit(batchId).as("ing")))
-        .write.mode("overwrite").parquet(s"$path/pos/ingest=$batchId")
-      val pos = g.groupBy(col("h")).agg(count(lit(1)).as("n"))
-      AdditiveSegments.write(
-        neg.map(n => pos.unionByName(n)
-            .groupBy(col("h")).agg(sum(col("n")).as("n")))
-          .getOrElse(pos),
-        s"$path/counts", batchId)
-    } finally { g.unpersist(false); docs.unpersist(false); () }
-  }
+  protected def rows(docs: DataFrame): DataFrame =
+    graft.functions.DedupOps.gramPositions(docs, L)
 
   /** The LIVE resolved position set (doc_id, pos, h): tombstones
     * applied latest-wins on the persisted `ing`, crash-window
@@ -136,12 +64,8 @@ object SubstrIndexSink {
     * nothing is stored. */
   private def livePositions(spark: SparkSession,
       path: String): Option[DataFrame] =
-    IngestSegments.readLive(spark, s"$path/pos").map { raw =>
-      IngestSegments.resolveTombstones(raw, "doc_id", "ing", col("pos") < 0,
-          IngestSegments.TombStat.NonNegative("pos"))
-        .select(col("doc_id"), col("pos"), col("h"))
-        .dropDuplicates("doc_id", "pos")
-    }
+    live(spark, path).map(_.select(col("doc_id"), col("pos"), col("h"))
+      .dropDuplicates("doc_id", "pos"))
 
   /** The full-corpus duplicated spans — q154's output shape, computed
     * from the stored index instead of re-scanning any text. The
@@ -155,22 +79,21 @@ object SubstrIndexSink {
     * join was about to prune anyway). Tombstone resolution stays FIRST
     * (map-side broadcast) — it must see every copy's ing before any
     * dedup picks one. provenance() cannot take this order: its stats
-    * aggregate over ALL grams, so it dedups corpus-wide by necessity. */
+    * aggregate over ALL grams, so it dedups corpus-wide by necessity.
+    * A position store with no committed count segment (a first batch
+    * that only retracted, or docs all shorter than L) has no
+    * duplicated gram, so it serves no span. */
   def spans(spark: SparkSession, path: String): DataFrame =
-    IngestSegments.readLive(spark, s"$path/pos") match {
-      case None =>
+    (live(spark, path), aggregateOpt(spark, path)) match {
+      case (Some(raw), Some(counts)) =>
+        val pos = raw.select(col("doc_id"), col("pos"), col("h"))
+        val dup = counts.filter(col("n") >= 2).select(col("h"))
+        graft.functions.DedupOps.islandSpans(
+          pos.join(dup, "h").dropDuplicates("doc_id", "pos"), L)
+      case _ => // nothing stored, or no gram ever counted
         spark.range(0).select(col("id").as("doc_id"),
           col("id").as("span_start"), col("id").as("span_end"),
           col("id").as("n_grams"))
-      case Some(raw) =>
-        val pos = IngestSegments
-          .resolveTombstones(raw, "doc_id", "ing", col("pos") < 0,
-            IngestSegments.TombStat.NonNegative("pos"))
-          .select(col("doc_id"), col("pos"), col("h"))
-        val dup = AdditiveSegments.read(spark, s"$path/counts", reconcile)
-          .filter(col("n") >= 2).select(col("h"))
-        graft.functions.DedupOps.islandSpans(
-          pos.join(dup, "h").dropDuplicates("doc_id", "pos"), L)
     }
 
   /** q161: span provenance served from the stored index — the resolved
@@ -191,18 +114,4 @@ object SubstrIndexSink {
       case Some(pos) =>
         graft.functions.DedupOps.spanProvenanceFromGrams(pos, L)
     }
-
-  /** Fold: dead positions drop, tombstones are KEPT (newest per doc,
-    * `ing` preserved) — the [[IngestSegments]] retraction convention's
-    * crash-window argument. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    IngestSegments.compact(spark, s"$path/pos",
-      fold = IngestSegments.foldWithTombstones(_, "doc_id", "ing",
-        col("pos") < 0,
-        liveCols = Seq("doc_id", "pos", "h", "ing"),
-        dedupCols = Seq("doc_id", "pos"),
-        mkTomb = _.select(col("doc_id"), lit(-1L).as("pos"),
-          lit(0L).as("h"), col("ing"))), Seq.empty)
-    AdditiveSegments.compact(spark, s"$path/counts", reconcile)
-  }
 }

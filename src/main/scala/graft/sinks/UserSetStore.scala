@@ -3,61 +3,31 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A USER-RETRACTABLE set store: an [[IngestSegments]] row store of
+/** A USER-RETRACTABLE set store: the user-keyed [[LedgerStore]] of
   * (user_id, payload…, tomb, ing). Each batch lands its distinct
-  * `partial` rows as ingest=N (overwrite-by-own-id, replay-idempotent);
-  * a user retraction lands one tombstone row per user, its payload
-  * columns filled by `tombFill` (every payload value is legitimate, so
-  * the explicit `tomb` flag marks it — no sentinel exists). Reads and
-  * folds resolve latest-wins per USER: a tombstone kills every row of
-  * the user with ing ≤ it, and rows re-ingested later (higher ing)
-  * serve again. The read is the distinct payload set, and the fold
-  * dedups on that same payload, so a compaction never changes what a
-  * read serves. The two stores below differ only in their partial and
-  * their payload columns. */
-abstract class UserSetStore(tombFill: (String, Column)*) {
+  * [[rows]] as ingest=N; a user retraction lands one tombstone row per
+  * user, its payload columns filled by `tombFill` (every payload value
+  * is legitimate, so the explicit `tomb` flag marks it — no sentinel
+  * exists). Reads and folds resolve latest-wins per USER: a tombstone
+  * kills every row of the user with ing ≤ it, and rows re-ingested
+  * later (higher ing) serve again. The read is the distinct payload
+  * set, and the fold dedups on that same payload, so a compaction never
+  * changes what a read serves. The two stores below differ only in
+  * their rows and their payload columns. */
+abstract class UserSetStore(tombFill: (String, Column)*)
+    extends LedgerStore("user_id", IngestSegments.TombStat.NeverTrue("tomb"),
+      fill = tombFill :+ ("tomb" -> lit(true)),
+      dedup = "user_id" +: tombFill.map(_._1)) {
 
   private val payload = "user_id" +: tombFill.map(_._1)
 
   /** The batch's distinct (user_id, payload…) rows. */
-  protected def partial(batch: DataFrame): DataFrame =
+  protected def rows(batch: DataFrame): DataFrame =
     batch.select(payload.map(col): _*).distinct()
-
-  private def tombRows(users: DataFrame, ing: Column): DataFrame =
-    users.select(col("user_id") +: tombFill.map { case (n, c) => c.as(n) } :+
-      lit(true).as("tomb") :+ ing.as("ing"): _*)
-
-  /** foreachBatch hook: append batch N's rows as ingest=N. */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    partial(batch)
-      .withColumn("tomb", lit(false)).withColumn("ing", lit(batchId))
-      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
-
-  /** User retraction hook: `batch` carries the deleted user_ids; one
-    * tombstone row per user. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit =
-    tombRows(batch.select(col("user_id")).distinct(), lit(batchId))
-      .write.mode("overwrite").parquet(s"$path/ingest=$batchId")
 
   /** Merge-on-read: the LIVE distinct payload set. */
   def read(spark: SparkSession, path: String): DataFrame =
-    IngestSegments.readLive(spark, path) match {
-      case None =>
-        throw new IllegalArgumentException(s"no index segments under $path")
-      case Some(raw) =>
-        IngestSegments.resolveTombstones(raw, "user_id", "ing", col("tomb"),
-            IngestSegments.TombStat.NeverTrue("tomb"))
-          .select(payload.map(col): _*).distinct()
-    }
-
-  /** Fold: dead rows drop, tombstones are KEPT (newest per user) —
-    * the [[IngestSegments]] crash-window argument. */
-  def compact(spark: SparkSession, path: String): Unit =
-    IngestSegments.compact(spark, path,
-      fold = IngestSegments.foldWithTombstones(_, "user_id", "ing",
-        col("tomb"), liveCols = payload ++ Seq("tomb", "ing"),
-        dedupCols = payload, mkTomb = tombRows(_, col("ing"))),
-      Seq.empty)
+    liveOrThrow(spark, path).select(payload.map(col): _*).distinct()
 }
 
 /** Incrementally-maintained user-activity set — the streaming twin of
@@ -82,7 +52,7 @@ abstract class UserSetStore(tombFill: (String, Column)*) {
   * day, so the stored state is the activity set, never the matrix. */
 object RetentionSink extends UserSetStore("day" -> lit(null).cast("date")) {
 
-  override protected def partial(batch: DataFrame): DataFrame =
+  override protected def rows(batch: DataFrame): DataFrame =
     // a timestampless event is no evidence of activity (the q118
     // batch side applies the same refusal, so stream ≡ batch holds)
     batch.filter(col("ts").isNotNull)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * q167 fixed for the substring card applied here: a doc deleted via
   * the CDC `D` route must leave the live vocabulary, or every
   * tokenizer-training read counts it forever). Two sub-stores per
-  * table path, the [[SubstrIndexSink]] architecture ported verbatim:
+  * table path, the [[SubstrIndexSink]] architecture:
   *
   *  - `rows`: each batch's per-doc token ledger (doc_id, token, tf,
   *    ing) as an [[IngestSegments]] row store; `ing` is the writing
@@ -26,116 +26,38 @@ import org.apache.spark.sql.functions._
   *    the serving read stays VOCABULARY-sized (Heaps' law) however
   *    large the corpus.
   *
-  * Same replay/idempotence story as SubstrIndexSink.cdcCore: both
-  * writes are overwrite-by-own-id (the additive write is
-  * marker-gated), the negative partial is computed EXCLUDING this
-  * batch's own rows (`ing != batchId`), so crashes anywhere replay to
-  * byte-identical content; retracting a dead or never-ingested doc
-  * resolves to zero live rows → no subtraction. df stays additive
-  * under the one-doc-one-admission contract (a doc's tokens arrive in
-  * exactly one batch; retraction + higher-ing re-ingest preserves it
-  * because the resolve leaves exactly one admission live).
+  * A [[LedgerStore]] declaration: the hooks, the replay/idempotence
+  * story (both writes overwrite-by-own-id, the negative partial computed
+  * EXCLUDING this batch's own rows, a dead or never-ingested doc
+  * resolving to zero live rows → no subtraction) and the folds are
+  * that class's. df stays additive under the one-doc-one-admission
+  * contract (a doc's tokens arrive in exactly one batch; retraction +
+  * higher-ing re-ingest preserves it because the resolve leaves exactly
+  * one admission live).
   */
-object VocabSink {
+object VocabSink extends LedgerStore("doc_id",
+    IngestSegments.TombStat.NonNegative("tf"),
+    fill = Seq("token" -> lit(""), "tf" -> lit(-1L)),
+    dedup = Seq("doc_id", "token"), ledger = "/rows",
+    agg = Some("agg" -> new SumStore(Seq("token"), Seq("freq", "df"))(
+      (rows, _) => graft.functions.TextOps.vocabFromRows(rows)))) {
 
-  private[graft] def partial(batch: DataFrame): DataFrame =
-    graft.functions.TextOps.vocabAggregate(batch)
-
-  private def reconcile(segs: DataFrame): DataFrame =
-    segs.groupBy(col("token"))
-      .agg(sum(col("freq")).as("freq"), sum(col("df")).as("df"))
-
-  /** foreachBatch hook for pure-ingest streams. */
-  def writer(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path, batch,
-      batch.sparkSession.range(0).select(col("id").as("doc_id")), batchId)
-
-  /** Retraction hook (the CDC `D` route): `batch` carries the deleted
-    * doc_ids. */
-  def retract(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    cdcCore(path,
-      s.range(0).select(col("id").as("doc_id"), lit("").as("text")),
-      batch.select(col("doc_id")), batchId)
-  }
-
-  /** Mixed CDC hook (`op = 'D'` rows retract, the rest ingest) —
-    * delete-wins within the batch, the SubstrIndexSink.cdc shape. */
-  def cdc(path: String)(batch: DataFrame, batchId: Long): Unit =
-    cdcCore(path,
-      batch.filter(col("op") =!= "D").select(col("doc_id"), col("text")),
-      batch.filter(col("op") === "D").select(col("doc_id")), batchId)
-
-  /** The one write path (see SubstrIndexSink.cdcCore — the canonical
-    * write-up of this shape): ONE ledger segment (per-doc rows +
-    * tombstones) and ONE additive partial (inserts' positive counts ∪
-    * retracted docs' negative live counts). */
-  private def cdcCore(path: String, ins: DataFrame, dels: DataFrame,
-      batchId: Long): Unit = {
-    val docs = dels.select(col("doc_id")).distinct().persist()
-    // delete-wins within the batch: an in-batch-deleted doc is never
-    // admitted, keeping the partial consistent with its tombstone
-    val rows = graft.functions.TextOps.vocabDocRows(
-      ins.join(broadcast(docs), Seq("doc_id"), "left_anti")).persist()
-    try {
-      // the ledger read exists only for deletes — a pure-ingest batch
-      // must not pay a store scan
-      val neg = if (docs.isEmpty) None
-      else IngestSegments.readLive(rows.sparkSession, s"$path/rows") match {
-        case None => None
-        case Some(raw) =>
-          val live = IngestSegments.resolveTombstones(
-            raw.filter(col("ing") =!= batchId), "doc_id", "ing",
-            col("tf") < 0, IngestSegments.TombStat.NonNegative("tf"))
-            // duplicate-tolerant store read (compact-race double-reads):
-            // a crash-window copy must not double the subtraction
-            .dropDuplicates("doc_id", "token")
-          Some(live.join(broadcast(docs), Seq("doc_id"), "left_semi")
-            .groupBy(col("token"))
-            .agg((-sum(col("tf"))).as("freq"), (-count(lit(1))).as("df")))
-      }
-      rows.withColumn("ing", lit(batchId))
-        .unionByName(docs.select(col("doc_id"), lit("").as("token"),
-          lit(-1L).as("tf"), lit(batchId).as("ing")))
-        .write.mode("overwrite").parquet(s"$path/rows/ingest=$batchId")
-      val pos = graft.functions.TextOps.vocabFromRows(rows)
-      AdditiveSegments.write(
-        neg.map(n => pos.unionByName(n).groupBy(col("token"))
-            .agg(sum(col("freq")).as("freq"), sum(col("df")).as("df")))
-          .getOrElse(pos),
-        s"$path/agg", batchId)
-    } finally { rows.unpersist(false); docs.unpersist(false); () }
-  }
+  protected def rows(docs: DataFrame): DataFrame =
+    graft.functions.TextOps.vocabDocRows(docs)
 
   /** Merge-on-read: the LIVE (token, freq, df) table. The df > 0
     * filter drops exactly-telescoped-to-zero tokens (every occurrence
     * retracted) — the batch build over the live corpus has no row for
     * them. */
   def read(spark: SparkSession, path: String): DataFrame =
-    AdditiveSegments.read(spark, s"$path/agg", reconcile)
-      .filter(col("df") > 0)
+    aggregate(spark, path).filter(col("df") > 0)
 
   /** read() tolerating a segment-less table (cold-start streams whose
     * batches so far tokenized to nothing). */
   def readOpt(spark: SparkSession, path: String): Option[DataFrame] =
-    AdditiveSegments.readOpt(spark, s"$path/agg", reconcile)
-      .map(_.filter(col("df") > 0))
+    aggregateOpt(spark, path).map(_.filter(col("df") > 0))
 
   /** The q82-shaped view: deterministic top-k with dense ranks. */
   def topK(spark: SparkSession, path: String, k: Int = 200): DataFrame =
     graft.functions.TextOps.vocabTopK(read(spark, path), k)
-
-  /** Fold both sub-stores: ledger dead rows drop, tombstones are KEPT
-    * (the [[IngestSegments]] crash-window argument); additive partials
-    * sum-fold (negatives and positives telescope into the fold). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    IngestSegments.compact(spark, s"$path/rows",
-      fold = IngestSegments.foldWithTombstones(_, "doc_id", "ing",
-        col("tf") < 0,
-        liveCols = Seq("doc_id", "token", "tf", "ing"),
-        dedupCols = Seq("doc_id", "token"),
-        mkTomb = _.select(col("doc_id"), lit("").as("token"),
-          lit(-1L).as("tf"), col("ing"))), Seq.empty)
-    AdditiveSegments.compact(spark, s"$path/agg", reconcile)
-  }
 }
