@@ -171,7 +171,7 @@ object Bench {
 
   /** Every query whose FIRST run at a given sf dir pays a one-off
     * stored-layout / lifecycle / model build (every graft.sinks.Lifecycle
-    * state, the _SUCCESS-gated one-shot layouts, and the per-JVM
+    * state, q98/q99's in-place bucketed tables, and the per-JVM
     * k-means cell model): each
     * runs ONCE untimed before the timed loop so iteration 1 measures
     * the serving read, not the ingest job — in production those builds

@@ -763,80 +763,29 @@ object DedupOps {
     * convention applied to the dedup labels: all three serving views
     * are cheap cuts of the SAME closure, and a production pipeline
     * materializes labels once per corpus snapshot rather than re-paying
-    * the pair generation + hash-min loop per view. Keyed by the
-    * documents fingerprint (md5(dir)+len+mtime), gated by _SUCCESS; the
+    * the pair generation + hash-min loop per view. Published through
+    * [[graft.sinks.Lifecycle]] (keyed by the documents fingerprint); the
     * build runs the live hash-min engine (collapseClusters — the
     * q104/q106 star/auto paths and the q115/q116 incremental lifecycles
     * stay live engines, so the driver gate still exercises every
     * closure engine each round on a wiped /tmp). Deterministic: the
     * hash-min closure's fixpoint is input-determined, so the stored
     * read is hash-identical to the live loop. */
-  /** Code-layout version token in the cache path (the __buckets
-    * geometry-pin convention): a future change to collapseClusters /
-    * shingleJaccardPairs must bump this or keep serving labels computed
-    * by the OLD code until /tmp is wiped — the fingerprint tag only
-    * tracks the DATA. */
+  /** Code-layout version token, the layout's Lifecycle variant (the
+    * __buckets geometry-pin convention): a future change to
+    * collapseClusters / shingleJaccardPairs must bump this or keep
+    * serving labels computed by the OLD code until /tmp is wiped — the
+    * fingerprint tag only tracks the DATA. A bump's build sweeps the
+    * superseded version. */
   private val LabelLayoutVersion = "v2-hashmin-w3s0.5-hsh"
 
   private def ensureClusterLabels(s: SparkSession, d: String): String =
-    synchronized {
-      val tag = SimilarityOps.sourceTag(s, d, "documents")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-dedup-labels"
-      val current = s"$tag-$LabelLayoutVersion"
-      val path = s"$base/$current"
-      // stage-then-rename (the shared cross-driver publish protocol;
-      // labels are input-determined, so a lost race serves an
-      // identical winner copy)
-      graft.sinks.StagedLayout.ensure(s, path)(
-        graft.sinks.Hfs.exists(s, s"$path/_SUCCESS")) { stage =>
-        // Sweep label layouts for the SAME data tag left by a different
-        // (or pre-versioning absent) code version — a version bump would
-        // otherwise orphan every older directory forever, accumulating
-        // stale parquet under /tmp across rounds. Only this tag's
-        // siblings: other tags are other data dirs' LIVE caches. The
-        // sweep runs ONLY here, inside the build path (current layout
-        // absent/incomplete): running it on every ensure call made two
-        // mixed-version drivers mutually delete each other's COMPLETED
-        // layouts on every serve — rebuild ping-pong plus transient
-        // FileNotFound in the other driver (r15 advice). ANY `.stage-`
-        // name is off-limits, not just the current version's — a
-        // concurrent driver running an OLDER binary may be mid-build
-        // inside its own version's stage (r15 review) — and deletions
-        // are AGE-GATED: a recent-mtime sibling is presumed to be a
-        // concurrent other-version driver's live cache (same fixture
-        // era), not orphaned debris, and is left for the /tmp wipe.
-        // Residual: an other-version layout older than the gate that is
-        // STILL actively served gets swept — bounded blast radius (one
-        // loud FileNotFound on a /tmp cache that rebuilds
-        // deterministically), and a mixed-version fleet older than the
-        // gate window is a deployment anomaly, not a steady state.
-        sweepStaleLayouts(s, base, tag, current)
-        collapseClusters(
-          shingleJaccardPairs(s, d).select(col("doc_a"), col("doc_b")))
-          .write.mode("overwrite").parquet(stage)
-      }
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), "dedup-labels",
+        s"-$LabelLayoutVersion") { stage =>
+      collapseClusters(
+        shingleJaccardPairs(s, d).select(col("doc_a"), col("doc_b")))
+        .write.mode("overwrite").parquet(stage)
     }
-
-  /** The stale-version sweep shared by the versioned stored layouts
-    * (see ensureClusterLabels' rationale comment — same rules: only
-    * this tag's siblings, never `.stage-` dirs, age-gated). */
-  private def sweepStaleLayouts(s: SparkSession, base: String, tag: String,
-      current: String): Unit = {
-    val now = System.currentTimeMillis()
-    graft.sinks.Hfs.childDirs(s, base, tag)
-      .filterNot(n => n.startsWith(current) || n.contains(".stage-"))
-      .filter(n =>
-        // a sibling deleted between the listing and this stat (a
-        // concurrent same-tag builder's sweep, or the /tmp wipe)
-        // is already what the sweep wanted — never a build failure
-        scala.util.Try(graft.sinks.Hfs.stat(s, s"$base/$n")._2)
-          .toOption.exists(mt => now - mt > StaleLayoutSweepAgeMs))
-      .foreach(n => graft.sinks.Hfs.deleteRecursive(s, s"$base/$n"))
-  }
-
-  /** Age gate for the stale-layout sweep above: a same-tag sibling
-    * younger than this is treated as another driver's live cache. */
-  private[graft] val StaleLayoutSweepAgeMs: Long = 15L * 60 * 1000
 
   /** q111: dedup survivorship — the resolution step that follows
     * clustering: every near-dup cluster keeps ONE canonical document
@@ -1759,23 +1708,16 @@ object DedupOps {
   private val IncLabelLayoutVersion = "v1-inc3-hsh"
 
   private def ensureIncrementalLabels(s: SparkSession, d: String): String =
-    synchronized {
-      val tag = SimilarityOps.sourceTag(s, d, "documents")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-dedup-inclabels"
-      val current = s"$tag-$IncLabelLayoutVersion"
-      val path = s"$base/$current"
-      graft.sinks.StagedLayout.ensure(s, path)(
-        graft.sinks.Hfs.exists(s, s"$path/_SUCCESS")) { stage =>
-        sweepStaleLayouts(s, base, tag, current)
-        val labels = incrementalClusters(shingleJaccardPairs(s, d)
-          .select(col("doc_a"), col("doc_b"),
-            greatest(pmod(col("doc_a"), lit(3)), pmod(col("doc_b"), lit(3)))
-              .as("step")))
-        // incrementalClusters returns its final table persisted — free
-        // the blocks once written (the store is the serving copy)
-        try labels.write.mode("overwrite").parquet(stage)
-        finally labels.unpersist(false): Unit
-      }
+    graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), "dedup-inclabels",
+        s"-$IncLabelLayoutVersion") { stage =>
+      val labels = incrementalClusters(shingleJaccardPairs(s, d)
+        .select(col("doc_a"), col("doc_b"),
+          greatest(pmod(col("doc_a"), lit(3)), pmod(col("doc_b"), lit(3)))
+            .as("step")))
+      // incrementalClusters returns its final table persisted — free
+      // the blocks once written (the store is the serving copy)
+      try labels.write.mode("overwrite").parquet(stage)
+      finally labels.unpersist(false): Unit
     }
 
   /** q116: the LIVE label table ≡ q115 through the version-chain sink
@@ -1848,21 +1790,19 @@ object DedupOps {
           // after three edge segments, so the edge-store fold is real
           // (two-then-compact folds nothing — the max id stays out)
           graft.sinks.LabelSink.compact(s, stage)
-          graft.sinks.LabelSink.retract(stage)(
-            universe.filter(pmod(col("doc_id"), lit(10)) === 3), 3L)
+          val (retract1, _, retract2) =
+            graft.sinks.Lifecycle.halvingMasks(col("doc_id"))
+          graft.sinks.LabelSink.retract(stage)(universe.filter(retract1), 3L)
           // resurrection: the ≡ 3 (mod 20) half re-ingests — its pairs
           // re-emitted iff BOTH endpoints are live at this point
           // (dead-at-4 ⇔ ≡ 13 (mod 20): retracted and not resurrected)
+          def masks(e: String) = graft.sinks.Lifecycle.halvingMasks(col(e))
+          val ((r1a, resA, _), (r1b, resB, _)) = (masks("doc_a"), masks("doc_b"))
           graft.sinks.LabelSink.writer(stage)(
-            pairs.filter(
-              ((pmod(col("doc_a"), lit(20)) === 3) ||
-                (pmod(col("doc_b"), lit(20)) === 3)) &&
-              (pmod(col("doc_a"), lit(20)) =!= 13) &&
-              (pmod(col("doc_b"), lit(20)) =!= 13))
+            pairs.filter((resA || resB) && !(r1a && !resA) && !(r1b && !resB))
               .select(col("doc_a"), col("doc_b")), 4L)
           graft.sinks.LabelSink.compact(s, stage)
-          graft.sinks.LabelSink.retract(stage)(
-            universe.filter(pmod(col("doc_id"), lit(40)) === 3), 5L)
+          graft.sinks.LabelSink.retract(stage)(universe.filter(retract2), 5L)
         } finally pairs.unpersist(false): Unit
     }
 

@@ -334,52 +334,29 @@ object PqOps {
   }
 
   /** The stored model, ordered (cells by id; books by (j, code)).
-    *
-    * Cached per (path, model-dir fingerprint): the model is FROZEN by
-    * the ingest contract (only code segments ever change after
-    * bootstrap), so a serving probe must not pay two driver-side
-    * parquet reads per request. The fingerprint (cents/books _SUCCESS
-    * mtimes) invalidates the entry if the index is ever REBUILT at the
-    * same path — the one legal way the model can change. */
+    * Cached per model-dir listing ([[SimilarityOps.ModelCache]]): the
+    * model is FROZEN by the ingest contract (only code segments ever
+    * change after bootstrap), so a serving probe must not pay two
+    * driver-side parquet reads per request. */
   def loadModel(s: SparkSession, path: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    // fingerprint = the model dirs' file listings: parquet part names
-    // carry per-job UUIDs, so ANY rewrite changes the fingerprint —
-    // immune to filesystem mtime granularity (a fast rebuild within one
-    // mtime tick would alias a stat-based key)
-    val fp = Seq("cents", "books").map { t =>
-      graft.sinks.Hfs.childFiles(s, s"$path/$t").sorted
-    }
-    modelCache.get((path, fp)) match {
-      case Some(m) => m
-      case None =>
-        val cents = s.read.parquet(s"$path/cents")
-          .select(col("cell"), col("centroid")).collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-          .sortBy(_._1).map(_._2)
-        val flat = s.read.parquet(s"$path/books")
-          .select(col("j"), col("code"), col("cb")).collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
-          .toMap
-        // the stored rows define the geometry — no constant consulted
-        val bm = flat.keys.map(_._1).max + 1
-        val bk = flat.keys.map(_._2).max + 1
-        val books = Array.tabulate(bm, bk)((j, c) => flat((j, c)))
-        val m = (cents, books)
-        modelCache.synchronized {
-          // stale-fingerprint entries for this path die with the insert
-          // (a rebuilt index must not pin its predecessor's model)
-          modelCache.keys.filter(_._1 == path).foreach(modelCache.remove)
-          modelCache((path, fp)) = m
-        }
-        m
-    }
-  }
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    modelCache(s, path)
 
-  /** (path, model fingerprint) → model; model-sized values (~9 KB). */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, Seq[Seq[String]]), (Array[Array[Double]], Array[Array[Array[Double]]])]
+  private val modelCache = new SimilarityOps.ModelCache(Seq("cents", "books"))(
+    (s, path) => {
+      val cents = s.read.parquet(s"$path/cents")
+        .select(col("cell"), col("centroid")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+        .sortBy(_._1).map(_._2)
+      val flat = s.read.parquet(s"$path/books")
+        .select(col("j"), col("code"), col("cb")).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
+        .toMap
+      // the stored rows define the geometry — no constant consulted
+      val bm = flat.keys.map(_._1).max + 1
+      val bk = flat.keys.map(_._2).max + 1
+      (cents, Array.tabulate(bm, bk)((j, c) => flat((j, c))))
+    })
 
   /** Probe: rank cells by query·centroid cosine on the driver (ties →
     * lower cell, as probeIvfIndex), build the m×ksub ADC table from the
@@ -571,25 +548,23 @@ object PqOps {
       .withColumn("__rn", row_number().over(w))
   }
 
-  def pqIndexPath(s: SparkSession, d: String): String =
-    // -v2ing: r16 added the persisted logical `ing` column (tombstone
-    // convention) — a pre-r16 layout must rebuild, not feed the
-    // recency window a schema without it
-    s"${sys.props("java.io.tmpdir")}/graft-ivfpq/" +
-      s"${SimilarityOps.sourceTag(s, d, "embeddings")}-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters-v2ing"
+  // -v2ing: r16 added the persisted logical `ing` column (tombstone
+  // convention) — a pre-r16 layout must rebuild, not feed the recency
+  // window a schema without it
+  private val PqIndexVariant =
+    s"-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters-v2ing"
 
-  private def ensurePqIndex(s: SparkSession, d: String): String = synchronized {
-    val path = pqIndexPath(s, d)
-    // stage-then-rename (StagedLayout): deterministic build, so a lost
-    // cross-driver race serves an identical winner copy
-    graft.sinks.StagedLayout.ensure(s, path)(
-      Seq("codes/ingest=-1", "cents", "books")
-        .forall(t => graft.sinks.Hfs.exists(s, s"$path/$t/_SUCCESS"))) { stage =>
+  def pqIndexPath(s: SparkSession, d: String): String =
+    graft.sinks.Lifecycle.location(s, d, Seq("embeddings"), "ivfpq",
+      PqIndexVariant)
+
+  private def ensurePqIndex(s: SparkSession, d: String): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "ivfpq",
+        PqIndexVariant) { stage =>
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       buildPqIndex(emb, stage, pqIters = DefaultPqIters)
     }
-  }
 
   /** Everything the generated oracle needs, cached by the q94 run (the
     * ivfOracleState pattern): the stored model plus the query-derived
@@ -754,7 +729,7 @@ object PqOps {
     * (torn builds are cleared and rebuilt, never served). */
   private def ensurePqLifecycle(s: SparkSession, d: String): String =
     graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "ivfpq-stream",
-        s"-c8-m$DefaultM-k$DefaultKsub-i$DefaultPqIters-v2ing") { path =>
+        PqIndexVariant) { path =>
       val emb = SimilarityOps.annVectors(s, d)
       def cut(b: Long) = emb.filter(pmod(col("vec_id"), lit(3)) === b)
       buildPqIndex(cut(0), path, pqIters = DefaultPqIters, trainOn = Some(emb))
@@ -794,10 +769,12 @@ object PqOps {
       ingestPqSegment(cut(1), stage, 0L)
       ingestPqSegment(cut(2), stage, 1L)
       compactPqIndex(s, stage)
-      retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(10)) === 3), 2L)
-      ingestPqSegment(emb.filter(pmod(col("vec_id"), lit(20)) === 3), stage, 3L)
+      val (retract1, resurrect, retract2) =
+        graft.sinks.Lifecycle.halvingMasks(col("vec_id"))
+      retractPqVecs(stage)(emb.filter(retract1), 2L)
+      ingestPqSegment(emb.filter(resurrect), stage, 3L)
       compactPqIndex(s, stage)
-      retractPqVecs(stage)(emb.filter(pmod(col("vec_id"), lit(40)) === 3), 4L)
+      retractPqVecs(stage)(emb.filter(retract2), 4L)
     }
 
   @volatile private var pqRetractOracleState: Option[PqOracleModel] = None

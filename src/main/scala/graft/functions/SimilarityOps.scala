@@ -558,41 +558,20 @@ object SimilarityOps {
       cells: Seq[Int]): DataFrame =
     readPrunedParts(s, root, "cell=", cells.map(_.toLong))
 
-  /** Cache tag for a stored layout: the dir path hash PLUS the source
-    * parquet's (length, mtime) fingerprint, so regenerated fixture data
-    * invalidates the cached index instead of silently serving stale
-    * neighbors (and distinct dirs can never collide on a sanitized
-    * name). */
-  private[functions] def sourceTag(s: SparkSession, d: String, table: String): String = {
-    val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/$table.parquet")
-    // full-width digest of the path, not String.hashCode: a 32-bit
-    // collision between two data dirs whose fixtures share (len, mtime)
-    // would silently serve one dir's stored index for the other's
-    // queries
-    val id = Scalars.md5Hex(d.getBytes("UTF-8")).take(12)
-    s"$id-$len-$mtime"
-  }
-
-  /** Index location for a given sf dir (deterministic build → safe to
-    * reuse across calls; _SUCCESS markers gate completeness, the
-    * fingerprint in the name gates freshness). */
+  /** Index location for a given sf dir ([[graft.sinks.Lifecycle]]'s
+    * tag over the embeddings fixture; `-k<k>-i<iters>` is the variant). */
   def ivfIndexPath(s: SparkSession, d: String, k: Int, iters: Int): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ivf/${sourceTag(s, d, "embeddings")}-k$k-i$iters"
+    graft.sinks.Lifecycle.location(s, d, Seq("embeddings"), "ivf",
+      s"-k$k-i$iters")
 
   private def ensureIvfIndex(s: SparkSession, d: String, k: Int,
-      iters: Int): String = synchronized {
-    val path = ivfIndexPath(s, d, k, iters)
-    // stage-then-rename (StagedLayout): the build is input-determined
-    // (deterministic k-means), so a lost cross-driver race serves an
-    // identical winner copy instead of a torn interleaved overwrite
-    graft.sinks.StagedLayout.ensure(s, path)(
-      graft.sinks.Hfs.exists(s, s"$path/corpus/_SUCCESS") &&
-        graft.sinks.Hfs.exists(s, s"$path/centroids/_SUCCESS")) { stage =>
+      iters: Int): String =
+    graft.sinks.Lifecycle.ensure(s, d, Seq("embeddings"), "ivf",
+        s"-k$k-i$iters") { stage =>
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       buildIvfIndex(emb, stage, k, iters)
     }
-  }
 
   /** Centroids of the last annIvf run, keyed for oracle generation: the
     * q42 oracle must assign cells with the SAME centroid model the stored
@@ -611,35 +590,42 @@ object SimilarityOps {
     * print-the-model contract as q117's. */
   @volatile private var semdecontamOracleState: Option[(Int, Double, Array[Array[Double]])] = None
 
-  /** The stored centroid model of an index, ordered by cell id.
-    *
-    * Cached per (path, _SUCCESS fingerprint): the centroid model is
-    * immutable once built (the same frozen-model contract as the PQ
-    * sidecar), so serving probes skip the per-request driver-side
-    * parquet read; a rebuild at the same path refreshes the _SUCCESS
-    * mtime and invalidates the entry. */
-  def loadCentroids(s: SparkSession, path: String): Array[Array[Double]] = {
-    // file-listing fingerprint, not _SUCCESS stat: part names carry
-    // per-job UUIDs, so any rewrite changes the key regardless of the
-    // filesystem's mtime granularity
-    val fp = graft.sinks.Hfs.childFiles(s, s"$path/centroids").sorted
-    centroidCache.get((path, fp)) match {
-      case Some(c) => c
-      case None =>
-        val c = s.read.parquet(s"$path/centroids")
-          .select(col("cell"), col("centroid")).collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-          .sortBy(_._1).map(_._2)
-        centroidCache.synchronized {
-          centroidCache.keys.filter(_._1 == path).foreach(centroidCache.remove)
-          centroidCache((path, fp)) = c
+  /** A per-JVM cache of a FROZEN model read from a stored layout:
+    * serving probes skip the per-request driver-side parquet reads.
+    * Keyed on (path, sorted file listing of each of the layout's model
+    * `dirs`): parquet part names carry per-job UUIDs, so a rebuild at
+    * the same path — the one legal way a model changes — misses
+    * regardless of the filesystem's mtime granularity, and its insert
+    * evicts the path's stale entries (a rebuilt index must not pin its
+    * predecessor's model). */
+  private[functions] final class ModelCache[M](dirs: Seq[String])(
+      read: (SparkSession, String) => M) {
+    private val cache =
+      scala.collection.concurrent.TrieMap.empty[(String, Seq[Seq[String]]), M]
+
+    def apply(s: SparkSession, path: String): M = {
+      val key = (path,
+        dirs.map(m => graft.sinks.Hfs.childFiles(s, s"$path/$m").sorted))
+      cache.getOrElse(key, {
+        val m = read(s, path)
+        cache.synchronized {
+          cache.keys.filter(_._1 == path).foreach(cache.remove)
+          cache(key) = m
         }
-        c
+        m
+      })
     }
   }
 
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[String]), Array[Array[Double]]]
+  /** The stored centroid model of an index, ordered by cell id. */
+  def loadCentroids(s: SparkSession, path: String): Array[Array[Double]] =
+    centroidCache(s, path)
+
+  private val centroidCache = new ModelCache(Seq("centroids"))((s, path) =>
+    s.read.parquet(s"$path/centroids")
+      .select(col("cell"), col("centroid")).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1).map(_._2))
 
   /** IVF query against the stored index (built on first use per sf dir).
     * nprobe = k degrades to the exact q25 scan (spec-verified); the

@@ -66,57 +66,56 @@ object Bucketing {
   // spec-only.
   // ---------------------------------------------------------------------
 
-  /** Freshness fingerprint folding BOTH fact fixtures (a regenerated
-    * orders.parquet must invalidate the pair even if lineitem is
-    * unchanged) — sanitized to identifier-safe chars because it names
+  /** (location, tag) of the bucketed layout `kind` over `d`: the
+    * [[graft.sinks.Lifecycle]] tag folds BOTH fact fixtures (a
+    * regenerated orders.parquet must invalidate the pair even if
+    * lineitem is unchanged) and is identifier-safe, because it names
     * catalog TABLES, not just directories. */
-  private def pairTag(s: SparkSession, d: String): String = {
-    val stats = Seq("orders", "lineitem").map { n =>
-      val (len, mtime) = graft.sinks.Hfs.stat(s, s"$d/$n.parquet")
-      s"${len}_$mtime"
-    }
-    s"${graft.functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)}_${stats.mkString("_")}"
+  private def pairLayout(s: SparkSession, d: String, kind: String,
+      variant: String = ""): (String, String) = {
+    val loc = graft.sinks.Lifecycle.location(s, d, Seq("orders", "lineitem"),
+      kind, variant)
+    (loc, loc.drop(loc.lastIndexOf('/') + 1))
   }
 
-  /** Bucket count is a build-time knob (8 matches the fixture scale; a
-    * cluster build would use thousands). Encoded in the location so a
-    * re-ensure at a different count can never read a stale layout. */
-  private def pairLoc(tag: String, buckets: Int): String =
-    s"${sys.props("java.io.tmpdir")}/graft-bkt/$tag-b$buckets"
-
   /** Ensure both fact tables exist as bucketed+sorted EXTERNAL tables
-    * for `d` and return their catalog names. Two cold-start paths:
-    *
-    *  - no files yet → [[writeBucketed]], whose task/bucket alignment
-    *    makes every bucket one file, so the scan's SORTED BY metadata
-    *    holds — without it Spark sees multi-file buckets and re-sorts
-    *    under the join.
-    *  - files present but catalog empty (fresh JVM over the in-memory
-    *    catalog — the session-catalog twin of a metastore restore) →
-    *    re-register with CREATE TABLE … CLUSTERED/SORTED BY … LOCATION;
-    *    the data is not rewritten.
-    *
-    * A crash mid-write leaves no _SUCCESS → the next ensure rebuilds in
-    * overwrite mode; the catalog entry only ever points at a completed
-    * layout. */
+    * for `d` and return their catalog names. The layout is published
+    * through [[graft.sinks.Lifecycle]] (bucket count as its variant — a
+    * cluster build would use thousands): [[writeBucketed]]'s task/bucket
+    * alignment makes every bucket one file, so the scan's SORTED BY
+    * metadata holds — without it Spark sees multi-file buckets and
+    * re-sorts under the join. The build saves under the serving names
+    * (an Overwrite save replaces any entry an earlier build left) and
+    * then drops them, because they point into the stage; a crash or a
+    * torn leftover (no `__done`) is cleared and rebuilt, and the
+    * catalog only ever points at a published layout. One cold-start
+    * path: a name the catalog lacks (a first serve, a rebuild, or a
+    * fresh JVM over the in-memory catalog — the session-catalog twin of
+    * a metastore restore) is re-registered over the published files
+    * with CREATE TABLE … CLUSTERED/SORTED BY … LOCATION; the data is
+    * not rewritten. */
   def ensureBucketedPair(s: SparkSession, d: String,
-      buckets: Int = 8): (String, String) = synchronized {
-    val tag = pairTag(s, d)
-    val loc = pairLoc(tag, buckets)
+      buckets: Int = 8): (String, String) = {
     val specs = Seq(("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
-    val names = specs.map { case (src, key) =>
-      val name = s"graft_bkt_${src}_${tag}_b$buckets"
-      if (!s.catalog.tableExists(name)) {
-        val tableLoc = s"$loc/$src"
-        if (graft.sinks.Hfs.segmentCommitted(s, tableLoc)) {
-          val ddl = t(s, d, src).schema.toDDL
-          s.sql(s"CREATE TABLE $name ($ddl) USING PARQUET " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-            s"LOCATION '$tableLoc'")
-        } else
-          writeBucketed(t(s, d, src), name, key, buckets, Some(tableLoc))
+    val variant = s"_b$buckets"
+    val tag = pairLayout(s, d, "bkt", variant)._2
+    def name(src: String) = s"graft_bkt_${src}_$tag"
+    val loc = graft.sinks.Lifecycle.ensure(s, d, Seq("orders", "lineitem"),
+        "bkt", variant) { stage =>
+      specs.foreach { case (src, key) =>
+        writeBucketed(t(s, d, src), name(src), key, buckets,
+          Some(s"$stage/$src"))
+        s.sql(s"DROP TABLE ${name(src)}")
       }
-      name
+    }
+    val names = specs.map { case (src, key) =>
+      // IF NOT EXISTS: two threads may both find the name missing
+      if (!s.catalog.tableExists(name(src)))
+        s.sql(s"CREATE TABLE IF NOT EXISTS ${name(src)} " +
+          s"(${t(s, d, src).schema.toDDL}) USING PARQUET " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
+          s"LOCATION '$loc/$src'")
+      name(src)
     }
     (names.head, names(1))
   }
@@ -536,8 +535,7 @@ object Bucketing {
     * no-op when their tail is already folded. */
   private def ensurePartitionedOrders(s: SparkSession, d: String): (String, String) =
     synchronized {
-      val tag = pairTag(s, d)
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-bktpart/$tag"
+      val (loc, tag) = pairLayout(s, d, "bktpart")
       val base = s"graft_part_orders_$tag"
       val o = t(s, d, "orders")
       val keyMod = pmod(col("o_orderkey"), lit(10))
@@ -584,8 +582,7 @@ object Bucketing {
     * the main exactly once). */
   private def ensureLiveOrders(s: SparkSession, d: String): (String, String) =
     synchronized {
-      val tag = pairTag(s, d)
-      val loc = s"${sys.props("java.io.tmpdir")}/graft-bktlive/$tag"
+      val (loc, tag) = pairLayout(s, d, "bktlive")
       val base = s"graft_live_orders_$tag"
       val o = t(s, d, "orders")
       val keyMod = pmod(col("o_orderkey"), lit(10))

@@ -3,15 +3,18 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The ONE build-once protocol behind every stored ingest lifecycle
-  * (the fold+tail, replay and retraction states the `_stream` and
-  * `_retract` queries serve): a builder supplies only its own
-  * write/compact/retract script, and this object decides the rest.
+/** The ONE build-once protocol behind every stored layout: the ingest
+  * lifecycles (the fold+tail, replay and retraction states the
+  * `_stream` and `_retract` queries serve) and the one-shot layouts
+  * (IVF, PQ and ANN-LSH indexes, cluster and incremental labels, the
+  * bucketed pair, basket pairs). A builder supplies only its own
+  * write script, and this object decides the rest.
   *
   *  - Location: `<java.io.tmpdir>/graft-<kind>/<tag>`, the tag being the
   *    sf dir's md5 prefix plus the (len, mtime) of every source table,
-  *    then the builder's layout `variant`. A regenerated fixture gets a
-  *    fresh tag dir, so an old generation is never served.
+  *    then the builder's layout `variant` (its code version). A
+  *    regenerated fixture gets a fresh tag dir, so an old generation is
+  *    never served.
   *  - Completeness: the `__done` marker, written LAST, inside the stage.
   *  - Publication: [[StagedLayout]] stage-then-rename. A build that
   *    crashes or throws never leaves a served dir, and a torn leftover
@@ -22,6 +25,9 @@ import org.apache.spark.sql.functions._
   *    the same state run `build` once; cross-process races are
   *    StagedLayout's (the loser serves the winner's identical copy —
   *    every script here is input-determined).
+  *  - Stale versions: the build path (never a serve of a complete
+  *    layout) sweeps the same data tag's other-variant siblings, so a
+  *    version bump does not orphan its predecessor under /tmp forever.
   */
 object Lifecycle {
 
@@ -45,10 +51,44 @@ object Lifecycle {
       val loc = location(s, d, sourceTables, kind, variant)
       StagedLayout.ensure(s, loc)(Hfs.readString(s, s"$loc/__done").nonEmpty) {
         stage =>
+          sweepStaleVariants(s, loc, variant)
           build(stage)
           Hfs.writeString(s, s"$stage/__done", "ok")
       }
     }
+
+  /** Delete the siblings of `loc` that carry its data tag under
+    * another variant than `variant`. Only this tag's siblings: other tags
+    * are other data dirs' LIVE caches. Running on every serve made two
+    * mixed-version drivers mutually delete each other's COMPLETED
+    * layouts (rebuild ping-pong plus transient FileNotFound), hence
+    * build path only. ANY `.stage-` name is off-limits, not just this
+    * variant's: a driver running an OLDER binary may be mid-build in its
+    * own stage. Deletions are AGE-GATED: a recent-mtime sibling is
+    * presumed to be a concurrent other-version driver's live cache, not
+    * orphaned debris, and is left for the /tmp wipe. Residual: an
+    * other-version layout older than the gate that is STILL served gets
+    * swept — one loud FileNotFound on a cache that rebuilds
+    * deterministically. */
+  private def sweepStaleVariants(s: SparkSession, loc: String,
+      variant: String): Unit = {
+    val base = loc.take(loc.lastIndexOf('/'))
+    val current = loc.drop(base.length + 1)
+    val now = System.currentTimeMillis()
+    Hfs.childDirs(s, base, current.stripSuffix(variant))
+      .filterNot(n => n.startsWith(current) || n.contains(".stage-"))
+      .filter(n =>
+        // a sibling deleted between the listing and this stat (a
+        // concurrent same-tag builder's sweep, or the /tmp wipe) is
+        // already what the sweep wanted — never a build failure
+        scala.util.Try(Hfs.stat(s, s"$base/$n")._2)
+          .toOption.exists(mt => now - mt > StaleLayoutSweepAgeMs))
+      .foreach(n => Hfs.deleteRecursive(s, s"$base/$n"))
+  }
+
+  /** Age gate of the stale-variant sweep: a same-tag sibling younger
+    * than this is treated as another driver's live cache. */
+  private[graft] val StaleLayoutSweepAgeMs: Long = 15L * 60 * 1000
 
   /** The worst RETRACTABLE state a store can serve from, shared by the
     * doc-, user- and vector-keyed retraction lifecycles: `rows` cut into

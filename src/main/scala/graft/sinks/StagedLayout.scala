@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Cross-process atomic publication of a derived layout directory —
   * the ONE copy of the stage-then-rename protocol every stored layout
-  * shares: the one-shot builders (cluster labels, incremental labels,
-  * IVF/PQ indexes) call it directly, and every ingest lifecycle and the
-  * one-shot ANN-LSH and basket-pair layouts reach it through
-  * [[Lifecycle]]. Before r15 each builder overwrote INTO its
+  * shares: [[Lifecycle]] is its only main caller, so every ingest
+  * lifecycle and every one-shot layout (IVF, PQ and ANN-LSH indexes,
+  * cluster and incremental labels, the bucketed pair, basket pairs)
+  * reaches it there. Before r15 each builder overwrote INTO its
   * served path: `synchronized` is per-JVM only, so two concurrent DRIVERS
   * could interleave overwrite writes into the same path and serve a
   * torn directory (the r14 ensureClusterLabels fix, generalized here

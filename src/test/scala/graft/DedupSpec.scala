@@ -251,15 +251,14 @@ class DedupSpec extends SparkSpec {
       s"${sys.props("java.io.tmpdir")}/graft-dedup-labels")
     // sf0001's own tag, recomputed the way the cache keys it — the
     // sweep is per-tag, so the planted stale dirs must share it
-    val (len, mtime) = sinks.Hfs.stat(spark, s"$sf0001/documents.parquet")
-    val tag =
-      s"${functions.Scalars.md5Hex(sf0001.getBytes("UTF-8")).take(12)}-$len-$mtime"
+    val tag = new java.io.File(sinks.Lifecycle.location(
+      spark, sf0001, Seq("documents"), "dedup-labels")).getName
     val current = base.listFiles().map(_.getName)
       .filter(n => n.startsWith(s"$tag-") && !n.contains(".stage-") &&
         new java.io.File(base, s"$n/_SUCCESS").exists())
       .head // the live versioned layout for THIS tag
     val stale = System.currentTimeMillis() -
-      DedupOps.StaleLayoutSweepAgeMs - 60000L
+      sinks.Lifecycle.StaleLayoutSweepAgeMs - 60000L
     def mk(name: String, old: Boolean): java.io.File = {
       val d = new java.io.File(base, name)
       if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)

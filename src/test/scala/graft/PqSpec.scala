@@ -283,22 +283,30 @@ class PqSpec extends SparkSpec {
   test("frozen model is cached per fingerprint; a rebuild invalidates it") {
     val rnd = new java.util.Random(41)
     def rv() = Array.fill(64)(rnd.nextGaussian()).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqcache").toString
-    PqOps.buildPqIndex((0 to 40).map(i => (i.toLong, rv())).toDF("vec_id", "v"),
-      dir, kCells = 4, ksub = 16)
-    val m1 = PqOps.loadModel(spark, dir)
-    val m2 = PqOps.loadModel(spark, dir)
-    assert(m1._1.eq(m2._1) && m1._2.eq(m2._2),
-      "second load of a frozen model must be the cached instance")
-    // a REBUILD at the same path is the one legal model change — the
-    // fresh part-file listing (per-job UUID names) must invalidate the
-    // cache regardless of filesystem mtime granularity
-    graft.sinks.Hfs.deleteRecursive(spark, s"$dir/codes")
-    PqOps.buildPqIndex((0 to 40).map(i => (i.toLong, rv())).toDF("vec_id", "v"),
-      dir, kCells = 4, ksub = 16)
-    val m3 = PqOps.loadModel(spark, dir)
-    assert(!m1._1.eq(m3._1),
-      "a rebuilt index must not serve its predecessor's cached model")
+    def rows = (0 to 40).map(i => (i.toLong, rv())).toDF("vec_id", "v")
+    // (name, build at dir, load the model's parts): the PQ model and the
+    // IVF centroid model share one listing-fingerprinted cache
+    val loaders: Seq[(String, String => Unit, String => Seq[AnyRef])] = Seq(
+      ("pq", dir => PqOps.buildPqIndex(rows, dir, kCells = 4, ksub = 16),
+        dir => { val m = PqOps.loadModel(spark, dir); Seq(m._1, m._2) }),
+      ("ivf", dir => SimilarityOps.buildIvfIndex(rows, dir, k = 4),
+        dir => Seq(SimilarityOps.loadCentroids(spark, dir))))
+    for ((name, build, load) <- loaders) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-${name}cache").toString
+      build(dir)
+      val m1 = load(dir)
+      val m2 = load(dir)
+      assert(m1.zip(m2).forall { case (a, b) => a.eq(b) },
+        s"$name: second load of a frozen model must be the cached instance")
+      // a REBUILD at the same path is the one legal model change — the
+      // fresh part-file listing (per-job UUID names) must invalidate the
+      // cache regardless of filesystem mtime granularity
+      graft.sinks.Hfs.deleteRecursive(spark, s"$dir/codes")
+      build(dir)
+      val m3 = load(dir)
+      assert(!m1.head.eq(m3.head),
+        s"$name: a rebuilt index must not serve its predecessor's cached model")
+    }
   }
 
   test("malformed vectors are excluded from build and ingest, never indexed") {
