@@ -66,16 +66,17 @@ object Bucketing {
   // spec-only.
   // ---------------------------------------------------------------------
 
-  /** (location, tag) of the bucketed layout `kind` over `d`: the
-    * [[graft.sinks.Lifecycle]] tag folds BOTH fact fixtures (a
-    * regenerated orders.parquet must invalidate the pair even if
-    * lineitem is unchanged) and is identifier-safe, because it names
-    * catalog TABLES, not just directories. */
-  private def pairLayout(s: SparkSession, d: String, kind: String,
-      variant: String = ""): (String, String) = {
-    val loc = graft.sinks.Lifecycle.location(s, d, Seq("orders", "lineitem"),
-      kind, variant)
-    (loc, loc.drop(loc.lastIndexOf('/') + 1))
+  private val pairSources = Seq("orders", "lineitem")
+
+  /** The [[graft.sinks.Lifecycle]] tag of the bucketed layout `kind`
+    * over `d`: it folds BOTH fact fixtures (a regenerated orders.parquet
+    * must invalidate the layout even if lineitem is unchanged) and is
+    * identifier-safe, because it names catalog TABLES, not just
+    * directories. */
+  private def pairTag(s: SparkSession, d: String, kind: String,
+      variant: String = ""): String = {
+    val loc = graft.sinks.Lifecycle.location(s, d, pairSources, kind, variant)
+    loc.drop(loc.lastIndexOf('/') + 1)
   }
 
   /** Ensure both fact tables exist as bucketed+sorted EXTERNAL tables
@@ -98,10 +99,10 @@ object Bucketing {
       buckets: Int = 8): (String, String) = {
     val specs = Seq(("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
     val variant = s"_b$buckets"
-    val tag = pairLayout(s, d, "bkt", variant)._2
+    val tag = pairTag(s, d, "bkt", variant)
     def name(src: String) = s"graft_bkt_${src}_$tag"
-    val loc = graft.sinks.Lifecycle.ensure(s, d, Seq("orders", "lineitem"),
-        "bkt", variant) { stage =>
+    val loc = graft.sinks.Lifecycle.ensure(s, d, pairSources, "bkt",
+        variant) { stage =>
       specs.foreach { case (src, key) =>
         writeBucketed(t(s, d, src), name(src), key, buckets,
           Some(s"$stage/$src"))
@@ -527,36 +528,44 @@ object Bucketing {
       foldPartitionedDeltas(batch.sparkSession, loc, base, key, buckets)
   }
 
+  /** Drop the catalog entries of `base`'s versions under `loc`. A build
+    * inside a [[graft.sinks.Lifecycle]] stage registers them with a
+    * LOCATION in the stage, which publication renames away; a serve
+    * re-registers each over the published files ([[ensureRegistered]]). */
+  private def dropVersionTables(s: SparkSession, loc: String,
+      base: String): Unit =
+    graft.sinks.Hfs.childDirs(s, loc, "main_v").foreach(v =>
+      s.sql("DROP TABLE IF EXISTS " +
+        versionTable(base, v.stripPrefix("main_v").toLong)))
+
   /** q99's stored layout: orders as a PARTITIONED (by o_orderstatus)
     * bucketed-lifecycle table — partition P folded (frozen main),
     * partition O folded with a live delta tail on top, partition F
     * delta-only (cold, never folded): all three readable states at
-    * once. Idempotent ensure: delta segments overwrite by id, folds
-    * no-op when their tail is already folded. */
-  private def ensurePartitionedOrders(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      val (loc, tag) = pairLayout(s, d, "bktpart")
-      val base = s"graft_part_orders_$tag"
+    * once, built and published once per fixture by
+    * [[graft.sinks.Lifecycle]] (kind `bktpart`). */
+  private def ensurePartitionedOrders(s: SparkSession, d: String): (String, String) = {
+    val base = s"graft_part_orders_${pairTag(s, d, "bktpart")}"
+    val loc = graft.sinks.Lifecycle.ensure(s, d, pairSources, "bktpart") { stage =>
       val o = t(s, d, "orders")
       val keyMod = pmod(col("o_orderkey"), lit(10))
-      if (!graft.sinks.Hfs.exists(s, s"$loc/__ensured")) {
-        // batch 0: ALL of P plus most of O → fold freezes P complete
-        // and gives O a main; F stays untouched (cold)
-        ingestPartitionedDelta(o.filter(col("o_orderstatus") === "P" ||
-          (col("o_orderstatus") === "O" && keyMod =!= 0)),
-          loc, "o_orderstatus", 0L)
-        foldPartitionedDeltas(s, loc, base, "o_orderkey", 8)
-        // O's unfolded tail + F's cold delta-only state
-        ingestPartitionedDelta(o.filter(col("o_orderstatus") === "O" &&
-          keyMod === 0), loc, "o_orderstatus", 1L)
-        ingestPartitionedDelta(o.filter(col("o_orderstatus") === "F"),
-          loc, "o_orderstatus", 2L)
-        // the marker commits only after every state is in place
-        // (crash → full redo; every step above is idempotent)
-        graft.sinks.Hfs.writeString(s, s"$loc/__ensured", "ok")
-      }
-      (loc, base)
+      // batch 0: ALL of P plus most of O → fold freezes P complete and
+      // gives O a main; F stays untouched (cold)
+      ingestPartitionedDelta(o.filter(col("o_orderstatus") === "P" ||
+        (col("o_orderstatus") === "O" && keyMod =!= 0)),
+        stage, "o_orderstatus", 0L)
+      foldPartitionedDeltas(s, stage, base, "o_orderkey", 8)
+      // O's unfolded tail + F's cold delta-only state
+      ingestPartitionedDelta(o.filter(col("o_orderstatus") === "O" &&
+        keyMod === 0), stage, "o_orderstatus", 1L)
+      ingestPartitionedDelta(o.filter(col("o_orderstatus") === "F"),
+        stage, "o_orderstatus", 2L)
+      graft.sinks.Hfs.childDirs(s, stage, "p=").foreach(p =>
+        dropVersionTables(s, s"$stage/$p",
+          s"${base}_${partFragment(p.stripPrefix("p="))}"))
     }
+    (loc, base)
+  }
 
   /** q99: the partitioned lifecycle's full snapshot must be EXACTLY the
     * orders table across all three partition states at once — P a
@@ -577,25 +586,21 @@ object Bucketing {
     * and two UNFOLDED delta segments — the worst readable state of the
     * lifecycle (maximal tail), deliberately never folded, so the query
     * exercises the main∪tail merged read, not the post-fold fast path.
-    * Idempotent ensure: deltas are overwrite-by-id, so a crashed first
-    * build redoes them without duplicating (the meta pointer commits
-    * the main exactly once). */
-  private def ensureLiveOrders(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      val (loc, tag) = pairLayout(s, d, "bktlive")
-      val base = s"graft_live_orders_$tag"
+    * Built and published once per fixture by [[graft.sinks.Lifecycle]]
+    * (kind `bktlive`). */
+  private def ensureLiveOrders(s: SparkSession, d: String): (String, String) = {
+    val base = s"graft_live_orders_${pairTag(s, d, "bktlive")}"
+    val loc = graft.sinks.Lifecycle.ensure(s, d, pairSources, "bktlive") { stage =>
       val o = t(s, d, "orders")
       val keyMod = pmod(col("o_orderkey"), lit(10))
       val keyMod20 = pmod(col("o_orderkey"), lit(20))
-      if (graft.sinks.Hfs.readString(s, metaPath(loc)).isEmpty)
-        bootstrapBucketed(o.filter(keyMod =!= 0), loc, base, "o_orderkey", 8)
-      if (!Seq(0, 1).forall(i =>
-          graft.sinks.Hfs.segmentCommitted(s, s"$loc/delta/ingest=$i"))) {
-        ingestBucketedDelta(o.filter(keyMod === 0 && keyMod20 =!= 0), loc, 0L)
-        ingestBucketedDelta(o.filter(keyMod20 === 0), loc, 1L)
-      }
-      (loc, base)
+      bootstrapBucketed(o.filter(keyMod =!= 0), stage, base, "o_orderkey", 8)
+      ingestBucketedDelta(o.filter(keyMod === 0 && keyMod20 =!= 0), stage, 0L)
+      ingestBucketedDelta(o.filter(keyMod20 === 0), stage, 1L)
+      dropVersionTables(s, stage, base)
     }
+    (loc, base)
+  }
 
   /** q98: order-status totals THROUGH the live lifecycle's snapshot —
     * the bucketed main plus the unfolded delta tail must together be

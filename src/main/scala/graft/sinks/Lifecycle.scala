@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * lifecycles (the fold+tail, replay and retraction states the
   * `_stream` and `_retract` queries serve) and the one-shot layouts
   * (IVF, PQ and ANN-LSH indexes, cluster and incremental labels, the
-  * bucketed pair, basket pairs). A builder supplies only its own
-  * write script, and this object decides the rest.
+  * bucketed pair, the live and partitioned bucketed tables, basket
+  * pairs). A builder supplies only its own write script, and this
+  * object decides the rest.
   *
   *  - Location: `<java.io.tmpdir>/graft-<kind>/<tag>`, the tag being the
   *    sf dir's md5 prefix plus the (len, mtime) of every source table,

@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * the ONE copy of the stage-then-rename protocol every stored layout
   * shares: [[Lifecycle]] is its only main caller, so every ingest
   * lifecycle and every one-shot layout (IVF, PQ and ANN-LSH indexes,
-  * cluster and incremental labels, the bucketed pair, basket pairs)
-  * reaches it there. Before r15 each builder overwrote INTO its
-  * served path: `synchronized` is per-JVM only, so two concurrent DRIVERS
+  * cluster and incremental labels, the bucketed pair, the live and
+  * partitioned bucketed tables, basket pairs) reaches it there. Before
+  * r15 each builder overwrote INTO its served path: `synchronized` is
+  * per-JVM only, so two concurrent DRIVERS
   * could interleave overwrite writes into the same path and serve a
   * torn directory (the r14 ensureClusterLabels fix, generalized here
   * per that round's self-review).

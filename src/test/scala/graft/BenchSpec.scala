@@ -1,247 +1,108 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-/** The bench's contention decision, pinned at the unit level: the
-  * canary clause catches neighbor load sampled at the query's edges;
-  * the floor clause closes the round-9 blind spot where a query's
-  * iterations were squeezed while both canary slots landed in quiet
-  * gaps (q41: min 1.69 s vs quiet floor 0.59 s, zero canary flags). */
-class BenchSpec extends AnyFunSuite {
+/** The bench's own passes, driven on a private copy of the sf0.001
+  * fixture: [[Bench.prepare]] builds every stored layout the timed
+  * queries serve from, [[Bench.time]] then builds and rewrites nothing,
+  * and a failed query poisons the total. Plus the input check and the
+  * rule that picks the detail artifact. */
+class BenchSpec extends SparkSpec {
 
-  private val iters = 3
-  private def m(times: Seq[Double], cb: Double, ca: Double) =
-    Bench.Meas(times, cb, ca)
-
-  private def flags(meas: Map[String, Bench.Meas],
-      floors: Map[String, Double] = Map.empty): Set[String] =
-    Bench.flagContended(meas.keys.toSeq.sorted, meas, iters,
-      calibBound = 0.5, floors, floorFactor = 2.0, floorSlack = 0.3)
-
-  test("canary spike on either side flags the query") {
-    val base = Map(
-      "q1" -> m(Seq(1.0, 1.0, 1.0), 0.1, 0.1),
-      "q2" -> m(Seq(1.0, 1.0, 1.0), 0.1, 0.9), // after-slot spike
-      "q3" -> m(Seq(1.0, 1.0, 1.0), 0.9, 0.1)) // before-slot spike
-    assert(flags(base) == Set("q2", "q3"))
-  }
-
-  test("floor breach flags even when both canary slots were quiet (the q41 blind spot)") {
-    val meas = Map("q41" -> m(Seq(1.69, 1.80, 1.75), 0.1, 0.1))
-    assert(flags(meas, floors = Map("q41" -> 0.59)) == Set("q41"))
-    // same measurement with no stored floor: nothing to compare, no flag
-    assert(flags(meas) == Set.empty)
-  }
-
-  test("replaying round 9's noisy artifact against its quiet floors flags q41, q40 AND q29") {
-    // the verdict's done-criterion for the blind-spot fix: these three
-    // ran visibly squeezed in the committed r9 snapshot (times below are
-    // its actual per-iteration values) with ZERO canary flags — q41's
-    // min breaches, q40's and q29's medians breach while their mins
-    // stay under the factor
-    val meas = Map(
-      "q41" -> m(Seq(6.526, 1.69, 2.108), 0.119, 0.119),
-      "q40" -> m(Seq(0.648, 1.391, 2.723), 0.119, 0.119),
-      "q29" -> m(Seq(4.042, 1.898, 4.709), 0.07, 0.07))
-    // quiet floors from the r9 quiet-host run (BASELINE.md round-9
-    // addendum; q40's from the round-10 quiet artifact)
-    val floors = Map("q41" -> 0.59, "q40" -> 0.35, "q29" -> 1.61)
-    assert(flags(meas, floors) == Set("q41", "q40", "q29"))
-  }
-
-  test("floor slack keeps millisecond queries from flagging on jitter") {
-    // 0.02 -> 0.05 is 2.5x the floor but only 30 ms of excess — noise
-    val meas = Map("q9" -> m(Seq(0.05, 0.05, 0.05), 0.1, 0.1))
-    assert(flags(meas, floors = Map("q9" -> 0.02)) == Set.empty)
-    // a real breach clears both the factor and the slack
-    val big = Map("q9" -> m(Seq(1.5, 1.5, 1.5), 0.1, 0.1))
-    assert(flags(big, floors = Map("q9" -> 0.5)) == Set("q9"))
-  }
-
-  test("failed queries are never flagged as contended (crash ≠ contention)") {
-    val meas = Map("qX" -> m(Seq(9.0), 0.9, 0.9)) // 1 of 3 iters → failed
-    assert(flags(meas, floors = Map("qX" -> 0.1)) == Set.empty)
-  }
-
-  test("readFloors parses per-query mins, only for a same-sf artifact") {
-    val text =
-      """{"total":5.0,"iters":3,"contended":[],"sf":"/root/testdata/sf0.1",""" +
-        """"queries":{"q1_agg":{"min":0.123,"median":0.2,"calib":0.1,""" +
-        """"contended":false,"times":[0.2]},"q41_x":{"min":0.590,""" +
-        """"median":0.6,"calib":0.1,"contended":false,"times":[0.6]}}}"""
-    assert(Bench.readFloors(text, "/root/testdata/sf0.1") ==
-      Map("q1_agg" -> 0.123, "q41_x" -> 0.590))
-    assert(Bench.readFloors(text, "/root/testdata/sf0.01") == Map.empty)
-  }
-
-  test("io canary: probe measures a real synced WRITE (write-only by design — a read-back would measure the page cache) and leaks no file; the io column never disturbs the artifact parsers") {
-    val before = java.io.File.createTempFile("probe-dir-marker", ".tmp")
-    val dir = before.getParentFile
-    before.delete()
-    val count0 = dir.listFiles().count(_.getName.startsWith("graft-io-canary"))
-    val t = Bench.ioProbe()
-    assert(t > 0.0, "the probe must measure real work")
-    assert(dir.listFiles().count(_.getName.startsWith("graft-io-canary")) ==
-      count0, "the probe must delete its file")
-    // r15 artifacts carry "io" after "calib" (and io_calib_base at the
-    // top level); the committed-artifact parsers anchor on the
-    // min/median/calib prefix and must keep reading both generations
-    val r15 =
-      """{"total":5.0,"iters":3,"calib_base":0.049,"io_calib_base":0.0123,""" +
-        """"contended":[],"sf":"/root/testdata/sf0.1",""" +
-        """"queries":{"q1_agg":{"min":0.123,"median":0.200,"calib":0.1,""" +
-        """"io":0.0151,"contended":false,"times":[0.2]}}}"""
-    assert(Bench.readFloors(r15, "/root/testdata/sf0.1") == Map("q1_agg" -> 0.123))
-    assert(Bench.readMedians(r15, "/root/testdata/sf0.1") == Map("q1_agg" -> 0.200))
-    assert(Bench.readCalibs(r15, "/root/testdata/sf0.1") == Map("q1_agg" -> 0.1))
-    assert(Bench.readCalibBase(r15, "/root/testdata/sf0.1").contains(0.049))
-  }
-
-  test("readCalibBase + readMedians + normRatio: the cross-round normalization is mechanical") {
-    val text =
-      """{"total":5.0,"iters":3,"calib_base":0.049,"contended":[],""" +
-        """"sf":"/root/testdata/sf0.1",""" +
-        """"queries":{"q1_agg":{"min":0.123,"median":0.200,"calib":0.1,""" +
-        """"contended":false,"times":[0.2]},"q41_x":{"min":0.590,""" +
-        """"median":-1.000,"calib":0.1,"contended":false,"times":[]}}}"""
-    assert(Bench.readCalibBase(text, "/root/testdata/sf0.1").contains(0.049))
-    // wrong sf → no normalizer (a ratio across scales is meaningless)
-    assert(Bench.readCalibBase(text, "/root/testdata/sf0.01").isEmpty)
-    // failed medians are dropped like failed floors
-    assert(Bench.readMedians(text, "/root/testdata/sf0.1") ==
-      Map("q1_agg" -> 0.200))
-    // the round-11 scenario: box 2× slower (calibRatio 2.0), query takes
-    // 2× wall-clock — normalized ratio 1.0, i.e. NOT a regression
-    assert(Bench.normRatio(0.4, 0.2, 2.0) == 1.0)
-    // same box (ratio 1), query 2× slower — a real regression shows 2.0
-    assert(Bench.normRatio(0.4, 0.2, 1.0) == 2.0)
-    // degenerate inputs report -1, never a fake ratio
-    assert(Bench.normRatio(0.4, 0.0, 1.0) == -1.0)
-    assert(Bench.normRatio(-1.0, 0.2, 1.0) == -1.0)
-  }
-
-  test("box-normalized floors: the r12 q128 scenario — a 1.6× slower box must not flag honest code") {
-    // committed quiet floor 0.55 s; this box measures 1.17/1.38 at a
-    // 1.586 calib ratio. Raw floors flag it (1.17 > 0.55*2 and excess
-    // > 0.3); floors scaled by the ratio (0.87) do not (1.17 < 1.74).
-    val meas = Map("q128" -> m(Seq(1.38, 1.38, 1.17), 0.2, 0.2))
-    val raw = Map("q128" -> 0.55)
-    val scaled = raw.map { case (k, v) => k -> v * 1.586 }
-    def run(fl: Map[String, Double]) = Bench.flagContended(
-      Seq("q128"), meas, iters = 3, calibBound = 0.3, floors = fl,
-      floorFactor = 2.0, floorSlack = 0.3)
-    assert(run(raw) == Set("q128"), "raw floors flag the box swing")
-    assert(run(scaled) == Set.empty, "normalized floors do not")
-    // a REAL 2× regression still flags through the normalization
-    val slow = Map("q128" -> m(Seq(3.6, 3.6, 3.5), 0.2, 0.2))
-    assert(Bench.flagContended(Seq("q128"), slow, 3, 0.3, scaled,
-      2.0, 0.3) == Set("q128"))
-  }
-
-  test("floor scaling is asymmetric: slower boxes inflate floors, faster canaries barely deflate them") {
-    // upward (slower box): track the ratio, capped at 4× — the r12
-    // q128 false-flag scenario
-    assert(Bench.floorScaleOf(Some(1.586)) == 1.586)
-    assert(Bench.floorScaleOf(Some(9.0)) == 4.0)
-    // downward: the r13 regime shift — the settle pass moved the
-    // canary base 0.113 → 0.044 (ratio 0.39) while raw query medians
-    // moved only 0.73-0.95×; ratio-scaled floors false-flagged 17
-    // queries. The 0.9 floor keeps a faster canary from deflating
-    // floors it cannot speak for.
-    assert(Bench.floorScaleOf(Some(0.39)) == 0.9)
-    assert(Bench.floorScaleOf(Some(0.95)) == 0.95)
-    assert(Bench.floorScaleOf(None) == 1.0)
-  }
-
-  test("readFloors drops failed (-1) entries") {
-    val text = """"sf":"/d","queries":{"q1":{"min":-1.000,"median":-1.0},""" +
-      """"q2":{"min":0.5,"median":0.5}}"""
-    assert(Bench.readFloors(text, "/d") == Map("q2" -> 0.5))
-  }
+  private val boom: Bench.Query =
+    (_, _) => throw new IllegalStateException("planted failure")
 
   test("a run with a crashed query can never clobber an existing artifact (round-10 q105 clobber)") {
-    // failed + any previous artifact (quiet or not) → .failed sidecar
+    // failed + a previous artifact → .failed sidecar
     assert(Bench.detailTarget(prefixRun = false, anyFailed = true,
-      anyContended = false, prevExists = true, prevQuiet = true)
-      .contains("bench_detail.failed.json"))
-    assert(Bench.detailTarget(prefixRun = false, anyFailed = true,
-      anyContended = true, prevExists = true, prevQuiet = false)
-      .contains("bench_detail.failed.json"))
+      prevExists = true).contains("bench_detail.failed.json"))
     // no previous artifact at all: a failed record beats no record
     assert(Bench.detailTarget(prefixRun = false, anyFailed = true,
-      anyContended = false, prevExists = false, prevQuiet = false)
-      .contains("bench_detail.json"))
-  }
-
-  test("contended run parks in .noisy only against a QUIET artifact; clean runs write the record") {
+      prevExists = false).contains("bench_detail.json"))
     assert(Bench.detailTarget(prefixRun = false, anyFailed = false,
-      anyContended = true, prevExists = true, prevQuiet = true)
-      .contains("bench_detail.noisy.json"))
-    // previous artifact was itself contended → replacing it is fine
-    assert(Bench.detailTarget(prefixRun = false, anyFailed = false,
-      anyContended = true, prevExists = true, prevQuiet = false)
-      .contains("bench_detail.json"))
-    assert(Bench.detailTarget(prefixRun = false, anyFailed = false,
-      anyContended = false, prevExists = true, prevQuiet = true)
-      .contains("bench_detail.json"))
+      prevExists = true).contains("bench_detail.json"))
     // prefix-filtered profiling run: never writes, regardless of state
-    assert(Bench.detailTarget(prefixRun = true, anyFailed = false,
-      anyContended = false, prevExists = false, prevQuiet = false).isEmpty)
+    assert(Bench.detailTarget(prefixRun = true, anyFailed = true,
+      prevExists = false).isEmpty)
   }
 
-  test("lifecycle pre-build set: every tag is a real query, every _stream lifecycle is tagged, and the stored-layout batch queries are tagged") {
-    val all = SparkEntry.queries.keySet
-    // (1) no stale tags: a renamed/removed query must fail here, not
-    // silently stop being pre-built
-    val stale = Bench.lifecycleQueries -- all
-    assert(stale.isEmpty, s"lifecycleQueries tags unknown queries: $stale")
-    // (2) every *_stream query serves from a checkpointed/stored
-    // lifecycle by suite convention — a future stream query added
-    // without a pre-build tag shows up here (the r13 driver-artifact
-    // lesson: an uncovered first-iteration build reads as a perf
-    // anomaly and costs an adjudication)
-    val streams = all.filter(_.endsWith("_stream"))
-    val untagged = streams -- Bench.lifecycleQueries
-    assert(untagged.isEmpty, s"_stream queries missing a pre-build tag: $untagged")
-    // (3) the known stored-layout/model BATCH queries (ensure*-gated
-    // /tmp layouts + the per-JVM cell model) — the spec's own
-    // inventory, so dropping one from the Bench set is a loud diff
-    val storedBatch = Set(
-      "q38_ann_lsh_topk", "q42_ann_ivf_topk", "q94_ann_ivfpq_topk",
-      "q95_ann_knn_join", "q96_ann_pq_knn_join", "q108_ann_pq_rerank",
-      "q153_ann_recall", "q62_dedup_clusters", "q111_dedup_canonical",
-      "q115_dedup_incremental", // r18: serves the stored incremental-label layout
-      "q151_cluster_sizes", "q117_semantic_dedup", "q123_semantic_decontam",
-      "q142_copurchase", "q150_also_bought", "q97_bucketed_join",
-      "q98_bucketed_snapshot", "q99_partitioned_table")
-    val missing = storedBatch -- Bench.lifecycleQueries
-    assert(missing.isEmpty, s"stored-layout queries missing a pre-build tag: $missing")
+  test("time refuses fewer than one iteration before running any query") {
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val counted: Bench.Query = (s, _) => { runs.incrementAndGet(); s.range(1).toDF() }
+    for (iters <- Seq(0, -1))
+      intercept[IllegalArgumentException] {
+        Bench.time(spark, sf0001, Seq("q_counted" -> counted), iters)
+      }
+    assert(runs.get == 0, "no query may run on an invalid iteration count")
   }
 
-  test("masked breaches: visible only under the 0.9 clamp, on quiet queries whose raw-scaled floor is breached") {
-    // floor 1.0, measured 0.9: on a box at ratio 0.4 the raw-scaled
-    // floor is 0.4 — 0.9 breaches it (2.25× + 0.5 s excess) but stays
-    // under the CLAMPED floor (0.9 × 1.0 × 2.0 = 1.8), i.e. exactly
-    // the regression class the clamp hides; it must be logged
-    val meas = Map(
-      "q1" -> m(Seq(0.9, 0.9, 0.9), 0.1, 0.1),
-      "q2" -> m(Seq(0.3, 0.3, 0.3), 0.1, 0.1), // under even the raw floor ×2
-      "q3" -> m(Seq(0.9, 0.9, 0.9), 0.1, 0.1)) // flagged → excluded
-    val floors = Map("q1" -> 1.0, "q2" -> 1.0, "q3" -> 1.0)
-    val got = Bench.maskedBreaches(Seq("q1", "q2", "q3"), meas, iters,
-      flagged = Set("q3"), ratio = Some(0.4), floors,
-      floorFactor = 2.0, floorSlack = 0.3)
-    assert(got == Seq("q1"))
-    // ratio ≥ 0.9: the clamp is not engaged, nothing is masked
-    assert(Bench.maskedBreaches(Seq("q1"), meas, iters, Set.empty,
-      Some(0.95), floors, 2.0, 0.3).isEmpty)
-    // no prior artifact ratio → nothing to compare
-    assert(Bench.maskedBreaches(Seq("q1"), meas, iters, Set.empty,
-      None, floors, 2.0, 0.3).isEmpty)
+  test("median: the middle pair's mean on even counts; a short run is failed at -1") {
+    assert(Bench.Meas(Seq(3.0, 1.0), 2).median == 2.0)
+    assert(Bench.Meas(Seq(5.0, 1.0, 2.0), 3).median == 2.0)
+    val short = Bench.Meas(Seq(1.0), 3)
+    assert(short.failed && short.median == -1.0 && short.min == 1.0)
+    assert(Bench.total(Seq("a" -> Bench.Meas(Seq(1.0), 1),
+      "b" -> Bench.Meas(Seq(2.0), 1))) == 3.0)
   }
 
-  test("floor regime notes annotate only real queries") {
-    val unknown = Bench.floorRegimeNotes.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"floor_notes for unknown queries: $unknown")
+  test("prepare builds every store; the timed pass builds none; a failure poisons total") {
+    val fixture = Files.createTempDirectory("bench-fixture")
+    Files.list(Paths.get(sf0001)).iterator.asScala.foreach(copyTree(_, fixture))
+    val d = fixture.toString
+    // Lifecycle tags start with the md5 prefix of the fixture dir, so
+    // every layout below belongs to this private copy alone
+    val id = functions.Scalars.md5Hex(d.getBytes("UTF-8")).take(12)
+    val tmp = Paths.get(sys.props("java.io.tmpdir"))
+    def layouts(): Seq[Path] =
+      Files.list(tmp).iterator.asScala.toSeq
+        .filter(k => k.getFileName.toString.startsWith("graft-") && Files.isDirectory(k))
+        .flatMap(k => Files.list(k).iterator.asScala.toSeq
+          .filter(_.getFileName.toString.startsWith(id)))
+        .sortBy(_.toString)
+    // tools/stores.py's fingerprint: (relative path, size, mtime) per file
+    def fingerprint(): Map[Path, Set[(String, Long, String)]] =
+      layouts().map { l =>
+        l -> Files.walk(l).iterator.asScala
+          .filter(Files.isRegularFile(_, LinkOption.NOFOLLOW_LINKS))
+          .map(f => (l.relativize(f).toString, Files.size(f),
+            Files.getLastModifiedTime(f, LinkOption.NOFOLLOW_LINKS).toString))
+          .toSet
+      }.toMap
+    val all = SparkEntry.queries
+    val queries = Seq("q01_pricing_summary", "q105_ann_lsh_stream",
+      "q98_bucketed_snapshot").map(n => n -> all(n))
+    try {
+      assert(layouts().isEmpty)
+      Bench.prepare(spark, d, queries)
+      val built = layouts()
+      val kinds = built.map(_.getParent.getFileName.toString).toSet
+      assert(Set("graft-annlsh-stream", "graft-bktlive").subsetOf(kinds),
+        s"q105's or q98's stored state was not built: $built")
+      built.foreach(l => assert(Files.exists(l.resolve("__done")),
+        s"$l is not a complete layout"))
+      val before = fingerprint()
+      val meas = Bench.time(spark, d, queries :+ ("q_boom" -> boom), 2).toMap
+      assert(fingerprint() == before, "the timed pass rebuilt or added a store")
+      queries.foreach { case (n, _) =>
+        assert(meas(n).times.size == 2 && meas(n).median > 0, s"$n: ${meas(n)}")
+      }
+      assert(meas("q_boom").median == -1.0)
+      assert(Bench.total(meas.toSeq) == -1.0)
+    } finally {
+      layouts().foreach(deleteTree)
+      deleteTree(fixture)
+    }
   }
+
+  private def copyTree(src: Path, destDir: Path): Unit = {
+    val dest = destDir.resolve(src.getFileName.toString)
+    if (Files.isDirectory(src)) {
+      Files.createDirectory(dest)
+      Files.list(src).iterator.asScala.foreach(copyTree(_, dest))
+    } else Files.copy(src, dest)
+  }
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
 }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.DataFrame
 
 /** The one-shot stored layouts published through
   * [[graft.sinks.Lifecycle]] — the IVF (q42) and PQ (q94) indexes, the
-  * cluster (q62) and incremental (q115) label tables and the bucketed
-  * pair (q97): per family, a torn build (no `__done`, junk planted in
-  * the layout) is cleared and rebuilt, never served, and the rebuilt
-  * layout answers exactly as the first build did. For q97 this also
-  * pins that a rebuild leaves no catalog entry over replaced files. */
+  * cluster (q62) and incremental (q115) label tables, the bucketed
+  * pair (q97) and the live (q98) and partitioned (q99) bucketed tables:
+  * per family, a torn build (no `__done`, junk planted in the layout)
+  * is cleared and rebuilt, never served, and the rebuilt layout answers
+  * exactly as the first build did. For q97-q99 this also pins that a
+  * rebuild leaves no catalog entry over replaced files. */
 class OneShotLayoutSpec extends SparkSpec {
 
   /** The dir a parquet-root layout was read from. */
@@ -29,7 +30,13 @@ class OneShotLayoutSpec extends SparkSpec {
       () => readRoot(DedupOps.dedupIncremental(spark, sf0001))),
     ("q97", () => Bucketing.bucketedRevenue(spark, sf0001),
       () => Lifecycle.location(spark, sf0001, Seq("orders", "lineitem"),
-        "bkt", "_b8")))
+        "bkt", "_b8")),
+    ("q98", () => Bucketing.liveSnapshotAgg(spark, sf0001),
+      () => Lifecycle.location(spark, sf0001, Seq("orders", "lineitem"),
+        "bktlive")),
+    ("q99", () => Bucketing.partitionedSnapshotAgg(spark, sf0001),
+      () => Lifecycle.location(spark, sf0001, Seq("orders", "lineitem"),
+        "bktpart")))
 
   for ((name, serve, layout) <- families)
     test(s"$name: a torn one-shot build (no __done, junk planted) is rebuilt, not served") {
@@ -47,4 +54,13 @@ class OneShotLayoutSpec extends SparkSpec {
       assert(Hfs.readString(spark, s"$loc/__done").nonEmpty,
         s"$name: rebuild must re-mark __done")
     }
+
+  test("q98/q99: the live and partitioned tables serve every orders row once") {
+    def byStatus(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val plain = byStatus(Tables.t(spark, sf0001, "orders")
+      .groupBy("o_orderstatus").count())
+    for (q <- Seq(Bucketing.liveSnapshotAgg, Bucketing.partitionedSnapshotAgg))
+      assert(byStatus(q(spark, sf0001)) == plain)
+  }
 }
