@@ -1260,13 +1260,12 @@ object DedupOps {
     * Layout: the index is partitionBy("bmod") where bmod =
     * pmod(bhash, lshIndexBuckets) — the selective key folded to a
     * bounded directory count. A probe enumerates its own bmod set on
-    * the driver (≤ 8 × batch values, the ANN-index pattern of
-    * probeAnnLshIndex) and filters the scan with literal isin, so
-    * parquet partition pruning reads ONLY matching directories, and the
-    * micro-batch probe side is broadcast — the index is never shuffled
-    * NOR fully scanned. At larger index:batch ratios raise
-    * lshIndexBuckets so a batch's bucket set stays a small fraction of
-    * the directories. LshIndexSpec pins both plan properties. */
+    * the driver (≤ 8 × batch values) and lists ONLY those directories
+    * ([[graft.sinks.SegmentIndex]]), and the micro-batch probe side is
+    * broadcast — the index is never shuffled NOR fully scanned. At
+    * larger index:batch ratios raise lshIndexBuckets so a batch's bucket
+    * set stays a small fraction of the directories. LshIndexSpec pins
+    * both plan properties. */
 
   /** (doc_id, band struct, hs) rows for a doc batch — one fused pass.
     * hs is SORTED here, once per doc: every consumer (index docs table,
@@ -1287,220 +1286,63 @@ object DedupOps {
         col("b.bhash").as("bhash"))
   }
 
-  /** Write one ingest segment of the persistent index. Two tables, so the
-    * hot band-join side stays NARROW: `bands` holds (doc_id, band, bhash)
-    * — ~24 B/row instead of dragging each doc's full shingle-hash array
-    * through all 8 of its band rows — and `docs` holds (doc_id, hs) once
-    * per doc, joined only for candidates that survive the band match.
-    * Segments are keyed by `ingestId` and OVERWRITTEN, so re-running an
-    * ingest (e.g. a foreachBatch retry) replaces its own segment instead
-    * of appending duplicate index rows — extend the index by writing NEW
-    * ingest ids. */
   /** Directory fan-out of the bands table: bmod = pmod(bhash, this).
     * 64 suits the test scale; at 100 TB, size it so a micro-batch's
     * distinct bucket set stays ≪ the directory count. */
   val lshIndexBuckets = 64
 
+  /** The persistent index, a [[graft.sinks.BandedIndex]]: `bands` holds
+    * (doc_id, band, bhash) — ~24 B/row instead of dragging each doc's
+    * shingle-hash array through all 8 of its band rows — and `docs` holds
+    * (doc_id, hs) once per doc, verified by shingle Jaccard rounded to 4
+    * digits (minhashLsh's rounding). */
+  private val lshIndex = graft.sinks.BandedIndex(
+    graft.sinks.SegmentIndex("bands", "doc_id", Seq("doc_id", "band", "bhash"),
+      part = Some("bmod"), hashOf = Some(col("bhash") -> lshIndexBuckets)),
+    graft.sinks.SegmentIndex("docs", "doc_id", Seq("doc_id", "hs"),
+      latestBy = Some("ingest")),
+    indexRows, "new_doc", "jaccard", (a, b) => {
+      val inter = graft.expressions.VectorHashes.sorted_intersect_count(a, b)
+      round(inter / (size(a) + size(b) - inter), 4)
+    })
+
   /** Bulk bootstrap: ingestId must be NEGATIVE (default -1) and not a
     * compaction fold — streaming batches use batchId ≥ 0 in overwrite
     * mode, so a non-negative bootstrap would be silently clobbered by
-    * that batch's segment write (enforced by IngestSegments.guardBuild;
-    * same contract as TextOps.buildChunkIndex, where the probe's replay
-    * exclusion makes the collision doubly fatal). */
-  def buildLshIndex(docs: DataFrame, path: String, ingestId: Long = -1L): Unit = {
-    graft.sinks.IngestSegments.guardBuild(docs.sparkSession, s"$path/bands", ingestId)
-    ingestLshSegment(docs, path, ingestId)
-  }
+    * that batch's segment write. */
+  def buildLshIndex(docs: DataFrame, path: String, ingestId: Long = -1L): Unit =
+    lshIndex.build(docs, path, ingestId)
 
   /** The unguarded segment write — the streaming writer's path (batchId
     * ≥ 0, overwrite-on-replay). */
   private[graft] def ingestLshSegment(docs: DataFrame, path: String,
-      ingestId: Long): Unit = {
-    // one hashing pass, materialized, feeds both tables
-    val rows = indexRows(docs).localCheckpoint()
-    // modulus pinned with the layout on first write (ensureBuckets):
-    // retuning the module default against an existing index would
-    // otherwise mix two bmod layouts in one table
-    val nb = graft.sinks.IngestSegments.ensureBuckets(
-      docs.sparkSession, s"$path/bands", lshIndexBuckets)
-    graft.sinks.IngestSegments.alignToLayout(
-        rows.select(col("doc_id"), col("band"), col("bhash"),
-          pmod(col("bhash"), lit(nb.toLong)).as("bmod")), "bmod")
-      .write.mode("overwrite").partitionBy("bmod")
-      .parquet(s"$path/bands/ingest=$ingestId")
-    rows.select(col("doc_id"), col("hs")).dropDuplicates("doc_id")
-      .write.mode("overwrite")
-      .parquet(s"$path/docs/ingest=$ingestId")
-  }
+      ingestId: Long): Unit = lshIndex.ingest(docs, path, ingestId)
 
-  /** Compact both index tables (the [[graft.sinks.IngestSegments]]
-    * contract — fold all but the newest replayable batch segment into
-    * one fold segment at a strictly-below-every-live-id negative id,
-    * rename-before-delete). The tables fold independently (each is
-    * complete on its own, so a crash between the two leaves a
-    * consistent index). bands fold = exact-row dedup: a doc
-    * re-ingested with identical text collapses, a REVISED doc keeps
-    * both band sets — exactly the rows the un-compacted index would
-    * have served. docs fold = latest version per doc_id (resolved on
-    * the in-fold `ingest`); cross-segment recency survives because the
-    * fold id sits below every surviving segment id, so probeLshIndex's
-    * ingest-desc latest-version window keeps ordering correctly. */
-  def compactLshIndex(spark: SparkSession, path: String): Unit = {
-    graft.sinks.IngestSegments.compact(spark, s"$path/bands",
-      fold = _.select(col("doc_id"), col("band"), col("bhash"), col("bmod"))
-        .dropDuplicates("doc_id", "band", "bhash"),
-      partitionCols = Seq("bmod"))
-    graft.sinks.IngestSegments.compact(spark, s"$path/docs",
-      fold = df => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("ingest").desc)
-        df.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).select(col("doc_id"), col("hs"))
-      },
-      partitionCols = Seq.empty)
-  }
+  /** Compact both index tables: bands fold to their distinct exact rows,
+    * docs to the latest version per doc_id. */
+  def compactLshIndex(spark: SparkSession, path: String): Unit =
+    lshIndex.compact(spark, path)
 
-  /** Probe: near-dup pairs (new doc, indexed doc) with verified shingle
-    * Jaccard ≥ threshold. New docs are NOT added to the index here —
-    * callers buildLshIndex after admission (dedup-then-ingest). The band
-    * join touches only the narrow `bands` table (the probe side is a
-    * micro-batch, so AQE broadcasts it); shingle-hash arrays are fetched
-    * from `docs` only for pairs that already share a band. */
-  /** Candidate (new_doc, dup_of, hs_n) rows of a probe: the index scan is
-    * partition-pruned to the probe's driver-enumerated bmod set and the
-    * micro-batch side is broadcast, so the index side carries no
-    * Exchange and reads only matching directories (both pinned by
-    * LshIndexSpec). Public for that spec's plan assertions. */
+  /** Candidate (new_doc, dup_of, hs_n) rows of a probe. Public for
+    * LshIndexSpec's plan assertions. */
   def lshProbeCandidates(newDocs: DataFrame, path: String,
-      maxPerBucket: Option[Int] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val probe = indexRows(newDocs).localCheckpoint()
-    val nb = graft.sinks.IngestSegments.readBuckets(
-      spark, s"$path/bands", lshIndexBuckets) // the STORED layout's modulus
-    val bmods = probe
-      .select(pmod(col("bhash"), lit(nb.toLong)).as("bmod"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    // pruned at LISTING time (readLivePrunedWithIds): only the probe's
-    // bmod dirs of each live segment are file-listed — a micro-batch
-    // probing a wide index must not pay a full-directory listing. None
-    // = no index yet, or nothing indexed under the probe's bmods —
-    // either way no candidate can exist.
-    val keep = bmods.map(b => s"bmod=$b").toSet
-    val pruned = graft.sinks.IngestSegments
-      .readLivePrunedWithIds(spark, s"$path/bands", keep) match {
-      case None =>
-        return probe.limit(0).select(col("doc_id").as("new_doc"),
-          col("doc_id").as("dup_of"), col("hs").as("hs_n"))
-      case Some((live, _)) => live
-    }
-    // Hot-bucket cap, probe flavor: a boilerplate cluster indexed
-    // earlier puts occupancy rows into ONE (band, bhash) bucket, and a
-    // probe doc landing there joins against ALL of them — O(batch ×
-    // occupancy) candidates the verify tier then has to score. With
-    // the cap, each index bucket contributes its `c` lowest DISTINCT
-    // doc_ids — dense_rank, NOT row_number: a doc re-ingested into
-    // several segments has equal-doc_id rows in one bucket, and
-    // row_number would both tie-break them arbitrarily and let the
-    // copies consume cap slots (fewer than c distinct representatives).
-    // Pair recall against beyond-cap members is lost, but the ADMISSION
-    // question — "is this new doc a dup of anything indexed?" —
-    // survives: the bucket is hot because its members are
-    // near-identical, so matching any kept representative answers it
-    // (same cluster-connectivity argument as cappedBandCandidates). The
-    // window shuffles only the bmod-pruned slice, only when the cap is
-    // enabled; the exact path (None) keeps the no-Exchange index side
-    // LshIndexSpec pins.
-    val bands = maxPerBucket match {
-      case Some(c) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bhash")).orderBy(col("doc_id"))
-        pruned.withColumn("__occ", dense_rank().over(w))
-          .filter(col("__occ") <= c).drop("__occ")
-      case None => pruned
-    }
-    broadcast(probe).as("n").join(bands.as("e"),
-        col("n.band") === col("e.band") && col("n.bhash") === col("e.bhash") &&
-          col("n.doc_id") =!= col("e.doc_id"))
-      .select(col("n.doc_id").as("new_doc"), col("e.doc_id").as("dup_of"),
-        col("n.hs").as("hs_n"))
-  }
+      maxPerBucket: Option[Int] = None): DataFrame =
+    lshIndex.candidates(newDocs, path, maxPerBucket)
 
+  /** Probe: near-dup pairs (new_doc, dup_of, jaccard) with verified
+    * shingle Jaccard ≥ threshold. */
   def probeLshIndex(newDocs: DataFrame, path: String,
-      threshold: Double = 0.5, maxPerBucket: Option[Int] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val live = graft.sinks.IngestSegments.readLive(spark, s"$path/docs")
-    if (live.isEmpty) // no index yet — nothing can be a dup
-      return newDocs.limit(0).select(col("doc_id").as("new_doc"),
-        col("doc_id").as("dup_of"), lit(0.0).as("jaccard"))
-    val docsIdx = live.get
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("new_doc"), col("dup_of"))
-      .orderBy(col("ingest").desc)
-    lshProbeCandidates(newDocs, path, maxPerBucket)
-      .dropDuplicates("new_doc", "dup_of") // shrink before fetching hs
-      .join(docsIdx.select(col("doc_id").as("dup_of"), col("hs").as("hs_e"),
-        col("ingest")), Seq("dup_of"))
-      // a doc re-indexed across ingest segments (possibly with REVISED
-      // text) has one docs row per segment; score each pair against the
-      // LATEST indexed version only — the old any-version-then-
-      // dropDuplicates form emitted whichever segment's jaccard survived
-      // an arbitrary dedup, so two identical probes could disagree. The
-      // window runs over the candidate-pair frame, never the index.
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .withColumn("inter", graft.expressions.VectorHashes
-        .sorted_intersect_count(col("hs_n"), col("hs_e")))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("hs_n")) + size(col("hs_e")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_doc"), col("dup_of"), col("jaccard"))
-  }
+      threshold: Double = 0.5, maxPerBucket: Option[Int] = None): DataFrame =
+    lshIndex.probe(newDocs, path, threshold, maxPerBucket)
 
-  /** In-batch near-dup resolution: greedy keep-lowest-doc_id. Any doc
-    * that is the higher side of a verified ≥ threshold pair is dropped;
-    * chains collapse toward their lowest member in one pass (a dropped
-    * doc still shadows its own higher dups — same policy as minhashLsh's
-    * doc_a < doc_b orientation). */
-  private def dedupWithinBatch(batch: DataFrame, threshold: Double): DataFrame = {
-    val rows = indexRows(batch)
-    val losers = rows.as("a").join(rows.as("b"),
-        col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        col("a.hs").as("hs_a"), col("b.hs").as("hs_b"))
-      .dropDuplicates("da", "db")
-      .withColumn("inter", graft.expressions.VectorHashes
-        .sorted_intersect_count(col("hs_a"), col("hs_b")))
-      // round(.,4) matches minhashLsh/probeLshIndex exactly, so a
-      // borderline pair gets the same verdict whether its members arrive
-      // in one batch or across batches
-      .filter(round(col("inter") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("inter")), 4) >= threshold)
-      .select(col("db").as("doc_id")).distinct()
-    batch.join(losers, Seq("doc_id"), "left_anti")
-  }
-
-  /** Streaming near-dup admission: per micro-batch, probe the index,
-    * dedup the batch against ITSELF (two near-dups arriving in the same
-    * micro-batch are invisible to the index — one must still lose), then
-    * write admitted docs and their index segment, both keyed by batchId
-    * in overwrite mode so an at-least-once foreachBatch retry replaces
-    * its own output instead of appending duplicates. `maxPerBucket`
-    * threads the probe's hot-bucket cap (see [[lshProbeCandidates]]) —
-    * the knob that bounds per-batch latency when the INDEX carries a
-    * boilerplate cluster. */
+  /** Streaming near-dup admission: probe, in-batch self-dedup, then the
+    * admitted docs and their index segment, both overwrite-by-batchId.
+    * `maxPerBucket` is the probe's hot-bucket cap, the knob that bounds
+    * per-batch latency when the INDEX carries a boilerplate cluster. */
   def streamingDedupWriter(indexPath: String, outDir: String,
       threshold: Double = 0.5, maxPerBucket: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    // a missing or footerless-empty index probes as empty (readLive)
-    val dups = probeLshIndex(batch, indexPath, threshold, maxPerBucket)
-      .select(col("new_doc")).distinct()
-    val novel = batch.join(dups,
-      batch("doc_id") === dups("new_doc"), "left_anti")
-    val admitted = dedupWithinBatch(novel, threshold).localCheckpoint()
-    admitted.write.mode("overwrite").parquet(s"$outDir/admitted/ingest=$batchId")
-    ingestLshSegment(admitted, indexPath, batchId)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    lshIndex.writer(indexPath, outDir, threshold, maxPerBucket)(batch, batchId)
 
   /** Streaming decontamination admission — q75's Bloom+exact gate
     * applied per micro-batch: an incoming doc is dropped when it shares
@@ -2104,10 +1946,13 @@ object DedupOps {
     val dupPos = grams.join(stats.select(col("h")), "h").localCheckpoint()
     val spans = islandSpans(dupPos, L)
     // a span's FIRST gram is duplicated by definition, so the lookup
-    // joins the sparse dup positions, never the full gram frame
-    val firstGram = spans.join(dupPos,
-      spans("doc_id") === dupPos("doc_id") && spans("span_start") === dupPos("pos"))
-      .select(spans("doc_id"), col("span_start"), col("span_end"), col("h"))
+    // joins the sparse dup positions, never the full gram frame. Both
+    // sides are aliased: `spans` derives from `dupPos`, so an unaliased
+    // `spans("doc_id") === dupPos("doc_id")` names one attribute twice
+    // and only means a join through Spark's self-join disambiguation
+    val firstGram = spans.as("s").join(dupPos.as("p"),
+      col("s.doc_id") === col("p.doc_id") && col("s.span_start") === col("p.pos"))
+      .select(col("s.doc_id"), col("s.span_start"), col("s.span_end"), col("p.h"))
     firstGram.join(stats, "h")
       .select(col("doc_id"), col("span_start"), col("span_end"),
         when(col("min1") =!= col("doc_id"), col("min1"))

@@ -182,6 +182,13 @@ object PqOps {
         // retraction comparisons survive compaction
         lit(ingestId).as("ing"))
 
+  /** The codes store, a [[graft.sinks.SegmentIndex]]: (vec_id, codes,
+    * ing) under the caller-computed `cell` partition, latest `ing` per
+    * vec_id, retractions in the cell-blind side table `tomb`. */
+  private val pqCodes = graft.sinks.SegmentIndex("codes", "vec_id",
+    Seq("vec_id", "codes", "ing"), part = Some("cell"), latestBy = Some("ing"),
+    tomb = Some("tomb"))
+
   /** Build the stored layout: coarse centroids (kmeansLite, the q42
     * model), PQ codebooks on residuals, then the corpus reduced to
     * (vec_id, codes: array<int>) written as the bootstrap ingest
@@ -204,8 +211,7 @@ object PqOps {
       trainOn: Option[DataFrame] = None): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.sinks.IngestSegments.guardBuild(spark, s"$path/codes", ingestId,
-      tombPath = Some(s"$path/tomb"))
+    pqCodes.guardBuild(spark, path, ingestId)
     // a REBUILD retrains the model, but streaming segments were argmin-
     // encoded against the OLD codebooks: probing them with the new ADC
     // tables is well-typed and numerically meaningless. Refuse while
@@ -234,13 +240,9 @@ object PqOps {
       // this lineage, re-analyzed through every term without a barrier
       // (see encodeAgainst's note)
       else SimilarityOps.assignCells(wellFormed(emb, dims), cents).localCheckpoint()
-    graft.sinks.IngestSegments.alignToLayout(
-        bootstrap.withColumn("r", residualCol(cents))
-          .select(col("vec_id"), col("cell"), codesCol(books).as("codes"),
-            lit(ingestId).as("ing")),
-        "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes/ingest=$ingestId")
+    pqCodes.write(bootstrap.withColumn("r", residualCol(cents))
+      .select(col("vec_id"), col("cell"), codesCol(books).as("codes"),
+        lit(ingestId).as("ing")), path, ingestId)
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/cents")
@@ -282,12 +284,8 @@ object PqOps {
     val (cents, books) = loadModel(spark, path)
     // admission width comes from the STORED model, so an index built at
     // any dims gates its ingests consistently
-    graft.sinks.IngestSegments.alignToLayout(
-        encodeAgainst(wellFormed(newVecs, cents(0).length), cents, books,
-          ingestId),
-        "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes/ingest=$ingestId")
+    pqCodes.write(encodeAgainst(wellFormed(newVecs, cents(0).length), cents,
+      books, ingestId), path, ingestId)
   }
 
   /** Retraction (the CDC `D` route applied to the PQ index): deleted
@@ -301,37 +299,13 @@ object PqOps {
     * vector ⇒ same cell, so the resurrected row is probe-visible
     * exactly where the dead one was). */
   def retractPqVecs(path: String)(batch: DataFrame, batchId: Long): Unit =
-    graft.sinks.IngestSegments
-      .writeTombstones(batch, s"$path/tomb", "vec_id", batchId)
+    pqCodes.retract(path)(batch, batchId)
 
-  private def pqTombstones(s: SparkSession, path: String): DataFrame =
-    graft.sinks.IngestSegments.readTombstones(s, s"$path/tomb", "vec_id")
-
-  /** Fold old code segments (latest ingest wins per vec_id), keeping
-    * the cell partitioning — the IngestSegments contract bounds file
-    * count after thousands of micro-batches. */
-  def compactPqIndex(spark: SparkSession, path: String): Unit = {
-    graft.sinks.IngestSegments.compact(spark, s"$path/codes",
-      fold = df => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("ing").desc)
-        graft.sinks.IngestSegments.applyTombstones(
-            df, pqTombstones(spark, path), "vec_id", "ing")
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("vec_id"), col("cell"), col("codes"), col("ing"))
-      },
-      partitionCols = Seq("cell"))
-    // purge-capable side-table fold (see compactAnnLshIndex — same
-    // ordering argument: codes compact first, so inert tombstones
-    // retire instead of accruing with lifetime churn)
-    graft.sinks.IngestSegments.compactTombstones(spark, s"$path/tomb",
-      "vec_id", protectedRows = Some(graft.sinks.IngestSegments
-        .readLive(spark, s"$path/codes")
-        .map(_.select(col("vec_id"), col("ing")))
-        .getOrElse(spark.range(0)
-          .select(col("id").as("vec_id"), col("id").as("ing")))))
-  }
+  /** Fold old code segments (latest ingest wins per vec_id, tombstoned
+    * codes dropped, cell partitioning kept), then retire inert
+    * tombstones. */
+  def compactPqIndex(spark: SparkSession, path: String): Unit =
+    pqCodes.compact(spark, path)
 
   /** The stored model, ordered (cells by id; books by (j, code)).
     * Cached per model-dir listing ([[SimilarityOps.ModelCache]]): the
@@ -367,10 +341,7 @@ object PqOps {
     * TakeOrdered; with several, a latest-ingest-wins window over just
     * the PRUNED slice dedups cross-ingest duplicates (sufficient under
     * ingestPqSegment's immutability contract — duplicates of an id
-    * always share its cell). The segment-count branch uses the SAME
-    * listing the frame was planned over (readLiveWithIds), so a
-    * concurrent ingest/compact cannot skip the window on a
-    * multi-segment frame. */
+    * always share its cell; [[graft.sinks.SegmentIndex.live]]). */
   def probePqIndex(s: SparkSession, path: String, qVec: Array[Double],
       nprobe: Int, topk: Int = 10, excludeVecId: Long = 0L): DataFrame = {
     val (cents, books) = loadModel(s, path)
@@ -394,27 +365,9 @@ object PqOps {
       }.reduce(_ + _)
     readPrunedCodes(s, path, probeCells) match {
       case None =>
-        import s.implicits._
-        Seq.empty[(Long, Double)].toDF("neighbor_id", "adc_score")
-      case Some((live, segIds)) =>
-        // retraction first (the side table is cell-blind), then the
-        // recency window on the persisted logical ing — the tombstone
-        // join only enters the plan when a retraction ever happened,
-        // so the unretracted q94/q107 plan shapes are untouched
-        val pruned0 = live.filter(col("vec_id") =!= excludeVecId)
-        val pruned =
-          if (!graft.sinks.Hfs.exists(s, s"$path/tomb")) pruned0
-          else graft.sinks.IngestSegments.applyTombstones(
-            pruned0, pqTombstones(s, path), "vec_id", "ing")
-        val resolved =
-          if (segIds.size <= 1) pruned
-          else {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("vec_id")).orderBy(col("ing").desc)
-            pruned.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1)
-          }
-        resolved
+        s.createDataFrame(Seq.empty[(Long, Double)]).toDF("neighbor_id", "adc_score")
+      case Some(live) =>
+        live.filter(col("vec_id") =!= excludeVecId)
           .select(col("vec_id").as("neighbor_id"),
             round(score, 6).as("adc_score"))
           .orderBy(col("adc_score").desc, col("neighbor_id"))
@@ -422,23 +375,18 @@ object PqOps {
     }
   }
 
-  /** Codes-table read pruned at LISTING time to the probed cells (the
-    * SimilarityOps.readPrunedCells rationale, lifecycle flavor): only
-    * the probed cell dirs of each live segment are file-listed. None =
-    * nothing indexed under the probed cells — but a missing/empty
-    * codes TABLE is still a caller error (a probe against no index at
-    * all), kept as loud as the old readLiveWithIds sys.error. */
+  /** The codes store's live rows under the probed cells
+    * ([[graft.sinks.SegmentIndex.live]]: listing-pruned, tombstones and
+    * the recency window applied). None = nothing indexed under the
+    * probed cells — but a missing/empty codes TABLE is still a caller
+    * error (a probe against no index at all), kept loud. */
   private def readPrunedCodes(s: SparkSession, path: String,
-      cells: Seq[Int]): Option[(DataFrame, Seq[Long])] = {
-    val keep = cells.map(c => s"cell=$c").toSet
-    val out = graft.sinks.IngestSegments
-      .readLivePrunedWithIds(s, s"$path/codes", keep)
-    if (out.isEmpty)
-      require(graft.sinks.IngestSegments
-          .liveSegments(s, s"$path/codes").nonEmpty,
-        s"no PQ code segments under $path")
-    out
-  }
+      cells: Seq[Int]): Option[DataFrame] =
+    pqCodes.live(s, path, cells.map(_.toLong)).orElse {
+      require(graft.sinks.IngestSegments.liveSegments(s, pqCodes.dir(path))
+        .nonEmpty, s"no PQ code segments under $path")
+      None
+    }
 
   /** Batched ADC kNN — the PQ twin of SimilarityOps.ivfKnnJoin: top-k
     * neighbors for EVERY query row in one job over the compressed codes
@@ -512,26 +460,11 @@ object PqOps {
     val probed = probedRows.toDF("query_id", "adc", "cd", "cell")
     val cells = probedRows.map(_._4).distinct
     val resolved = readPrunedCodes(s, path, cells) match {
-      case None => // index exists (readPrunedCodes requires it) but the
-        // probed cells hold nothing — no query can have a neighbor
+      case Some(live) => live
+      case None => // the probed cells hold nothing: no query has a neighbor
         return probed.limit(0)
           .select(col("query_id"), col("query_id").as("neighbor_id"),
             lit(0.0).as("adc_score"), lit(1).as("__rn"))
-      case Some((live0, segIds)) =>
-        // tombstones first (cell-blind side table; only in the plan
-        // when a retraction ever happened), then the recency window on
-        // the persisted logical ing — probeWithModel's exact order
-        val live =
-          if (!graft.sinks.Hfs.exists(s, s"$path/tomb")) live0
-          else graft.sinks.IngestSegments.applyTombstones(
-            live0, pqTombstones(s, path), "vec_id", "ing")
-        if (segIds.size <= 1) live
-        else {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vec_id")).orderBy(col("ing").desc)
-          live.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-        }
     }
     val score = element_at(col("cd"), col("cell") + 1) +
       (0 until m).map { j =>

@@ -162,6 +162,18 @@ object SimilarityOps {
   private def pinGeom(s: SparkSession, path: String, dims: Int, bits: Int): Unit =
     graft.sinks.Hfs.writeString(s, s"$path/__dims", s"$dims:$bits")
 
+  /** Refuse a `what` (query or ingest) whose width or bits differ from
+    * the pinned geometry at `path` — its buckets would come from another
+    * plane family. False when nothing is pinned yet. */
+  private def checkGeom(s: SparkSession, path: String, dims: Int, bits: Int,
+      what: String): Boolean = readGeom(s, path).exists { case (w, storedBits) =>
+    val rebuild = "the bucket layout is plane-family geometry; rebuild the index to change it"
+    require(w == dims, s"$what width $dims != indexed width $w at $path — $rebuild")
+    storedBits.foreach(b =>
+      require(b == bits, s"$what bits $bits != indexed bits $b at $path — $rebuild"))
+    true
+  }
+
   /** Bucket assignment that REFUSES a row whose vector width disagrees
     * with the declared family width: every plane dot against a
     * shorter/longer vector degenerates (zero-padded or truncated sign
@@ -193,13 +205,8 @@ object SimilarityOps {
     * `probe` of it. Pre-pin layouts fall back to the query's width. */
   private def probedBucketSet(s: SparkSession, path: String,
       qVec: Array[Double], bits: Int, probe: Int): Seq[Long] = {
-    val (dims, storedBits) = readGeom(s, path).getOrElse((qVec.length, None))
-    require(qVec.length == dims,
-      s"query width ${qVec.length} != indexed width $dims at $path")
-    storedBits.foreach(b => require(b == bits,
-      s"probe bits $bits != indexed bits $b at $path — stored bucket ids " +
-        "were assigned under the pinned plane family"))
-    val planes = hyperplanes(dims, bits)
+    checkGeom(s, path, qVec.length, bits, "query")
+    val planes = hyperplanes(qVec.length, bits)
     val qb = planes.zipWithIndex
       .map { case (h, i) => if (dotLocal(qVec, h) > 0) 1L << i else 0L }
       .reduce(_ | _)
@@ -247,138 +254,59 @@ object SimilarityOps {
     *
     * q38 proves the stored bucket layout built in ONE shot; q105 proves
     * the same layout reached the way a 100 TB corpus actually arrives —
-    * in micro-batches. Each ingest writes `corpus/ingest=N/bucket=B`
-    * (bucket partitioning INSIDE each segment, so partition pruning
-    * works per segment exactly as in the one-shot layout), compaction
-    * folds old segments through [[graft.sinks.IngestSegments]]'s
-    * rename-before-delete protocol, and a probe reads the fold+tail
-    * merged state. The driver's gate then pins the lifecycle: a probe
-    * over a three-cut folded+tail index must hash-equal the batch q38
-    * answer (same generated oracle). */
+    * in micro-batches. The corpus is a [[graft.sinks.SegmentIndex]]:
+    * each ingest writes `corpus/ingest=N/bucket=B` (bucket partitioning
+    * INSIDE each segment, so pruning works per segment exactly as in the
+    * one-shot layout), with the logical ingest persisted as DATA (`ing`,
+    * the IngestSegments tombstone convention) so recency and retraction
+    * survive compaction; folds keep the latest version per vec_id, and
+    * retractions go to the bucket-blind side table `tomb`. The driver's
+    * gate then pins the lifecycle: a probe over a three-cut folded+tail
+    * index must hash-equal the batch q38 answer (same generated oracle). */
+  private val annCorpus = graft.sinks.SegmentIndex("corpus", "vec_id",
+    Seq("vec_id", "v", "ing"), part = Some("bucket"), latestBy = Some("ing"),
+    tomb = Some("tomb"))
+
   def ingestAnnSegment(emb: DataFrame, path: String, ingestId: Long,
       bits: Int = 8, dims: Int = 64): Unit = {
-    val spark = emb.sparkSession
     // plane-family geometry (see readGeom) — pin BOTH numbers on first
     // ingest, REFUSE drift on either BEFORE writing: a segment bucketed
     // under a different plane family would probe wrong forever
-    readGeom(spark, path) match {
-      case Some((w, storedBits)) =>
-        require(w == dims,
-          s"ingest width $dims != indexed width $w at $path — the bucket " +
-            "layout is plane-family geometry; rebuild the index to change it")
-        storedBits.foreach(b => require(b == bits,
-          s"ingest bits $bits != indexed bits $b at $path — the bucket " +
-            "layout is plane-family geometry; rebuild the index to change it"))
-      case None => pinGeom(spark, path, dims, bits)
-    }
-    val planes = hyperplanes(dims, bits)
-    graft.sinks.IngestSegments.alignToLayout(
-        emb.select(col("vec_id"), col("v"))
-          .withColumn("bucket", bucketChecked(col("v"), planes, dims))
-          // logical ingest persisted as DATA (the IngestSegments
-          // tombstone convention): folds keep it, so recency and
-          // retraction comparisons survive compaction
-          .withColumn("ing", lit(ingestId)),
-        "bucket")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/corpus/ingest=$ingestId")
+    if (!checkGeom(emb.sparkSession, path, dims, bits, "ingest"))
+      pinGeom(emb.sparkSession, path, dims, bits)
+    annCorpus.write(emb.withColumn("bucket",
+        bucketChecked(col("v"), hyperplanes(dims, bits), dims))
+      .withColumn("ing", lit(ingestId)), path, ingestId)
   }
 
   /** Retraction (the CDC `D` route applied to the ANN index): `batch`
-    * carries the deleted vec_ids. Tombstones go to a SEPARATE tiny
-    * side table (`$path/tomb`, IngestSegments-lifecycled) — NOT into
-    * the bucket-partitioned corpus, where a pruned probe reading other
-    * buckets would never see them and a deleted vector would keep
-    * serving (IngestSegments.applyTombstones' rationale). Every probe
-    * reads the whole side table (retracted-id-sized) and drops corpus
-    * rows with ing ≤ the id's newest tombstone; a later re-ingest
-    * (higher ing) resurrects the id. Overwrite-by-own-id → replay-
-    * idempotent trivially. */
+    * carries the deleted vec_ids. Every probe drops corpus rows with
+    * ing ≤ the id's newest tombstone; a later re-ingest (higher ing)
+    * resurrects the id. */
   def retractAnnVecs(path: String)(batch: DataFrame, batchId: Long): Unit =
-    graft.sinks.IngestSegments
-      .writeTombstones(batch, s"$path/tomb", "vec_id", batchId)
+    annCorpus.retract(path)(batch, batchId)
 
-  private def annTombstones(spark: SparkSession, path: String): DataFrame =
-    graft.sinks.IngestSegments.readTombstones(spark, s"$path/tomb", "vec_id")
+  /** Fold old ANN segments (latest version per vec_id, tombstoned
+    * versions dropped, bucket layout kept), then retire inert tombstones. */
+  def compactAnnLshIndex(spark: SparkSession, path: String): Unit =
+    annCorpus.compact(spark, path)
 
-  /** Fold old ANN segments: latest version per vec_id wins on the
-    * persisted logical `ing`, tombstoned versions drop (the side table
-    * keeps the tombstones themselves — re-application is idempotent,
-    * which is what keeps crash-window double-reads safe), bucket
-    * layout preserved so pruning keeps working on the fold. */
-  def compactAnnLshIndex(spark: SparkSession, path: String): Unit = {
-    graft.sinks.IngestSegments.compact(spark, s"$path/corpus",
-      fold = df => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("ing").desc)
-        graft.sinks.IngestSegments.applyTombstones(
-            df, annTombstones(spark, path), "vec_id", "ing")
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("vec_id"), col("v"), col("bucket"), col("ing"))
-      },
-      partitionCols = Seq("bucket"))
-    // purge-capable side-table fold: the corpus compact above has
-    // already dropped every tombstone-killed row, so a tombstone whose
-    // key has no readable ing ≤ it left in the store is provably inert
-    // and retires here — the side table tracks CURRENT retractions,
-    // not lifetime churn (IngestSegments.compactTombstones' safety
-    // argument; ordering corpus-compact → tomb-compact is load-bearing)
-    graft.sinks.IngestSegments.compactTombstones(spark, s"$path/tomb",
-      "vec_id", protectedRows = Some(graft.sinks.IngestSegments
-        .readLive(spark, s"$path/corpus")
-        .map(_.select(col("vec_id"), col("ing")))
-        .getOrElse(spark.range(0)
-          .select(col("id").as("vec_id"), col("id").as("ing")))))
-  }
-
-  /** [[probeAnnLshIndex]] against the LIVE fold+tail state: same probed
-    * bucket enumeration on the driver, same pruned scan per segment,
-    * plus latest-version-per-vec_id resolution over the pruned slice
-    * (skipped on a single-segment index — nothing to resolve). A
-    * re-ingested vector whose NEW position left the probed buckets can
-    * still surface its stale pre-move score until compaction folds the
-    * old segment — the same recency window every segment index here
-    * accepts (DedupOps/PqOps twins); compaction bounds it. */
+  /** [[probeAnnLshIndex]] against the LIVE fold+tail state: the same
+    * probed bucket enumeration on the driver, the same pruned listing
+    * per segment, resolved by [[graft.sinks.SegmentIndex.live]]. */
   def probeAnnLshIndexLive(s: SparkSession, path: String,
       qVec: Array[Double], bits: Int = 8, probe: Int = 2, k: Int = 10,
-      excludeVecId: Long = 0L): DataFrame = {
-    val probed = probedBucketSet(s, path, qVec, bits, probe)
-    // listing-time pruning (see probeAnnLshIndex): only the probed
-    // bucket dirs of each live segment are file-listed — None covers
-    // both "no index" and "nothing indexed under the probed buckets"
-    val keep = probed.map(b => s"bucket=$b").toSet
-    graft.sinks.IngestSegments
-      .readLivePrunedWithIds(s, s"$path/corpus", keep) match {
+      excludeVecId: Long = 0L): DataFrame =
+    annCorpus.live(s, path, probedBucketSet(s, path, qVec, bits, probe)) match {
       case None =>
-        import s.implicits._
-        Seq.empty[(Long, Double)].toDF("neighbor_id", "cosine")
-      case Some((live, ids)) =>
-        // retraction first (the side table is bucket-blind, so it
-        // applies whatever the pruned slice holds), then the recency
-        // window on the persisted logical ing — both skippable only
-        // when provably no-ops (single segment ⇒ single version per
-        // id; no tomb table ⇒ nothing retracted)
-        val pruned0 = live.filter(col("vec_id") =!= excludeVecId)
-        val pruned =
-          if (!graft.sinks.Hfs.exists(s, s"$path/tomb")) pruned0
-          else graft.sinks.IngestSegments.applyTombstones(
-            pruned0, annTombstones(s, path), "vec_id", "ing")
-        val resolved =
-          if (ids.size <= 1) pruned
-          else {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("vec_id")).orderBy(col("ing").desc)
-            pruned.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1)
-          }
-        resolved
+        s.createDataFrame(Seq.empty[(Long, Double)]).toDF("neighbor_id", "cosine")
+      case Some(live) =>
+        live.filter(col("vec_id") =!= excludeVecId)
           .select(col("vec_id").as("neighbor_id"),
             round(fcos(col("v"), typedlit(qVec.toSeq)), 6).as("cosine"))
           .orderBy(col("cosine").desc, col("neighbor_id"))
           .limit(k)
     }
-  }
 
   /** The three-cut fold+tail lifecycle state for q105, built once per
     * fixture generation through [[graft.sinks.Lifecycle]] (the
@@ -1082,15 +1010,15 @@ object SimilarityOps {
   }
 
   /** ---- Persistent embedding LSH index: the ingest shape of the
-    * embedding dedup family, mirroring DedupOps' MinHash ingest index
-    * (buildLshIndex/probeLshIndex/streamingDedupWriter) so BOTH dedup
-    * families have a one-shot audit (q54 there, q28 here→text) AND an
-    * incremental admission path. Layout: `bands` is the NARROW table —
-    * (vec_id, band, bv), partitionBy bmod = pmod(band·2^bits + bv,
-    * embIndexBuckets) — and `vecs` holds each vector once, joined only
-    * for candidates that already share a band. A probe enumerates its
-    * own bmod set on the driver (≤ 16 × batch values), prunes the scan
-    * with a literal isin, and broadcasts the micro-batch: the index is
+    * embedding dedup family, declared on the same
+    * [[graft.sinks.BandedIndex]] as DedupOps' MinHash index, so BOTH
+    * dedup families have a one-shot audit (q54 there, q28 here→text)
+    * AND an incremental admission path. Layout: `bands` is the NARROW
+    * table — (vec_id, band, bv), partitionBy bmod = pmod(band·2^bits +
+    * bv, embIndexBuckets) — and `vecs` holds each vector once, joined
+    * only for candidates that already share a band. A probe enumerates
+    * its own bmod set on the driver (≤ 16 × batch values), lists only
+    * those directories, and broadcasts the micro-batch: the index is
     * never shuffled nor fully read (EmbIndexSpec pins both). Threshold
     * defaults to the production near-dup point (0.9), where the
     * 16×8-bit banding catches a pair with p ≈ .996 (see
@@ -1127,159 +1055,54 @@ object SimilarityOps {
         col("band").cast("long") * (1L << embIndexBandBits) + col("bv"))
   }
 
+  /** The persistent embedding index at width `dims`, a
+    * [[graft.sinks.BandedIndex]] verified by exact cosine rounded to 6
+    * digits. The fold and the stored layout do not depend on `dims`. */
+  private def embIndex(dims: Int) = graft.sinks.BandedIndex(
+    graft.sinks.SegmentIndex("bands", "vec_id", Seq("vec_id", "band", "bv"),
+      part = Some("bmod"), hashOf = Some(col("bkey") -> embIndexBuckets)),
+    graft.sinks.SegmentIndex("vecs", "vec_id", Seq("vec_id", "v"),
+      latestBy = Some("ingest")),
+    embIndexRows(_, dims), "new_vec", "cosine", (a, b) => round(fcos(a, b), 6))
+
   /** Bulk bootstrap: ingestId must be NEGATIVE (default -1) and not a
-    * compaction fold (IngestSegments.guardBuild — the
-    * DedupOps.buildLshIndex contract). */
+    * compaction fold. */
   def buildEmbLshIndex(vecs: DataFrame, path: String, ingestId: Long = -1L,
-      dims: Int = 64): Unit = {
-    graft.sinks.IngestSegments.guardBuild(vecs.sparkSession, s"$path/bands", ingestId)
-    ingestEmbSegment(vecs, path, ingestId, dims)
-  }
+      dims: Int = 64): Unit = embIndex(dims).build(vecs, path, ingestId)
 
   /** The unguarded segment write (overwrite-by-ingestId, so foreachBatch
-    * retries replace their own output — same replay contract as the
-    * text index). */
+    * retries replace their own output). */
   private[graft] def ingestEmbSegment(vecs: DataFrame, path: String,
-      ingestId: Long, dims: Int = 64): Unit = {
-    val rows = embIndexRows(vecs, dims).localCheckpoint()
-    // modulus pinned with the layout (ensureBuckets) — see the chunk/LSH
-    // indexes: a drifted default must not mix bmod layouts
-    val nb = graft.sinks.IngestSegments.ensureBuckets(
-      vecs.sparkSession, s"$path/bands", embIndexBuckets)
-    graft.sinks.IngestSegments.alignToLayout(
-        rows.select(col("vec_id"), col("band"), col("bv"),
-          pmod(col("bkey"), lit(nb.toLong)).as("bmod")), "bmod")
-      .write.mode("overwrite").partitionBy("bmod")
-      .parquet(s"$path/bands/ingest=$ingestId")
-    rows.select(col("vec_id"), col("v")).dropDuplicates("vec_id")
-      .write.mode("overwrite")
-      .parquet(s"$path/vecs/ingest=$ingestId")
-  }
+      ingestId: Long, dims: Int = 64): Unit =
+    embIndex(dims).ingest(vecs, path, ingestId)
 
-  /** Compact both index tables — the DedupOps.compactLshIndex twin
-    * (see its scaladoc for the fold semantics; bands dedup exact rows,
-    * vecs keep the latest version per vec_id). */
-  def compactEmbLshIndex(spark: SparkSession, path: String): Unit = {
-    graft.sinks.IngestSegments.compact(spark, s"$path/bands",
-      fold = _.select(col("vec_id"), col("band"), col("bv"), col("bmod"))
-        .dropDuplicates("vec_id", "band", "bv"),
-      partitionCols = Seq("bmod"))
-    graft.sinks.IngestSegments.compact(spark, s"$path/vecs",
-      fold = df => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("ingest").desc)
-        df.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).select(col("vec_id"), col("v"))
-      },
-      partitionCols = Seq.empty)
-  }
+  /** Compact both index tables: bands fold to their distinct exact rows,
+    * vecs to the latest version per vec_id. */
+  def compactEmbLshIndex(spark: SparkSession, path: String): Unit =
+    embIndex(64).compact(spark, path)
 
   /** Candidate (new_vec, dup_of, v_n) rows: bmod-pruned scan, broadcast
     * probe — public for EmbIndexSpec's plan assertions. */
   def embProbeCandidates(newVecs: DataFrame, path: String,
-      maxPerBucket: Option[Int] = None, dims: Int = 64): DataFrame = {
-    val spark = newVecs.sparkSession
-    val probe = embIndexRows(newVecs, dims).localCheckpoint()
-    val bmods = probe
-      .select(pmod(col("bkey"),
-        lit(graft.sinks.IngestSegments.readBuckets(
-          spark, s"$path/bands", embIndexBuckets).toLong)).as("bmod"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    // listing-time pruning to the probe's bmod dirs — the
-    // DedupOps.lshProbeCandidates rationale; None = no index, or
-    // nothing indexed under the probe's bmods
-    val keep = bmods.map(b => s"bmod=$b").toSet
-    val pruned = graft.sinks.IngestSegments
-      .readLivePrunedWithIds(spark, s"$path/bands", keep) match {
-      case None =>
-        return probe.limit(0).select(col("vec_id").as("new_vec"),
-          col("vec_id").as("dup_of"), col("v").as("v_n"))
-      case Some((live, _)) => live
-    }
-    // hot-bucket cap, probe flavor — semantics and plan notes at
-    // DedupOps.lshProbeCandidates (each index (band, bv) bucket
-    // contributes its `c` lowest DISTINCT vec_ids — dense_rank so
-    // re-ingested copies neither tie-break arbitrarily nor consume cap
-    // slots; admission survives via the kept representatives; window
-    // touches only the pruned slice, only when enabled)
-    val bands = maxPerBucket match {
-      case Some(c) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bv")).orderBy(col("vec_id"))
-        pruned.withColumn("__occ", dense_rank().over(w))
-          .filter(col("__occ") <= c).drop("__occ")
-      case None => pruned
-    }
-    broadcast(probe).as("n").join(bands.as("e"),
-        col("n.band") === col("e.band") && col("n.bv") === col("e.bv") &&
-          col("n.vec_id") =!= col("e.vec_id"))
-      .select(col("n.vec_id").as("new_vec"), col("e.vec_id").as("dup_of"),
-        col("n.v").as("v_n"))
-  }
+      maxPerBucket: Option[Int] = None, dims: Int = 64): DataFrame =
+    embIndex(dims).candidates(newVecs, path, maxPerBucket)
 
   /** Probe: (new_vec, dup_of, cosine) pairs with verified exact cosine
     * ≥ threshold. New vectors are NOT indexed here — callers
     * buildEmbLshIndex after admission (dedup-then-ingest). */
   def probeEmbLshIndex(newVecs: DataFrame, path: String,
       threshold: Double = 0.9, maxPerBucket: Option[Int] = None,
-      dims: Int = 64): DataFrame = {
-    val spark = newVecs.sparkSession
-    val live = graft.sinks.IngestSegments.readLive(spark, s"$path/vecs")
-    if (live.isEmpty) // no index yet — nothing can be a dup
-      return newVecs.limit(0).select(col("vec_id").as("new_vec"),
-        col("vec_id").as("dup_of"), lit(0.0).as("cosine"))
-    val vecsIdx = live.get
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("new_vec"), col("dup_of"))
-      .orderBy(col("ingest").desc)
-    embProbeCandidates(newVecs, path, maxPerBucket, dims)
-      .dropDuplicates("new_vec", "dup_of") // shrink before fetching vectors
-      .join(vecsIdx.select(col("vec_id").as("dup_of"), col("v").as("v_e"),
-        col("ingest")), Seq("dup_of"))
-      // score against the LATEST indexed version of a re-ingested vector
-      // (deterministic), not whichever segment survives an arbitrary
-      // dedup — same fix as DedupOps.probeLshIndex; the window runs over
-      // the candidate-pair frame only
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .withColumn("cosine", round(fcos(col("v_n"), col("v_e")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("new_vec"), col("dup_of"), col("cosine"))
-  }
-
-  /** In-batch near-dup resolution (greedy keep-lowest-vec_id), same
-    * policy as DedupOps.dedupWithinBatch. */
-  private def embDedupWithinBatch(batch: DataFrame, threshold: Double,
-      dims: Int): DataFrame = {
-    val rows = embIndexRows(batch, dims)
-    val losers = rows.as("a").join(rows.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        col("a.v").as("v_a"), col("b.v").as("v_b"))
-      .dropDuplicates("va", "vb")
-      .filter(round(fcos(col("v_a"), col("v_b")), 6) >= threshold)
-      .select(col("vb").as("vec_id")).distinct()
-    batch.join(losers, Seq("vec_id"), "left_anti")
-  }
+      dims: Int = 64): DataFrame =
+    embIndex(dims).probe(newVecs, path, threshold, maxPerBucket)
 
   /** Streaming near-dup admission for embeddings: probe the index,
-    * self-dedup the batch, write admitted vectors + their index
-    * segment keyed by batchId in overwrite mode (at-least-once retries
-    * replace their own output). Mirrors DedupOps.streamingDedupWriter. */
+    * self-dedup the batch, write admitted vectors + their index segment
+    * keyed by batchId in overwrite mode. */
   def streamingEmbDedupWriter(indexPath: String, outDir: String,
       threshold: Double = 0.9, maxPerBucket: Option[Int] = None,
       dims: Int = 64)(
-      batch: DataFrame, batchId: Long): Unit = {
-    // a missing or footerless-empty index probes as empty (readLive)
-    val dups = probeEmbLshIndex(batch, indexPath, threshold, maxPerBucket, dims)
-      .select(col("new_vec")).distinct()
-    val novel = batch.join(dups,
-      batch("vec_id") === dups("new_vec"), "left_anti")
-    val admitted = embDedupWithinBatch(novel, threshold, dims).localCheckpoint()
-    admitted.write.mode("overwrite").parquet(s"$outDir/admitted/ingest=$batchId")
-    ingestEmbSegment(admitted, indexPath, batchId, dims)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    embIndex(dims).writer(indexPath, outDir, threshold, maxPerBucket)(batch, batchId)
 
   /** Int8 scalar quantization of the embedding column — the storage
     * scale play for ANN (4× smaller index, SIMD int8 dot products).

@@ -708,138 +708,85 @@ object TextOps {
 
   /** ---- Persistent chunk index: q81's ingest symmetry (the same
     * build/probe/streaming-admission triple the MinHash-LSH and
-    * embedding-LSH families carry). The index stores one md5 per
-    * DISTINCT chunk ever admitted — 128-bit hash equality stands in
-    * for chunk-text equality (2^-64 collision odds at corpus scale;
-    * same stand-in q23's exact dedup and C4-style span dedup use in
-    * production), so the index row is 32 bytes regardless of chunk
-    * width. Rows are partitioned by pmod(xxhash64(h), buckets): a probe
-    * enumerates its batch's bucket set on the driver and the index scan
-    * partition-prunes to those directories — per-batch cost tracks the
-    * BATCH's chunk count, not the corpus (the LshIndexSpec property,
-    * mirrored here). Segments are keyed by ingest id in overwrite mode:
-    * an at-least-once foreachBatch retry replaces its own segment, and
-    * the probe excludes the in-flight ingest id so a replay never sees
-    * its own failed attempt's hashes as "already indexed". */
-  /** Directory fan-out: bmod = pmod(xxhash64(h), this). 64 suits the
-    * test scale; at 100 TB, size it so a micro-batch's distinct bucket
+    * embedding-LSH families carry). The index is a
+    * [[graft.sinks.SegmentIndex]] storing one md5 per DISTINCT chunk
+    * ever admitted — 128-bit hash equality stands in for chunk-text
+    * equality (2^-64 collision odds at corpus scale; same stand-in q23's
+    * exact dedup and C4-style span dedup use in production), so the
+    * index row is 32 bytes regardless of chunk width. Rows are
+    * partitioned by bmod = pmod(xxhash64(h), chunkIndexBuckets) and fold
+    * to their distinct hashes (same h ⇒ same bmod). 64 buckets suit the
+    * test scale; at 100 TB, size them so a micro-batch's distinct bucket
     * set stays ≪ the directory count — otherwise every probe touches
-    * every directory and the pruning is vacuous (the same sizing
-    * contract as DedupOps.lshIndexBuckets). */
+    * every directory and the pruning is vacuous. */
   val chunkIndexBuckets = 64
 
+  private val chunkIndex = graft.sinks.SegmentIndex("chunks", "h", Seq("h"),
+    part = Some("bmod"), hashOf = Some(xxhash64(col("h")) -> chunkIndexBuckets))
+
   /** Bulk-build ingest ids are NEGATIVE (default -1) and streaming
-    * batchIds are >= 0 (the foreachBatch contract, asserted in the
-    * writer), so a bootstrap segment is never excluded by a batch-0
-    * probe's replay filter and never clobbered by a batch-0 segment
-    * overwrite — the id spaces are disjoint by sign. */
+    * batchIds are >= 0, so a bootstrap segment is never excluded by a
+    * batch-0 probe's replay filter and never clobbered by a batch-0
+    * segment overwrite — the id spaces are disjoint by sign. */
   def buildChunkIndex(docs: DataFrame, path: String, ingestId: Long = -1L): Unit = {
-    graft.sinks.IngestSegments.guardBuild(docs.sparkSession, s"$path/chunks", ingestId)
-    writeChunkSegment(
-      chunkGrid(docs).select(md5(col("chunk").cast("binary")).as("h")),
-      path, ingestId)
+    chunkIndex.guardBuild(docs.sparkSession, path, ingestId)
+    chunkIndex.write(chunkGrid(docs).select(md5(col("chunk").cast("binary")).as("h"))
+      .dropDuplicates("h"), path, ingestId)
   }
 
-  private def writeChunkSegment(hashes: DataFrame, path: String,
-      ingestId: Long): Unit = {
-    // geometry from the STORED layout (pinned on first write): retuning
-    // the module default against an existing index must change nothing
-    // until a rebuild — a drifted modulus silently mixes two layouts
-    // and the probe misses indexed hashes (IngestSegments.ensureBuckets)
-    val nb = graft.sinks.IngestSegments.ensureBuckets(
-      hashes.sparkSession, s"$path/chunks", chunkIndexBuckets)
-    graft.sinks.IngestSegments.alignToLayout(
-        hashes.dropDuplicates("h")
-          .select(col("h"),
-            pmod(xxhash64(col("h")), lit(nb.toLong)).as("bmod")), "bmod")
-      .write.mode("overwrite").partitionBy("bmod")
-      .parquet(s"$path/chunks/ingest=$ingestId")
-  }
+  /** Probe: which of `batchH`'s hashes are already indexed by ingests
+    * other than `excludeIngest`? The index side is pruned at listing time
+    * to the batch's driver-enumerated bucket set and joins the BROADCAST
+    * batch hashes — the index is never shuffled nor fully read
+    * (ChunkDedupSpec walks the executed plan for both pins). */
+  private[graft] def probeChunkIndex(spark: SparkSession, indexPath: String,
+      batchH: DataFrame, excludeIngest: Long): DataFrame =
+    chunkIndex.live(spark, indexPath, chunkIndex.parts(batchH, indexPath),
+        Some(excludeIngest)) match {
+      case None => batchH.limit(0).select(col("h"))
+      case Some(idx) => idx.join(broadcast(batchH), "h").select(col("h")).distinct()
+    }
 
-  /** Streaming chunk-dedup admission: per micro-batch, drop every chunk
-    * whose hash is already indexed (earlier ingests only), self-dedup
-    * the batch's own chunks (globally-first (doc_id, ci) wins — the q81
-    * keeper rule applied within the batch), reassemble each doc from
-    * its surviving chunks, then write the cleaned docs and the batch's
-    * new-hash segment, both keyed by batchId in overwrite mode. Output
+  /** Compact the chunk index (fold all but the newest replayable batch
+    * segment). */
+  def compactChunkIndex(spark: SparkSession, indexPath: String): Unit =
+    chunkIndex.compact(spark, indexPath)
+
+  /** Streaming chunk-dedup admission ([[graft.sinks.SegmentIndex.admit]]):
+    * per micro-batch, drop every chunk whose hash is already indexed
+    * (earlier ingests only), self-dedup the batch's own chunks
+    * (globally-first (doc_id, ci) wins — the q81 keeper rule applied
+    * within the batch), reassemble each doc from its surviving chunks,
+    * then write the cleaned docs and the batch's new-hash segment. Output
     * rows: (doc_id, n_chunks, n_kept, clean_text) — a doc whose every
     * span was seen earlier survives as an EMPTY doc (n_kept = 0), the
-    * caller's signal to drop it entirely.
-    *
-    * Plan shape: the index side is partition-pruned to the batch's
-    * bucket set and joined against the BROADCAST batch hashes, so the
-    * index is never shuffled nor fully read; the seen-set that comes
-    * back is batch-sized and broadcasts into the anti-join. */
-  /** Probe: which of `batchH`'s hashes are already indexed? The batch's
-    * bucket set is enumerated on the DRIVER (one tiny distinct over the
-    * batch) and pushed as a partition filter, so the index scan reads
-    * only the batch's bmod directories and joins the BROADCAST batch
-    * hashes — the index is never shuffled nor fully read
-    * (ChunkDedupSpec walks the executed plan for both pins). Reads the
-    * LIVE segment set (IngestSegments), so a probe racing a crashed
-    * compaction still sees every indexed hash exactly once. */
-  private[graft] def probeChunkIndex(spark: SparkSession, indexPath: String,
-      batchH: DataFrame, excludeIngest: Long): DataFrame = {
-    // the stored layout's modulus, never the module default
-    val nb = graft.sinks.IngestSegments.readBuckets(
-      spark, s"$indexPath/chunks", chunkIndexBuckets)
-    val bmods = batchH
-      .select(pmod(xxhash64(col("h")), lit(nb.toLong)).as("bmod"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    // listing-time pruning to the batch's bmod dirs (the
-    // DedupOps.lshProbeCandidates rationale); None = no index yet, or
-    // nothing indexed under the batch's bmods — no hash can be seen
-    val keep = bmods.map(b => s"bmod=$b").toSet
-    graft.sinks.IngestSegments
-      .readLivePrunedWithIds(spark, s"$indexPath/chunks", keep) match {
-      case None =>
-        spark.emptyDataFrame.withColumn("h", lit("")).limit(0).select(col("h"))
-      case Some((idx, _)) =>
-        idx.filter(col("ingest") =!= lit(excludeIngest)) // replay safety
-          .join(broadcast(batchH), "h")
-          .select(col("h")).distinct()
-    }
-  }
-
-  /** Compact the chunk index (the [[graft.sinks.IngestSegments]]
-    * contract: fold all but the newest replayable batch segment into
-    * one fold segment at a strictly-below-every-live-id negative id,
-    * rename-before-delete). The chunk fold is a plain distinct on h —
-    * same h ⇒ same bmod, so the bucketing stays consistent. */
-  def compactChunkIndex(spark: SparkSession, indexPath: String): Unit =
-    graft.sinks.IngestSegments.compact(spark, s"$indexPath/chunks",
-      fold = _.select(col("h"), col("bmod")).dropDuplicates("h"),
-      partitionCols = Seq("bmod"))
-
+    * caller's signal to drop it entirely. */
   def streamingChunkDedupWriter(indexPath: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    require(batchId >= 0,
-      s"streaming batchIds are >= 0 (negative ids are bulk builds), got $batchId")
-    val spark = batch.sparkSession
-    val chunks = chunkGrid(batch)
-      .withColumn("h", md5(col("chunk").cast("binary")))
-      .localCheckpoint()
-    val batchH = chunks.select(col("h")).distinct()
-    val seen = probeChunkIndex(spark, indexPath, batchH, excludeIngest = batchId)
-    val keep = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("h")).orderBy(col("doc_id"), col("ci"))
-    // checkpointed so the probe join + keeper window run ONCE per batch
-    // — both the admitted rollup and the segment write read from here
-    val marked = chunks
-      .join(seen.withColumn("__seen", lit(true)), Seq("h"), "left")
-      .withColumn("rk", row_number().over(keep))
-      .withColumn("kept", col("__seen").isNull && col("rk") === 1)
-      .localCheckpoint()
-    val admitted = marked.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
-        concat_ws(" ", expr(
-          "transform(array_sort(collect_list(CASE WHEN kept THEN struct(ci, chunk) END)), x -> x.chunk)"))
-          .as("clean_text"))
-    admitted.write.mode("overwrite").parquet(s"$outDir/admitted/ingest=$batchId")
-    writeChunkSegment(
-      marked.filter(col("kept")).select(col("h")), indexPath, batchId)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    graft.sinks.SegmentIndex.admit(outDir, batchId) {
+      val chunks = chunkGrid(batch)
+        .withColumn("h", md5(col("chunk").cast("binary")))
+        .localCheckpoint()
+      val seen = probeChunkIndex(batch.sparkSession, indexPath,
+        chunks.select(col("h")).distinct(), excludeIngest = batchId)
+      val keep = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("h")).orderBy(col("doc_id"), col("ci"))
+      // checkpointed so the probe join + keeper window run ONCE per batch
+      // — both the admitted rollup and the segment write read from here
+      val marked = chunks
+        .join(seen.withColumn("__seen", lit(true)), Seq("h"), "left")
+        .withColumn("rk", row_number().over(keep))
+        .withColumn("kept", col("__seen").isNull && col("rk") === 1)
+        .localCheckpoint()
+      (marked.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_chunks"),
+          sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
+          concat_ws(" ", expr(
+            "transform(array_sort(collect_list(CASE WHEN kept THEN struct(ci, chunk) END)), x -> x.chunk)"))
+            .as("clean_text")),
+        () => chunkIndex.write(marked.filter(col("kept")).select(col("h"))
+          .dropDuplicates("h"), indexPath, batchId))
+    }
 
   /** Length-bucketed batching report — the dynamic-batching planner's
     * input: every doc rounds up to the next power-of-two token bucket,

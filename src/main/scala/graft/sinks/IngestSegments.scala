@@ -3,14 +3,14 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The per-ingest segment lifecycle shared by the three persistent
-  * dedup indexes (MinHash-LSH bands/docs, embedding-LSH bands/vecs,
-  * chunk-hash index): each ingest — a bulk bootstrap (negative id) or
-  * a streaming micro-batch (batchId ≥ 0, overwrite-on-replay) — owns a
-  * `tablePath/ingest=N` directory, and compaction folds old segments
-  * into one negative-id segment to bound directory/file count after
-  * thousands of micro-batches (the small-files problem every per-batch
-  * store accrues).
+/** The per-ingest segment lifecycle under every [[SegmentIndex]] (the
+  * MinHash-LSH bands/docs, embedding-LSH bands/vecs, chunk-hash, ANN
+  * corpus and PQ codes tables) and the other row stores: each ingest —
+  * a bulk bootstrap (negative id) or a streaming micro-batch (batchId
+  * ≥ 0, overwrite-on-replay) — owns a `tablePath/ingest=N` directory,
+  * and compaction folds old segments into one negative-id segment to
+  * bound directory/file count after thousands of micro-batches (the
+  * small-files problem every per-batch store accrues).
   *
   * Compaction contract: fold every segment EXCEPT the newest
   * non-negative ingest — the only one Structured Streaming can still

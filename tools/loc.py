@@ -6,6 +6,8 @@ indentation) with `//`, `/*` or `*`, or lies inside a `/* ... */` block.
 Every other line is code.
 
 Usage: python3 tools/loc.py [root]   (default: src/main beside this tool)
+
+`root` may be a directory (every `*.scala` under it) or one file.
 """
 import sys
 from pathlib import Path
@@ -13,8 +15,11 @@ from pathlib import Path
 root = Path(sys.argv[1]) if len(sys.argv) > 1 else \
     Path(__file__).resolve().parent.parent / "src" / "main"
 
+if not root.exists():
+    sys.exit(f"{root}: no such file or directory")
+
 total = code = comment = blank = 0
-for f in sorted(root.rglob("*.scala")):
+for f in [root] if root.is_file() else sorted(root.rglob("*.scala")):
     in_block = False
     for line in f.read_text(encoding="utf-8").splitlines():
         s = line.strip()
