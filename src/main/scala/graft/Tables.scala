@@ -6,8 +6,10 @@ import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated star-schema parquet fixtures under
   * `/root/testdata/sf*` (see TESTDATA.md). Parquet carries its schema in
-  * the footer, so no inference happens; Catalyst pushes filters and
-  * column pruning into the scan.
+  * the footer, but `spark.read.parquet` still infers it eagerly: every
+  * call launches a one-task schema-inference job (`parquet at
+  * Tables.scala`) that reads the footers before the frame exists.
+  * Catalyst pushes filters and column pruning into the scan.
   */
 object Tables {
 

@@ -33,10 +33,12 @@ private[sinks] object AdditiveSegments {
   private def markCommitted(spark: SparkSession, dir: String): Unit =
     Hfs.markSegmentCommitted(spark, dir)
 
-  /** foreachBatch hook body: append the batch's partial as seq=batchId.
-    * An EMPTY partial writes nothing at all — not even a marker dir: a
-    * replayed empty batch re-probes isEmpty and skips again (content
-    * idempotence), while the 0-row partitioned write it replaces left a
+  /** foreachBatch hook body: append the batch's partial as seq=batchId
+    * through [[Hfs.writeCommittedSegment]] — one job writes the partial
+    * into the hidden `.stage-seq=<id>`, and one rename publishes it with
+    * its commit marker. An EMPTY partial publishes nothing at all — not
+    * even a marker dir: a replayed empty batch writes and discards again
+    * (content idempotence), while the 0-row write it replaces left a
     * FOOTERLESS committed segment that wedged every subsequent read on
     * UNABLE_TO_INFER_SCHEMA (an empty micro-batch is routine; a
     * permanently crashed read loop is not). */

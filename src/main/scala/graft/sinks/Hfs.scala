@@ -1,7 +1,8 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Storage access through the Hadoop FileSystem API resolved per path
   * scheme, so the merge sink and the stored ANN/LSH index layouts behave
@@ -60,26 +61,36 @@ object Hfs {
   /** Exactly-once segment publish — the ONE copy of the
     * replay-idempotence protocol (AdditiveSegments.write and
     * Streams.publishBatch previously each restated it, and a fix to
-    * either silently missed the other): already-committed → no-op;
-    * uncommitted leftover → cleared and rewritten; EMPTY frame →
-    * nothing at all, not even a marker (a replay re-probes isEmpty and
-    * skips again, and a 0-row partitioned write would leave a
-    * footerless committed segment that wedges readers). The frame is
-    * persisted across the isEmpty probe and the write so an aggregate
-    * input (the additive sinks' per-batch partials) computes its
-    * shuffle once, not twice. */
+    * either silently missed the other), in ONE Spark job:
+    *  - already committed → no-op;
+    *  - otherwise the frame is written into the hidden sibling
+    *    `.stage-<name>` (file indexes and file-stream sources skip
+    *    dot-prefixed paths), its rows counted by `Dataset.observe` on
+    *    the write's own action;
+    *  - non-empty → the commit marker goes into the stage and one
+    *    rename publishes data and marker together, so a reader never
+    *    lists a written-but-unmarked segment;
+    *  - EMPTY → the stage is deleted: no segment, no marker (a replay
+    *    writes and discards again; a 0-row committed segment would
+    *    leave footerless dirs that wedge readers).
+    * A replay first clears what a crashed attempt left: its stage, and
+    * a marker-less `<name>` dir from the pre-stage protocol. */
   def writeCommittedSegment(df: org.apache.spark.sql.DataFrame,
       seg: String): Unit = {
     val spark = df.sparkSession
     if (segmentCommitted(spark, seg)) return
+    val p = new Path(seg)
+    val stage = new Path(p.getParent, s".stage-${p.getName}").toString
     deleteRecursive(spark, seg)
-    val p = df.persist()
-    try {
-      if (!p.isEmpty) {
-        p.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(seg)
-        markSegmentCommitted(spark, seg)
-      }
-    } finally { p.unpersist(false); () }
+    deleteRecursive(spark, stage)
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(stage)
+    if (rows.get("n") == 0L) deleteRecursive(spark, stage)
+    else {
+      markSegmentCommitted(spark, stage)
+      rename(spark, stage, seg)
+    }
   }
 
   /** The "nothing readable here" classifier shared by every sink's

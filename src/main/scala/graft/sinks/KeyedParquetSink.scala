@@ -38,12 +38,24 @@ object KeyedParquetSink {
     * (include dt in keyCols, as the reference's per-day ES indexes do —
     * its doc _id is also only unique per index). If a key can legitimately
     * move between days, use [[MergeParquetSink]], whose read-side merge
-    * resolves keys globally. */
+    * resolves keys globally.
+    *
+    * The batch executes exactly ONCE: it is local-checkpointed before
+    * anything reads it. Over a stream's foreachBatch frame each job
+    * would otherwise re-run the upstream stateful operator (the
+    * touched-dt probe and the merge are two jobs). Only after that
+    * execution may an EMPTY batch return — running it is what evicts
+    * watermark-expired state and commits the next state version — and
+    * then it returns at once: no read of the table, no merge, no
+    * write, so a first-ever empty batch creates no directory and an
+    * empty batch onto a table leaves every file untouched. */
   def upsert(batch: DataFrame, path: String, keyCols: Seq[String],
       dtCol: String, versionCol: String): Unit = {
     val spark = batch.sparkSession
     val cols = batch.columns
-    val incoming = batch.withColumn("__is_new", lit(1))
+    val once = batch.localCheckpoint()
+    if (once.isEmpty) return
+    val incoming = once.withColumn("__is_new", lit(1))
 
     val existing0 =
       try {
@@ -113,10 +125,11 @@ object KeyedParquetSink {
       .parquet(path)
   }
 
-  /** foreachBatch adapter. */
+  /** foreachBatch adapter: [[upsert]] partially applied — its single
+    * execution of the batch is also its emptiness probe. */
   def writer(path: String, keyCols: Seq[String], dtCol: String,
       versionCol: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) upsert(batch, path, keyCols, dtCol, versionCol)
+    upsert(batch, path, keyCols, dtCol, versionCol)
 
   /** S10: delete-by-query — rows matching `cond` removed; only touched dt
     * partitions are rewritten. Returns rows deleted. Re-runnable: a crash

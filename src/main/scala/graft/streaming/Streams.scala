@@ -442,16 +442,17 @@ object Streams {
   }
 
   /** Exactly-once per-batch publish into an append-style topic dir: each
-    * (sink, batch) pair lands in its own `batch=<id>` segment, committed
-    * by the shared commit-marker protocol (Hfs.CommitMarker — the same
-    * marker the sink layer's segment stores key on; `_SUCCESS` alone
-    * vanishes under marksuccessfuljobs=false) — a replayed batch no-ops
-    * per sink, a crash between sinks resumes exactly where it stopped,
-    * and an uncommitted leftover is cleared and rewritten. Readers scan
-    * the sink root; the `batch` partition column is lineage metadata
-    * they may ignore. Empty sides are skipped without a marker — a
-    * replay re-probes isEmpty and skips again, so there is nothing to
-    * duplicate. */
+    * (sink, batch) pair lands in its own `batch=<id>` segment through
+    * [[graft.sinks.Hfs.writeCommittedSegment]] — one job writes a hidden
+    * `.stage-batch=<id>` dir, and one rename publishes its data with the
+    * commit marker (Hfs.CommitMarker; `_SUCCESS` alone vanishes under
+    * marksuccessfuljobs=false). So a stage-2 file stream never lists a
+    * half-written or unmarked segment, a replayed batch no-ops per sink,
+    * a crash between sinks resumes exactly where it stopped, and a
+    * crashed attempt's stage is cleared and rewritten. Readers scan the
+    * sink root; the `batch` partition column is lineage metadata they
+    * may ignore. An empty side publishes nothing (its stage is
+    * deleted), so a replay has nothing to duplicate. */
   private def publishBatch(df: DataFrame, dir: String, batchId: Long): Unit =
     graft.sinks.Hfs.writeCommittedSegment(df, s"$dir/batch=$batchId")
 
@@ -460,9 +461,9 @@ object Streams {
     * reference re-reads Redis sets each batch, app/OdsBaseDbApp.scala:
     * 80-93), so routing reconfigures hot without restarting the query.
     * Config file: one CSV line per table, `name,kind` with kind ∈
-    * {fact, dim}. The routed decode is persisted for the duration of the
-    * batch: both sinks' isEmpty probe + write would otherwise re-parse
-    * every CDC envelope four times. */
+    * {fact, dim}. The parsed envelopes are persisted for the duration of
+    * the batch: the fact, dim and error writes would otherwise each
+    * re-parse every CDC envelope. */
   def cdcRouteBatchWriter(configPath: String, outDir: String)
       (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession

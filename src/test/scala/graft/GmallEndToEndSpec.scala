@@ -253,6 +253,16 @@ class GmallEndToEndSpec extends SparkSpec {
     val (ow2, dau2) = startStage2()
     try { ow2.processAllAvailable(); dau2.processAllAvailable() }
     finally { ow2.stop(); dau2.stop(); q1Log.stop(); q1Cdc.stop() }
+    // each stage-2 batch executes its stateful plan once: the join keeps
+    // 4 stores per shuffle partition (16), the dedup 1 (4)
+    def stores(qs: org.apache.spark.sql.streaming.StreamingQuery*) =
+      qs.flatMap(_.recentProgress).filter(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numStateStoreInstances).toSeq)
+    val (owStores, dauStores) = (stores(ow1, ow2), stores(dau1, dau2))
+    assert(owStores.nonEmpty && owStores.forall(_ == Seq(16)),
+      s"ow state store instances per batch: $owStores")
+    assert(dauStores.nonEmpty && dauStores.forall(_ == Seq(4)),
+      s"dau state store instances per batch: $dauStores")
 
     // ---- reconcile: serving tables == batch twins over ALL raw input
     val allRouted = CdcRouter.route((wave1Cdc ++ wave2Cdc).toDF("value"), facts, dims)

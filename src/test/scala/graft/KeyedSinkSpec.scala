@@ -193,4 +193,33 @@ class KeyedSinkSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 2L,
       "refusal must leave the foreign directory untouched")
   }
+
+  test("a first-ever empty upsert creates no directory") {
+    val path = Files.createTempDirectory("sink_empty_first").toString + "/t"
+    KeyedParquetSink.upsert(table(), path, Seq("mid", "dt"), "dt", "ver")
+    // a dir holding only _SUCCESS has no footer to infer a schema from
+    assert(!new java.io.File(path).exists(),
+      "an empty batch onto a fresh path must write nothing")
+    KeyedParquetSink.upsert(table(("m1", "2024-01-01", 1L, 10.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    assert(spark.read.parquet(path).count() == 1L)
+  }
+
+  test("an empty upsert onto a table leaves every file unchanged") {
+    val path = Files.createTempDirectory("sink_empty_noop").toString + "/t"
+    KeyedParquetSink.upsert(
+      table(("m1", "2024-01-01", 1L, 10.0), ("m2", "2024-01-02", 1L, 20.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    def snapshot = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(f => (f.toString, Files.size(f), Files.getLastModifiedTime(f)))
+        .toSet
+    }
+    val before = snapshot
+    KeyedParquetSink.upsert(table(), path, Seq("mid", "dt"), "dt", "ver")
+    assert(snapshot == before,
+      "an empty batch must not rewrite (or touch) any partition")
+  }
 }

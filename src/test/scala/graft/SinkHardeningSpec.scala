@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Pins for the crash/concurrency fixes from the round-6 sink review:
@@ -58,10 +60,75 @@ class SinkHardeningSpec extends SparkSpec {
     // it used to leave made every later read throw UNABLE_TO_INFER_SCHEMA
     val w = sinks.VocabSink.writer(s"$dir/vocab") _
     w(empty.select("doc_id", "text"), 1L)
+    // neither the segment nor its stage survives the empty publish
+    val left = Files.walk(java.nio.file.Paths.get(dir)).iterator()
+      .asScala.map(_.getFileName.toString).toSeq
+    assert(!left.exists(n => n == "seq=1" || n.startsWith(".stage-")),
+      s"an empty partial must leave no segment and no stage: $left")
     w(docs, 2L)
     assert(vocabOf(s"$dir/vocab") == Map("aa" -> 1L, "bb" -> 1L))
     sinks.VocabSink.compact(spark, s"$dir/vocab")
     assert(vocabOf(s"$dir/vocab") == Map("aa" -> 1L, "bb" -> 1L))
+  }
+
+  private def childNames(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).fold(Seq.empty[String])(_.toSeq.sorted)
+
+  test("writeCommittedSegment publishes in ONE job: data and marker land together, no stage survives; an empty frame leaves neither dir") {
+    val dir = Files.createTempDirectory("seg_publish").toString
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      jobs.set(0)
+      sinks.Hfs.writeCommittedSegment(rows, s"$dir/batch=0")
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      assert(jobs.get() == 1,
+        s"a non-empty publish must run exactly one Spark job, ran ${jobs.get()}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(childNames(dir) == Seq("batch=0"), "no .stage-* sibling may survive")
+    val files = childNames(s"$dir/batch=0")
+    assert(files.contains(sinks.Hfs.CommitMarker) &&
+      files.exists(_.endsWith(".parquet")),
+      s"the segment must hold both its marker and its data: $files")
+    sinks.Hfs.writeCommittedSegment(rows.filter(col("id") < 0), s"$dir/batch=1")
+    assert(childNames(dir) == Seq("batch=0"),
+      "an empty frame must leave neither the segment nor its stage")
+    assert(spark.read.parquet(dir).count() == 2L)
+  }
+
+  test("a replayed publish clears a crashed attempt's stage and a legacy marker-less segment") {
+    val dir = Files.createTempDirectory("seg_replay").toString
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    // a crash between the marker write and the publishing rename: the
+    // stage holds data and marker, the segment does not exist
+    rows.write.parquet(s"$dir/.stage-batch=0")
+    sinks.Hfs.markSegmentCommitted(spark, s"$dir/.stage-batch=0")
+    // a marker-less segment left by the pre-stage protocol's crash
+    Seq((9L, "stale")).toDF("id", "v").write.parquet(s"$dir/batch=1")
+    new java.io.File(s"$dir/batch=1/_SUCCESS").delete()
+    assert(!sinks.Hfs.segmentCommitted(spark, s"$dir/batch=1"))
+    sinks.Hfs.writeCommittedSegment(rows, s"$dir/batch=0")
+    sinks.Hfs.writeCommittedSegment(Seq((3L, "c")).toDF("id", "v"), s"$dir/batch=1")
+    assert(childNames(dir) == Seq("batch=0", "batch=1"))
+    def served = spark.read.parquet(dir).select("id", "v").as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(served == Seq((1L, "a"), (2L, "b"), (3L, "c")),
+      "each batch must be served exactly once, without the stale rows")
+    // replaying a committed segment is a no-op: every file untouched
+    def snapshot = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map(f => (f.toString, Files.size(f), Files.getLastModifiedTime(f)))
+      .toSet
+    val before = snapshot
+    sinks.Hfs.writeCommittedSegment(rows, s"$dir/batch=0")
+    assert(snapshot == before)
   }
 
   test("two committed stagings (concurrent-compact debris) converge on the superset fold") {

@@ -221,6 +221,12 @@ class StreamingSpec extends SparkSpec {
         .groupBy("dt").agg(count(lit(1)).as("dau"))
         .as[(String, Long)].collect().toMap
       assert(serve == Map("2024-01-01" -> 2L, "2024-01-02" -> 1L))
+      // the sink executes each batch's stateful plan ONCE: one store per
+      // shuffle partition (4 here), not one per job that reads the batch
+      val stores = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numStateStoreInstances).toSeq)
+      assert(stores.nonEmpty && stores.forall(_ == Seq(4)),
+        s"state store instances per batch: $stores")
     } finally q.stop()
   }
 
