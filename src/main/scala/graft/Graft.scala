@@ -24,9 +24,9 @@ object Graft {
     spark
   }
 
-  /** The ONE local-session recipe every main (Bench / Verify / PlanDump /
-    * ScaleProbe / Http) builds from — `parallelism` sets master threads
-    * AND shuffle partitions. The four copies this replaces had to be
+  /** The ONE local-session recipe every main (Bench / Verify / Http)
+    * builds from — `parallelism` sets master threads AND shuffle
+    * partitions. The four copies this replaces had to be
     * edited in lockstep (Tables.nanosConf's docstring enumerated them
     * all). `fairScheduler` turns on spark.scheduler.mode=FAIR for
     * serving entry points (concurrent requests' jobs interleave via

@@ -22,7 +22,7 @@ object Tables {
   /** The session conf reading events.parquet requires (its `ts` is
     * parquet TIMESTAMP(NANOS), which Spark rejects by default with
     * [PARQUET_TYPE_ILLEGAL]). Set it at session build time — every graft
-    * entry point (Verify/Bench/ScaleProbe/PlanDump builders, Graft.init)
+    * entry point (the Verify/Bench/Http session builders, Graft.init)
     * does; `events` fails fast with a pointer here rather than mutating
     * the caller's session behind its back. */
   val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"

@@ -25,11 +25,11 @@ final class SpanStatsBuffer(var nOcc: Long, var min1: Long,
   * exchange that map-side combining cannot collapse — (h, doc) keys
   * are nearly all distinct) and then joined that frame BACK to its own
   * per-gram mins for the second-lowest doc, re-shuffling the
-  * corpus-sized frame a second time; measured at the 1.6M-doc/69M-gram
-  * ScaleProbe fixture the provenance pass cost 105 s against the span
-  * scan's 14 s. With the fused state the plan is scan → one
-  * hash-partial-combined exchange keyed h — the same shape (and cost
-  * class) as the span scan's own count aggregate.
+  * corpus-sized frame a second time; measured at the removed
+  * ScaleProbe's 1.6M-doc/69M-gram fixture the provenance pass cost
+  * 105 s against the span scan's 14 s. With the fused state the plan
+  * is scan → one hash-partial-combined exchange keyed h — the same
+  * shape (and cost class) as the span scan's own count aggregate.
   *
   * Update: doc < min1 demotes the old min1 to min2 and resets its
   * count; doc == min1 increments; min1 < doc < min2 tightens min2.

@@ -317,7 +317,8 @@ object DedupOps {
   /** Unified two-tier candidate keys for q29 — one row per (doc, key),
     * with the doc's fingerprint `f` and distinct-shingle count `sz`
     * riding along so the hamming and size-ratio prefilters run INSIDE
-    * the candidate join. Exposed for ScaleProbe's asymptotics probe.
+    * the candidate join. Exposed for SimhashRecallSpec, which rebuilds
+    * the key union independently and pins it against this one.
     *
     * Tier 0 — SimHash pigeonhole BLOCK PAIRS at production radius
     * (hamming ≤ 4; Manku et al. WWW'07 run 3-4): 6 blocks of 10-11
@@ -421,8 +422,8 @@ object DedupOps {
     // without this the entire candidate enumeration runs in a single
     // task on one core. The tier keys are 64-bit xxhash values, so the
     // key cardinality (unlike the round-5 ~400-value block keys)
-    // supports any partition count — measured (ScaleProbe
-    // simhash_join_occupancy, PLANS.md): 2.1M-27.7M distinct keys at
+    // supports any partition count — measured (the removed ScaleProbe's
+    // simhash_join_occupancy row, PLANS.md): 2.1M-27.7M distinct keys at
     // 100k-1.6M docs, all 256 partitions populated, max partition share
     // ~1/256 — effective parallelism tracks the partition count. On a
     // real multi-file corpus the scan is already parallel; the
@@ -584,19 +585,12 @@ object DedupOps {
     * miss. The range require additionally rejects sizes whose numBits
     * product would overflow a Long. */
   final class BloomGate(benchDocs: DataFrame, estItems: Long = 1L << 16) {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graftbridge.Bridge
-
     require(estItems > 0 && estItems <= Long.MaxValue / 8,
       s"estItems out of range: $estItems")
     locally {
-      val conf = benchDocs.sparkSession.conf
-      val maxItems = conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-      val maxBits = conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-      require(estItems <= maxItems && estItems * 8L <= maxBits,
+      val s = benchDocs.sparkSession
+      val (maxItems, maxBits) = KeyRoute.bloomClamps(s)
+      require(KeyRoute.fitsBloomClamps(s, estItems),
         s"estItems=$estItems (numBits=${estItems * 8L}) would be SILENTLY " +
           s"clamped by spark.sql.optimizer.runtime.bloomFilter.maxNumItems=" +
           s"$maxItems / maxNumBits=$maxBits — raise those confs alongside " +
@@ -612,21 +606,15 @@ object DedupOps {
       * the benchmark slice. */
     val bench: DataFrame = sh(benchDocs).select(col("h")).distinct().persist()
 
-    // distributed build; collect()(0) is the one bit-array row (64 KB at
-    // the default sizing: 2^16 items × 8 bits/item = 2^19 bits), not
-    // data — the bounded-collect pattern of the stored ANN models.
-    // Empty benchmark set → null bit array → might_contain yields NULL →
-    // the filter admits nothing into the contamination check, so nothing
-    // is contaminated. A FAILED build self-releases: the persist above
+    // the filter's bit array is 64 KB at the default sizing (2^16 items
+    // × 8 bits/item = 2^19 bits). Empty benchmark set → the filter
+    // admits nothing into the contamination check, so nothing is
+    // contaminated. A FAILED build self-releases: the persist above
     // is already registered in CacheManager when this job runs, and the
     // caller never gets a gate to release() — without the catch, a
     // task failure here would leak the bench frame for the session.
-    private val bloomBytes: Array[Byte] =
-      try bench.select(Bridge.column(
-          new BloomFilterAggregate(Bridge.expression(col("h")),
-            Literal(estItems), Literal(estItems * 8L)).toAggregateExpression())
-          .as("bf"))
-        .collect()(0).getAs[Array[Byte]](0)
+    private val mightContain =
+      try KeyRoute.mightContain(bench, "h", estItems, col("h"))
       catch { case e: Throwable => bench.unpersist(false); throw e }
 
     /** (doc_id, n_shared) of every doc sharing ≥ minShared DISTINCT
@@ -634,16 +622,13 @@ object DedupOps {
       * set per doc, so the exploded rows carry no multiplicity): Bloom
       * map-side prune, then the exact join kills false positives —
       * semantically transparent at any FP rate. */
-    def contaminated(docs: DataFrame, minShared: Long): DataFrame = {
-      val mightContain = Bridge.column(BloomFilterMightContain(
-        Literal(bloomBytes), Bridge.expression(col("h"))))
+    def contaminated(docs: DataFrame, minShared: Long): DataFrame =
       sh(docs)
         .filter(mightContain)
         .join(bench, "h")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
-    }
 
     /** Free the persisted bench blocks. The gate must not be used after. */
     def release(): Unit = { bench.unpersist(false): Unit }
@@ -822,17 +807,16 @@ object DedupOps {
   }
 
   /** The label-propagation loop itself, over ANY (doc_a, doc_b) pair
-    * set — q62 feeds it the fixture pairs; ScaleProbe feeds it
-    * synthetic pair graphs at 1×/4×/16× to measure the per-round cost
-    * exponent (each round is ONE join + groupBy-min over the pair
-    * graph, so rounds must scale ~linearly in edges). */
+    * set — q62's stored label layout feeds it the fixture pairs (each
+    * round is ONE join + groupBy-min over the pair graph, so rounds
+    * scale ~linearly in edges; the removed ScaleProbe measured that on
+    * synthetic pair graphs at 1×/4×/16×). */
   def collapseClusters(pairs: DataFrame,
       maxComponent: Long = 10000000L): DataFrame =
     collapseClustersWithStats(pairs, maxComponent)._1
 
-  /** As [[collapseClusters]], also returning the round count (ScaleProbe
-    * divides time by it to pin per-round cost; DedupSpec pins
-    * diameter+1 rounds on a synthetic chain).
+  /** As [[collapseClusters]], also returning the round count (DedupSpec
+    * pins diameter+1 rounds on a synthetic chain).
     *
     * This is the repo's one deliberate RDD-core operator: iterative
     * label propagation is exactly the "genuine per-partition imperative
@@ -1727,78 +1711,22 @@ object DedupOps {
       .select(col("doc_id"), col("span_start"), col("span_end"), col("n_grams"))
   }
 
-  /** q154's Bloom-prefiltered twin for LOW-DUP-RATE corpora: the plain
-    * shape re-shuffles EVERY gram row by hash into the dup-set join
-    * (the ScaleProbe-measured superlinear term at 69M gram rows); here
-    * the duplicated hash set — already in hand from scan 1 — builds a
-    * distributed Bloom filter (the q75 BloomGate construction:
-    * BloomFilterAggregate, one bit-array row collected, ~1.25 B/item at
-    * 3% FP) and scan 2 prunes map-side with BloomFilterMightContain
-    * BEFORE its shuffle, so the join exchange carries ~dup rows + FP
-    * instead of the corpus's every gram. The exact join downstream
-    * kills FPs — semantically transparent at any FP rate (spec-pinned
-    * equal to substringSpansOver). Eager by construction (the dup set
-    * is counted to size the filter and the result is materialized
-    * before its persist is released) — ingest-job semantics, like the
-    * stored-index builds. NOT the default: on a boilerplate-heavy
-    * corpus the dup set is corpus-scale, the Bloom saturates to
-    * admit-everything (wasted build + filter work), and the plain
-    * two-pass shuffle join is the floor — same sizing judgment as
-    * q61 vs q75, made explicit by the estItems clamp guard. */
-  def substringSpansBloomOver(docs: DataFrame, L: Int): DataFrame = {
-    val grams = gramPositions(docs, L)
-    val dup = dupHashesOf(grams).persist()
-    try {
-      val nDup = dup.count()
-      if (nDup == 0)
-        return islandSpans(grams.join(dup, "h"), L).localCheckpoint(eager = true)
-      require(fitsBloomClamps(docs.sparkSession, nDup),
-        s"dup-gram set ($nDup) would silently saturate the Bloom sizing " +
-          "clamps — this corpus is past the prefilter regime; use " +
-          "substringSpansOver (the two-pass shuffle join is the floor)")
-      bloomPrunedSpans(grams, dup, nDup, L).localCheckpoint(eager = true)
-    } finally dup.unpersist(false)
-  }
-
-  /** Scan 1's duplicated-hash set — shared by the plain, Bloom and
-    * routed span forms. */
+  /** Scan 1's duplicated-hash set — shared by the plain and routed span
+    * forms. */
   private def dupHashesOf(grams: DataFrame): DataFrame =
     grams.groupBy(col("h"))
       .agg(count(lit(1)).as("n")).filter(col("n") >= 2).select(col("h"))
 
-  /** Does a dup set of `nDup` hashes fit Spark's BloomFilterAggregate
-    * sizing clamps at 8 bits/item? Past them the aggregate SILENTLY
-    * truncates its arguments (the q75 estItems lesson) and the filter
-    * saturates toward admit-everything — wasted build + filter work. */
-  private[graft] def fitsBloomClamps(s: SparkSession, nDup: Long): Boolean = {
-    val est = math.max(nDup, 1024L)
-    val maxItems = s.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-    val maxBits = s.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-    est <= maxItems && est * 8L <= maxBits
-  }
-
   /** The Bloom-pruned scan 2 + island merge, given a pre-counted dup
-    * set that fits the clamps (caller checks). Lazy — the caller owns
-    * materialization and the dup frame's persist lifecycle.
-    * private[graft]: ScaleProbe times the roads DIRECTLY (forcing a
-    * route via session confs would also re-plan every downstream join,
-    * making road-vs-road times incomparable). */
-  private[graft] def bloomPrunedSpans(grams: DataFrame, dup: DataFrame,
-      nDup: Long, L: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graftbridge.Bridge
-    val est = math.max(nDup, 1024L)
-    val bloomBytes = dup.select(Bridge.column(
-        new BloomFilterAggregate(Bridge.expression(col("h")),
-          Literal(est), Literal(est * 8L)).toAggregateExpression()).as("bf"))
-      .collect()(0).getAs[Array[Byte]](0)
-    val mightContain = Bridge.column(BloomFilterMightContain(
-      Literal(bloomBytes), Bridge.expression(col("h"))))
-    islandSpans(grams.filter(mightContain).join(dup, "h"), L)
-  }
+    * set that fits the clamps (caller checks): the dup set builds the
+    * filter, scan 2 prunes map-side BEFORE its shuffle, so the join
+    * exchange carries ~dup rows + FPs instead of the corpus's every
+    * gram, and the exact join downstream kills FPs. Lazy — the caller
+    * owns materialization and the dup frame's lifecycle. */
+  private def bloomPrunedSpans(grams: DataFrame, dup: DataFrame,
+      nDup: Long, L: Int): DataFrame =
+    islandSpans(grams.filter(KeyRoute.mightContain(dup, "h",
+      KeyRoute.bloomItems(nDup), col("h"))).join(dup, "h"), L)
 
   /** q159: the span scan through the AUTO router — the q106 degree-probe
     * convention applied to q154's plain-vs-Bloom sizing judgment, which
@@ -1835,7 +1763,8 @@ object DedupOps {
     val nDup = dup.count()
     // nDup == 0 short-circuits to plain: nothing to prune, and the
     // empty join is free either way
-    if (nDup > 0 && fitsBloomClamps(docs.sparkSession, nDup))
+    if (nDup > 0 &&
+        KeyRoute.fitsBloomClamps(docs.sparkSession, KeyRoute.bloomItems(nDup)))
       (bloomPrunedSpans(grams, dup, nDup, L), "bloom")
     else
       (islandSpans(grams.join(dup, "h"), L), "plain")
@@ -1931,9 +1860,9 @@ object DedupOps {
     // combining, joined BACK to its own per-gram mins for min2 — paid
     // the corpus-sized exchange twice and, unpersisted, re-computed the
     // whole chain for its second consumer: 105 s vs the span scan's
-    // 14 s at the 69M-gram ScaleProbe fixture. This shape is scan →
-    // one partial-combined exchange keyed h — the span scan's own cost
-    // class (measured: see PLANS span_provenance).
+    // 14 s at the removed ScaleProbe's 69M-gram fixture. This shape is
+    // scan → one partial-combined exchange keyed h — the span scan's own
+    // cost class (measured: see PLANS span_provenance).
     // dup-gram-vocabulary-sized; consumed twice (dup-position join +
     // the final stats join) — materialize once, ContextCleaner frees
     // the blocks when the result frame dies
@@ -2142,27 +2071,19 @@ object DedupOps {
     * checkpointed sparse frame the probe and the join both read. */
   private[graft] def decontamSpansFromRegistry(registry: DataFrame,
       train: DataFrame, L: Int): (DataFrame, String) = {
-    val s = train.sparkSession
     val benchH = registry.select(col("h")).distinct().localCheckpoint()
     val nBench = benchH.count()
     val trainG = gramPositions(train, L)
-    if (fitsBroadcastBudget(s, nBench))
-      (islandSpans(trainG.join(broadcast(benchH), "h"), L), "broadcast")
-    else if (fitsBloomClamps(s, nBench))
-      (bloomPrunedSpans(trainG, benchH, nBench, L), "bloom")
-    else
-      (islandSpans(trainG.join(benchH, "h"), L), "plain")
-  }
-
-  /** Would an exact registry of `nRows` 8-byte hashes fit the session's
-    * own broadcast budget? Costed at 32 B/row — the hashed-relation
-    * materialization (key + row object + table slot) is what the
-    * budget protects, not the 8-byte payload. Routing on the session
-    * conf keeps the judgment honest: whatever the operator would ask
-    * `broadcast()` to ship is what the budget was set against. */
-  private[graft] def fitsBroadcastBudget(s: SparkSession, nRows: Long): Boolean = {
-    val t = org.apache.spark.sql.graftbridge.Bridge.autoBroadcastThreshold(s)
-    t > 0 && nRows <= t / 32L
+    val route = KeyRoute.of(train.sparkSession, nBench)
+    val spans = route match {
+      // an empty registry joins nothing: the broadcast of zero rows is
+      // the free way to say so
+      case "none" | "broadcast" =>
+        islandSpans(trainG.join(broadcast(benchH), "h"), L)
+      case "bloom" => bloomPrunedSpans(trainG, benchH, nBench, L)
+      case "plain" => islandSpans(trainG.join(benchH, "h"), L)
+    }
+    (spans, route)
   }
 
   val substringDecontam: Q = (s, d) =>

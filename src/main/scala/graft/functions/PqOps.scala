@@ -243,12 +243,17 @@ object PqOps {
     pqCodes.write(bootstrap.withColumn("r", residualCol(cents))
       .select(col("vec_id"), col("cell"), codesCol(books).as("codes"),
         lit(ingestId).as("ing")), path, ingestId)
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cents")
-    (for { j <- books.indices; c <- books(j).indices } yield (j, c, books(j)(c).toSeq))
-      .toDF("j", "code", "cb")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+    // each model table gets the commit marker [[ingestPqSegment]] checks
+    // (the committer's `_SUCCESS` is absent under
+    // marksuccessfuljobs=false)
+    def writeModel(table: DataFrame, name: String): Unit = {
+      table.coalesce(1).write.mode("overwrite").parquet(s"$path/$name")
+      graft.sinks.Hfs.markSegmentCommitted(spark, s"$path/$name")
+    }
+    writeModel(cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "centroid"), "cents")
+    writeModel((for { j <- books.indices; c <- books(j).indices }
+      yield (j, c, books(j)(c).toSeq)).toDF("j", "code", "cb"), "books")
   }
 
   /** Incremental ingest: encode `newVecs` against the stored (frozen)
@@ -278,7 +283,7 @@ object PqOps {
       s"ingest ids are streaming batch ids (>= 0), got $ingestId — " +
         "bootstrap builds go through buildPqIndex")
     require(Seq("cents", "books")
-        .forall(t => graft.sinks.Hfs.exists(spark, s"$path/$t/_SUCCESS")),
+        .forall(t => graft.sinks.Hfs.segmentCommitted(spark, s"$path/$t")),
       s"no PQ model under $path — bootstrap with buildPqIndex first " +
         "(ingest encodes against a frozen model, never trains one)")
     val (cents, books) = loadModel(spark, path)

@@ -440,10 +440,9 @@ object TextOps {
     * the df cap a production build would add (AQE skew-split covers the
     * rest), and postings would be delta-encoded per term shard. */
   /** The five-aggregate phrase build over (doc_id, text) rows — q65
-    * and ScaleProbe run THIS code, and PhraseIndexSink runs its two
-    * steps apart (phraseDocRows at write, phraseFromRows at read), so
-    * the batch query, the incremental index, and the scale probe cannot
-    * drift apart. */
+    * runs THIS code, and PhraseIndexSink runs its two steps apart
+    * (phraseDocRows at write, phraseFromRows at read), so the batch
+    * query and the incremental index cannot drift apart. */
   def phraseAggregate(docs: DataFrame): DataFrame =
     phraseFromRows(phraseDocRows(docs))
 

@@ -311,7 +311,8 @@ object Analytics {
       first_doc: Long, last_doc: Long)
 
   /** The first-fit recurrence as a constant-state lazy iterator over
-    * one shard's doc_id-sorted rows (shared by q68 and ScaleProbe). */
+    * one shard's doc_id-sorted rows (q68's per-shard step; PropertySpec
+    * pins its invariants). */
   def packShard(shard: Long, it: Iterator[PackIn],
       budget: Long = 2048L): Iterator[PackBin] =
     new Iterator[PackBin] {

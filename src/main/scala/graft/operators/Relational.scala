@@ -343,7 +343,7 @@ object Relational {
     * length normalization drop into the same two-scan shape (tiny
     * corpus-stats row broadcast into a single scoring scan). */
   /** The shared two-scan tf×idf shape (q55 conjunctive / q100
-    * disjunctive; ScaleProbe drives it over synthetic corpora): one
+    * disjunctive; QueriesSpec calls it directly): one
     * corpus-stats aggregate (a single one-row broadcastable frame),
     * one scoring scan. tf as size − size(array_remove): ArrayRemove is
     * a codegen'd collection expression, while the filter() HOF is
@@ -396,7 +396,7 @@ object Relational {
     * scale shape as q55: a one-row corpus-stats aggregate broadcast
     * into a single scoring scan — no shuffle touches the corpus. */
   /** The shared BM25 two-scan shape (q79 rational idf / q101 Lucene ln
-    * idf; ScaleProbe drives it over synthetic corpora). tf via
+    * idf; PipelineOpsSpec calls it directly). tf via
     * codegen'd array_remove, not the interpreted filter() HOF (see
     * tfIdfMatch) — identical exact integer. */
   private[graft] def bm25MatchOver(docs0: DataFrame, terms: Seq[String],

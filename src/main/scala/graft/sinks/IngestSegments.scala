@@ -379,8 +379,9 @@ object IngestSegments {
     *    regime: most stores never see a retraction, and every serving
     *    read was paying an empty broadcast join for it);
     *  - fits the session broadcast budget (the same 32 B/row costing
-    *    as [[graft.functions.DedupOps]]'s registry router — ONE sizing
-    *    judgment, not two) → broadcast left join, the home regime;
+    *    as the decontamination registry router — ONE sizing judgment,
+    *    [[graft.functions.KeyRoute]]) → broadcast left join, the home
+    *    regime;
     *  - past the budget but inside the Bloom sizing clamps → Bloom
     *    prefilter: keys the filter rejects are PROVABLY untombstoned
     *    and pass through map-side; only might-contain rows (tombstoned
@@ -399,22 +400,14 @@ object IngestSegments {
     val t = tombs.groupBy(col(keyCol)).agg(max(col(ingCol)).as("__tomb_ing"))
       .localCheckpoint()
     val n = t.count()
-    applyTombstonesRouted(rows, t, keyCol, ingCol, routeOf(s, n))
+    applyTombstonesRouted(rows, t, keyCol, ingCol,
+      graft.functions.KeyRoute.of(s, n))
   }
 
-  /** The route [[applyTombstones]] takes for an `n`-key tombstone
-    * aggregate under the session's sizing confs. Pure so specs and
-    * ScaleProbe can pin/force roads without conf games. */
-  private[graft] def routeOf(s: SparkSession, n: Long): String =
-    if (n == 0L) "none"
-    else if (graft.functions.DedupOps.fitsBroadcastBudget(s, n)) "broadcast"
-    else if (graft.functions.DedupOps.fitsBloomClamps(s, n)) "bloom"
-    else "plain"
-
   /** The road implementations behind [[applyTombstones]], invokable
-    * directly (private[graft]) so specs pin hash-equality and
-    * ScaleProbe times road-vs-road without conf-forcing (a session
-    * conf would re-plan every downstream join — the r16 A/B lesson).
+    * directly (private[graft]) so TombstoneRouteSpec pins every road
+    * hash-equal without conf-forcing (a session conf would re-plan
+    * every downstream join — the r16 A/B lesson).
     * `t` must be the per-key (keyCol, __tomb_ing = max ing) aggregate,
     * checkpointed by the caller when it has multiple consumers (the
     * bloom road reads it twice: filter build + exact join). */
@@ -429,16 +422,8 @@ object IngestSegments {
       case "broadcast" => joined(rows, broadcast(t))
       case "plain" => joined(rows, t)
       case "bloom" =>
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-        import org.apache.spark.sql.graftbridge.Bridge
-        val est = math.max(t.count(), 1024L)
-        val bloomBytes = t.select(Bridge.column(
-            new BloomFilterAggregate(Bridge.expression(col(keyCol)),
-              Literal(est), Literal(est * 8L)).toAggregateExpression()).as("bf"))
-          .collect()(0).getAs[Array[Byte]](0)
-        val mc = Bridge.column(BloomFilterMightContain(
-          Literal(bloomBytes), Bridge.expression(col(keyCol))))
+        val mc = graft.functions.KeyRoute.mightContain(t, keyCol,
+          graft.functions.KeyRoute.bloomItems(t.count()), col(keyCol))
         // two map-side-filtered passes over the store beat one full
         // shuffle of it: the pass-through branch never exchanges, and
         // the exact join's probe side is the might-contain sliver

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * edges) and an at-least-once foreachBatch retry recomputes the
   * identical table and overwrites its own `seq=N` (the same replay
   * contract every index family keeps, realized through determinism
-  * instead of segment overwrite). Crash mid-write leaves a torn dir
-  * without `_SUCCESS`, which [[committedSeqs]] never reads — the
-  * replay heals it. Reading the chain head needs no merge: unlike the
+  * instead of segment overwrite). Each version gets the
+  * [[Hfs.CommitMarker]] after its write; a crash mid-write leaves a torn
+  * dir without it, which [[committedSeqs]] never reads — the replay
+  * heals it. Reading the chain head needs no merge: unlike the
   * additive sinks there is nothing to reconcile, the head IS the
   * state.
   *
@@ -29,8 +30,8 @@ import org.apache.spark.sql.functions._
   * Scale note: each version rewrites the label table once
   * (dup-doc-sized, far below corpus-sized) plus a hash-min loop over
   * the CONTRACTED batch graph only — the q115 cost shape, measured in
-  * ScaleProbe's incremental_cc row. [[compact]] bounds disk to the
-  * chain head plus the replayable tail.
+  * the removed ScaleProbe's incremental_cc row (PLANS.md). [[compact]]
+  * bounds disk to the chain head plus the replayable tail.
   *
   * RETRACTION (r16): deleting a NODE is the one update a contraction
   * step cannot express — removing a doc can SPLIT its cluster (the
@@ -56,7 +57,7 @@ object LabelSink {
   private[graft] def committedSeqs(spark: SparkSession, path: String): Seq[Long] =
     Hfs.childDirs(spark, path, "seq=")
       .map(_.stripPrefix("seq=").toLong)
-      .filter(id => Hfs.exists(spark, s"$path/seq=$id/_SUCCESS"))
+      .filter(id => Hfs.segmentCommitted(spark, s"$path/seq=$id"))
       .sorted
 
   /** The current label table — the newest committed version; empty
@@ -82,8 +83,18 @@ object LabelSink {
       .write.mode("overwrite").parquet(s"$path/edges/ingest=$batchId")
     val prev = prevLabels(spark, path, batchId)
     val (plan, release) = graft.functions.DedupOps.contractionStep(prev, batch)
-    try plan.write.mode("overwrite").parquet(s"$path/seq=$batchId")
-    finally release()
+    try writeVersion(plan, path, batchId) finally release()
+  }
+
+  /** Write version `seq=batchId`, then its commit marker — our own, not
+    * the committer's `_SUCCESS`, which Spark omits under
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false`. The
+    * overwrite clears a replayed attempt's marker with its data. */
+  private def writeVersion(table: DataFrame, path: String,
+      batchId: Long): Unit = {
+    val dir = s"$path/seq=$batchId"
+    table.write.mode("overwrite").parquet(dir)
+    Hfs.markSegmentCommitted(table.sparkSession, dir)
   }
 
   private def prevLabels(spark: SparkSession, path: String,
@@ -114,8 +125,8 @@ object LabelSink {
     val docs = batch.select(col("doc_id")).distinct().persist()
     try {
       val prev = prevLabels(spark, path, batchId)
-      retractedTable(spark, path, prev, docs, batchId)
-        .write.mode("overwrite").parquet(s"$path/seq=$batchId")
+      writeVersion(retractedTable(spark, path, prev, docs, batchId),
+        path, batchId)
       // tombstones last: the recompute above never reads its own
       // batch's store rows, so replay is identical either way
       docs.select(col("doc_id").as("doc_a"), lit(-1L).as("doc_b"),
@@ -187,8 +198,7 @@ object LabelSink {
         else retractedTable(spark, path, prev, dels, batchId)
       val (plan, release) =
         graft.functions.DedupOps.contractionStep(spliced, edges)
-      try plan.write.mode("overwrite").parquet(s"$path/seq=$batchId")
-      finally release()
+      try writeVersion(plan, path, batchId) finally release()
     } finally { dels.unpersist(false); edges.unpersist(false); () }
   }
 

@@ -280,9 +280,14 @@ object MergeParquetSink {
       .foreach(s => Hfs.deleteRecursive(spark, s"${deltaRoot(path)}/seq=$s"))
   }
 
-  /** foreachBatch adapter (streaming upsert). */
-  def writer(path: String, dtCol: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) upsert(batch, path, dtCol)
+  /** foreachBatch adapter (streaming upsert). The batch executes ONCE:
+    * one checkpoint, then the emptiness check and the write both read
+    * it — probing the raw batch would run an upstream stateful
+    * operator a second time (the KeyedParquetSink.upsert discipline). */
+  def writer(path: String, dtCol: String)(batch: DataFrame, batchId: Long): Unit = {
+    val once = batch.localCheckpoint()
+    if (!once.isEmpty) upsert(once, path, dtCol)
+  }
 
   /** foreachBatch adapter with inline maintenance: upsert each batch,
     * then fold deltas into the base whenever `maxDeltas` segments have
@@ -291,7 +296,7 @@ object MergeParquetSink {
   def writerWithCompaction(path: String, dtCol: String, keyCols: Seq[String],
       versionCol: String, maxDeltas: Int = 16)
       (batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) upsert(batch, path, dtCol)
+    writer(path, dtCol)(batch, batchId)
     if (listSeqs(batch.sparkSession, path).size >= maxDeltas)
       compact(batch.sparkSession, path, keyCols, dtCol, versionCol)
   }

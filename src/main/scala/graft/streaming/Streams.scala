@@ -269,8 +269,8 @@ object Streams {
           val prev = state.getOption.getOrElse(SeqState(Nil, init))
           val buf = prev.buffer ++
             rows.map(e => (micros(e.ts), e.event_id, e.event_type))
-          // STRICT ripe line. MEASURED engine admission (ScaleProbe
-          // seq_state + the round-12 boundary experiment): this
+          // STRICT ripe line. MEASURED engine admission (StreamingSpec's
+          // sequence-state envelope + the round-12 boundary experiment): this
           // operator's late filter drops arrivals with ts <= wm — only
           // ts strictly ABOVE the watermark is admitted. Flushed events
           // here have ts < wm, so any future admission (> wm) can never

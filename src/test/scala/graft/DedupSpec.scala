@@ -791,21 +791,18 @@ class DedupSpec extends SparkSpec {
       (1L, 1L, 8L, 1L), (1L, 11L, 18L, 1L)), s"got $spans3")
   }
 
-  test("Bloom-prefiltered span scan ≡ the plain two-pass, on fixtures and on an all-unique corpus") {
-    val plain = DedupOps.substringSpansOver(
-      graft.Tables.t(spark, sf0001, "documents"), 8)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val bloom = DedupOps.substringSpansBloomOver(
-      graft.Tables.t(spark, sf0001, "documents"), 8)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(plain.nonEmpty && bloom == plain,
-      "the Bloom tier must be semantically transparent (exact join kills FPs)")
-    // empty dup set: the zero-item path must return the empty frame,
-    // not a saturated/NULL-bearing filter
-    val uniq = Seq.tabulate(20)(i =>
-      (i.toLong, (1 to 12).map(j => s"d${i}t$j").mkString(" ")))
-      .toDF("doc_id", "text")
-    assert(DedupOps.substringSpansBloomOver(uniq, 8).count() == 0)
+  test("the shared Bloom builder: zero keys admit nothing, every built key is admitted") {
+    val probe = spark.range(0, 2000).select(col("id").as("h"))
+    def admitted(keys: org.apache.spark.sql.DataFrame) =
+      probe.filter(functions.KeyRoute.mightContain(keys, "h",
+        functions.KeyRoute.bloomItems(keys.count()), col("h")))
+    // empty key set: a null bit array, not a saturated filter — the
+    // Bloom roads then pass nothing to their exact joins
+    assert(admitted(probe.filter(lit(false))).count() == 0)
+    // no false negatives: every key the filter was built from passes
+    val keys = probe.filter(col("h") % 7 === 0)
+    val got = admitted(keys).as[Long].collect().toSet
+    assert(keys.as[Long].collect().toSet.subsetOf(got))
   }
 
   test("q159 auto router: the dup-hash count picks bloom below the sizing clamps, plain past them; both roads answer identically") {

@@ -14,27 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * streaming-retry contract), never silently small. */
 class IngestRaceSpec extends AnyFunSuite {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("prober vs compactor on one segment table: zero misreads, loud-only failures, both sides make progress") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
     val base = Files.createTempDirectory("ingest_race").toString
     val path = s"$base/table"
     def spawn(role: String): Process =
-      new ProcessBuilder(
-        (Seq(javaBin) ++ addOpens ++ Seq("-Xmx1500m", "-XX:+UseSerialGC",
-          "-Dspark.ui.enabled=false", "-cp", cp,
-          "graft.IngestRaceMain", base, path, role)): _*)
-        .redirectErrorStream(true).start()
+      ForkedMain.start("graft.IngestRaceMain", base, path, role)
     val ps = Seq(spawn("compactor"), spawn("prober"))
     val deadline = System.currentTimeMillis() + 120000
     while (!Seq("compactor", "prober").forall(r =>

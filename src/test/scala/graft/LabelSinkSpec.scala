@@ -60,6 +60,27 @@ class LabelSinkSpec extends SparkSpec {
       "replay must overwrite the torn dir and extend the chain")
   }
 
+  test("without the committer's _SUCCESS (marksuccessfuljobs=false) each version commits by its own marker: reads serve it, writer and retract advance from it") {
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val tbl = Files.createTempDirectory("labelsink_nosuccess").toString + "/t"
+      LabelSink.writer(tbl)(Seq((1L, 2L)).toDF("doc_a", "doc_b"), 0L)
+      assert(!Hfs.exists(spark, s"$tbl/seq=0/_SUCCESS"),
+        "the conf must suppress the committer's _SUCCESS")
+      assert(labelsOf(tbl) == Set((1L, 1L), (2L, 1L)))
+      LabelSink.writer(tbl)(Seq((2L, 3L)).toDF("doc_a", "doc_b"), 1L)
+      assert(labelsOf(tbl) == Set((1L, 1L), (2L, 1L), (3L, 1L)),
+        "batch 1 must contract from batch 0's version, not restart the chain")
+      LabelSink.retract(tbl)(Seq(3L).toDF("doc_id"), 2L)
+      assert(labelsOf(tbl) == Set((1L, 1L), (2L, 1L)))
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("compact keeps the head's predecessor so an unchekpointed head replay still recomputes correctly") {
     val tbl = Files.createTempDirectory("labelsink_cp").toString + "/t"
     LabelSink.writer(tbl)(Seq((1L, 2L)).toDF("doc_a", "doc_b"), 0L)

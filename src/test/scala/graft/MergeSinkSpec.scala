@@ -86,6 +86,39 @@ class MergeSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming writer executes each batch once: one state store per shuffle partition under an upstream dedup") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, date_format}
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val path = Files.createTempDirectory("merge_once").toString + "/t"
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, java.sql.Timestamp, Double)]
+    val q = in.toDF().toDF("mid", "ts", "amount")
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("mid")
+      .select(col("mid"), date_format(col("ts"), "yyyy-MM-dd").as("dt"),
+        col("ts").cast("long").as("ver"), col("amount"))
+      .writeStream
+      .foreachBatch(MergeParquetSink.writer(path, "dt") _)
+      .start()
+    try {
+      in.addData(("m1", ts("2024-01-01 10:00:00"), 1.0),
+        ("m1", ts("2024-01-01 10:01:00"), 2.0), // duplicate, dropped
+        ("m2", ts("2024-01-01 10:02:00"), 3.0))
+      q.processAllAvailable()
+      in.addData(("m3", ts("2024-01-01 11:00:00"), 4.0))
+      q.processAllAvailable()
+      assert(readAll(path).map(r => (r._1, r._4)) ==
+        Set(("m1", 1.0), ("m2", 3.0), ("m3", 4.0)))
+      // a second execution of the batch (an emptiness probe on the raw
+      // frame) would re-run the dedup and add store instances
+      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val stores = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numStateStoreInstances).toSeq)
+      assert(stores.nonEmpty && stores.forall(_ == Seq(parts)),
+        s"state store instances per batch: $stores")
+    } finally q.stop()
+  }
+
   test("compaction under session-level dynamic overwrite: fully-deleted day does not resurrect") {
     val path = Files.createTempDirectory("merge6").toString + "/t"
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")

@@ -88,9 +88,9 @@ class OrderWideStreamSpec extends SparkSpec {
   }
 
   test("q152 at sf0.1: the full lifecycle holds at 10x the driver gate's volume") {
-    // VERDICT r12 item 5: the state-envelope math is measured
-    // (ScaleProbe join_state) but the oracle gate only exercised
-    // sf0.01. This runs the REAL staged-feed lifecycle over sf0.1
+    // VERDICT r12 item 5: the state-envelope math is asserted
+    // (StreamingSpec's join-state envelope) but the oracle gate only
+    // exercised sf0.01. This runs the REAL staged-feed lifecycle over sf0.1
     // (~600k detail rows through the 24 h stream-stream join in five
     // lockstep micro-batches) and pins the store against the batch
     // join as an exact MULTISET (exceptAll both ways — duplicates

@@ -580,7 +580,7 @@ class PlanAuditSpec extends SparkSpec {
     // 32 fixed bytes (SpanStatsAgg) — the per-(gram, doc) composition
     // it replaced (keys defeat map-side combining; its min2 join
     // re-shuffled the corpus-sized frame) measured 105.8 s vs the span
-    // scan's 14.1 s at the 69M-gram ScaleProbe fixture
+    // scan's 14.1 s at the removed ScaleProbe's 69M-gram fixture
     // audit the STATS pass's own plan (spanProvenanceFromGrams
     // checkpoints it, which hides its job from the final plan string)
     val plan = executedPlan(functions.DedupOps.spanStatsOf(

@@ -162,6 +162,30 @@ class PqSpec extends SparkSpec {
     }
   }
 
+  test("ingest accepts a model written without the committer's _SUCCESS (marksuccessfuljobs=false)") {
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val rnd = new java.util.Random(37)
+      def rv() = Array.fill(64)(rnd.nextGaussian()).toSeq
+      val boot = (0 to 40).map(i => (i.toLong, rv()))
+      val dir = java.nio.file.Files.createTempDirectory("graft-pqnosuccess").toString
+      PqOps.buildPqIndex(boot.toDF("vec_id", "v"), dir, kCells = 4, ksub = 16)
+      assert(!graft.sinks.Hfs.exists(spark, s"$dir/cents/_SUCCESS"),
+        "the conf must suppress the committer's _SUCCESS")
+      PqOps.ingestPqSegment((41 to 50).map(i => (i.toLong, rv()))
+        .toDF("vec_id", "v"), dir, 0L)
+      val got = PqOps.probePqIndex(spark, dir, boot.head._2.toArray,
+          nprobe = 4, topk = 200)
+        .as[(Long, Double)].collect().map(_._1).toSet
+      assert(got == (1L to 50L).toSet, "bootstrap + ingest not unioned")
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("retraction: a deleted vec_id never surfaces from probe or kNN join; resurrection restores it; folds apply and keep tombstones") {
     val rnd = new java.util.Random(37)
     def rv() = Array.fill(64)(rnd.nextGaussian()).toSeq

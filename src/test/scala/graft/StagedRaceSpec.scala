@@ -13,28 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * nothing leaks beside or inside the published path. */
 class StagedRaceSpec extends AnyFunSuite {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("two JVMs racing ensure() on one path: one winner, both serve its complete copy, zero torn serves or leaks, across repeated races") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
     for (race <- 1 to 3) {
       val base = Files.createTempDirectory(s"staged_race_$race").toString
       val path = s"$base/layout"
       def spawn(id: Int): Process =
-        new ProcessBuilder(
-          (Seq(javaBin) ++ addOpens ++ Seq("-Xmx1500m", "-XX:+UseSerialGC",
-            "-Dspark.ui.enabled=false", "-cp", cp,
-            "graft.StagedRaceMain", base, path, id.toString)): _*)
-          .redirectErrorStream(true).start()
+        ForkedMain.start("graft.StagedRaceMain", base, path, id.toString)
       val ps = Seq(spawn(1), spawn(2))
       // wait for both JVMs to be inside the protocol, then drop the
       // barrier so the ensure() calls start together

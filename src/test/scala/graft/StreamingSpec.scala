@@ -676,4 +676,115 @@ class StreamingSpec extends SparkSpec {
     graft.sinks.FunnelSink.compact(spark, loc)
     assert(readSet() == s1, "compaction changed the step set")
   }
+
+  /** Peak `numRowsTotal` and summed `numRowsDroppedByWatermark` over
+    * every batch a query ran, each batch counted once (one chunk can
+    * run a data batch and a no-data batch, and `lastProgress` may
+    * already have scrolled past the data batch). */
+  private final class StateTally {
+    private val seen = scala.collection.mutable.Set[Long]()
+    var peakRows = 0L
+    var dropped = 0L
+    def add(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+      q.recentProgress.foreach { p =>
+        if (seen.add(p.batchId)) p.stateOperators.foreach { so =>
+          peakRows = math.max(peakRows, so.numRowsTotal)
+          dropped += so.numRowsDroppedByWatermark
+        }
+      }
+  }
+
+  test("orderWideJoin state envelope: ordered feeds emit every pair exactly once, and peak state rows stay within 2·(2·delay + 2·batchSpan)/step + 200") {
+    implicit val sqlCtx = spark.sqlContext
+    val n = 2000
+    val stepSec = 2L // one order every 2 s
+    val delaySec = 600L
+    val nChunks = 20
+    val base = 1704067200000L
+    val orders = (0 until n).map(k =>
+      (k.toLong, new Timestamp(base + k * stepSec * 1000L)))
+    // each detail lands 0-3 min after its order, inside the delay
+    val details = (0 until n).map(k => (k.toLong,
+      new Timestamp(base + k * stepSec * 1000L + (k % 90) * 2000L), k * 10L))
+    val inI = MemoryStream[(Long, Timestamp)]
+    val inD = MemoryStream[(Long, Timestamp, Long)]
+    val q = Streams.orderWideJoin(inI.toDF().toDF("order_id", "ts"),
+        inD.toDF().toDF("order_id", "ts", "detail_id"), s"$delaySec seconds")
+      .select(col("info_order_id"), col("detail_id"))
+      .writeStream.format("memory").queryName("ow_envelope")
+      .outputMode("append").start()
+    val tally = new StateTally
+    try {
+      orders.grouped(n / nChunks).toSeq.zip(details.grouped(n / nChunks).toSeq)
+        .foreach { case (a, b) =>
+          inI.addData(a); inD.addData(b)
+          q.processAllAvailable()
+          tally.add(q)
+        }
+    } finally q.stop()
+    val out = spark.table("ow_envelope").as[(Long, Long)].collect()
+    assert(out.length == n &&
+      out.toSet == (0 until n).map(k => (k.toLong, k * 10L)).toSet,
+      s"every pair must emit exactly once: ${out.length} rows for $n pairs")
+    // a row evicts once the global watermark passes ts + delay, so each
+    // side holds ~(2·delay + batch span) of event time, whatever the
+    // stream's length; without eviction the state would reach 2·n
+    val batchSpanSec = n * stepSec / nChunks
+    val bound = 2L * (2 * delaySec + 2 * batchSpanSec) / stepSec + 200
+    assert(bound == 1800L)
+    info(s"peak join state ${tally.peakRows} rows, bound $bound, ${2 * n} unevicted")
+    assert(tally.peakRows > 0 && tally.peakRows <= bound,
+      s"peak join state ${tally.peakRows} rows > bound $bound")
+  }
+
+  test("transitionPairs state envelope: under arrival lag past the delay, the engine's watermark drops equal the rule-based replay's") {
+    import Streams.TransEvent
+    implicit val sqlCtx = spark.sqlContext
+    val users = 10
+    val perUserEvents = 240 // one event / 2 min / user over 8 h
+    val stepSec = 120L
+    val delaySec = 600L
+    val lagSec = 1800L
+    val nChunks = 20
+    val base = 1704067200000L
+    // deterministic adversarial arrival: event k of user u carries
+    // ts = base + k·step and arrives at ts + hash % lag
+    val evs = (for {
+      u <- 0 until users
+      k <- 0 until perUserEvents
+    } yield {
+      val tsMs = base + k * stepSec * 1000L
+      val jitter = scala.util.hashing.MurmurHash3.stringHash(s"$u:$k")
+        .toLong.abs % (lagSec * 1000L)
+      (TransEvent(u.toLong, new Timestamp(tsMs), (u * perUserEvents + k).toLong,
+        if (k % 3 == 0) "view" else "click"), tsMs + jitter)
+    }).sortBy(_._2).map(_._1)
+    val chunks = evs.grouped(evs.size / nChunks).toSeq
+    // rule-based replay of the same arrival: batch c's watermark is the
+    // max ts of chunks < c minus the delay (epoch before any data), and
+    // an arrival with ts <= wm is dropped — the engine's measured
+    // admission (the boundary test above)
+    var maxTs = Long.MinValue
+    var droppedReplay = 0L
+    chunks.foreach { c =>
+      val wm = if (maxTs == Long.MinValue) 0L else maxTs - delaySec * 1000L
+      droppedReplay += c.count(_.ts.getTime <= wm)
+      maxTs = math.max(maxTs, c.map(_.ts.getTime).max)
+    }
+    val in = MemoryStream[TransEvent]
+    val q = Streams.transitionPairs(in.toDS(), s"$delaySec seconds").toDF()
+      .writeStream.format("noop")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-seqstate").toString)
+      .outputMode("append").start()
+    val tally = new StateTally
+    try chunks.foreach { c =>
+      in.addData(c)
+      q.processAllAvailable()
+      tally.add(q)
+    } finally q.stop()
+    info(s"watermark drops: engine ${tally.dropped}, replay $droppedReplay of ${evs.size}")
+    assert(tally.dropped > 0 && tally.dropped == droppedReplay,
+      s"engine dropped ${tally.dropped}, the replay $droppedReplay")
+  }
 }

@@ -59,11 +59,11 @@ class TombstoneRouteSpec extends SparkSpec {
     assert(bud > 0, "test session must have a broadcast budget")
     val maxItems = spark.conf.get(
       "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-    assert(IngestSegments.routeOf(spark, 0L) == "none")
-    assert(IngestSegments.routeOf(spark, math.min(bud, 10L)) == "broadcast")
-    assert(IngestSegments.routeOf(spark, bud + 1L) == "bloom",
+    assert(graft.functions.KeyRoute.of(spark, 0L) == "none")
+    assert(graft.functions.KeyRoute.of(spark, math.min(bud, 10L)) == "broadcast")
+    assert(graft.functions.KeyRoute.of(spark, bud + 1L) == "bloom",
       s"past the $bud-key broadcast budget the resolve must take the Bloom road")
-    assert(IngestSegments.routeOf(spark, maxItems + 1L) == "plain",
+    assert(graft.functions.KeyRoute.of(spark, maxItems + 1L) == "plain",
       "past the Bloom sizing clamps the plain shuffle join is the floor")
   }
 

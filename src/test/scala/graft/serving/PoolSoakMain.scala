@@ -6,19 +6,20 @@ import scala.io.Source
 
 /** FAIR-mode scheduler-pool soak — the evidence HttpServingSpec's soak
   * cannot produce: the shared test session is FIFO (scheduler.mode is a
-  * context-creation conf), so the spec pins the pool-NAME set via
+  * context-creation conf), so that spec pins the pool-NAME set via
   * job-start properties while this main drives the real thing — a FAIR
   * session, Spark's FairSchedulableBuilder actually creating a Pool per
   * unseen name — and asserts the rootPool child count stays bounded.
+  * [[graft.PoolSoakSpec]] runs it in a forked JVM, where it owns the
+  * SparkContext.
   *
-  * `runMain graft.serving.PoolSoak [sfDir] [requests]` starts the
-  * server on an ephemeral port, fires `requests` (default
-  * 10 × poolThreads) concurrent /dauRealtime GETs through 8 client
-  * threads, then prints the rootPool children. Exit is nonzero when the
-  * pool set exceeds poolThreads + 1 (the `default` pool Spark always
-  * creates) — the leak the old per-request naming scheme would show at
-  * one extra pool per request. */
-object PoolSoak {
+  * `PoolSoakMain [sfDir] [requests]` starts the server on an ephemeral
+  * port, fires `requests` (default 10 × poolThreads) concurrent
+  * /dauRealtime GETs through 8 client threads, then prints the rootPool
+  * children. Exit is nonzero when the pool set exceeds poolThreads + 1
+  * (the `default` pool Spark always creates) — the leak the old
+  * per-request naming scheme would show at one extra pool per request. */
+object PoolSoakMain {
 
   private def get(url: String): Int = {
     val conn = URI.create(url).toURL.openConnection()
@@ -33,6 +34,16 @@ object PoolSoak {
   }
 
   def main(args: Array[String]): Unit = {
+    // the server's fixed executor threads are non-daemon and srv.stop
+    // does not own them — without an explicit exit the soak JVM idles
+    // forever after reporting, or after a failure
+    val code =
+      try soak(args)
+      catch { case e: Throwable => e.printStackTrace(); 1 }
+    sys.exit(code)
+  }
+
+  private def soak(args: Array[String]): Int = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nReq = args.lift(1).map(_.toInt).getOrElse(10 * Http.poolThreads)
     val spark = graft.Graft.localSession(4, fairScheduler = true)
@@ -59,16 +70,14 @@ object PoolSoak {
       if (pools.size > Http.poolThreads + 1) {
         System.err.println(s"[poolsoak] LEAK: ${pools.size} pools > " +
           s"${Http.poolThreads + 1} — per-request names are unbounded")
-        sys.exit(1)
+        1
+      } else {
+        println(s"[poolsoak] OK: bounded by poolThreads(${Http.poolThreads}) + default")
+        0
       }
-      println(s"[poolsoak] OK: bounded by poolThreads(${Http.poolThreads}) + default")
     } finally {
       srv.stop(0)
       spark.stop()
     }
-    // the server's fixed executor threads are non-daemon and srv.stop
-    // does not own them — without an explicit exit the soak JVM idles
-    // forever after reporting
-    sys.exit(0)
   }
 }
