@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.Tables.t
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection operators (LLM-pipeline tier): n-gram Jaccard,
@@ -2076,9 +2076,13 @@ object DedupOps {
     val trainG = gramPositions(train, L)
     val route = KeyRoute.of(train.sparkSession, nBench)
     val spans = route match {
-      // an empty registry joins nothing: the broadcast of zero rows is
-      // the free way to say so
-      case "none" | "broadcast" =>
+      // an empty registry covers nothing: an empty frame of the span
+      // schema (read off the analyzed plan — no job), so the training
+      // corpus is never tokenized against a zero-row registry
+      case "none" =>
+        train.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
+          islandSpans(trainG.join(benchH, "h"), L).schema)
+      case "broadcast" =>
         islandSpans(trainG.join(broadcast(benchH), "h"), L)
       case "bloom" => bloomPrunedSpans(trainG, benchH, nBench, L)
       case "plain" => islandSpans(trainG.join(benchH, "h"), L)

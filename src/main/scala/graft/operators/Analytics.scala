@@ -689,7 +689,6 @@ object Analytics {
       compact: (SparkSession, String) => Unit): String =
     graft.sinks.Lifecycle.ensure(s, d, Seq("events"), kind) { loc =>
       val feed = s"$loc/__feed"
-      graft.sinks.Hfs.mkdirs(s, feed)
       val ev = project(t(s, d, "events")).filter(col("ts").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
@@ -713,23 +712,7 @@ object Analytics {
         cut.filter(col("__cut") === i).drop("__cut")
           .sortWithinPartitions(col("ts"), col("event_id"))) ++
         Seq(sentinel(-1L, 86400000L), sentinel(-2L, 172800000L))
-      // staging through Hfs like every sink path (a bare java.io.File
-      // listing silently returns empty on a non-local default FS, and
-      // an assert-wrapped setLastModified is elided under
-      // -Xdisable-assertions — scrambling the arrival order instead
-      // of failing loudly)
-      chunks.zipWithIndex.foreach { case (df, i) =>
-        val stage = s"$loc/__stage$i"
-        df.coalesce(1).write.parquet(stage)
-        val part = graft.sinks.Hfs.childFiles(s, stage)
-          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-          .head
-        val target = f"$feed/c$i%02d.parquet"
-        graft.sinks.Hfs.rename(s, s"$stage/$part", target)
-        // the file source orders its backlog by mtime — pin it
-        graft.sinks.Hfs.setMtime(s, target, 1000000000000L + i * 60000L)
-        graft.sinks.Hfs.deleteRecursive(s, stage)
-      }
+      graft.sinks.Lifecycle.stageFeed(s, loc, feed, chunks)
       val q = op(
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
           .parquet(feed)

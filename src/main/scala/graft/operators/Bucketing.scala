@@ -154,10 +154,11 @@ object Bucketing {
   // land as plain delta segments (overwrite-by-ingestId, the replay
   // contract every index family here uses); a periodic fold rebuilds the
   // bucketed main from main ∪ deltas and commits by atomically flipping
-  // a version pointer — the horizon protocol of sinks.MergeParquetSink,
-  // not sinks.IngestSegments' rename-before-delete: that one is sound
-  // only for duplicate-tolerant readers, and a fact join must never see
-  // a row twice. Readers join the bucketed main exchange-free and the
+  // a version pointer (`__meta`: the new main's version plus the
+  // highest folded delta id), not by sinks.IngestSegments'
+  // rename-before-delete: that one is sound only for the
+  // duplicate-tolerant readers of the segment indexes, and a fact join
+  // must never see a row twice. Readers join the bucketed main exchange-free and the
   // (small, recent) delta tail however the planner likes; after a fold
   // the tail is empty and the whole table is co-located again.
   //

@@ -93,17 +93,6 @@ object Hfs {
     }
   }
 
-  /** The "nothing readable here" classifier shared by every sink's
-    * optional-side read (KeyedParquetSink bootstrap, MergeParquetSink
-    * base/delta sides, IngestSegments live reads). PATH_NOT_FOUND: the
-    * side was never written. UNABLE_TO_INFER_SCHEMA: the dir exists but
-    * holds no parquet footers (a 0-row partitioned write leaves only
-    * _SUCCESS). Anything else — corrupt footers, permissions — must
-    * stay LOUD, so this predicate names exactly the two benign cases. */
-  def isEmptyPathError(e: org.apache.spark.sql.AnalysisException): Boolean =
-    e.getCondition == "PATH_NOT_FOUND" ||
-      e.getCondition == "UNABLE_TO_INFER_SCHEMA"
-
   def exists(spark: SparkSession, path: String): Boolean = {
     val (f, p) = fs(spark, path)
     f.exists(p)
@@ -233,8 +222,9 @@ object Hfs {
   /** Overwrite a tiny marker file via write-temp-then-rename. The
     * previous in-place `create(p, overwrite = true)` truncated first:
     * a crash (or a concurrent read) between create and close left an
-    * EMPTY marker — and an empty `__seq_horizon` wedges every
-    * subsequent `.toLong` forever. Now the new content is durable in
+    * EMPTY marker — and an empty `__buckets` (IngestSegments' bucket
+    * modulus) or Bucketing's `__meta` version pointer wedges every
+    * later parse of it forever. Now the new content is durable in
     * `path.__tmp` before the old file is touched; the only crash
     * window (between delete and rename) leaves no main file but a
     * complete, terminator-framed tmp, which readString adopts as the
@@ -267,7 +257,7 @@ object Hfs {
       // file is removed) — but ONLY a terminator-complete tmp counts.
       // A tmp without the terminator is a torn first-ever write: there
       // was never a committed value, so report none rather than adopt
-      // partial bytes (an empty __seq_horizon wedges .toLong forever).
+      // partial bytes (an empty __buckets wedges .toInt forever).
       val tmp = new Path(path + ".__tmp")
       if (f.exists(tmp)) {
         val s = readFully(tmp)

@@ -400,7 +400,7 @@ object IngestSegments {
     val t = tombs.groupBy(col(keyCol)).agg(max(col(ingCol)).as("__tomb_ing"))
       .localCheckpoint()
     val n = t.count()
-    applyTombstonesRouted(rows, t, keyCol, ingCol,
+    applyTombstonesRouted(rows, t, n, keyCol, ingCol,
       graft.functions.KeyRoute.of(s, n))
   }
 
@@ -410,9 +410,10 @@ object IngestSegments {
     * every downstream join — the r16 A/B lesson).
     * `t` must be the per-key (keyCol, __tomb_ing = max ing) aggregate,
     * checkpointed by the caller when it has multiple consumers (the
-    * bloom road reads it twice: filter build + exact join). */
+    * bloom road reads it twice: filter build + exact join), and `n` its
+    * row count, which sizes the Bloom filter. */
   private[graft] def applyTombstonesRouted(rows: DataFrame, t: DataFrame,
-      keyCol: String, ingCol: String, route: String): DataFrame = {
+      n: Long, keyCol: String, ingCol: String, route: String): DataFrame = {
     def joined(side: DataFrame, tomb: DataFrame) =
       side.join(tomb, Seq(keyCol), "left")
         .filter(col("__tomb_ing").isNull || col(ingCol) > col("__tomb_ing"))
@@ -423,7 +424,7 @@ object IngestSegments {
       case "plain" => joined(rows, t)
       case "bloom" =>
         val mc = graft.functions.KeyRoute.mightContain(t, keyCol,
-          graft.functions.KeyRoute.bloomItems(t.count()), col(keyCol))
+          graft.functions.KeyRoute.bloomItems(n), col(keyCol))
         // two map-side-filtered passes over the store beat one full
         // shuffle of it: the pass-through branch never exchanges, and
         // the exact join's probe side is the might-contain sliver

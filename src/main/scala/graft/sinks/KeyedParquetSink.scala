@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,28 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object KeyedParquetSink {
 
-  /** "Nothing readable at this path yet": never written
-    * (PATH_NOT_FOUND), or a crashed first write left a dir with no
-    * parquet footers — only `_temporary` debris
-    * (UNABLE_TO_INFER_SCHEMA). Treating only the first as fresh wedged
-    * the sink permanently after a crashed first write: every retry
-    * failed on the schema error before its overwrite could heal the
-    * dir. */
-  private def isFreshPath(e: org.apache.spark.sql.AnalysisException): Boolean =
-    Hfs.isEmptyPathError(e)
-
   /** NOTE on the partition-scoped merge: only dt partitions present in
     * the incoming batch participate, so keys must be STABLE WITHIN dt
     * (include dt in keyCols, as the reference's per-day ES indexes do —
-    * its doc _id is also only unique per index). If a key can legitimately
-    * move between days, use [[MergeParquetSink]], whose read-side merge
-    * resolves keys globally.
+    * its doc _id is also only unique per index). A key that moves
+    * between dt partitions is outside this contract: its old row stays
+    * in the old partition.
     *
     * The batch executes exactly ONCE: it is local-checkpointed before
-    * anything reads it. Over a stream's foreachBatch frame each job
-    * would otherwise re-run the upstream stateful operator (the
-    * touched-dt probe and the merge are two jobs). Only after that
-    * execution may an EMPTY batch return — running it is what evicts
+    * anything reads it, and `Dataset.observe` counts its rows on that
+    * same job. Over a stream's foreachBatch frame each job would
+    * otherwise re-run the upstream stateful operator (the touched-dt
+    * probe and the merge are two jobs). Only after that execution may
+    * an EMPTY batch return — running it is what evicts
     * watermark-expired state and commits the next state version — and
     * then it returns at once: no read of the table, no merge, no
     * write, so a first-ever empty batch creates no directory and an
@@ -53,44 +44,47 @@ object KeyedParquetSink {
       dtCol: String, versionCol: String): Unit = {
     val spark = batch.sparkSession
     val cols = batch.columns
-    val once = batch.localCheckpoint()
-    if (once.isEmpty) return
+    val rows = Observation()
+    val once = batch.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+    if (rows.get("n") == 0L) return
     val incoming = once.withColumn("__is_new", lit(1))
 
+    // The table is read with the BATCH's schema: no schema-inference
+    // job, and partition inference cannot read a string dt back as
+    // DATE — a merge over drifting types makes the content-hash
+    // tie-break rank the same rows differently on replay (hashing a
+    // date's int days vs a string), silently breaking the
+    // replay-idempotence contract. A crashed first write that left only
+    // `_temporary` debris reads as 0 rows, not UNABLE_TO_INFER_SCHEMA.
+    def current() = spark.read.schema(batch.schema).parquet(path)
     val existing0 =
       try {
-        val cur = spark.read.parquet(path)
+        val cur = current()
         // only partitions touched by this batch participate in the merge
         val touched = incoming.select(col(dtCol)).distinct()
-        // pin the existing side to the BATCH's column types: partition
-        // type inference reads a string dt back as DATE, and a merge
-        // over drifting types makes the content-hash tie-break rank the
-        // same rows differently on replay (hashing a date's int days vs
-        // a string) — the replay-idempotence contract silently breaks
         Some(cur.join(broadcast(touched), Seq(dtCol), "left_semi")
-          .select(cols.toIndexedSeq.map(c =>
-            col(c).cast(batch.schema(c).dataType).as(c)): _*)
           .withColumn("__is_new", lit(0)))
       } catch {
-        // fresh/healable path means first write; any other failure (e.g.
+        // never written means first write; any other failure (e.g. a
         // corrupt footer) must abort, not silently clobber the table
-        case e: org.apache.spark.sql.AnalysisException if isFreshPath(e) =>
+        case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
           None
       }
     // deleteWhere's full-wipe marker state: a readable-but-empty table
-    // kept as ONE unpartitioned footer at the root. The partitioned
-    // write below must not land beside it (mixed root-file/partition-dir
-    // layouts break partition discovery) — this sink never writes root
-    // files otherwise, so no-dt-dirs + readable SHOULD mean exactly that
-    // marker. But "should" is not a license to delete: pointed at a
-    // parquet directory this sink does not own (data files at the root),
-    // the old unconditional heal silently destroyed that data. Verify
-    // the marker shape — a 0-row read — before clearing; anything else
+    // kept as ONE unpartitioned footer at the root — or a crashed first
+    // write's footerless dir. The partitioned write below must not land
+    // beside it (mixed root-file/partition-dir layouts break partition
+    // discovery) — this sink never writes root files otherwise, so
+    // no-dt-dirs + readable SHOULD mean exactly that marker. But
+    // "should" is not a license to delete: pointed at a parquet
+    // directory this sink does not own (data files at the root), the
+    // old unconditional heal silently destroyed that data. Verify the
+    // marker shape — a 0-row read — before clearing; anything else
     // fails loudly instead of wiping.
     val existing =
       if (existing0.isDefined &&
           Hfs.childDirs(spark, path, s"$dtCol=").isEmpty) {
-        require(spark.read.parquet(path).isEmpty,
+        require(current().isEmpty,
           s"$path has root-level parquet data but no $dtCol= partition " +
             "dirs — not this sink's layout (expected the deleteWhere " +
             "empty-marker: a single 0-row footer). Refusing to heal by " +
@@ -124,12 +118,6 @@ object KeyedParquetSink {
       .partitionBy(dtCol)
       .parquet(path)
   }
-
-  /** foreachBatch adapter: [[upsert]] partially applied — its single
-    * execution of the batch is also its emptiness probe. */
-  def writer(path: String, keyCols: Seq[String], dtCol: String,
-      versionCol: String)(batch: DataFrame, batchId: Long): Unit =
-    upsert(batch, path, keyCols, dtCol, versionCol)
 
   /** S10: delete-by-query — rows matching `cond` removed; only touched dt
     * partitions are rewritten. Returns rows deleted. Re-runnable: a crash
@@ -177,8 +165,8 @@ object KeyedParquetSink {
     // anywhere, not merely in the touched set) left only _SUCCESS
     // behind — a footerless dir that wedges every later
     // read/delete/update with UNABLE_TO_INFER_SCHEMA. Keep the table
-    // readable as empty with one unpartitioned schema-bearing footer
-    // (MergeParquetSink.compact's fully-tombstoned rule). The static
+    // readable as empty with one unpartitioned schema-bearing footer,
+    // which the next upsert verifies and clears. The static
     // overwrite is safe precisely because nothing is left to truncate.
     if (Hfs.childDirs(spark, path, s"$dtCol=").isEmpty)
       remaining.limit(0).write.mode(SaveMode.Overwrite).parquet(path)

@@ -121,6 +121,32 @@ object Lifecycle {
     retractor(stage)(r.filter(retract2), 5L)
   }
 
+  /** Stages an ordered file-stream feed for a lifecycle's stream run:
+    * chunk i becomes the ONE parquet file `feed/c<i>.parquet` (written
+    * `coalesce(1)` into `loc/__stage<i>`, renamed out, the stage
+    * deleted) with its mtime pinned to its position. The file source
+    * orders its backlog by mtime, so a reader with
+    * `maxFilesPerTrigger = 1` replays the chunks as consecutive
+    * micro-batches in list order. Staged through Hfs like every sink
+    * path: a bare java.io.File listing silently returns empty on a
+    * non-local default FS, and an assert-wrapped setLastModified is
+    * elided under -Xdisable-assertions, scrambling the arrival order
+    * instead of failing loudly. */
+  def stageFeed(s: SparkSession, loc: String, feed: String,
+      chunks: Seq[DataFrame]): Unit = {
+    Hfs.mkdirs(s, feed)
+    chunks.zipWithIndex.foreach { case (df, i) =>
+      val stage = s"$loc/__stage$i"
+      df.coalesce(1).write.parquet(stage)
+      val part = Hfs.childFiles(s, stage)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).head
+      val target = f"$feed/c$i%02d.parquet"
+      Hfs.rename(s, s"$stage/$part", target)
+      Hfs.setMtime(s, target, 1000000000000L + i * 60000L)
+      Hfs.deleteRecursive(s, stage)
+    }
+  }
+
   /** [[retractCuts]]' masks over `key`: retract ≡ `residue` (mod
     * `mod`), resurrect the ≡ `residue` (mod 2·`mod`) half — a subset of
     * the retracted keys by construction, as it must be: re-ingesting a

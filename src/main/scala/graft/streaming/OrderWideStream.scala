@@ -125,7 +125,6 @@ object OrderWideStream {
   private def stageSide(s: SparkSession, loc: String, feed: String,
       side: DataFrame, fillerRow: DataFrame,
       slots: Seq[Option[Int]]): Unit = {
-    graft.sinks.Hfs.mkdirs(s, feed)
     // ntile over the side's OWN (ts, keys) total order → three
     // contiguous, EVENT-TIME-ordered cuts (the no-late-drops invariant
     // above: ts must be the leading sort key or a later cut can carry
@@ -135,21 +134,11 @@ object OrderWideStream {
     val cutW = Window.orderBy(col("ts") +:
       side.columns.toIndexedSeq.filter(_ != "ts").map(col): _*)
     val cut = side.withColumn("__cut", ntile(3).over(cutW))
-    slots.zipWithIndex.foreach { case (slot, i) =>
-      val df = slot match {
-        case Some(k) => cut.filter(col("__cut") === k).drop("__cut")
-          .sortWithinPartitions(col("ts"))
-        case None => fillerRow
-      }
-      val stage = s"$loc/__stage$i"
-      df.coalesce(1).write.parquet(stage)
-      val part = graft.sinks.Hfs.childFiles(s, stage)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).head
-      val target = f"$feed/c$i%02d.parquet"
-      graft.sinks.Hfs.rename(s, s"$stage/$part", target)
-      graft.sinks.Hfs.setMtime(s, target, 1000000000000L + i * 60000L)
-      graft.sinks.Hfs.deleteRecursive(s, stage)
-    }
+    graft.sinks.Lifecycle.stageFeed(s, loc, feed, slots.map {
+      case Some(k) => cut.filter(col("__cut") === k).drop("__cut")
+        .sortWithinPartitions(col("ts"))
+      case None => fillerRow
+    })
   }
 
   /** The lifecycle's tag dir for the CURRENT fixture content —
@@ -204,9 +193,9 @@ object OrderWideStream {
     val q = wide.writeStream
       .option("checkpointLocation", s"$loc/__ckpt")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        def put(): Unit = graft.sinks.KeyedParquetSink.writer(
+        def put(): Unit = graft.sinks.KeyedParquetSink.upsert(batch,
           s"$loc/store", Seq("order_id", "line_uid"), "dt_month",
-          "line_uid")(batch, bid)
+          "line_uid")
         put()
         if (bid == 1L) put() // at-least-once: duplicate one delivery
       }

@@ -74,18 +74,6 @@ object Streams {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("total_value"))
 
-  /** ST7+: event-time session windows (30 min gap) — the streaming twin
-    * of Analytics.sessionize. Emits one row per closed session. */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-      delay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        col("n_events"))
-
   /** q149's engine: the BUILT-IN streaming session operator doing the
     * q36/q147 gap cut — where the orderedFold family hand-rolls
     * sequence state, sessions are exactly what `session_window` exists
@@ -118,50 +106,6 @@ object Streams {
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"),
         col("n_events"), col("dur_us"), col("converted"))
-  }
-
-  /** A6/ST5 with explicit state: flatMapGroupsWithState dedup variant —
-    * keeps the reference's Redis-set semantics literally (a per-mid set
-    * of seen days with an idle-processing-time TTL), for cases where
-    * exact Redis-TTL parity is demanded (SURVEY §7.3). The watermarked
-    * dropDuplicates in dauDedup is the preferred event-time form. */
-  def dauDedupWithState(pageLogs: org.apache.spark.sql.Dataset[(String, java.sql.Timestamp)],
-      ttlMs: Long = 24L * 3600 * 1000)
-      : org.apache.spark.sql.Dataset[(String, String)] = {
-    import pageLogs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    // Event-time timeout, not processing-time: PT timeouts make the
-    // micro-batch engine self-trigger empty batches forever (a test would
-    // never settle), and the watermark-driven form is deterministic.
-    pageLogs.toDF("mid", "ts").withWatermark("ts", s"$ttlMs milliseconds")
-      .as[(String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Set[String], (String, String)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (mid: String, rows: Iterator[(String, java.sql.Timestamp)],
-            state: GroupState[Set[String]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val seen = state.getOption.getOrElse(Set.empty)
-            val events = rows.toSeq
-            // UTC explicitly: Timestamp.toLocalDateTime uses the JVM
-            // default zone, which would assign midnight-adjacent events
-            // to a different day than the dauDedup twin's to_date under
-            // spark.sql.session.timeZone=UTC on any non-UTC machine
-            val days = events.map(r => r._2.toInstant
-                .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString)
-              .distinct.sorted
-            val fresh = days.filterNot(seen)
-            state.update(seen ++ fresh)
-            // TTL anchored on the group's last activity (event time) — an
-            // initial-watermark-relative timeout would expire the state
-            // before the next batch arrives.
-            val lastSeenMs = events.map(_._2.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(lastSeenMs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            fresh.iterator.map(d => (mid, d))
-          }
-      }
   }
 
   /** Streaming twin of Analytics.sequencePack (q57) — stateful
@@ -324,9 +268,10 @@ object Streams {
     * arrive arbitrarily far in the future (that is event-time advance,
     * not lateness) and must still pair — one small row per ever-seen
     * user, the same footprint as any per-user streaming aggregate.
-    * Flush timeouts are event-time (the dauDedupWithState note:
-    * processing-time self-triggers forever) and re-armed to the
-    * earliest buffered timestamp whenever the buffer is non-empty. */
+    * Flush timeouts are event-time (a processing-time timeout makes
+    * the micro-batch engine self-trigger empty batches forever) and
+    * re-armed to the earliest buffered timestamp whenever the buffer is
+    * non-empty. */
   def transitionPairs(events: org.apache.spark.sql.Dataset[TransEvent],
       delay: String = "10 minutes")
       : org.apache.spark.sql.Dataset[TransPair] = {

@@ -222,4 +222,51 @@ class KeyedSinkSpec extends SparkSpec {
     assert(snapshot == before,
       "an empty batch must not rewrite (or touch) any partition")
   }
+
+  test("a crashed first write (only _temporary debris) heals on the next upsert") {
+    val path = Files.createTempDirectory("sink_torn_first").toString + "/t"
+    // the committer died before any footer reached the table dir: what
+    // is left is a task attempt's partial file under _temporary
+    val attempt = java.nio.file.Paths.get(path,
+      "_temporary", "0", "_temporary", "attempt_0", "dt=2024-01-01")
+    Files.createDirectories(attempt)
+    Files.write(attempt.resolve("part-00000.parquet"), Array[Byte](80, 65, 82))
+    KeyedParquetSink.upsert(table(("m1", "2024-01-01", 1L, 10.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    assert(!new java.io.File(s"$path/_temporary").exists(),
+      "the heal must clear the crashed attempt's debris")
+    KeyedParquetSink.upsert(table(("m2", "2024-01-01", 1L, 20.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    assert(spark.read.parquet(path).select("mid").as[String].collect()
+      .sorted.toSeq == Seq("m1", "m2"))
+  }
+
+  test("job budget: a non-empty upsert onto a table runs 6 Spark jobs") {
+    // 8 with the separate emptiness probe over the checkpointed batch
+    // and the schema-inference read of the table: the row count now
+    // rides the checkpoint job, and the table is read with the batch's
+    // schema
+    val path = Files.createTempDirectory("sink_jobs").toString + "/t"
+    KeyedParquetSink.upsert(
+      table(("m1", "2024-01-01", 1L, 10.0), ("m2", "2024-01-02", 1L, 20.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    val b = table(("m1", "2024-01-01", 2L, 11.0), ("m3", "2024-01-01", 1L, 30.0))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      jobs.set(0)
+      KeyedParquetSink.upsert(b, path, Seq("mid", "dt"), "dt", "ver")
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      assert(jobs.get() == 6, s"a non-empty upsert ran ${jobs.get()} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(path).select("mid", "amount")
+      .as[(String, Double)].collect().sorted.toSeq ==
+      Seq(("m1", 11.0), ("m2", 20.0), ("m3", 30.0)))
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.functions.{DedupOps, PqOps, SimilarityOps, TextOps}
 import graft.operators.Bucketing
-import graft.sinks.{DwellSink, FunnelSink, Hfs, PitSink, SessionSink, MergeParquetSink, PhraseIndexSink, RetentionSink, SourceStatsSink, TransitionSink, VocabSink}
+import graft.sinks.{DwellSink, FunnelSink, Hfs, PitSink, SessionSink, PhraseIndexSink, RetentionSink, SourceStatsSink, TransitionSink, VocabSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -386,24 +386,6 @@ class LayoutCompatSpec extends SparkSpec {
     // empty store reads as the empty registry (cold-start contract)
     assert(graft.sinks.BenchRegistrySink
       .registry(spark, tmp("lc_benchreg_empty")).count() == 0)
-  }
-
-  test("merge sink __horizon/base/delta layout: upsert → read, compact → read, one format") {
-    val path = tmp("lc_merge") + "/t"
-    def put(rows: (String, String, Long, Double)*): Unit =
-      MergeParquetSink.upsert(
-        rows.toDF("mid", "dt", "ver", "amount"), path, "dt")
-    put(("m1", "2024-01-01", 1L, 10.0), ("m2", "2024-01-01", 1L, 20.0))
-    put(("m1", "2024-01-02", 2L, 99.0)) // newer version of m1
-    val before = MergeParquetSink.read(spark, path, Seq("mid"), "ver")
-      .select(col("mid"), col("ver"), col("amount"))
-      .as[(String, Long, Double)].collect().toSet
-    assert(before == Set(("m1", 2L, 99.0), ("m2", 1L, 20.0)))
-    MergeParquetSink.compact(spark, path, Seq("mid"), "dt", "ver")
-    val after = MergeParquetSink.read(spark, path, Seq("mid"), "ver")
-      .select(col("mid"), col("ver"), col("amount"))
-      .as[(String, Long, Double)].collect().toSet
-    assert(after == before, "compaction must not change merge-on-read content")
   }
 
   // ---------------------------------------------------------------- bucketed layout

@@ -272,7 +272,7 @@ class SinkHardeningSpec extends SparkSpec {
 
   test("marker write is crash-safe: an interrupted rewrite leaves the tmp as recovery copy") {
     val dir = Files.createTempDirectory("marker").toString
-    val p = s"$dir/__seq_horizon"
+    val p = s"$dir/__buckets"
     sinks.Hfs.writeString(spark, p, "7")
     assert(sinks.Hfs.readString(spark, p).contains("7"))
     // crash window: new content durable in tmp, old file already deleted,
@@ -289,10 +289,10 @@ class SinkHardeningSpec extends SparkSpec {
   test("a torn first-ever write is rejected, not adopted as committed content") {
     // crash mid-tmp-write before any main file exists: the tmp holds
     // partial bytes and no terminator — adopting it would wedge e.g.
-    // an empty __seq_horizon's .toLong forever, and replays would fail
+    // an empty __buckets pin's .toInt forever, and replays would fail
     // identically every time
     val dir = Files.createTempDirectory("torn").toString
-    val p = s"$dir/__seq_horizon"
+    val p = s"$dir/__buckets"
     Files.writeString(java.nio.file.Paths.get(s"$p.__tmp"), "")       // torn: empty
     assert(sinks.Hfs.readString(spark, p).isEmpty,
       "an empty torn tmp with no main file must read as never-written")
@@ -320,22 +320,5 @@ class SinkHardeningSpec extends SparkSpec {
     val back = spark.read.parquet(dir).select("dt").as[String].collect().toSeq
     assert(back == Seq("plain"),
       s"the escaped-dir partition must not resurrect its rows, got $back")
-  }
-
-  test("merge-sink read survives the compact swap window (staging adopted or base re-found)") {
-    val dir = Files.createTempDirectory("merge_swap").toString + "/t"
-    val b = Seq((1L, "2024-01-01", 1L, "x")).toDF("k", "dt", "v", "payload")
-    sinks.MergeParquetSink.upsert(b, dir, "dt")
-    sinks.MergeParquetSink.compact(spark, dir, Seq("k"), "dt", "v")
-    // crash window between base delete and staging rename: the staging
-    // IS the base — read must adopt it
-    sinks.Hfs.rename(spark, s"$dir/base", s"$dir/base__staging")
-    val rows = sinks.MergeParquetSink.read(spark, dir, Seq("k"), "v")
-      .select("k").as[Long].collect().toSeq
-    assert(rows == Seq(1L), "staging must stand in for the deleted base")
-    // next compact's recovery heals the layout
-    sinks.MergeParquetSink.compact(spark, dir, Seq("k"), "dt", "v")
-    assert(sinks.Hfs.exists(spark, s"$dir/base"))
-    assert(sinks.MergeParquetSink.read(spark, dir, Seq("k"), "v").count() == 1L)
   }
 }

@@ -126,49 +126,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("session windows close by gap and match the batch sessionization counts") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, Long)]
-    val stream = Streams.sessionWindows(
-      in.toDF().toDF("ts", "user_id"), "30 minutes", "1 hour")
-    val q = stream.writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (ts("2024-01-01 10:00:00"), 1L), (ts("2024-01-01 10:10:00"), 1L), // session A
-        (ts("2024-01-01 11:30:00"), 1L),                                  // session B (>30m gap)
-        (ts("2024-01-01 10:05:00"), 2L))                                  // user 2
-      q.processAllAvailable()
-      in.addData((ts("2024-01-02 00:00:00"), 9L)) // advance watermark, close all
-      q.processAllAvailable()
-      val out = spark.table("sess_out")
-        .select("user_id", "session_start", "n_events")
-        .as[(Long, String, Long)].collect().sorted.toSeq
-      assert(out.contains((1L, "2024-01-01 10:00:00", 2L)))
-      assert(out.contains((1L, "2024-01-01 11:30:00", 1L)))
-      assert(out.contains((2L, "2024-01-01 10:05:00", 1L)))
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState dedup admits first (mid, day) across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, java.sql.Timestamp)]
-    val q = Streams.dauDedupWithState(in.toDS())
-      .toDF("mid", "dt")
-      .writeStream.format("memory").queryName("fmgws_out")
-      .outputMode("append").start()
-    try {
-      in.addData(("m1", ts("2024-01-01 10:00:00")), ("m1", ts("2024-01-01 11:00:00")))
-      q.processAllAvailable()
-      in.addData(("m1", ts("2024-01-01 12:00:00")), // dup day, dropped
-        ("m1", ts("2024-01-02 09:00:00")),          // new day
-        ("m2", ts("2024-01-01 08:00:00")))
-      q.processAllAvailable()
-      val out = spark.table("fmgws_out").as[(String, String)].collect().sorted.toSeq
-      assert(out == Seq(("m1", "2024-01-01"), ("m1", "2024-01-02"), ("m2", "2024-01-01")))
-    } finally q.stop()
-  }
-
   test("cdc routing re-reads config each batch: a table promoted to fact mid-stream reroutes") {
     implicit val sqlCtx = spark.sqlContext
     val confDir = Files.createTempDirectory("route_conf").toString
@@ -205,8 +162,10 @@ class StreamingSpec extends SparkSpec {
       .withColumn("dt", col("dt").cast("string"))
       .withColumn("ver", col("ts").cast("long"))
       .writeStream
-      .foreachBatch(graft.sinks.KeyedParquetSink.writer(
-        path, Seq("mid", "dt"), "dt", "ver") _)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.sinks.KeyedParquetSink.upsert(batch, path, Seq("mid", "dt"),
+          "dt", "ver")
+      }
       .start()
     try {
       in.addData(

@@ -27,7 +27,7 @@ class TombstoneRouteSpec extends SparkSpec {
     val agg = tombs.groupBy($"k").agg(max($"ing").as("__tomb_ing"))
       .localCheckpoint()
     val want = IngestSegments
-      .applyTombstonesRouted(corpus, agg, "k", "ing", "broadcast")
+      .applyTombstonesRouted(corpus, agg, 3L, "k", "ing", "broadcast")
       .as[(Long, Long, String)].collect().toSet
     // fixture sanity: the three kill shapes are all present
     assert(!want.contains((3L, 0L, "v0-3")) && want.contains((3L, 2L, "v2-3")))
@@ -35,7 +35,7 @@ class TombstoneRouteSpec extends SparkSpec {
     assert(!want.contains((60L, 0L, "v0-60")) && want.contains((60L, 2L, "v2-60")))
     for (road <- Seq("bloom", "plain")) {
       val got = IngestSegments
-        .applyTombstonesRouted(corpus, agg, "k", "ing", road)
+        .applyTombstonesRouted(corpus, agg, 3L, "k", "ing", road)
         .as[(Long, Long, String)].collect().toSet
       assert(got == want, s"road $road diverged from broadcast")
     }
