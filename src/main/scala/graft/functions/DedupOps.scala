@@ -20,16 +20,6 @@ object DedupOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Thrown by the hash-min engine's envelope guards (diameter cap,
-    * component-size cap) — the ONE exception the auto router treats as
-    * "this graph is outside the near-dup envelope, run star instead".
-    * Extends IllegalArgumentException so external callers that already
-    * handle IAE keep working; the router catches only this subtype so a
-    * genuine programming-error IAE propagates instead of silently
-    * paying a second engine pass. */
-  final class EnvelopeRefused(msg: String)
-    extends IllegalArgumentException(msg)
-
   /** Word 3-gram shingles of a token array: shingle i = tokens[i..i+2].
     * Guarded: <3 tokens → empty array (sequence(1,0) would count DOWN). */
   def shingles3(tk: Column): Column =
@@ -727,18 +717,13 @@ object DedupOps {
     * emit EDGES; a real dedup pipeline must collapse them into
     * connected components and keep one representative per component
     * (A~B and B~C must not keep both A and C just because the A-C edge
-    * fell under threshold). Algorithm: hash-min label propagation over
-    * the pair graph — every node starts labeled with its own id, each
-    * round takes the min of its neighbors' labels, fixpoint in
-    * graph-diameter rounds (near-dup chains are short; iteration is
-    * capped and convergence asserted). Scale shape: the loop runs over
-    * the PAIR graph (dup-rate-proportional), never the corpus; each
-    * round is one join + one groupBy-min, localCheckpoint-ed so lineage
-    * stays flat. Massive components would want the star-contraction
-    * variant (Kiveris et al., "Connected Components in MapReduce"), but
-    * near-dup graphs have bounded components by construction. Output:
-    * (doc_id, cluster_rep = min doc_id of the component) for every doc
-    * in at least one pair; the DuckDB oracle replays it as a recursive
+    * fell under threshold). Algorithm: [[collapseClusters]] over the
+    * pair graph — a driver union-find below its edge threshold, star
+    * contraction (Kiveris et al., "Connected Components in MapReduce")
+    * above it. Scale shape: the collapse runs over the PAIR graph
+    * (dup-rate-proportional), never the corpus. Output: (doc_id,
+    * cluster_rep = min doc_id of the component) for every doc in at
+    * least one pair; the DuckDB oracle replays it as a recursive
     * transitive closure. */
   val dedupClusters: Q = (s, d) =>
     s.read.parquet(ensureClusterLabels(s, d))
@@ -748,21 +733,19 @@ object DedupOps {
     * convention applied to the dedup labels: all three serving views
     * are cheap cuts of the SAME closure, and a production pipeline
     * materializes labels once per corpus snapshot rather than re-paying
-    * the pair generation + hash-min loop per view. Published through
-    * [[graft.sinks.Lifecycle]] (keyed by the documents fingerprint); the
-    * build runs the live hash-min engine (collapseClusters — the
-    * q104/q106 star/auto paths and the q115/q116 incremental lifecycles
-    * stay live engines, so the driver gate still exercises every
-    * closure engine each round on a wiped /tmp). Deterministic: the
-    * hash-min closure's fixpoint is input-determined, so the stored
-    * read is hash-identical to the live loop. */
+    * the pair generation + collapse per view. Published through
+    * [[graft.sinks.Lifecycle]] (keyed by the documents fingerprint);
+    * q104 keeps running star contraction live, so the driver gate
+    * still exercises both collapse engines each round on a wiped /tmp.
+    * Deterministic: component min-ids are input-determined, so the
+    * stored read is hash-identical to a live collapse. */
   /** Code-layout version token, the layout's Lifecycle variant (the
     * __buckets geometry-pin convention): a future change to
     * collapseClusters / shingleJaccardPairs must bump this or keep
     * serving labels computed by the OLD code until /tmp is wiped — the
     * fingerprint tag only tracks the DATA. A bump's build sweeps the
     * superseded version. */
-  private val LabelLayoutVersion = "v2-hashmin-w3s0.5-hsh"
+  private val LabelLayoutVersion = "v3-cc-w3s0.5-hsh"
 
   private def ensureClusterLabels(s: SparkSession, d: String): String =
     graft.sinks.Lifecycle.ensure(s, d, Seq("documents"), "dedup-labels",
@@ -781,7 +764,7 @@ object DedupOps {
     * so row count = post-dedup corpus size by construction.
     *
     * Scale shape: labels come from the stored layout (built once per
-    * corpus snapshot by q62's hash-min loop); the survivorship itself
+    * corpus snapshot by q62's collapse); the survivorship itself
     * is one left join of the corpus against the label table (both
     * hash-partitioned on doc_id) and one cluster-keyed reduce. The
     * canonical argmax is an order-independent max(struct(len, -id)) —
@@ -806,124 +789,6 @@ object DedupOps {
         col("total_chars"))
   }
 
-  /** The label-propagation loop itself, over ANY (doc_a, doc_b) pair
-    * set — q62's stored label layout feeds it the fixture pairs (each
-    * round is ONE join + groupBy-min over the pair graph, so rounds
-    * scale ~linearly in edges; the removed ScaleProbe measured that on
-    * synthetic pair graphs at 1×/4×/16×). */
-  def collapseClusters(pairs: DataFrame,
-      maxComponent: Long = 10000000L): DataFrame =
-    collapseClustersWithStats(pairs, maxComponent)._1
-
-  /** As [[collapseClusters]], also returning the round count (DedupSpec
-    * pins diameter+1 rounds on a synthetic chain).
-    *
-    * This is the repo's one deliberate RDD-core operator: iterative
-    * label propagation is exactly the "genuine per-partition imperative
-    * loop" case where Catalyst adds only costs — the DataFrame form
-    * re-shuffled the EDGE set every round (join key ≠ stored
-    * partitioning survives nothing across Exchange-planned rounds),
-    * re-planned 30 growing plans, and accumulated a localCheckpoint of
-    * the label table per round until block-manager pressure turned
-    * per-round cost superlinear (measured 0.7→5.4 s/round across
-    * 16× edges). The Pregel shape used by GraphX fixes all three with
-    * plain RDD primitives:
-    *  - edges are hash-PARTITIONED ONCE and persisted; every round's
-    *    edges⋈labels join is then co-partitioned and narrow — the only
-    *    per-round shuffle is the message reduce (edge-count rows,
-    *    combiner-compressed to ≤ node-count);
-    *  - change detection is an accumulator folded into the round's one
-    *    materializing action (task retries can only overcount real
-    *    decreases, and the loop tests changed > 0, so a retry can
-    *    never fake convergence);
-    *  - the superseded round's labels are unpersisted EXPLICITLY, so
-    *    live block copies are 2, not O(rounds).
-    * One job per round, wall-clock ~linear in edges at fixed diameter.
-    *
-    * Out-of-envelope inputs fail LOUDLY, never slowly-silently:
-    * - diameter > 30 (adversarial long chains) hits the round cap;
-    * - a converged component larger than `maxComponent` trips the guard
-    *   below. Near-dup graphs have bounded components by construction;
-    *   a violation means the input is not a near-dup graph and wants
-    *   [[collapseClustersStarWithStats]] (Kiveris et al. star
-    *   contraction), which this engine intentionally does not pay for
-    *   on its designed inputs.
-    *
-    * CROSSOVER (measured, PLANS.md round-10 table): flip to the star
-    * variant when expected diameter > ~25, when any component may
-    * exceed maxComponent (mega-hubs: star handles a 1M-leaf hub in one
-    * round), or when the pair graph exceeds ~100k edges and wall-clock
-    * matters (diameter-24 chains: star 6 rounds/28.6 s vs 25
-    * rounds/40 s at 1.6M edges). Below all three thresholds hash-min
-    * wins — its narrow-join+reduce rounds are ~2× cheaper than star's
-    * two sort-shuffles+distinct (sf0.1 fixture, quiet run: 0.73 s vs 0.82 s). */
-  def collapseClustersWithStats(pairs: DataFrame,
-      maxComponent: Long = 10000000L): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val sc = spark.sparkContext
-    val np = math.max(sc.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val part = new org.apache.spark.HashPartitioner(np)
-    val edges = pairs
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].rdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // distinct() drops the partitioner on its trailing map — re-key
-    var labels = edges.keys.distinct(np).map(id => (id, id))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 30) {
-      val acc = sc.longAccumulator
-      // narrow on both sides: edges and labels share `part`
-      val msgs = edges.join(labels, part)
-        .map { case (_, (dst, lbl)) => (dst, lbl) }
-        .reduceByKey(part, math.min(_: Long, _: Long)) // the round's ONE shuffle
-      val next = labels.leftOuterJoin(msgs, part) // narrow: both on part
-        .mapValues { case (own, m) =>
-          val nl = math.min(own, m.getOrElse(own))
-          if (nl < own) acc.add(1L)
-          nl
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // the round's one job; accumulator valid after it
-      changed = acc.value
-      labels.unpersist(blocking = false)
-      labels = next
-      iter += 1
-    }
-    // guard trips release the loop's persisted blocks first: the refusal
-    // is the normal control path for [[collapseClustersAutoWithStats]]'s
-    // fallback, which goes on to run star contraction in the same JVM —
-    // a leaked edge+label copy per refused attempt would be billed to it
-    def refuse(msg: String): Nothing = {
-      edges.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-      throw new DedupOps.EnvelopeRefused(msg)
-    }
-    if (changed != 0)
-      refuse(s"label propagation did not converge in $iter " +
-        "rounds — the pair graph has a component of diameter > 30, outside " +
-        "the near-dup design envelope; use star contraction (Kiveris et " +
-        "al.) for arbitrary graphs")
-    val biggestSize = labels.map(kv => (kv._2, 1L))
-      .reduceByKey(part, _ + _).map(_._2).fold(0L)(math.max)
-    if (biggestSize > maxComponent)
-      refuse(s"largest component has $biggestSize docs > maxComponent=" +
-        s"$maxComponent — not a near-dup graph shape (per-round message " +
-        "volume tracks degree sums; a boilerplate mega-cluster belongs " +
-        "to the capped-candidate path or star contraction). Raise " +
-        "maxComponent explicitly to accept.")
-    edges.unpersist(blocking = false)
-    (labels.toDF("doc_id", "cluster_rep"), iter)
-  }
-
   /** Routes a (u, v) composite key by u alone — so
     * repartitionAndSortWithinPartitions co-locates each node's
     * neighbor run while the lexicographic sort puts the run's smallest
@@ -938,25 +803,26 @@ object DedupOps {
     }
   }
 
-  /** Star-contraction connected components — the escape hatch
-    * [[collapseClustersWithStats]]'s guard names, now implemented:
-    * Kiveris et al., "Connected Components in MapReduce and Beyond"
-    * (SoCC'14). Alternating large-star / small-star contractions
-    * converge in O(log² n) rounds — LOGARITHMIC in diameter (each
-    * large/small-star pair roughly halves it; measured 7 rounds on a
-    * 60-chain, 11 on a 600-chain), where hash-min is linear — whatever
-    * the component
-    * size — the algorithm for graphs outside the near-dup envelope
-    * (boilerplate mega-clusters, adversarial chains past the 30-round
-    * hash-min cap). Same contract as [[collapseClusters]]: in (doc_a,
-    * doc_b) pairs, out (doc_id, cluster_rep = component min) — INCLUDING
-    * a node whose only appearance is a self-pair (a, a), which hash-min
-    * labels as a singleton and this variant therefore must too (the
+  /** Star-contraction connected components — [[collapseClusters]]'
+    * engine above its edge threshold, and q104's directly: Kiveris et
+    * al., "Connected Components in MapReduce and Beyond" (SoCC'14).
+    * Alternating large-star / small-star contractions converge in
+    * O(log² n) rounds — LOGARITHMIC in diameter (each large/small-star
+    * pair roughly halves it; measured 7 rounds on a 60-chain, 11 on a
+    * 600-chain), where label propagation is linear — whatever the
+    * component size (boilerplate mega-clusters, sprawling chains).
+    * Same contract as [[collapseClusters]]: in (doc_a, doc_b) pairs,
+    * out (doc_id, cluster_rep = component min) — INCLUDING a node
+    * whose only appearance is a self-pair (a, a), which the union-find
+    * labels as a singleton and this engine therefore must too (the
     * contraction drops self-loops, so those ids are unioned back as
-    * singleton labels at the end); DedupSpec
-    * pins exact equivalence on the fixture pair graph AND on a
-    * self-pair-bearing graph, on a 100k-leaf star the hash-min guard
-    * refuses, and on a long chain past the hash-min round cap.
+    * singleton labels at the end); DedupSpec pins exact equality with
+    * a plain BFS on the fixture pair graph AND on a self-pair-bearing
+    * graph, on a 100k-leaf star, and on a 60-chain.
+    *
+    * Plain RDD primitives on purpose: each round is two streaming
+    * sort-shuffles over a persisted edge set, which Catalyst would
+    * only re-plan and re-shuffle per round.
     *
     *  - large-star(u): over the SYMMETRIC neighborhood Γ(u), connect
     *    every strictly-larger neighbor to m = min(Γ(u) ∪ u);
@@ -1051,13 +917,13 @@ object DedupOps {
       }.fold((0L, 0L)) { case ((n1, h1), (n2, h2)) => (n1 + n2, h1 + h2) }
 
     // Self-pairs (a, a) carry no connectivity but DO assert membership:
-    // hash-min labels a node that appears only as a self-pair (it is a
-    // node of the edge RDD, labeled (a, a)), so the drop-in-equivalence
-    // contract requires the star output to keep it too. The contraction
-    // itself must not see self-loops (large-star would erase them and
-    // the node would vanish) — split them out here and union the ids
-    // back as singleton labels at the end (reduceByKey min keeps the
-    // real component label when the node also has proper edges).
+    // the union-find labels a node that appears only as a self-pair
+    // (a, a), so the shared contract requires the star output to keep
+    // it too. The contraction itself must not see self-loops
+    // (large-star would erase them and the node would vanish) — split
+    // them out here and union the ids back as singleton labels at the
+    // end (reduceByKey min keeps the real component label when the
+    // node also has proper edges).
     val raw = pairs
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .as[(Long, Long)].rdd
@@ -1102,26 +968,27 @@ object DedupOps {
     (labels.toDF("doc_id", "cluster_rep"), iter)
   }
 
-  /** Adaptive collapse for operators whose pair graph is usually SMALL
-    * relative to the corpus (semantic dedup: pairs ≈ dup docs, not
-    * docs²): one count of the persisted 2-long-column pair frame routes
-    * to
+  /** Connected components of a pair graph — the ONE collapse every
+    * clustering caller runs (q62's stored labels, q106, the incremental
+    * contraction step, LabelSink's retraction, q117's semantic dedup).
+    * Near-dup pair graphs are SMALL relative to the corpus (pairs ≈ dup
+    * docs, not docs²), so one count of the persisted 2-long-column pair
+    * frame routes to
     *  - a DRIVER union-find when edges ≤ `localEdgeThreshold` — the
     *    collect is bounded by the threshold (16 bytes/edge ⇒ ≤ ~16 MB
     *    at the 1M default), labels are exact component min-ids in one
     *    pass, and ZERO distributed rounds run. Any distributed engine
     *    pays 10-50 scheduling-bound micro-stages on a driver-scale
-    *    graph (measured: 25 hash-min rounds / 2.5 s, 6+6 star
+    *    graph (measured: 25 label-propagation rounds / 2.5 s, 6+6 star
     *    shuffles / 2 s, for 1169 edges at sf0.1) — latency the size of
     *    the data can never justify;
-    *  - star contraction above the threshold: for WEAK-threshold pair
-    *    graphs (sprawling chains) diameter is unbounded, which is
-    *    star's envelope, not hash-min's.
-    * Same (doc_id, cluster_rep) contract as every other collapse:
-    * min-id reps, self-pairs label their node, nodes absent from pairs
-    * are absent from labels. PipelineOpsSpec pins local ≡ star ≡
-    * hash-min on random multigraphs and the routing boundary itself. */
-  def collapseClustersAdaptive(pairs: DataFrame,
+    *  - star contraction ([[collapseClustersStarWithStats]]) above the
+    *    threshold: O(log² n) rounds whatever the diameter or component
+    *    size, so sprawling chains and mega-hubs need no guard.
+    * Contract: min-id reps, self-pairs label their node, nodes absent
+    * from pairs are absent from labels. PipelineOpsSpec pins both
+    * routes against a plain BFS on random multigraphs. */
+  def collapseClusters(pairs: DataFrame,
       localEdgeThreshold: Long = 1000000L): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = pairs.sparkSession
@@ -1160,78 +1027,10 @@ object DedupOps {
     } finally p.unpersist(blocking = false)
   }
 
-  /** The q62/q104 crossover guidance as CODE, not a Scaladoc the caller
-    * must remember: routes a pair graph to hash-min propagation
-    * ([[collapseClustersWithStats]] — cheaper rounds, bounded-diameter
-    * envelope) or star contraction ([[collapseClustersStarWithStats]] —
-    * O(log²) rounds, any shape), so the router's contract is an ANSWER
-    * where the engines' is an envelope. Decision inputs come from ONE
-    * shuffle over the pair graph (degree rows; max degree + degree sum):
-    *  - live edges ≥ `starEdgeThreshold` (default the measured ~100k
-    *    crossover, PLANS.md round-10 table) → star: past that size its
-    *    fewer rounds beat hash-min's cheaper ones on every synthetic
-    *    shape measured;
-    *  - max degree ≥ `maxComponent` → star: the degree probe has PROVED
-    *    the component hash-min's guard would only reject after fully
-    *    converging (a mega-hub converges fast, then trips);
-    *  - otherwise hash-min — and if its envelope guard still trips
-    *    (a long-diameter chain the degree probe cannot see, or an
-    *    oversized component assembled from small degrees), the refusal
-    *    is caught and the star pass paid as the fallback.
-    * Returns (labels, route ∈ {hash-min, star, star-fallback}, rounds).
-    * The input plan is persisted across probe + engine (+ possible
-    * fallback) so the caller's upstream pair query runs once, and
-    * released before returning — both engines materialize their label
-    * RDD before handing back the frame. */
-  def collapseClustersAutoWithStats(pairs: DataFrame,
-      maxComponent: Long = 10000000L,
-      starEdgeThreshold: Long = 100000L): (DataFrame, String, Int) = {
-    import org.apache.spark.storage.StorageLevel
-    val p = pairs
-      .select(col("doc_a").cast("long").as("doc_a"),
-        col("doc_b").cast("long").as("doc_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one shuffle buys both router inputs; self-pairs are excluded so
-      // a node's probed degree counts proper neighbors only (sum of
-      // degrees = 2 × live edge count). Duplicate pairs inflate the edge
-      // estimate — acceptable for a threshold, and the engines dedup.
-      val row = p.filter(col("doc_a") =!= col("doc_b"))
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("id"))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-        .agg(coalesce(max(col("deg")), lit(0L)).as("max_deg"),
-          coalesce(sum(col("deg")), lit(0L)).as("deg_sum"))
-        .head()
-      val maxDeg = row.getLong(0)
-      val edgeEst = row.getLong(1) / 2
-      if (edgeEst >= starEdgeThreshold || maxDeg >= maxComponent) {
-        val (l, r) = collapseClustersStarWithStats(p)
-        (l, "star", r)
-      } else
-        try {
-          val (l, r) = collapseClustersWithStats(p, maxComponent)
-          (l, "hash-min", r)
-        } catch {
-          // ONLY the typed envelope refusal routes to the fallback — a
-          // bare IllegalArgumentException from inside the engine (bad
-          // column, lazily-surfaced upstream plan error) is a real
-          // defect and must propagate, not be silently re-run as star
-          case _: DedupOps.EnvelopeRefused =>
-            val (l, r) = collapseClustersStarWithStats(p)
-            (l, "star-fallback", r)
-        }
-    } finally p.unpersist(blocking = false)
-  }
-
-  /** [[collapseClustersAutoWithStats]] without the routing telemetry —
-    * the drop-in for callers that just want components collapsed. */
-  def collapseClustersAuto(pairs: DataFrame,
-      maxComponent: Long = 10000000L): DataFrame =
-    collapseClustersAutoWithStats(pairs, maxComponent)._1
-
-  /** q104: q62's transitive closure through the OTHER algorithm — the
-    * same recursive-CTE oracle must hash-match star contraction's
-    * output exactly, proving the escape hatch is a drop-in. */
+  /** q104: q62's transitive closure through star contraction alone —
+    * the same recursive-CTE oracle must hash-match its output exactly,
+    * proving [[collapseClusters]]' above-threshold engine is a drop-in
+    * for the union-find the fixtures route to. */
   val dedupClustersStar: Q = (s, d) =>
     collapseClustersStarWithStats(
       shingleJaccardPairs(s, d).select(col("doc_a"), col("doc_b")))._1
@@ -1359,11 +1158,12 @@ object DedupOps {
     def release(): Unit = gate.release()
   }
 
-  /** q106: the q62 closure through the AUTO router — on the fixture
-    * graph the degree probe routes hash-min; whichever engine answers,
-    * the same recursive-CTE oracle must hash-match it. */
+  /** q106: the q62 closure computed LIVE through [[collapseClusters]]
+    * (q62 serves the stored labels) — the fixture graph takes the
+    * union-find route; the same recursive-CTE oracle must hash-match
+    * it. */
   val dedupClustersAuto: Q = (s, d) =>
-    collapseClustersAuto(
+    collapseClusters(
       shingleJaccardPairs(s, d).select(col("doc_a"), col("doc_b")))
 
   /** Incremental connected components over ANY stepped edge list
@@ -1373,7 +1173,7 @@ object DedupOps {
     * re-runs global clustering over the whole corpus). Per step:
     * CONTRACT each new edge's endpoints to their current labels
     * (already-connected structure collapses to one node per cluster),
-    * run the hash-min loop on that contracted graph — new edges plus
+    * run [[collapseClusters]] on that contracted graph — new edges plus
     * one node per touched cluster, NEVER the accumulated graph — and
     * propagate relabelings back with one label-table join.
     *
@@ -1385,7 +1185,7 @@ object DedupOps {
     * recursive-CTE closure as q62: the lifecycle is the thing under
     * test, not new semantics).
     *
-    * Scale shape: step cost = new edges (contract join + hash-min on
+    * Scale shape: step cost = new edges (contract join + collapse of
     * the contracted graph) + one join over the label table
     * (dup-doc-sized, far below corpus-sized; keep it bucketed by
     * cluster_rep in a production deployment and the relabel join is
@@ -1415,8 +1215,7 @@ object DedupOps {
           .select(col("doc_a"), col("doc_b"))
         val (plan, release) = contractionStep(labels, e)
         // materialize the new table, then free the superseded one — live
-        // label copies stay at 2 whatever the step count (the same
-        // discipline collapseClustersWithStats' loop documents; a
+        // label copies stay at 2 whatever the step count (a
         // checkpoint-per-step would pin O(steps) copies until GC)
         val next = plan.persist(StorageLevel.MEMORY_AND_DISK)
         next.count(): Unit
@@ -1428,12 +1227,11 @@ object DedupOps {
       labels
     } catch {
       case t: Throwable =>
-        // refusal mid-loop must not pin the in-flight label table either
+        // a failure mid-loop must not pin the in-flight label table either
         prev.foreach(_.unpersist(false))
         throw t
     } finally
-      // refusal mid-loop (collapseClusters' envelope guards) must not
-      // pin the quadratic pair frame for the JVM lifetime
+      // nor, on any exit, the quadratic pair frame for the JVM lifetime
       steppedPairs.unpersist(false): Unit
     // on success the RETURNED table stays persisted (it is the result);
     // superseded steps were freed inside the loop
@@ -1476,17 +1274,16 @@ object DedupOps {
         .select(col("a").as("doc_a"), col("b").as("doc_b"))
       // delta's nodes are current labels and first-seen doc ids; NOTE
       // the collapse runs EAGERLY here — the catch below keeps a
-      // refused envelope from pinning `tagged`. ADAPTIVE on purpose:
-      // the contracted graph is batch-sized (new edges + one node per
-      // touched cluster, never the corpus), so on a normal ingest the
-      // driver union-find answers in one collect — a distributed
-      // label-prop loop pays 10+ scheduling-bound micro-jobs PER STEP
-      // on a graph that fits in one task, and in a long-lived shared
-      // JVM those driver round-trips are exactly what GC/scheduler
-      // pressure inflates (the r12 bench saw per-iteration growth from
-      // this). Past the 1M-edge threshold the router hands the step to
-      // star contraction — diameter-safe at any batch size.
-      val delta = collapseClustersAdaptive(contracted)
+      // failure from pinning `tagged`. The contracted graph is
+      // batch-sized (new edges + one node per touched cluster, never
+      // the corpus), so on a normal ingest the driver union-find
+      // answers in one collect — a distributed loop pays 10+
+      // scheduling-bound micro-jobs PER STEP on a graph that fits in
+      // one task, and in a long-lived shared JVM those driver
+      // round-trips are exactly what GC/scheduler pressure inflates
+      // (the r12 bench saw per-iteration growth from this). Past the
+      // 1M-edge threshold the step goes to star contraction.
+      val delta = collapseClusters(contracted)
       val fresh = newNodes.join(delta, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_rep"), col("doc_id")).as("cluster_rep"))
@@ -1636,10 +1433,10 @@ object DedupOps {
     * judged by ("how much of the corpus is 2-way dups vs 1000-doc
     * boilerplate blobs"): cluster sizes from the q62 closure, then the
     * size histogram. Both rollups are grid-sized reduces over the
-    * labels frame; the closure itself is the shared hash-min engine,
+    * labels frame; the closure itself is q62's stored collapse,
     * so the histogram rides the same oracle CTE extended by two GROUP
-    * BYs. A mega-cluster shows up here as one fat-size row — the
-    * q104 star-contraction escape hatch's early-warning gauge. */
+    * BYs. A mega-cluster (a boilerplate blob) shows up here as one
+    * fat-size row. */
   val clusterSizeHistogram: Q = (s, d) =>
     dedupClusters(s, d)
       .groupBy(col("cluster_rep"))
@@ -1728,8 +1525,9 @@ object DedupOps {
     islandSpans(grams.filter(KeyRoute.mightContain(dup, "h",
       KeyRoute.bloomItems(nDup), col("h"))).join(dup, "h"), L)
 
-  /** q159: the span scan through the AUTO router — the q106 degree-probe
-    * convention applied to q154's plain-vs-Bloom sizing judgment, which
+  /** q159: the span scan through the AUTO router — the
+    * [[collapseClusters]] route-on-one-count convention applied to
+    * q154's plain-vs-Bloom sizing judgment, which
     * was previously the caller's to make (the clamp `require` refused
     * loudly but a pipeline operator should CHOOSE). Scan 1's dup-hash
     * count is already in hand — the plain form computes it as its join
@@ -2277,7 +2075,7 @@ object DedupOps {
   )
 
   /** The transitive-closure oracle shared by q62/q104/q106 — three
-    * engine paths (hash-min, star contraction, the auto router), ONE
+    * paths (stored labels, star contraction, the live router), ONE
     * answer, each hash-gated against the same recursive CTE.
     * Parameterized by the live-corpus predicate so the q171 retraction
     * twin states its oracle as the SAME closure over the
@@ -2693,7 +2491,7 @@ object DedupOps {
     // q104 ≡ q62 through star contraction — same recursive-CTE oracle
     // on purpose: two algorithms, one answer, both hash-gated
     "q104_dedup_clusters_star" -> closureOracleSql,
-    // q106 ≡ q62 through the auto router
+    // q106 ≡ q62 computed live through collapseClusters
     "q106_dedup_clusters_auto" -> closureOracleSql,
     // q61's shingle construction, rolled up per source; BIGINT/BIGINT
     // divides as double in both engines

@@ -1242,15 +1242,11 @@ object SimilarityOps {
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(round(fcos(col("a.v"), col("b.v")), 6) >= threshold)
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
-    // ADAPTIVE collapse: the semantic pair graph is dup-doc-sized, not
-    // corpus-sized — at fixture scale every distributed engine pays
-    // tens of scheduling-bound micro-stages on a driver-scale graph
-    // (25 hash-min rounds because weak-threshold chains run DEEP; the
-    // degree-probe router can't see diameter, so it would pick
-    // hash-min too). Below the bounded collect threshold a driver
-    // union-find labels it in one pass; above it, star contraction —
-    // the diameter-safe engine for sprawling chain components.
-    DedupOps.collapseClustersAdaptive(pairs)
+    // the semantic pair graph is dup-doc-sized, not corpus-sized, and
+    // weak-threshold chains run DEEP: below the bounded collect
+    // threshold a driver union-find labels it in one pass; above it,
+    // star contraction — the diameter-safe engine for sprawling chains
+    DedupOps.collapseClusters(pairs)
       .select(col("doc_id").as("vec_id"), col("cluster_rep"),
         when(col("doc_id") === col("cluster_rep"), lit(1))
           .otherwise(lit(0)).as("keep"))

@@ -67,7 +67,7 @@ object CdcRouter {
           .otherwise(col("data")).as("value"),
         col("op"),
         // the envelope's version: consumers resolving latest-per-key
-        // (Gmall.dimTable, the merge sink's versionCol) order on it
+        // (Gmall.dimTable) order on it
         col("cdc_ts"))
 
   /** The rows decode() drops — corrupt envelopes (`_corrupt` captured

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.Tables.t
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The serving-layer twin of publish-realtime: assembles the exact
   * response shapes of the two REST endpoints (SURVEY §3.3) from engine
@@ -18,9 +15,10 @@ import org.apache.spark.sql.expressions.Window
   *   c_acctbal (the age-band analog, A5); ref
   *   PublisherServiceImpl.java:39-86
   *
-  * The aggregation runs distributed; only the final ≤24/3-row result is
-  * collected for assembly — same split as the reference (ES aggregates,
-  * Java assembles).
+  * Each endpoint is ONE `spark.sql` statement over the views
+  * `Graft.init` registers. The aggregation runs distributed; only the
+  * final ≤48/4-row result is collected for assembly — same split as
+  * the reference (ES aggregates, Java assembles).
   */
 object Publisher {
 
@@ -28,70 +26,6 @@ object Publisher {
       dauYd: Map[String, Long])
 
   case class StatItem(name: String, value: Double)
-
-  /** The /dauRealtime payload for day `td` (yyyy-MM-dd) — ONE events
-    * scan for both days (per-(day, user) first event → hour histogram),
-    * with dauTotal derived as the td histogram's sum (exactly one row
-    * per user per day, so the separate count_distinct scan the earlier
-    * form ran was pure redundant I/O). This is the same plan as the SQL
-    * twin [[dauRealtimeSqlDf]], so the two forms cannot drift in cost
-    * or content. */
-  def dauRealtime(spark: SparkSession, dir: String, td: String): DauRealtime = {
-    val yd = java.time.LocalDate.parse(td).minusDays(1).toString
-    val e = t(spark, dir, "events")
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .filter(col("dt").isin(td, yd))
-    val w = Window.partitionBy(col("dt"), col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val rows = e.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .groupBy(col("dt"), date_format(col("ts"), "HH").as("hr"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    def hist(day: String) =
-      rows.collect { case (`day`, hr, n) => hr -> n }.toMap
-    val dauTd = hist(td)
-    DauRealtime(dauTd.values.sum, dauTd, hist(yd))
-  }
-
-  /** The /statsByItem payload: conjunctive token match on p_name, grouped
-    * by `t` = "segment" (plays gender: relabel) or "band" (plays age:
-    * re-bucketed), summing revenue. */
-  def statsByItem(spark: SparkSession, dir: String, itemTokens: Seq[String],
-      t0: String): Seq[StatItem] = {
-    // guard at the OPERATOR, not just the HTTP router: an empty token
-    // list would silently match the whole corpus here while the SQL
-    // twin parse-errors on its WHERE-less text — divergent twins
-    require(itemTokens.nonEmpty, "itemName has no searchable tokens")
-    val l = t(spark, dir, "lineitem")
-    val p = t(spark, dir, "part")
-    val o = t(spark, dir, "orders")
-    val c = t(spark, dir, "customer")
-    val matched = itemTokens.foldLeft(l.join(broadcast(p),
-        col("l_partkey") === col("p_partkey"))) {
-      (df, tok) => df.filter(col("p_name").contains(tok))
-    }
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-    val grouped = t0 match {
-      // F7/A5 relabel maps: the SAME Column builders q16/q07 run —
-      // a drifting copy here desynchronized the endpoint silently
-      case "segment" => matched.groupBy(
-        Relational.segmentLabel(col("c_mktsegment")).as("name"))
-      case "band" => matched.groupBy(
-        Relational.acctbalBand(col("c_acctbal")).as("name"))
-      case other => throw new IllegalArgumentException(s"t=$other")
-    }
-    // name tiebreaker: equal revenues must order identically across
-    // runs and across the SQL twin (the repo's top-k determinism rule)
-    grouped.agg(round(sum(col("l_extendedprice")), 2).as("value"))
-      .orderBy(col("value").desc, col("name").asc)
-      .collect().map(r => StatItem(r.getString(0), r.getDouble(1))).toSeq
-  }
-
-  // ---- SQL-first twins: the same two endpoints through nothing but
-  // `spark.sql` over the views `Graft.init` registers — what a user
-  // gets without touching the Scala query API. PublisherSpec asserts
-  // payload equality with the programmatic forms above.
 
   /** Day must be yyyy-MM-dd; tokens must be word characters — both are
     * interpolated into SQL text. */
@@ -101,7 +35,9 @@ object Publisher {
   }
 
   /** The /dauRealtime histogram as a DataFrame (dt, hr, n) — per-day
-    * per-user first event → hour histogram for both days in one pass.
+    * per-user first event → hour histogram for both days in ONE events
+    * scan (dauTotal is the td histogram's sum, so no count-distinct
+    * scan).
     * This IS the distributed part of the endpoint; [[dauRealtimeSql]]
     * collects it (≤ 48 rows) and assembles the payload. Exposed
     * un-collected so q77 can drive it through the driver's DuckDB
@@ -138,11 +74,11 @@ object Publisher {
   def statsByItemSqlDf(spark: SparkSession, itemTokens: Seq[String],
       t0: String): DataFrame = {
     // empty list = WHERE-less SQL = parser error; say so as the bad
-    // PARAMETER it is (and identically to the programmatic twin)
+    // PARAMETER it is
     require(itemTokens.nonEmpty, "itemName has no searchable tokens")
     // alphanumerics ONLY: \w admits '_', a LIKE single-char wildcard,
-    // which would make this SQL twin match MORE than the programmatic
-    // endpoint's literal contains() — 'foo_bar' would match 'fooXbar'
+    // which would make the match looser than a literal contains() —
+    // 'foo_bar' would match 'fooXbar'
     itemTokens.foreach(tok =>
       require(tok.matches("[A-Za-z0-9]+"), s"bad token: $tok"))
     val matchPred = itemTokens
@@ -175,11 +111,9 @@ object Publisher {
     statsByItemSqlDf(spark, itemTokens, t0)
       .collect().map(r => StatItem(r.getString(0), r.getDouble(1))).toSeq
 
-  // ---- Driver-oracle entries (round 6): the SQL-surface twins were
-  // spec-checked against the programmatic forms (PublisherSpec) but not
-  // driver-oracle-checked; these q-entries run the EXACT endpoint SQL
-  // over Graft.init's registered views and hand the un-collected frame
-  // to the driver's DuckDB compare. Fixture days per FIXTURES.md
+  // ---- Driver-oracle entries: these q-entries run the EXACT endpoint
+  // SQL over Graft.init's registered views and hand the un-collected
+  // frame to the driver's DuckDB compare. Fixture days per FIXTURES.md
   // (2024-01-15 is the events table's densest day — q15 uses the same
   // pair).
 

@@ -133,9 +133,8 @@ object Relational {
 
   /** A5+F6 analog: client-side age re-bucketing done engine-side in one
     * pass (ref PublisherServiceImpl.java:55-74) — acctbal bands play age
-    * bands. */
-  /** The acctbal band map — ONE definition for q07 and the /statsByItem
-    * serving twin (the SQL-text twin is asserted equal by PublisherSpec). */
+    * bands. /statsByItem's `t=band` spells the same map as SQL text
+    * (Publisher.statsByItemSqlDf). */
   def acctbalBand(c: Column): Column =
     when(c < 0, "negative").when(c < 5000, "mid").otherwise("high")
 
@@ -259,9 +258,9 @@ object Relational {
 
   /** F7: code→label decode + group (ref PublisherServiceImpl.java:40-54
     * decodes gender codes; same shape over market segments, with the
-    * reference's slur label replaced by a neutral one per SURVEY §2.3). */
-  /** The segment relabel map — ONE definition for q16 and the
-    * /statsByItem serving twin. */
+    * reference's slur label replaced by a neutral one per SURVEY §2.3).
+    * /statsByItem's `t=segment` spells the same map as SQL text
+    * (Publisher.statsByItemSqlDf; q78's oracle gates it). */
   def segmentLabel(c: Column): Column =
     when(c === "AUTOMOBILE", "auto")
       .when(c === "BUILDING", "building")

@@ -25,14 +25,6 @@ private[sinks] object AdditiveSegments {
 
   private val StagingPrefix = "__compact_staging_"
 
-  // the shared segment commit-marker protocol (see Hfs.CommitMarker for
-  // why the committer's _SUCCESS alone is not a safe key)
-  private def committed(spark: SparkSession, dir: String): Boolean =
-    Hfs.segmentCommitted(spark, dir)
-
-  private def markCommitted(spark: SparkSession, dir: String): Unit =
-    Hfs.markSegmentCommitted(spark, dir)
-
   /** foreachBatch hook body: append the batch's partial as seq=batchId
     * through [[Hfs.writeCommittedSegment]] — one job writes the partial
     * into the hidden `.stage-seq=<id>`, and one rename publishes it with
@@ -71,12 +63,12 @@ private[sinks] object AdditiveSegments {
       // rewritten on replay — reading their partial files would count
       // half a batch
       val segs = Hfs.childDirs(spark, path, "seq=")
-        .filter(sd => committed(spark, s"$path/$sd"))
+        .filter(sd => Hfs.segmentCommitted(spark, s"$path/$sd"))
       // several committed stagings can only mean concurrent compacts
       // (a contract violation); the MAX target is the superset fold —
       // adopting any other would double-count once both land
       val staged = Hfs.childDirs(spark, path, StagingPrefix)
-        .filter(st => committed(spark, s"$path/$st"))
+        .filter(st => Hfs.segmentCommitted(spark, s"$path/$st"))
         .sortBy(_.stripPrefix(StagingPrefix).toLong)
       val live = staged.lastOption match {
         case Some(st) =>
@@ -130,7 +122,7 @@ private[sinks] object AdditiveSegments {
       .foreach { st =>
         val full = s"$path/$st"
         val target = st.stripPrefix(StagingPrefix).toLong
-        if (committed(spark, full)) {
+        if (Hfs.segmentCommitted(spark, full)) {
           Hfs.childDirs(spark, path, "seq=")
             .filter(_.stripPrefix("seq=").toLong <= target)
             .foreach(sd => Hfs.deleteRecursive(spark, s"$path/$sd"))
@@ -144,7 +136,7 @@ private[sinks] object AdditiveSegments {
     // counts. Left out of the fold, the leftover is cleared and
     // rewritten by the replay exactly as the write() contract says.
     val segs = Hfs.childDirs(spark, path, "seq=")
-      .filter(sd => committed(spark, s"$path/$sd"))
+      .filter(sd => Hfs.segmentCommitted(spark, s"$path/$sd"))
     if (segs.size <= 1) return
     val maxSeq = segs.map(_.stripPrefix("seq=").toLong).max
     val staging = s"$path/$StagingPrefix$maxSeq"
@@ -160,7 +152,7 @@ private[sinks] object AdditiveSegments {
     // marker BEFORE the deletes: from here the staging stands in for
     // every folded segment, so a crash anywhere below is recovered by
     // the adoption path above
-    markCommitted(spark, staging)
+    Hfs.markSegmentCommitted(spark, staging)
     segs.foreach(sd => Hfs.deleteRecursive(spark, s"$path/$sd"))
     Hfs.rename(spark, staging, s"$path/seq=$maxSeq")
   }

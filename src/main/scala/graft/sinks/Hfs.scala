@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Storage access through the Hadoop FileSystem API resolved per path
-  * scheme, so the merge sink and the stored ANN/LSH index layouts behave
+  * scheme, so the keyed sink and the stored ANN/LSH index layouts behave
   * identically on `file:`, `hdfs://` and `s3a://` paths. (The previous
   * `java.io.File` listings silently returned empty on any non-local
   * scheme — stale reads instead of errors.) */

@@ -76,26 +76,22 @@ object IngestSegments {
     * single-segment index): a second listing could disagree with the
     * frame under a concurrent ingest/compact (TOCTOU), this cannot. */
   def readLiveWithIds(spark: SparkSession,
-      tablePath: String): Option[(DataFrame, Seq[Long])] = {
-    var lastRace: org.apache.spark.sql.AnalysisException = null
-    for (_ <- 0 until 3) {
+      tablePath: String): Option[(DataFrame, Seq[Long])] =
+    // a concurrent compact delete surfaces as PATH_NOT_FOUND: re-list
+    // and retry
+    Hfs.withPathRaceRetry() {
       val ids = liveSegments(spark, tablePath)
-      if (ids.isEmpty) return None
-      try {
-        return Some((spark.read.option("basePath", tablePath)
+      if (ids.isEmpty) None
+      else try {
+        Some((spark.read.option("basePath", tablePath)
           .parquet(ids.map(id => s"$tablePath/ingest=$id"): _*)
           .withColumn("ingest", col("ingest").cast("long")), ids))
       } catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          return None // real segments, all footerless-empty
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          lastRace = e // concurrent compact delete — re-list and retry
+          None // real segments, all footerless-empty
       }
     }
-    throw lastRace
-  }
 
   /** Align write tasks with the directory layout before a partitionBy
     * write: without it every write task can open a file in EVERY value

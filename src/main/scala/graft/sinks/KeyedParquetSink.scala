@@ -31,10 +31,10 @@ object KeyedParquetSink {
     * in the old partition.
     *
     * The batch executes exactly ONCE: it is local-checkpointed before
-    * anything reads it, and `Dataset.observe` counts its rows on that
-    * same job. Over a stream's foreachBatch frame each job would
-    * otherwise re-run the upstream stateful operator (the touched-dt
-    * probe and the merge are two jobs). Only after that execution may
+    * anything reads it, and `Dataset.observe` counts its rows and
+    * collects its touched dt set on that same job. Over a stream's
+    * foreachBatch frame each job would otherwise re-run the upstream
+    * stateful operator. Only after that execution may
     * an EMPTY batch return — running it is what evicts
     * watermark-expired state and commits the next state version — and
     * then it returns at once: no read of the table, no merge, no
@@ -45,8 +45,15 @@ object KeyedParquetSink {
     val spark = batch.sparkSession
     val cols = batch.columns
     val rows = Observation()
-    val once = batch.observe(rows, count(lit(1)).as("n")).localCheckpoint()
-    if (rows.get("n") == 0L) return
+    // collect_set drops nulls, so a null dt is observed by its count
+    val once = batch.observe(rows, count(lit(1)).as("n"),
+        collect_set(col(dtCol)).as("dts"),
+        count(when(col(dtCol).isNull, lit(1))).as("null_dts"))
+      .localCheckpoint()
+    val stats = rows.get
+    if (stats("n") == 0L) return
+    val touched = stats("dts").asInstanceOf[scala.collection.Seq[Any]].toSeq ++
+      (if (stats("null_dts") == 0L) Nil else Seq(null))
     val incoming = once.withColumn("__is_new", lit(1))
 
     // The table is read with the BATCH's schema: no schema-inference
@@ -59,10 +66,8 @@ object KeyedParquetSink {
     def current() = spark.read.schema(batch.schema).parquet(path)
     val existing0 =
       try {
-        val cur = current()
         // only partitions touched by this batch participate in the merge
-        val touched = incoming.select(col(dtCol)).distinct()
-        Some(cur.join(broadcast(touched), Seq(dtCol), "left_semi")
+        Some(current().filter(inDts(dtCol, touched))
           .withColumn("__is_new", lit(0)))
       } catch {
         // never written means first write; any other failure (e.g. a
@@ -126,16 +131,15 @@ object KeyedParquetSink {
   def deleteWhere(spark: org.apache.spark.sql.SparkSession, path: String,
       dtCol: String, cond: org.apache.spark.sql.Column): Long = {
     val cur = spark.read.parquet(path)
-    val touched = cur.filter(cond).select(col(dtCol)).distinct()
-    if (touched.isEmpty) return 0L
-    val scoped = cur.join(broadcast(touched), Seq(dtCol), "left_semi")
+    val touchedDts = matchedDts(cur, dtCol, cond)
+    if (touchedDts.isEmpty) return 0L
+    val scoped = cur.filter(inDts(dtCol, touchedDts))
     // NULL-safe: a predicate evaluating to NULL means "not matched" — the
     // row must be RETAINED (and not counted). Bare filter(!cond) would
     // silently drop NULL-evaluating rows without counting them.
     val hit = coalesce(cond, lit(false))
     val deleted = scoped.filter(hit).count()
     // materialize BEFORE the overwrite: both read the files it replaces
-    val touchedDts = touched.collect().map(_.get(0)).toSeq
     val remaining = scoped.filter(!hit)
       .select(cur.columns.toIndexedSeq.map(col): _*)
       .localCheckpoint()
@@ -195,9 +199,9 @@ object KeyedParquetSink {
     require(!set.contains(dtCol),
       s"updateWhere: '$dtCol' is the partition column — moving rows " +
         "across partitions is a deleteWhere + upsert, not an update")
-    val touched = cur.filter(cond).select(col(dtCol)).distinct()
-    if (touched.isEmpty) return 0L
-    val scoped = cur.join(broadcast(touched), Seq(dtCol), "left_semi")
+    val touchedDts = matchedDts(cur, dtCol, cond)
+    if (touchedDts.isEmpty) return 0L
+    val scoped = cur.filter(inDts(dtCol, touchedDts))
     val hit = coalesce(cond, lit(false))
     val matched = scoped.filter(hit).count()
     scoped.select(cur.columns.toIndexedSeq.map { c =>
@@ -208,5 +212,21 @@ object KeyedParquetSink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(dtCol).parquet(path)
     matched
+  }
+
+  /** The dt values of the rows `cond` matches (a null dt included). */
+  private def matchedDts(cur: DataFrame, dtCol: String,
+      cond: org.apache.spark.sql.Column): Seq[Any] =
+    cur.filter(cond).select(col(dtCol)).distinct().collect().map(_.get(0)).toSeq
+
+  /** The null-safe partition scope every method rewrites: `dt IN (…)`,
+    * plus `OR dt IS NULL` when a null dt was touched. A join or IN on
+    * dt alone never matches `null = null`, so the Hive default
+    * partition's rows would fall out of the scope — and the dynamic
+    * overwrite would then replace that partition without them. */
+  private def inDts(dtCol: String, dts: Seq[Any]): org.apache.spark.sql.Column = {
+    val (nulls, values) = dts.partition(_ == null)
+    val in = if (values.isEmpty) lit(false) else col(dtCol).isin(values: _*)
+    if (nulls.isEmpty) in else in || col(dtCol).isNull
   }
 }

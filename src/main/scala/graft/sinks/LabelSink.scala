@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * version a pure function of its predecessor.
   *
   * Scale note: each version rewrites the label table once
-  * (dup-doc-sized, far below corpus-sized) plus a hash-min loop over
-  * the CONTRACTED batch graph only — the q115 cost shape, measured in
-  * the removed ScaleProbe's incremental_cc row (PLANS.md). [[compact]]
-  * bounds disk to the chain head plus the replayable tail.
+  * (dup-doc-sized, far below corpus-sized) plus one
+  * `DedupOps.collapseClusters` over the CONTRACTED batch graph only —
+  * the q115 cost shape. [[compact]] bounds disk to the chain head plus
+  * the replayable tail.
   *
   * RETRACTION (r16): deleting a NODE is the one update a contraction
   * step cannot express — removing a doc can SPLIT its cluster (the
@@ -154,7 +154,7 @@ object LabelSink {
       .join(broadcast(affectedReps.select(col("cluster_rep").as("ra"))),
         Seq("ra"), "left_semi")
       .select(col("doc_a"), col("doc_b"))
-    val delta = graft.functions.DedupOps.collapseClustersAdaptive(surviving)
+    val delta = graft.functions.DedupOps.collapseClusters(surviving)
     prev.join(broadcast(affectedReps), Seq("cluster_rep"), "left_anti")
       .select(col("doc_id"), col("cluster_rep"))
       .unionByName(delta.select(col("doc_id"), col("cluster_rep")))

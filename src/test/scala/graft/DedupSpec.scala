@@ -324,81 +324,30 @@ class DedupSpec extends SparkSpec {
     assert(!got.contains(10L), "isolated docs don't appear in the pair graph")
   }
 
-  test("collapseClusters: diameter+1 rounds, single join job per round") {
-    // path graph 0-1-2-3: hash-min needs diameter (3) changing rounds
-    // plus one confirming round
-    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // AQE submits one job per materialized query stage, which triples
-    // the count with scheduling-dependent variance; off, one action ≈
-    // one job (+1 per broadcast build) and the budget below is sharp
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val (labels, rounds) = DedupOps.collapseClustersWithStats(pairs)
-      assert(rounds == 4, s"path of diameter 3 must take 4 rounds, took $rounds")
-      assert(labels.as[(Long, Long)].collect().toMap ==
-        Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L))
-      // listener events are posted asynchronously; onJobStart fires at
-      // submit time, so by the time the actions above returned their
-      // results every job's start event has been posted — drain the bus
-      // (blocking until empty, not a fixed sleep a loaded box can
-      // out-wait) before reading the counter
-      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
-      // job budget: setup (edge checkpoint + label init) + per round ONE
-      // join+groupBy checkpoint job, its broadcast-build job, and the
-      // cached-block convergence sum + the final guard & collect. The
-      // old shape re-joined next⋈labels per round for the changed count
-      // (2 extra jobs/round incl. its broadcast build) and blew this
-      // budget; the margin below stays tight enough to catch that
-      // regression while tolerating AQE's broadcast-job variance.
-      val n = jobs.get()
-      assert(n <= 4 + rounds * 3 + 4,
-        s"collapseClusters ran $n jobs for $rounds rounds — a second " +
-          "per-round join (the old convergence count) would look like this")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
-  test("star contraction ≡ hash-min propagation on the fixture pair graph") {
+  test("star ≡ union-find ≡ BFS on the fixture pair graph") {
     val pairs = DedupOps.shingleJaccardPairs(spark, sf0001)
       .select("doc_a", "doc_b")
-    val viaMin = DedupOps.collapseClusters(pairs)
-      .as[(Long, Long)].collect().toMap
+    val expect = DedupSpec.bfsLabels(pairs.as[(Long, Long)].collect().toSeq)
+    assert(DedupOps.collapseClusters(pairs)
+      .as[(Long, Long)].collect().toMap == expect)
     val (viaStar, rounds) = DedupOps.collapseClustersStarWithStats(pairs)
-    assert(viaStar.as[(Long, Long)].collect().toMap == viaMin)
+    assert(viaStar.as[(Long, Long)].collect().toMap == expect)
     assert(rounds <= 8, s"fixture graph should star-converge fast, took $rounds")
   }
 
-  test("star contraction handles the graphs the hash-min envelope refuses") {
-    // (a) a 100k-leaf star: one component of 100,001 docs — hash-min's
-    // maxComponent guard refuses it below that size; star contraction
-    // collapses it in O(1) rounds
+  test("star contraction collapses a 100k-leaf hub and a 60-chain") {
+    // (a) a 100k-leaf star: one component of 100,001 docs, collapsed in
+    // O(1) rounds
     val mega = spark.range(1, 100001)
       .select(lit(0L).as("doc_a"), col("id").as("doc_b"))
-    intercept[IllegalArgumentException] {
-      DedupOps.collapseClusters(mega, maxComponent = 50000L)
-    }
     val (starLabels, starRounds) =
       DedupOps.collapseClustersStarWithStats(mega)
     assert(starLabels.filter(col("cluster_rep") =!= 0L).count() == 0L)
     assert(starLabels.count() == 100001L)
     assert(starRounds <= 5, s"a star graph is already near-converged, took $starRounds")
-    // (b) a path of diameter 60 — past hash-min's 30-round cap, loud
-    // refusal there, O(log² n) rounds here
+    // (b) a path of diameter 60: O(log² n) rounds, not diameter-many
     val chain = spark.range(60)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    intercept[IllegalArgumentException] {
-      DedupOps.collapseClusters(chain)
-    }
     val (chainLabels, chainRounds) =
       DedupOps.collapseClustersStarWithStats(chain)
     assert(chainLabels.as[(Long, Long)].collect().toMap ==
@@ -407,15 +356,16 @@ class DedupSpec extends SparkSpec {
       s"star contraction must beat the diameter on a 60-chain, took $chainRounds")
   }
 
-  test("star ≡ hash-min on self-pair-bearing input (singletons survive both)") {
+  test("star ≡ union-find ≡ BFS on self-pair-bearing input") {
     // a doc appearing ONLY as a self-pair is still a member of the pair
-    // set: hash-min labels it (5,5); the star variant must not silently
+    // set: it is labeled (5,5); the star variant must not silently
     // drop it just because the contraction erases self-loops. Mixed
     // case: node 0 has both a self-pair and real edges — the self-pair
     // must not override its component label.
-    val pairs = Seq((5L, 5L), (0L, 1L), (0L, 0L), (1L, 2L), (9L, 9L))
-      .toDF("doc_a", "doc_b")
+    val base = Seq((5L, 5L), (0L, 1L), (0L, 0L), (1L, 2L), (9L, 9L))
+    val pairs = base.toDF("doc_a", "doc_b")
     val expect = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 5L, 9L -> 9L)
+    assert(DedupSpec.bfsLabels(base) == expect)
     assert(DedupOps.collapseClusters(pairs)
       .as[(Long, Long)].collect().toMap == expect)
     assert(DedupOps.collapseClustersStarWithStats(pairs)._1
@@ -423,13 +373,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("star round count grows log-, not linearly, in diameter (the O(log²) pin)") {
-    // hash-min needs diameter+1 rounds — 10× the diameter means 10× the
-    // rounds (60-chain: 61). Star contraction roughly halves the
-    // diameter per large/small-star pair, so the same 10× stretch costs
-    // ~log₂(10) ≈ 3-4 extra rounds (measured here: 7 → 11). This is the
-    // measured basis for the crossover guidance next to hash-min's
-    // maxComponent guard (PLANS.md): flip to star once the expected
-    // diameter exceeds a couple dozen.
+    // label propagation needs diameter+1 rounds — 10× the diameter
+    // means 10× the rounds (60-chain: 61). Star contraction roughly
+    // halves the diameter per large/small-star pair, so the same 10×
+    // stretch costs ~log₂(10) ≈ 3-4 extra rounds (measured here:
+    // 7 → 11).
     def chain(n: Long) = spark.range(n)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
     val (l60, r60) = DedupOps.collapseClustersStarWithStats(chain(60))
@@ -443,105 +391,62 @@ class DedupSpec extends SparkSpec {
       s"10× the diameter must cost ~log₂(10) extra star rounds: $r60 -> $r600")
   }
 
-  test("collapseClusters fails loudly on a component above maxComponent") {
-    // star of 1 hub + 11 leaves: converges in 2 rounds but the single
-    // component has 12 docs — outside a maxComponent=10 envelope the
-    // caller declared; the answer must be a loud refusal, not a silent
-    // success that normalizes boilerplate mega-clusters
-    val pairs = (1L to 11L).map(i => (0L, i)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalArgumentException] {
-      DedupOps.collapseClusters(pairs, maxComponent = 10L)
+  test("collapseClusters: the fixture graph takes the union-find route in 4 jobs") {
+    // the pairs are collected first so the pin counts the router's own
+    // jobs, not the pair generation's
+    val base = DedupOps.shingleJaccardPairs(spark, sf0001)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
+    val pairs = base.toDF("doc_a", "doc_b")
+    val expect = DedupSpec.bfsLabels(base)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    assert(e.getMessage.contains("star contraction"),
-      "the refusal must name the escape hatch")
-    // and the same graph passes with the guard raised
-    val ok = DedupOps.collapseClusters(pairs, maxComponent = 12L)
-    assert(ok.filter(col("doc_id") === col("cluster_rep")).count() == 1L)
-  }
-
-  test("auto router: small near-dup graph takes hash-min and matches it exactly") {
-    val pairs = DedupOps.shingleJaccardPairs(spark, sf0001)
-      .select("doc_a", "doc_b")
-    val expect = DedupOps.collapseClusters(pairs)
-      .as[(Long, Long)].collect().toMap
-    val (labels, route, rounds) =
-      DedupOps.collapseClustersAutoWithStats(pairs)
-    assert(route == "hash-min",
-      s"a small bounded-diameter graph must take the cheap path, took $route")
-    assert(labels.as[(Long, Long)].collect().toMap == expect)
-    assert(rounds >= 1)
-  }
-
-  test("auto router: probed mega-hub degree routes straight to star, no wasted hash-min pass") {
-    // hub 0 with 20 leaves: maxDeg 20 ≥ maxComponent 10 — the degree
-    // probe already knows hash-min's guard would only refuse AFTER
-    // converging, so the router must not pay that pass
-    val mega = (1L to 20L).map(i => (0L, i)).toDF("doc_a", "doc_b")
-    val (labels, route, _) =
-      DedupOps.collapseClustersAutoWithStats(mega, maxComponent = 10L)
-    assert(route == "star", s"a probed mega-hub must route to star, took $route")
-    assert(labels.filter(col("cluster_rep") =!= 0L).count() == 0L)
-    assert(labels.count() == 21L)
+    spark.sparkContext.addSparkListener(listener)
+    val local = try {
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      jobs.set(0)
+      val l = DedupOps.collapseClusters(pairs)
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+      l
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // measured: the routing count plus the collect that feeds the
+    // union-find — no distributed round runs
+    assert(jobs.get() == 4, s"the union-find route ran ${jobs.get()} jobs")
+    assert(DedupSpec.unionFindRoute(local))
+    assert(local.as[(Long, Long)].collect().toMap == expect)
+    val star = DedupOps.collapseClusters(pairs, localEdgeThreshold = 0L)
+    assert(!DedupSpec.unionFindRoute(star), "threshold 0 must force star contraction")
+    assert(star.as[(Long, Long)].collect().toMap == expect)
   }
 
   test("auto router: edge count past the crossover routes to star") {
-    // 32 edges with starEdgeThreshold=16: past the (test-scaled)
-    // measured crossover, star's fewer rounds win — route on size alone
+    // a 32-edge chain: at localEdgeThreshold = 32 the union-find answers
+    // (the threshold is inclusive), one below it star contraction does
     val pairs = spark.range(32)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val (labels, route, _) = DedupOps.collapseClustersAutoWithStats(
-      pairs, starEdgeThreshold = 16L)
-    assert(route == "star", s"edge count ≥ threshold must route to star, took $route")
-    assert(labels.filter(col("cluster_rep") =!= 0L).count() == 0L)
-  }
-
-  test("envelope refusals are TYPED — a bare IAE from inside the engine would propagate") {
-    // both guard sites (diameter cap, component-size cap) must throw
-    // the EnvelopeRefused subtype: the auto router catches ONLY that,
-    // so a genuine programming-error IllegalArgumentException can no
-    // longer be silently reclassified as a star fallback
-    val chain = spark.range(60)
-      .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val diam = intercept[IllegalArgumentException] {
-      DedupOps.collapseClusters(chain)
-    }
-    assert(diam.isInstanceOf[DedupOps.EnvelopeRefused],
-      s"diameter refusal must be EnvelopeRefused, was ${diam.getClass}")
-    val mega = (1L to 20L).map(i => (0L, i)).toDF("doc_a", "doc_b")
-    val size = intercept[IllegalArgumentException] {
-      DedupOps.collapseClusters(mega, maxComponent = 10L)
-    }
-    assert(size.isInstanceOf[DedupOps.EnvelopeRefused],
-      s"size refusal must be EnvelopeRefused, was ${size.getClass}")
-  }
-
-  test("auto router: a long chain the degree probe cannot see falls back to star") {
-    // diameter 60, max degree 2, 60 edges — the probe sees nothing
-    // alarming, hash-min runs and trips its 30-round envelope, and the
-    // router must convert that refusal into the star answer
-    val chain = spark.range(60)
-      .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val (labels, route, _) = DedupOps.collapseClustersAutoWithStats(chain)
-    assert(route == "star-fallback",
-      s"an envelope trip must be caught and paid as star, took $route")
-    assert(labels.as[(Long, Long)].collect().toMap ==
-      (0L to 60L).map(_ -> 0L).toMap)
+    val expect = (0L to 32L).map(_ -> 0L).toMap
+    val local = DedupOps.collapseClusters(pairs, localEdgeThreshold = 32L)
+    assert(DedupSpec.unionFindRoute(local), "edge count ≤ threshold must take the union-find")
+    assert(local.as[(Long, Long)].collect().toMap == expect)
+    val star = DedupOps.collapseClusters(pairs, localEdgeThreshold = 31L)
+    assert(!DedupSpec.unionFindRoute(star), "edge count > threshold must route to star")
+    assert(star.as[(Long, Long)].collect().toMap == expect)
   }
 
   test("auto router: self-pair singletons survive every route") {
     val base = Seq((5L, 5L), (0L, 1L), (9L, 9L))
     val expect = Map(0L -> 0L, 1L -> 0L, 5L -> 5L, 9L -> 9L)
-    // hash-min route
-    val (a, ra, _) = DedupOps.collapseClustersAutoWithStats(
-      base.toDF("doc_a", "doc_b"))
-    assert(ra == "hash-min")
-    assert(a.as[(Long, Long)].collect().toMap == expect)
-    // star route (forced by threshold): self-pairs must not count as
-    // degree in the probe, and must still come back as singletons
-    val (b, rb, _) = DedupOps.collapseClustersAutoWithStats(
-      base.toDF("doc_a", "doc_b"), starEdgeThreshold = 1L)
-    assert(rb == "star")
-    assert(b.as[(Long, Long)].collect().toMap == expect)
+    assert(DedupSpec.bfsLabels(base) == expect)
+    for (threshold <- Seq(1000000L, 0L)) {
+      val labels = DedupOps.collapseClusters(base.toDF("doc_a", "doc_b"),
+        localEdgeThreshold = threshold)
+      assert(DedupSpec.unionFindRoute(labels) == (threshold > 0L))
+      assert(labels.as[(Long, Long)].collect().toMap == expect,
+        s"threshold $threshold")
+    }
   }
 
   test("SortedIntersectCount ≡ size(array_intersect) on every fixture doc pair sample") {
@@ -1251,5 +1156,32 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(want.nonEmpty, "fixture lost its duplicated 8-grams")
     assert(got == want, s"spans drifted: ${(got -- want).take(3)} vs ${(want -- got).take(3)}")
+  }
+}
+
+object DedupSpec {
+  /** The union-find route hands its labels back as a driver-side local
+    * relation; star contraction's come from an RDD. */
+  def unionFindRoute(labels: org.apache.spark.sql.DataFrame): Boolean =
+    labels.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Component min-id labels by plain breadth-first search — the
+    * reference both collapse engines are checked against, sharing no
+    * code with either. */
+  def bfsLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    for (start <- adj.keys.toSeq.sorted if !label.contains(start)) {
+      // ascending starts: the first unseen node IS its component's min
+      label(start) = start
+      var frontier = List(start)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj).distinct.filterNot(label.contains)
+        frontier.foreach(n => label(n) = start)
+      }
+    }
+    label.toMap
   }
 }

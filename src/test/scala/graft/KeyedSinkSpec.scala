@@ -241,11 +241,35 @@ class KeyedSinkSpec extends SparkSpec {
       .sorted.toSeq == Seq("m1", "m2"))
   }
 
-  test("job budget: a non-empty upsert onto a table runs 6 Spark jobs") {
-    // 8 with the separate emptiness probe over the checkpointed batch
-    // and the schema-inference read of the table: the row count now
-    // rides the checkpoint job, and the table is read with the batch's
-    // schema
+  test("a null dt is one partition to upsert, deleteWhere and updateWhere") {
+    import org.apache.spark.sql.functions._
+    // `null = null` never matches, so a dt join or IN alone drops the
+    // Hive default partition's rows from the rewrite scope
+    val path = Files.createTempDirectory("sink_null_dt").toString + "/t"
+    def rows = spark.read.parquet(path).select("mid", "amount")
+      .as[(String, Double)].collect().sorted.toSeq
+    KeyedParquetSink.upsert(
+      table(("m1", null, 1L, 10.0), ("m2", null, 1L, 20.0),
+        ("m3", null, 1L, 30.0), ("m4", "2024-01-01", 1L, 40.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    // a newer m1 must not delete its null-dt neighbours
+    KeyedParquetSink.upsert(table(("m1", null, 2L, 11.0)),
+      path, Seq("mid", "dt"), "dt", "ver")
+    assert(rows == Seq(("m1", 11.0), ("m2", 20.0), ("m3", 30.0), ("m4", 40.0)))
+    // deleting one null-dt row counts it and keeps the rest of the
+    // partition
+    assert(KeyedParquetSink.deleteWhere(spark, path, "dt",
+      col("mid") === "m2") == 1L)
+    assert(rows == Seq(("m1", 11.0), ("m3", 30.0), ("m4", 40.0)))
+    assert(KeyedParquetSink.updateWhere(spark, path, "dt",
+      col("mid") === "m3", Map("amount" -> lit(33.0))) == 1L)
+    assert(rows == Seq(("m1", 11.0), ("m3", 33.0), ("m4", 40.0)))
+  }
+
+  test("job budget: a non-empty upsert onto a table runs 4 Spark jobs") {
+    // the row count and the touched dt set ride the checkpoint job, and
+    // the table is read with the batch's schema: no emptiness probe, no
+    // dt-set job, no schema-inference job
     val path = Files.createTempDirectory("sink_jobs").toString + "/t"
     KeyedParquetSink.upsert(
       table(("m1", "2024-01-01", 1L, 10.0), ("m2", "2024-01-02", 1L, 20.0)),
@@ -263,7 +287,7 @@ class KeyedSinkSpec extends SparkSpec {
       jobs.set(0)
       KeyedParquetSink.upsert(b, path, Seq("mid", "dt"), "dt", "ver")
       org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
-      assert(jobs.get() == 6, s"a non-empty upsert ran ${jobs.get()} jobs")
+      assert(jobs.get() == 4, s"a non-empty upsert ran ${jobs.get()} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(spark.read.parquet(path).select("mid", "amount")
       .as[(String, Double)].collect().sorted.toSeq ==

@@ -65,7 +65,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == Set((0L, 0L), (1L, 0L)), s"got $got")
   }
 
-  test("collapseClustersAdaptive: local ≡ star ≡ hash-min on random multigraphs; both routes honor the contract") {
+  test("collapseClusters: union-find ≡ star ≡ BFS on random multigraphs") {
     import graft.functions.DedupOps
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 8) {
@@ -74,12 +74,11 @@ class PipelineOpsSpec extends SparkSpec {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       } ++ Seq((n.toLong + 5, n.toLong + 5)) // a self-pair singleton
       val pairs = edges.toDF("doc_a", "doc_b")
-      val expect = DedupOps.collapseClusters(pairs)
+      val expect = DedupSpec.bfsLabels(edges).toSet
+      val local = DedupOps.collapseClusters(pairs)
         .as[(Long, Long)].collect().toSet
-      val local = DedupOps.collapseClustersAdaptive(pairs)
-        .as[(Long, Long)].collect().toSet
-      assert(local == expect, s"trial $trial: local route diverged")
-      val star = DedupOps.collapseClustersAdaptive(pairs, localEdgeThreshold = 0L)
+      assert(local == expect, s"trial $trial: union-find route diverged")
+      val star = DedupOps.collapseClusters(pairs, localEdgeThreshold = 0L)
         .as[(Long, Long)].collect().toSet
       assert(star == expect, s"trial $trial: star route diverged")
     }

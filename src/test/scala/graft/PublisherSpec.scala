@@ -3,12 +3,13 @@ package graft
 import graft.operators.Publisher
 
 /** The REST payload assembly matches the underlying oracle-checked
-  * queries (q02/q03/q06/q07 are the value-level gates; this spec pins
-  * the response SHAPES the reference's controllers return). */
+  * queries (q77/q78 are the value-level gates; this spec pins the
+  * response SHAPES the reference's controllers return). */
 class PublisherSpec extends SparkSpec {
 
   test("dauRealtime: total + today/yesterday hourly maps") {
-    val r = Publisher.dauRealtime(spark, sf0001, "2024-01-15")
+    Graft.init(spark, sf0001)
+    val r = Publisher.dauRealtimeSql(spark, "2024-01-15")
     assert(r.dauTotal > 0)
     assert(r.dauTd.nonEmpty && r.dauYd.nonEmpty)
     assert(r.dauTd.keys.forall(h => h.length == 2 && h <= "23"))
@@ -18,24 +19,19 @@ class PublisherSpec extends SparkSpec {
   }
 
   test("statsByItem: token match + segment relabel and acctbal bands") {
-    val bySeg = Publisher.statsByItem(spark, sf0001, Seq("small", "widget"), "segment")
+    Graft.init(spark, sf0001)
+    val bySeg = Publisher.statsByItemSql(spark, Seq("small", "widget"), "segment")
     assert(bySeg.nonEmpty &&
       bySeg.map(_.name).toSet.subsetOf(Set("auto", "building", "machinery", "other")))
     assert(bySeg == bySeg.sortBy(-_.value)) // ordered by value desc
-    val byBand = Publisher.statsByItem(spark, sf0001, Seq("small", "widget"), "band")
+    val byBand = Publisher.statsByItemSql(spark, Seq("small", "widget"), "band")
     assert(byBand.map(_.name).toSet.subsetOf(Set("negative", "mid", "high")))
     intercept[IllegalArgumentException] {
-      Publisher.statsByItem(spark, sf0001, Seq("x"), "bogus")
+      Publisher.statsByItemSql(spark, Seq("x"), "bogus")
     }
   }
 
-  test("SQL-first twins: both endpoints through spark.sql over Graft.init views equal the programmatic payloads") {
-    Graft.init(spark, sf0001)
-    assert(Publisher.dauRealtimeSql(spark, "2024-01-15") ==
-      Publisher.dauRealtime(spark, sf0001, "2024-01-15"))
-    for (t0 <- Seq("segment", "band"))
-      assert(Publisher.statsByItemSql(spark, Seq("small", "widget"), t0) ==
-        Publisher.statsByItem(spark, sf0001, Seq("small", "widget"), t0))
+  test("statsByItemSql refuses an injected token before any SQL runs") {
     intercept[IllegalArgumentException] {
       Publisher.statsByItemSql(spark, Seq("x'; DROP--"), "segment")
     }
