@@ -1079,7 +1079,7 @@ object DedupOps {
     * shingle-hash array through all 8 of its band rows — and `docs` holds
     * (doc_id, hs) once per doc, verified by shingle Jaccard rounded to 4
     * digits (minhashLsh's rounding). */
-  private val lshIndex = graft.sinks.BandedIndex(
+  private[graft] val lshIndex = graft.sinks.BandedIndex(
     graft.sinks.SegmentIndex("bands", "doc_id", Seq("doc_id", "band", "bhash"),
       part = Some("bmod"), hashOf = Some(col("bhash") -> lshIndexBuckets)),
     graft.sinks.SegmentIndex("docs", "doc_id", Seq("doc_id", "hs"),
@@ -1088,44 +1088,6 @@ object DedupOps {
       val inter = graft.expressions.VectorHashes.sorted_intersect_count(a, b)
       round(inter / (size(a) + size(b) - inter), 4)
     })
-
-  /** Bulk bootstrap: ingestId must be NEGATIVE (default -1) and not a
-    * compaction fold — streaming batches use batchId ≥ 0 in overwrite
-    * mode, so a non-negative bootstrap would be silently clobbered by
-    * that batch's segment write. */
-  def buildLshIndex(docs: DataFrame, path: String, ingestId: Long = -1L): Unit =
-    lshIndex.build(docs, path, ingestId)
-
-  /** The unguarded segment write — the streaming writer's path (batchId
-    * ≥ 0, overwrite-on-replay). */
-  private[graft] def ingestLshSegment(docs: DataFrame, path: String,
-      ingestId: Long): Unit = lshIndex.ingest(docs, path, ingestId)
-
-  /** Compact both index tables: bands fold to their distinct exact rows,
-    * docs to the latest version per doc_id. */
-  def compactLshIndex(spark: SparkSession, path: String): Unit =
-    lshIndex.compact(spark, path)
-
-  /** Candidate (new_doc, dup_of, hs_n) rows of a probe. Public for
-    * LshIndexSpec's plan assertions. */
-  def lshProbeCandidates(newDocs: DataFrame, path: String,
-      maxPerBucket: Option[Int] = None): DataFrame =
-    lshIndex.candidates(newDocs, path, maxPerBucket)
-
-  /** Probe: near-dup pairs (new_doc, dup_of, jaccard) with verified
-    * shingle Jaccard ≥ threshold. */
-  def probeLshIndex(newDocs: DataFrame, path: String,
-      threshold: Double = 0.5, maxPerBucket: Option[Int] = None): DataFrame =
-    lshIndex.probe(newDocs, path, threshold, maxPerBucket)
-
-  /** Streaming near-dup admission: probe, in-batch self-dedup, then the
-    * admitted docs and their index segment, both overwrite-by-batchId.
-    * `maxPerBucket` is the probe's hot-bucket cap, the knob that bounds
-    * per-batch latency when the INDEX carries a boilerplate cluster. */
-  def streamingDedupWriter(indexPath: String, outDir: String,
-      threshold: Double = 0.5, maxPerBucket: Option[Int] = None)(
-      batch: DataFrame, batchId: Long): Unit =
-    lshIndex.writer(indexPath, outDir, threshold, maxPerBucket)(batch, batchId)
 
   /** Streaming decontamination admission — q75's Bloom+exact gate
     * applied per micro-batch: an incoming doc is dropped when it shares
@@ -1136,7 +1098,7 @@ object DedupOps {
     * is the batch's own scan. Admitted docs write keyed by batchId in
     * overwrite mode — an at-least-once foreachBatch retry replaces its
     * own output, the same idempotence contract as
-    * [[streamingDedupWriter]]. The writer IS a `(DataFrame, Long) =>
+    * `lshIndex.writer`. The writer IS a `(DataFrame, Long) =>
     * Unit` for foreachBatch; call [[StreamingDecontamination.release]]
     * after stopping the stream — the gate's persisted bench frame does
     * NOT free itself when the query stops. */
@@ -1310,7 +1272,7 @@ object DedupOps {
     * three-cut), labels are maintained incrementally, and the final
     * table must hash-equal q62's batch answer under the shared
     * closure oracle. The pair SET is q41's (pair generation is the
-    * index probes' job — q46/streamingDedupWriter produce exactly
+    * index probes' job — q46/`lshIndex.writer` produce exactly
     * these edges in production; replaying their arrival is what
     * exercises the graph maintenance).
     *
@@ -1747,11 +1709,9 @@ object DedupOps {
     * SAME store, the q62/q111/q151 shared-layout convention applied to
     * the span family. Built once through [[graft.sinks.Lifecycle]]. */
   private def ensureSubstrLifecycle(s: SparkSession, d: String): String =
-    // kind carries the layout version (the __buckets geometry-pin
-    // convention): r16 added the persisted `ing` column + tombstone
-    // rows — a pre-r16 store under the old kind must rebuild, not
-    // serve a schema the resolve cannot read
-    TextOps.ensureCutLifecycle(s, d, "substrstream-v2ing",
+    // kind carries the layout version (see LedgerStore): an older
+    // store must rebuild, not serve a layout the resolve misreads
+    TextOps.ensureCutLifecycle(s, d, "substrstream-v3side",
       graft.sinks.SubstrIndexSink.writer,
       loc => graft.sinks.SubstrIndexSink.compact(s, loc))
 
@@ -1957,9 +1917,8 @@ object DedupOps {
   }
 
   private def ensureDecontamRegistry(s: SparkSession, d: String): String =
-    // layout-versioned kind (see ensureSubstrLifecycle): r16 moved the
-    // registry from global distinct hashes to per-doc pair rows
-    TextOps.ensureCutLifecycle(s, d, "decontamreg-v2pairs",
+    // layout-versioned kind (see LedgerStore)
+    TextOps.ensureCutLifecycle(s, d, "decontamreg-v3side",
       graft.sinks.BenchRegistrySink.writer,
       loc => graft.sinks.BenchRegistrySink.compact(s, loc))
 
@@ -1999,7 +1958,7 @@ object DedupOps {
     * mid-lifecycle fold, retract docs ≡ 3 (mod 10), RESURRECT the ≡ 3
     * (mod 20) half (CDC insert-after-delete — latest-wins on the
     * persisted logical `ing`), a second fold (tombstones cross the
-    * fold boundary: dead positions dropped, tombstones carried), and a
+    * fold boundary: dead positions dropped, inert tombstones purged), and a
     * final live-tail retraction of the ≡ 3 (mod 40) quarter (read-time
     * resolve must mask fold rows and re-kill a resurrected doc). The
     * served spans are hash-gated against q154's batch oracle
@@ -2010,7 +1969,7 @@ object DedupOps {
     * dup witness; the sum telescopes to the live corpus exactly). */
   val substringRetract: Q = (s, d) =>
     graft.sinks.SubstrIndexSink.spans(s,
-      graft.functions.TextOps.ensureRetractLifecycle(s, d, "substrretract",
+      graft.functions.TextOps.ensureRetractLifecycle(s, d, "substrretract-v2side",
         graft.sinks.SubstrIndexSink.writer,
         graft.sinks.SubstrIndexSink.retract,
         loc => graft.sinks.SubstrIndexSink.compact(s, loc)))
@@ -2032,7 +1991,7 @@ object DedupOps {
     removalFromSpans(train, decontamSpansFromRegistry(
       graft.sinks.BenchRegistrySink.registry(s,
         graft.functions.TextOps.ensureRetractLifecycle(s, d,
-          "decontamregretract",
+          "decontamregretract-v2side",
           graft.sinks.BenchRegistrySink.writer,
           graft.sinks.BenchRegistrySink.retract,
           loc => graft.sinks.BenchRegistrySink.compact(s, loc),

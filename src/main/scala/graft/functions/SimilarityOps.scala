@@ -1058,51 +1058,12 @@ object SimilarityOps {
   /** The persistent embedding index at width `dims`, a
     * [[graft.sinks.BandedIndex]] verified by exact cosine rounded to 6
     * digits. The fold and the stored layout do not depend on `dims`. */
-  private def embIndex(dims: Int) = graft.sinks.BandedIndex(
+  private[graft] def embIndex(dims: Int) = graft.sinks.BandedIndex(
     graft.sinks.SegmentIndex("bands", "vec_id", Seq("vec_id", "band", "bv"),
       part = Some("bmod"), hashOf = Some(col("bkey") -> embIndexBuckets)),
     graft.sinks.SegmentIndex("vecs", "vec_id", Seq("vec_id", "v"),
       latestBy = Some("ingest")),
     embIndexRows(_, dims), "new_vec", "cosine", (a, b) => round(fcos(a, b), 6))
-
-  /** Bulk bootstrap: ingestId must be NEGATIVE (default -1) and not a
-    * compaction fold. */
-  def buildEmbLshIndex(vecs: DataFrame, path: String, ingestId: Long = -1L,
-      dims: Int = 64): Unit = embIndex(dims).build(vecs, path, ingestId)
-
-  /** The unguarded segment write (overwrite-by-ingestId, so foreachBatch
-    * retries replace their own output). */
-  private[graft] def ingestEmbSegment(vecs: DataFrame, path: String,
-      ingestId: Long, dims: Int = 64): Unit =
-    embIndex(dims).ingest(vecs, path, ingestId)
-
-  /** Compact both index tables: bands fold to their distinct exact rows,
-    * vecs to the latest version per vec_id. */
-  def compactEmbLshIndex(spark: SparkSession, path: String): Unit =
-    embIndex(64).compact(spark, path)
-
-  /** Candidate (new_vec, dup_of, v_n) rows: bmod-pruned scan, broadcast
-    * probe — public for EmbIndexSpec's plan assertions. */
-  def embProbeCandidates(newVecs: DataFrame, path: String,
-      maxPerBucket: Option[Int] = None, dims: Int = 64): DataFrame =
-    embIndex(dims).candidates(newVecs, path, maxPerBucket)
-
-  /** Probe: (new_vec, dup_of, cosine) pairs with verified exact cosine
-    * ≥ threshold. New vectors are NOT indexed here — callers
-    * buildEmbLshIndex after admission (dedup-then-ingest). */
-  def probeEmbLshIndex(newVecs: DataFrame, path: String,
-      threshold: Double = 0.9, maxPerBucket: Option[Int] = None,
-      dims: Int = 64): DataFrame =
-    embIndex(dims).probe(newVecs, path, threshold, maxPerBucket)
-
-  /** Streaming near-dup admission for embeddings: probe the index,
-    * self-dedup the batch, write admitted vectors + their index segment
-    * keyed by batchId in overwrite mode. */
-  def streamingEmbDedupWriter(indexPath: String, outDir: String,
-      threshold: Double = 0.9, maxPerBucket: Option[Int] = None,
-      dims: Int = 64)(
-      batch: DataFrame, batchId: Long): Unit =
-    embIndex(dims).writer(indexPath, outDir, threshold, maxPerBucket)(batch, batchId)
 
   /** Int8 scalar quantization of the embedding column — the storage
     * scale play for ANN (4× smaller index, SIMD int8 dot products).

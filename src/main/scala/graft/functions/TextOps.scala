@@ -881,11 +881,10 @@ object TextOps {
     * post-fold fast case — and the top-k over that merged state must
     * hash-equal q82's single-pass batch answer exactly. */
   val vocabStream: Q = (s, d) =>
-    // kind carries the layout version (the ensureSubstrLifecycle
-    // convention): r17 split the store into rows ledger + agg partials
-    // (retraction support) — a pre-r17 flat layout must rebuild
+    // kind carries the layout version (see LedgerStore): an older
+    // layout must rebuild
     vocabTopK(graft.sinks.VocabSink.read(s,
-      ensureCutLifecycle(s, d, "vocabstream-v3led",
+      ensureCutLifecycle(s, d, "vocabstream-v4side",
         graft.sinks.VocabSink.writer,
         loc => graft.sinks.VocabSink.compact(s, loc))), 200)
 
@@ -902,7 +901,7 @@ object TextOps {
     * exactly. */
   val vocabRetract: Q = (s, d) =>
     vocabTopK(graft.sinks.VocabSink.read(s,
-      ensureRetractLifecycle(s, d, "vocabretract",
+      ensureRetractLifecycle(s, d, "vocabretract-v2side",
         graft.sinks.VocabSink.writer,
         graft.sinks.VocabSink.retract,
         loc => graft.sinks.VocabSink.compact(s, loc))), 200)
@@ -921,7 +920,7 @@ object TextOps {
     * oracle. */
   val phraseStream: Q = (s, d) =>
     graft.sinks.PhraseIndexSink.read(s,
-      ensureCutLifecycle(s, d, "phrasestream-v3led",
+      ensureCutLifecycle(s, d, "phrasestream-v4side",
         graft.sinks.PhraseIndexSink.writer,
         loc => graft.sinks.PhraseIndexSink.compact(s, loc)), minDf = 3L)
 
@@ -934,7 +933,7 @@ object TextOps {
     * live-tail re-retract. */
   val phraseRetract: Q = (s, d) =>
     graft.sinks.PhraseIndexSink.read(s,
-      ensureRetractLifecycle(s, d, "phraseretract",
+      ensureRetractLifecycle(s, d, "phraseretract-v2side",
         graft.sinks.PhraseIndexSink.writer,
         graft.sinks.PhraseIndexSink.retract,
         loc => graft.sinks.PhraseIndexSink.compact(s, loc)), minDf = 3L)
@@ -948,7 +947,7 @@ object TextOps {
     * Σ√ denominator shrinks to the live sources). */
   val sourceStatsRetract: Q = (s, d) =>
     graft.sinks.SourceStatsSink.mixturePlan(s,
-      ensureRetractLifecycle(s, d, "sourcestatsretract",
+      ensureRetractLifecycle(s, d, "sourcestatsretract-v2side",
         graft.sinks.SourceStatsSink.writer,
         graft.sinks.SourceStatsSink.retract,
         loc => graft.sinks.SourceStatsSink.compact(s, loc)), 1000000L)

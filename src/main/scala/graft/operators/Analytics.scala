@@ -448,11 +448,10 @@ object Analytics {
     * the gate also certifies at-least-once idempotence, the q116
     * convention. */
   val retentionStream: Q = (s, d) =>
-    // kind carries the layout version: r17 moved the activity set to
-    // an IngestSegments row store (user-retraction support) — a
-    // pre-r17 AdditiveSegments layout must rebuild
+    // kind carries the layout version (see LedgerStore): an older
+    // layout must rebuild
     cohortMatrixOf(graft.sinks.RetentionSink.read(s,
-      ensureEventCutLifecycle(s, d, "retentionstream-v2ing")))
+      ensureEventCutLifecycle(s, d, "retentionstream-v3side")))
 
   /** Three-cut lifecycle state over the EVENTS table (the q102/q103
     * builder keyed to documents; this one cuts events by event_id):
@@ -486,7 +485,7 @@ object Analytics {
     * against q118's batch oracle over the LIVE users only. */
   val retentionRetract: Q = (s, d) =>
     cohortMatrixOf(graft.sinks.RetentionSink.read(s,
-      ensureUserRetractLifecycle(s, d, "retentionretract",
+      ensureUserRetractLifecycle(s, d, "retentionretract-v2side",
         t(s, d, "events"), col("event_id"),
         graft.sinks.RetentionSink.writer,
         graft.sinks.RetentionSink.retract,
@@ -501,7 +500,7 @@ object Analytics {
     * batch oracle over the live users. */
   val sessionRetract: Q = (s, d) =>
     sessionSummaryOf(graft.sinks.SessionSink.read(s,
-      ensureUserRetractLifecycle(s, d, "sessionretract",
+      ensureUserRetractLifecycle(s, d, "sessionretract-v2side",
         gapSessionsOf(t(s, d, "events")), col("start_us"),
         graft.sinks.SessionSink.writer,
         graft.sinks.SessionSink.retract,
@@ -1484,9 +1483,8 @@ object Analytics {
     // see sessionAgg's scaladoc), so their own single-event sessions
     // land in the store and are dropped here
     sessionSummaryOf(graft.sinks.SessionSink.read(s,
-      // -v2ing: r17 moved the session store to an IngestSegments row
-      // store (user-retraction support) — pre-r17 layouts rebuild
-      ensureOrderedFeedLifecycle(s, d, "sessionstream-v2ing")(ds =>
+      // layout-versioned kind (see LedgerStore)
+      ensureOrderedFeedLifecycle(s, d, "sessionstream-v3side")(ds =>
         graft.streaming.Streams.sessionAgg(ds, delay = "1 hour"))(
         graft.sinks.SessionSink.writer, graft.sinks.SessionSink.compact))
       .filter(col("user_id") >= 0))

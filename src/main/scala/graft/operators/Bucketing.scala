@@ -276,9 +276,8 @@ object Bucketing {
   }
 
   /** The COMMITTED delta segments above `h`, with the EXACT id listing
-    * the frame was planned over (the readLiveWithIds TOCTOU rule: the
-    * fold must delete precisely the segments it folded, not a second
-    * listing's). Uncommitted (torn, crash-mid-ingest) segments are
+    * the frame was planned over (a TOCTOU rule: the fold must delete
+    * precisely the segments it folded, not a second listing's). Uncommitted (torn, crash-mid-ingest) segments are
     * excluded from read AND fold — they heal when the stream replays
     * their batch; folding one would delete rows the horizon then claims
     * were kept. The read retries the fold-delete race (a reader in

@@ -4,6 +4,8 @@ import graft.sources.Envelopes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** CDC op decode + dynamic fact/dim routing (ref app/OdsBaseDbApp.scala:
   * 80-148, SURVEY.md §2.2 P9-P10).
   *
@@ -105,10 +107,16 @@ object CdcRouter {
     * fact/dim-only map left open — the error side had to be remembered
     * by hand). */
   def route(raw: DataFrame, factTables: Seq[String], dimTables: Seq[String])
-      : Map[String, DataFrame] = {
-    val parsed = Envelopes.parseCdc(raw)
+      : ListMap[String, DataFrame] =
+    routeParsed(Envelopes.parseCdc(raw), factTables, dimTables)
+
+  /** [[route]] over one parsed frame — the one route table, in publish
+    * order. Callers persist `parsed` before materializing more than one
+    * output. */
+  def routeParsed(parsed: DataFrame, factTables: Seq[String],
+      dimTables: Seq[String]): ListMap[String, DataFrame] = {
     val decoded = decode(parsed)
-    Map("fact" -> facts(decoded, factTables),
+    ListMap("fact" -> facts(decoded, factTables),
       "dim" -> dims(decoded, dimTables),
       "error" -> undecodable(parsed)
         .unionByName(unkeyedDims(decoded, dimTables))

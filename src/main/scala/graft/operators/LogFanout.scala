@@ -4,6 +4,8 @@ import graft.sources.Envelopes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** The 5-way log fan-out (ref app/OdsBaseLogApp.scala:88-198, SURVEY.md
   * §2.2 P3-P8): one parsed stream splits into error / start / page /
   * display / action outputs. The reference walks each record imperatively
@@ -96,15 +98,16 @@ object LogFanout {
       col("j.start.open_ad_skip_ms").as("open_ad_skip_ms"),
       col("j.ts").as("ts")): _*)
 
-  /** All five outputs from one parsed frame. Callers persist `parsed`
-    * before materializing more than one output. */
-  def fanout(raw: DataFrame): Map[String, DataFrame] = {
-    val parsed = Envelopes.parseLog(raw)
-    Map(
-      "error" -> errors(parsed),
-      "page" -> pages(parsed),
-      "display" -> displays(parsed),
-      "action" -> actions(parsed),
-      "start" -> starts(parsed))
-  }
+  /** All five outputs of a raw log batch, in publish order. */
+  def fanout(raw: DataFrame): ListMap[String, DataFrame] =
+    fanoutParsed(Envelopes.parseLog(raw))
+
+  /** The five outputs over one parsed frame — the one route table.
+    * Callers persist `parsed` before materializing more than one. */
+  def fanoutParsed(parsed: DataFrame): ListMap[String, DataFrame] = ListMap(
+    "error" -> errors(parsed),
+    "page" -> pages(parsed),
+    "display" -> displays(parsed),
+    "action" -> actions(parsed),
+    "start" -> starts(parsed))
 }

@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * reasons must stop cutting training docs): retraction is per doc,
   * and a gram shared by a retracted and a surviving benchmark doc must
   * survive — only the pair rows tell those apart. A [[LedgerStore]]
-  * declaration with no aggregate: `retract` writes tombstone rows
-  * (explicit `tomb` flag — `h` spans the full hash range, so no
-  * sentinel exists) under the [[IngestSegments]] retraction
+  * declaration with no aggregate: `retract` writes one side-table
+  * tombstone per doc under the [[IngestSegments]] retraction
   * convention, a later `writer` batch re-admitting a doc resurrects it
   * (higher `ing`), `cdc` is the delete-wins mixed hook, and
   * [[registry]] resolves latest-wins per doc before projecting the hash
@@ -48,8 +47,6 @@ import org.apache.spark.sql.functions._
   * registry.
   */
 object BenchRegistrySink extends LedgerStore("doc_id",
-    IngestSegments.TombStat.NeverTrue("tomb"),
-    fill = Seq("h" -> lit(0L), "tomb" -> lit(true)),
     dedup = Seq("doc_id", "h"),
     // the q162 benchmark cut — the ONE shared boundary constant: the
     // hooks filter it so lifecycle batches can feed the raw mixed

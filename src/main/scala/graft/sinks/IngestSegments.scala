@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The per-ingest segment lifecycle under every [[SegmentIndex]] (the
   * MinHash-LSH bands/docs, embedding-LSH bands/vecs, chunk-hash, ANN
@@ -41,7 +42,9 @@ import org.apache.spark.sql.functions._
   * The fold itself is a caller-supplied per-table function (dedup
   * exact rows for band tables; latest-version-per-key for doc/vector
   * tables — the fold input carries the `ingest` column so recency can
-  * be resolved inside the fold).
+  * be resolved inside the fold). A retractable table keeps its
+  * tombstones in a side table beside it, never in its own rows (the
+  * TOMBSTONE convention at [[resolveTombstones]]).
   */
 object IngestSegments {
 
@@ -66,26 +69,19 @@ object IngestSegments {
     * which a streaming batch retry re-plans and survives (transient,
     * never silent). Do NOT enable spark.sql.files.ignoreMissingFiles on
     * index paths: it would turn that failure into silently-missing
-    * index rows. */
-  def readLive(spark: SparkSession, tablePath: String): Option[DataFrame] =
-    readLiveWithIds(spark, tablePath).map(_._1)
-
-  /** readLive plus the EXACT segment-id listing the returned frame was
-    * planned over — for callers whose downstream logic branches on the
-    * segment count (e.g. PqOps skips its latest-wins window on a
-    * single-segment index): a second listing could disagree with the
-    * frame under a concurrent ingest/compact (TOCTOU), this cannot. */
-  def readLiveWithIds(spark: SparkSession,
-      tablePath: String): Option[(DataFrame, Seq[Long])] =
+    * index rows. A caller that knows the stored `schema` passes it and
+    * skips the schema-inference job. */
+  def readLive(spark: SparkSession, tablePath: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
     // a concurrent compact delete surfaces as PATH_NOT_FOUND: re-list
     // and retry
     Hfs.withPathRaceRetry() {
       val ids = liveSegments(spark, tablePath)
       if (ids.isEmpty) None
       else try {
-        Some((spark.read.option("basePath", tablePath)
+        Some(schema.fold(spark.read)(spark.read.schema).option("basePath", tablePath)
           .parquet(ids.map(id => s"$tablePath/ingest=$id"): _*)
-          .withColumn("ingest", col("ingest").cast("long")), ids))
+          .withColumn("ingest", col("ingest").cast("long")))
       } catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
@@ -107,9 +103,10 @@ object IngestSegments {
   def alignToLayout(df: DataFrame, cols: String*): DataFrame =
     df.repartition(cols.map(col): _*)
 
-  /** [[readLiveWithIds]] restricted to the partition directories the
-    * caller will actually read: lists each live segment's child dirs
-    * once (one listStatus per segment), keeps those `keepDir` accepts
+  /** [[readLive]] plus its segment-id listing, restricted to the
+    * partition directories the caller will actually read: lists each
+    * live segment's child dirs once (one listStatus per segment),
+    * keeps those `keepDir` accepts
     * (names like `bucket=37`), and plans the scan over ONLY those leaf
     * dirs — basePath-rooted, so the partition columns survive. Listing
     * cost then scales with segments + kept dirs, not total dirs: a
@@ -120,7 +117,7 @@ object IngestSegments {
     * when a key's versions straddle segments. None when the table is
     * absent, empty, or no segment has a kept dir — callers that probe
     * treat all three as "nothing indexed under these buckets". Same
-    * delete-race retry contract as [[readLiveWithIds]] — but the race
+    * delete-race retry contract as [[readLive]] — but the race
     * needs its OWN detector here: a folded segment deleted between the
     * id listing and its childDirs lists EMPTY (childDirs of a missing
     * path returns empty, not an error), so unlike the root-planned
@@ -182,188 +179,40 @@ object IngestSegments {
     *
     * A retractable table carries per row a LOGICAL ingest column
     * (`ing` = the writing batch's id, persisted as DATA) and writes
-    * retractions as TOMBSTONE rows in the SAME segment id space, each
-    * marked by a table-chosen indicator (a sentinel the schema can
-    * never produce, or an explicit boolean). Latest-wins per key: a
+    * each batch's retracted keys as (key, ing) rows into a tombstone
+    * SIDE TABLE beside it ([[writeTombstones]]), so the table itself
+    * holds only real rows. Every retractable store uses this one
+    * placement: a partition-pruned [[SegmentIndex]] needs it (a
+    * tombstone cannot know which partition dir its victim's row lives
+    * in), and the [[LedgerStore]]s share it. Latest-wins per key: a
     * row is live iff no tombstone for its key has `ing` ≥ the row's —
-    * so a later re-ingest (CDC insert-after-delete) resurrects the
-    * key. `ing` MUST be a data column, not the directory id: a
-    * compaction fold keeps rows under a directory id below every live
-    * segment, and comparing by directory id would let any live
-    * tombstone kill every folded row — including ones that survived
-    * that very tombstone inside the fold.
+    * so a later re-ingest (CDC insert-after-delete) resurrects the key.
+    * `ing` MUST be a data column, not the directory id: a compaction
+    * fold keeps rows under a directory id below every live segment,
+    * and comparing by directory id would let any live tombstone kill
+    * every folded row — including ones that survived that very
+    * tombstone inside the fold.
     *
-    * Folds apply the resolution to DROP dead rows but KEEP the
-    * tombstones themselves (deduped to the newest per key, `ing`
-    * preserved): re-applying a kept tombstone is idempotent by the
-    * `ing` comparison, which is what keeps the rename-before-delete
-    * crash window safe — a reader racing a compact's delete phase sees
-    * fold + leftover source segments, and both resolve every row to
-    * the SAME verdict (duplicate tolerance extends to tombstones).
-    * Dropping an absorbed tombstone instead would transiently
-    * RESURRECT the retracted rows still readable in a not-yet-deleted
-    * source segment — wrong rows, not tolerable duplicates. Tombstones
-    * are retracted-key-sized and parquet-RLE-friendly; side-table
-    * tombstones additionally retire once provably inert
-    * ([[compactTombstones]]' purge — safe there, and ONLY there,
-    * because the purge check runs strictly after the row store's
-    * delete phase), in-store ones with the store rebuild.
-    *
-    * The resolve plans the store scan twice (tombstone aggregate +
-    * live rows) — the tombstone side prunes to nothing on row-group
-    * stats when no retraction ever happened — and ROUTES the join on
-    * the aggregate's counted size (see [[applyTombstones]]). */
-  def resolveTombstones(rows: DataFrame, keyCol: String, ingCol: String,
-      isTomb: Column): DataFrame =
-    applyTombstones(rows.filter(!isTomb),
-      rows.filter(isTomb).select(col(keyCol), col(ingCol)), keyCol, ingCol)
+    * The resolve: `rows` less the rows the side table at `tombPath`
+    * kills. A store that never retracted has no side table, and then
+    * `rows` comes back unchanged with no Spark job run; otherwise
+    * [[applyTombstones]] routes the join (the side table is read with
+    * the rows' key type, no inference job). `exclude` drops one tombstone
+    * segment: a batch that reads the store before its own tombstones
+    * land excludes its own id, so a replay sees what its first attempt
+    * saw. Folds drop the dead rows, and [[compactTombstones]] then
+    * retires the tombstones left with nothing to kill. */
+  def resolveTombstones(rows: DataFrame, tombPath: String, keyCol: String,
+      exclude: Option[Long] = None): DataFrame =
+    readLive(rows.sparkSession, tombPath, Some(StructType(Seq(
+        rows.schema(keyCol), StructField("ing", LongType))))).fold(rows) { t =>
+      applyTombstones(rows, exclude.fold(t)(x => t.filter(col("ingest") =!= x))
+        .select(col(keyCol), col("ing")), keyCol, "ing")
+    }
 
-  /** How a store's in-row tombstone indicator shows up in parquet
-    * column statistics, for [[resolveTombstones]]' footer fast path.
-    * The two shapes the [[LedgerStore]]s use: a numeric sentinel
-    * (tombstones are `column < 0` — SubstrIndexSink's pos, the text
-    * ledgers' tf/n/occ) and a boolean flag (`column` true —
-    * SessionSink/RetentionSink/BenchRegistrySink's tomb). */
-  sealed trait TombStat { def column: String }
-  object TombStat {
-    /** Tombstones are rows with `column < 0`; `min(column) >= 0` over
-      * every row group proves none exist (nulls never satisfy `< 0`,
-      * and parquet min/max cover exactly the non-null values). */
-    final case class NonNegative(column: String) extends TombStat
-    /** Tombstones are rows with boolean `column` true; `max(column) =
-      * false` over every row group proves none exist. */
-    final case class NeverTrue(column: String) extends TombStat
-  }
-
-  /** [[resolveTombstones]] with a DRIVER-SIDE footer fast path for the
-    * overwhelming regime — a store that has never seen a retraction:
-    * when every parquet footer behind `rows` PROVES no tombstone row
-    * exists (per `stat`), the resolve's tombstone aggregate would be
-    * empty, its route "none", and the returned frame `rows` filtered to
-    * non-tombstones — so that frame is returned directly, skipping the
-    * aggregate's localCheckpoint + count (2 Spark jobs whose tasks list
-    * and open every store file just to prune it on the same row-group
-    * stats this check reads once on the driver). Identical answer by
-    * construction on BOTH branches: proof ⇒ route "none" ⇒ the slow
-    * path returns the same filtered frame. Any doubt — missing stats,
-    * unreadable footer, a file raced away by a compact, a non-file
-    * frame, or more files than `spark.graft.tombstat.maxFiles`
-    * (driver-sequential footer reads must not replace a distributed
-    * scan on huge stores) — falls back to the full resolve:
-    * degradation in cost only, never in answer. */
-  def resolveTombstones(rows: DataFrame, keyCol: String, ingCol: String,
-      isTomb: Column, stat: TombStat): DataFrame =
-    if (statsProveNoTombstones(rows, stat)) rows.filter(!isTomb)
-    else resolveTombstones(rows, keyCol, ingCol, isTomb)
-
-  /** True iff every file behind `rows` (its scan's own listing —
-    * `inputFiles`, a driver metadata call; a filter above the scan does
-    * not prune it, which only widens the checked set, never narrows
-    * it) has row-group statistics proving the tombstone predicate
-    * matches no row. Empty `inputFiles` means "unknown frame", not
-    * "no files" (readLive never plans over zero files), so it fails
-    * the proof. GUARDED on the frame's leaves all being file-source
-    * relations (the r17 advice): `inputFiles` only reflects file-backed
-    * leaves, so a frame unioning a parquet scan with a non-file leaf
-    * (LocalRelation, checkpointed RDD) would return the parquet files
-    * while silently omitting the in-memory side — a false proof. Every
-    * current caller passes pure parquet reads; the walk makes the
-    * precondition mechanical instead of conventional. */
-  private[graft] def statsProveNoTombstones(rows: DataFrame,
-      stat: TombStat): Boolean = {
-    val spark = rows.sparkSession
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val allFileLeaves =
-      try rows.queryExecution.analyzed.collectLeaves().forall {
-        case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-        case _ => false
-      }
-      catch { case scala.util.control.NonFatal(_) => false }
-    val files =
-      try rows.inputFiles
-      catch { case scala.util.control.NonFatal(_) => Array.empty[String] }
-    val maxFiles =
-      spark.conf.get("spark.graft.tombstat.maxFiles", "256").toInt
-    allFileLeaves && files.nonEmpty && files.length <= maxFiles &&
-      files.forall { f =>
-        footerProofCache.contains((f, stat)) || {
-          val ok = footerProvesNoTombstones(spark, f, stat)
-          if (ok) {
-            if (footerProofCache.size > (1 << 16)) footerProofCache.clear()
-            footerProofCache((f, stat)) = ()
-          }
-          ok
-        }
-      }
-  }
-
-  /** Per-JVM footer-proof cache (r18): parquet part names carry
-    * per-job UUIDs, so a path's CONTENT is immutable for the life of
-    * the name (the PqOps.modelCache fingerprint argument) — a file
-    * once proven tombstone-free stays proven, and a hot serving loop
-    * stops re-opening the same footers on every read (the r17
-    * verdict's scale concern with the fast path). Only POSITIVE proofs
-    * are cached: a false can be transient (raced rename, unreadable
-    * footer) and caching it would pin the slow path forever, while a
-    * true is a durable fact about an immutable file. A later
-    * retraction lands in NEW files (new segment or new part names), so
-    * it always misses the cache and fails the proof honestly —
-    * TombstoneRouteSpec pins that sequence. Bounded: cleared wholesale
-    * past 2^16 entries (re-provable cost, never correctness). */
-  private val footerProofCache =
-    scala.collection.concurrent.TrieMap.empty[(String, TombStat), Unit]
-
-  private[graft] def clearFooterProofCacheForTests(): Unit =
-    footerProofCache.clear()
-
-  private def footerProvesNoTombstones(spark: SparkSession, file: String,
-      stat: TombStat): Boolean =
-    try {
-      import scala.jdk.CollectionConverters._
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), Hfs.hadoopConf(spark))
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        reader.getFooter.getBlocks.asScala.forall { b =>
-          b.getRowCount == 0L ||
-            (b.getColumns.asScala
-              .find(_.getPath.toDotString == stat.column) match {
-              case None => false // column absent: cannot prove anything
-              case Some(c) =>
-                val st = c.getStatistics
-                // hasNonNullValue false = all-null chunk OR stats never
-                // recorded — indistinguishable here, so prove only from
-                // recorded non-null min/max (these sinks' indicator
-                // columns are non-null by construction, so real stores
-                // always carry them)
-                st != null && st.hasNonNullValue && (stat match {
-                  case TombStat.NonNegative(_) => st match {
-                    case l: org.apache.parquet.column.statistics.LongStatistics =>
-                      l.getMin >= 0L
-                    case i: org.apache.parquet.column.statistics.IntStatistics =>
-                      i.getMin >= 0
-                    case _ => false
-                  }
-                  case TombStat.NeverTrue(_) => st match {
-                    case bo: org.apache.parquet.column.statistics.BooleanStatistics =>
-                      !bo.getMax
-                    case _ => false
-                  }
-                })
-            })
-        }
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => false }
-
-  /** [[resolveTombstones]] for stores whose tombstones live in a
-    * SEPARATE tiny side table instead of the store's own rows — the
-    * partition-pruned corpora (bucket/cell ANN layouts): a tombstone
-    * cannot know which partition dir its victim's row lives in, so an
-    * in-store tombstone under one bucket would be invisible to a probe
-    * pruned to other buckets and a deleted vector would keep serving.
-    * The side table is retracted-key-sized, unpartitioned, read whole
-    * by every probe. `tombs` rows are (keyCol, ingCol); same
-    * latest-wins semantics as the in-store form.
+  /** `rows` less those a `tombs` (keyCol, ingCol) row kills — the join
+    * behind [[resolveTombstones]]. The side table is retracted-key-sized
+    * and unpartitioned, read whole by every probe.
     *
     * SIZING IS ROUTED, not hinted (the r16 `weak`: a hard
     * `broadcast(t)` never degrades — past executor memory the serving
@@ -371,9 +220,8 @@ object IngestSegments {
     * monotonically until it does). The per-key aggregate is
     * checkpointed once (sparse — retracted keys) and counted, then:
     *
-    *  - 0 tombstones → rows unchanged, NO join at all (the overwhelming
-    *    regime: most stores never see a retraction, and every serving
-    *    read was paying an empty broadcast join for it);
+    *  - 0 tombstones → rows unchanged, NO join at all (every tombstone
+    *    purged, or only the caller's own excluded);
     *  - fits the session broadcast budget (the same 32 B/row costing
     *    as the decontamination registry router — ONE sizing judgment,
     *    [[graft.functions.KeyRoute]]) → broadcast left join, the home
@@ -431,26 +279,38 @@ object IngestSegments {
   /** Side-table tombstone segment writer: the batch's retracted keys
     * as (keyCol, ing = batchId) rows at `tablePath/ingest=batchId` —
     * overwrite-by-own-id, content independent of store state, so
-    * replay idempotence is trivial.
+    * replay idempotence is trivial. A batch that retracts nothing (a
+    * CDC batch without deletes) leaves no segment, and no side table
+    * when it would be the first: a store that never lost a key keeps
+    * its resolve job-free and its bootstraps legal ([[guardBuild]]).
     *
     * TIE GOES TO THE TOMBSTONE: the resolve keeps a row only when its
     * ing is STRICTLY above the key's newest tombstone, so a row
     * ingested under the SAME batch id as a tombstone for its key is
-    * dead — the delete-wins-within-batch rule the mixed-CDC writers
-    * ([[LedgerStore]]'s `cdc`) enforce upstream by anti-joining
-    * in-batch-deleted keys out of the insert side. Side
-    * table callers (the ANN/PQ stores) must uphold the same contract:
-    * never reuse one batch id across a retract*() and an ingest*()
-    * call for the same store unless the delete is meant to win. */
+    * dead — the delete-wins-within-batch rule of the mixed-CDC writers
+    * ([[LedgerStore]]'s `cdc` writes both under one id). The ANN/PQ
+    * stores must uphold the same contract: never reuse one batch id
+    * across a retract*() and an ingest*() call for the same store
+    * unless the delete is meant to win. */
   def writeTombstones(batch: DataFrame, tablePath: String, keyCol: String,
-      batchId: Long): Unit =
+      batchId: Long): Unit = {
+    val seg = s"$tablePath/ingest=$batchId"
+    val n = Observation()
     batch.select(col(keyCol)).distinct()
-      .withColumn("ing", lit(batchId))
-      .write.mode("overwrite").parquet(s"$tablePath/ingest=$batchId")
+      .withColumn("ing", lit(batchId)).observe(n, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(seg)
+    if (n.get("n") == 0L) {
+      Hfs.deleteRecursive(batch.sparkSession, seg)
+      if (liveSegments(batch.sparkSession, tablePath).isEmpty)
+        Hfs.deleteRecursive(batch.sparkSession, tablePath)
+    }
+  }
 
   /** The live tombstone side table — (keyCol, ing) rows, possibly
     * duplicated across segments ([[applyTombstones]]' max makes that
-    * harmless). Empty when no retraction ever happened. */
+    * harmless). Empty when no retraction ever happened. Over a row
+    * store it reads the (keyCol, ing) versions [[compactTombstones]]
+    * protects. */
   def readTombstones(spark: SparkSession, tablePath: String,
       keyCol: String): DataFrame =
     readLive(spark, tablePath) match {
@@ -473,12 +333,13 @@ object IngestSegments {
     *  - current reads: the check runs against the row store's LIVE
     *    listing, so crash-window leftovers of a racing row-store
     *    compact (rename-before-delete) still carry their dead rows and
-    *    KEEP their tombstone — the transient-resurrection hazard that
-    *    forbids purging inside [[LedgerStore]]'s fold cannot arise
-    *    here, because this check happens strictly AFTER the row
-    *    store's own delete phase (the caller sequences corpus compact
-    *    → tombstone compact, and cross-process concurrency is excluded
-    *    by the one-maintenance-process contract);
+    *    KEEP their tombstone — the transient resurrection that purging
+    *    inside a row-store fold would cause cannot arise here, because
+    *    this check happens strictly AFTER the row store's own delete
+    *    phase (the caller sequences row-store compact → tombstone
+    *    compact, [[SegmentIndex.compact]] and [[LedgerStore.compact]],
+    *    and cross-process concurrency is excluded by the
+    *    one-maintenance-process contract);
     *  - future writes: streaming batch ids are monotonic, so every
     *    future re-ingest lands with ing > T and was never killable by
     *    (k, T); a bulk bootstrap's NEGATIVE id is the one violation,
@@ -494,24 +355,29 @@ object IngestSegments {
     * callers that cannot produce the row view. With rows provided, a
     * LONE folded segment is refolded too (foldLone): purging is
     * content-changing maintenance, unlike plain folding where one
-    * segment is already as folded as it gets. */
+    * segment is already as folded as it gets. The rows are read only
+    * when the side table exists: a store that never retracted pays
+    * nothing here. */
   def compactTombstones(spark: SparkSession, tablePath: String,
-      keyCol: String, protectedRows: Option[DataFrame] = None): Unit =
-    compact(spark, tablePath,
-      fold = segs => {
-        val newest = segs.groupBy(col(keyCol)).agg(max(col("ing")).as("ing"))
-        protectedRows match {
-          case None => newest
-          case Some(rows) =>
-            val mins = rows.groupBy(col(keyCol))
-              .agg(min(col("ing")).as("__row_min"))
-            newest.join(mins, Seq(keyCol), "left")
-              .filter(col("__row_min").isNotNull &&
-                col("__row_min") <= col("ing"))
-              .drop("__row_min")
-        }
-      },
-      partitionCols = Seq.empty, foldLone = protectedRows.isDefined)
+      keyCol: String, protectedRows: => Option[DataFrame] = None): Unit =
+    if (liveSegments(spark, tablePath).nonEmpty) {
+      val rowsOpt = protectedRows
+      compact(spark, tablePath,
+        fold = segs => {
+          val newest = segs.groupBy(col(keyCol)).agg(max(col("ing")).as("ing"))
+          rowsOpt match {
+            case None => newest
+            case Some(rows) =>
+              val mins = rows.groupBy(col(keyCol))
+                .agg(min(col("ing")).as("__row_min"))
+              newest.join(mins, Seq(keyCol), "left")
+                .filter(col("__row_min").isNotNull &&
+                  col("__row_min") <= col("ing"))
+                .drop("__row_min")
+          }
+        },
+        partitionCols = Seq.empty, foldLone = rowsOpt.isDefined)
+    }
 
   /** The bmod bucket count is LAYOUT GEOMETRY, not a free parameter: a
     * probe computing bucket ids with a different modulus than the one

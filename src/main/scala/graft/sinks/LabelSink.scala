@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Live dedup-cluster labels — the streaming twin of q115's
   * incremental clustering, for a pipeline whose near-dup EDGES arrive
   * per micro-batch (the index probes produce exactly these:
-  * `DedupOps.probeLshIndex` new↔indexed pairs plus the in-batch pair
+  * `DedupOps.lshIndex.probe` new↔indexed pairs plus the in-batch pair
   * pass). State is a VERSION CHAIN, not additive segments: batch N's
   * table is written as `seq=N`, computed by one
   * `DedupOps.contractionStep` from the latest committed version BELOW

@@ -98,8 +98,8 @@ object Lifecycle {
     * batch id as the replayable tail, so folded = {0} early-returns),
     * then retract(`retract1`) as batch 3, re-ingest(`resurrect`) as
     * batch 4 (the CDC insert-after-delete), a SECOND compaction
-    * (tombstones cross a fold boundary: dead rows dropped, tombstones
-    * carried with their logical `ing`), and a final retract(`retract2`)
+    * (tombstones cross a fold boundary: dead rows dropped, the side
+    * table's inert tombstones purged), and a final retract(`retract2`)
     * left LIVE in the tail as batch 5 (the read-time resolve must mask
     * fold rows and re-kill a resurrected key). The masks come from
     * [[halvingMasks]]. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Incrementally-maintained phrase inverted index — the streaming twin
   * of the q65 batch build, RETRACTABLE since r17. Unlike the counting
   * sinks this store holds PER-DOC LEDGER ROWS (doc_id, phrase, occ,
-  * ing — an [[IngestSegments]] row store with `occ = -1` tombstones)
+  * ing — an [[IngestSegments]] row store with side-table tombstones)
   * and derives all five published aggregates at read time, NOT
   * per-phrase additive partials, because two of the five are not
   * invertible: min_doc/max_doc cannot be maintained under deletion by
@@ -37,8 +37,6 @@ import org.apache.spark.sql.functions._
   * admission live).
   */
 object PhraseIndexSink extends LedgerStore("doc_id",
-    IngestSegments.TombStat.NonNegative("occ"),
-    fill = Seq("phrase" -> lit(""), "occ" -> lit(-1L)),
     dedup = Seq("doc_id", "phrase")) {
 
   /** q65's per-doc ledger rows over one batch of (doc_id, text) — the

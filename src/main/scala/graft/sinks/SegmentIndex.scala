@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    unfolded index served); Some(v) keeps the latest row per key on
   *    version column v — the `ingest` dir column, or the persisted `ing`
   *    of a retractable store;
-  *  - `tomb`: a tombstone side table dir. A partition-pruned store keeps
-  *    its tombstones beside it, not in it: a tombstone cannot know its
-  *    victim's partition ([[IngestSegments.applyTombstones]]).
+  *  - `tomb`: a tombstone side table dir, the one tombstone placement
+  *    every retractable store uses ([[IngestSegments.resolveTombstones]];
+  *    a tombstone cannot know its victim's partition).
   *
   * This class owns the rest, on the [[IngestSegments]] lifecycle: the
   * guarded bootstrap, the segment write (aligned to the partition
@@ -87,7 +87,7 @@ final case class SegmentIndex(table: String, key: String, cols: Seq[String],
       exclude: Option[Long] = None): Option[DataFrame] =
     IngestSegments.readLivePrunedWithIds(spark, dir(path),
         parts.map(p => s"${part.get}=$p").toSet).map { case (df, ids) =>
-      val t = resolveTombstones(spark, path, without(df, exclude))
+      val t = resolved(path, without(df, exclude))
       if (latestBy.isEmpty || ids.size <= 1) t
       else SegmentIndex.latest(t, Seq(key), latestBy.get)
     }
@@ -99,10 +99,9 @@ final case class SegmentIndex(table: String, key: String, cols: Seq[String],
     * row, so a tombstone whose key has no readable row at or below it is
     * provably inert and retires ([[IngestSegments.compactTombstones]]). */
   def compact(spark: SparkSession, path: String): Unit = {
-    IngestSegments.compact(spark, dir(path), fold(spark, path), part.toSeq)
+    IngestSegments.compact(spark, dir(path), fold(path), part.toSeq)
     tomb.foreach(t => IngestSegments.compactTombstones(spark, s"$path/$t", key,
-      protectedRows = Some(readAll(spark, path).map(_.select(col(key), col("ing")))
-        .getOrElse(spark.range(0).select(col("id").as(key), col("id").as("ing"))))))
+      Some(IngestSegments.readTombstones(spark, dir(path), key))))
   }
 
   /** Retraction hook (the CDC `D` route): `batch` carries the deleted
@@ -110,23 +109,18 @@ final case class SegmentIndex(table: String, key: String, cols: Seq[String],
   def retract(path: String)(batch: DataFrame, batchId: Long): Unit =
     IngestSegments.writeTombstones(batch, s"$path/${tomb.get}", key, batchId)
 
-  private def fold(spark: SparkSession, path: String)(src: DataFrame): DataFrame = {
+  private def fold(path: String)(src: DataFrame): DataFrame = {
     val kept = (cols ++ part).map(col)
     latestBy match {
       case None => src.select(kept: _*).dropDuplicates(cols)
       case Some(v) =>
-        SegmentIndex.latest(resolveTombstones(spark, path, src), Seq(key), v)
+        SegmentIndex.latest(resolved(path, src), Seq(key), v)
           .select(kept: _*)
     }
   }
 
-  private def resolveTombstones(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = tomb match {
-    case Some(t) if Hfs.exists(spark, s"$path/$t") =>
-      IngestSegments.applyTombstones(df,
-        IngestSegments.readTombstones(spark, s"$path/$t", key), key, "ing")
-    case _ => df
-  }
+  private def resolved(path: String, df: DataFrame): DataFrame =
+    tomb.fold(df)(t => IngestSegments.resolveTombstones(df, s"$path/$t", key))
 
   private def without(df: DataFrame, exclude: Option[Long]): DataFrame =
     exclude.fold(df)(x => df.filter(col("ingest") =!= lit(x)))

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * ledger — ONE row per doc:
   *
   *  - `rows`: per-doc (doc_id, source, n, ing) [[IngestSegments]]
-  *    ledger; `n = -1` rows are tombstones (real n ≥ 0, sentinel
-  *    unreachable). Read only on deletes.
+  *    ledger, retracted docs tombstoned in the `tomb` side table. Read
+  *    only on deletes.
   *  - `agg`: per-batch (source, n_docs, n_tokens) partials as
   *    [[AdditiveSegments]]; retraction writes the retracted docs' live
   *    ledger rows as a NEGATIVE partial, so the reconciled sums
@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   * planner over the live reconciled table.
   */
 object SourceStatsSink extends LedgerStore("doc_id",
-    IngestSegments.TombStat.NonNegative("n"),
-    fill = Seq("source" -> lit(""), "n" -> lit(-1L)),
     dedup = Seq("doc_id"), ledger = "/rows",
     agg = Some("agg" -> new SumStore(Seq("source"), Seq("n_docs", "n_tokens"))(
       (rows, _) => graft.functions.TextOps.sourceStatsFromRows(rows)))) {

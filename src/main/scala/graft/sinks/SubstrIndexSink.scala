@@ -11,12 +11,11 @@ import org.apache.spark.sql.functions._
   *    contract, rename-before-delete compaction; the span probe dedups
   *    on (doc_id, pos) — h is functionally determined by them — so a
   *    crash-window duplicate can never split an island or inflate its
-  *    n_grams). `ing` is the writing batch's id persisted as DATA and
-  *    `pos = -1` rows are TOMBSTONES — the [[IngestSegments]]
-  *    retraction convention (positions are ≥ 1 by construction, so the
-  *    sentinel is unreachable): a doc deleted upstream (the CDC `D`
-  *    route) is retracted by [[retract]], and every read resolves
-  *    latest-wins per doc before serving.
+  *    n_grams). `ing` is the writing batch's id persisted as DATA, and
+  *    a doc deleted upstream (the CDC `D` route) is retracted by
+  *    [[retract]] into the `tomb` side table — the [[IngestSegments]]
+  *    retraction convention: every read resolves latest-wins per doc
+  *    before serving.
   *  - `counts`: each batch's gram-count partial (h, n) as
   *    [[AdditiveSegments]] (sum-reconciled; counts cannot tolerate
   *    duplicates, so that lifecycle's delete-before-rename protocol
@@ -44,8 +43,6 @@ import org.apache.spark.sql.functions._
   * [[LedgerStore]]'s.
   */
 object SubstrIndexSink extends LedgerStore("doc_id",
-    IngestSegments.TombStat.NonNegative("pos"),
-    fill = Seq("pos" -> lit(-1L), "h" -> lit(0L)),
     dedup = Seq("doc_id", "pos"), ledger = "/pos",
     agg = Some("counts" -> new SumStore(Seq("h"), Seq("n"))(
       (g, _) => g.groupBy(col("h")).agg(count(lit(1)).as("n"))))) {

@@ -1,25 +1,21 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A USER-RETRACTABLE set store: the user-keyed [[LedgerStore]] of
-  * (user_id, payload…, tomb, ing). Each batch lands its distinct
-  * [[rows]] as ingest=N; a user retraction lands one tombstone row per
-  * user, its payload columns filled by `tombFill` (every payload value
-  * is legitimate, so the explicit `tomb` flag marks it — no sentinel
-  * exists). Reads and folds resolve latest-wins per USER: a tombstone
+  * (user_id, payload…, ing). Each batch lands its distinct [[rows]] as
+  * ingest=N; a user retraction lands one side-table tombstone per
+  * user. Reads and folds resolve latest-wins per USER: a tombstone
   * kills every row of the user with ing ≤ it, and rows re-ingested
   * later (higher ing) serve again. The read is the distinct payload
   * set, and the fold dedups on that same payload, so a compaction never
   * changes what a read serves. The two stores below differ only in
   * their rows and their payload columns. */
-abstract class UserSetStore(tombFill: (String, Column)*)
-    extends LedgerStore("user_id", IngestSegments.TombStat.NeverTrue("tomb"),
-      fill = tombFill :+ ("tomb" -> lit(true)),
-      dedup = "user_id" +: tombFill.map(_._1)) {
+abstract class UserSetStore(cols: String*)
+    extends LedgerStore("user_id", dedup = "user_id" +: cols) {
 
-  private val payload = "user_id" +: tombFill.map(_._1)
+  private val payload = "user_id" +: cols
 
   /** The batch's distinct (user_id, payload…) rows. */
   protected def rows(batch: DataFrame): DataFrame =
@@ -50,7 +46,7 @@ abstract class UserSetStore(tombFill: (String, Column)*)
   * The cohort matrix itself stays derive-at-read (see the pre-r17
   * note, unchanged): a later batch can reveal an earlier first-seen
   * day, so the stored state is the activity set, never the matrix. */
-object RetentionSink extends UserSetStore("day" -> lit(null).cast("date")) {
+object RetentionSink extends UserSetStore("day") {
 
   override protected def rows(batch: DataFrame): DataFrame =
     // a timestampless event is no evidence of activity (the q118
@@ -78,5 +74,5 @@ object RetentionSink extends UserSetStore("day" -> lit(null).cast("date")) {
   * the summary from the resolved row set, so deletion needs only the
   * tombstone — the same only-rows-can-serve-deletion argument as the
   * phrase ledger, with the store already row-shaped. */
-object SessionSink extends UserSetStore("start_us" -> lit(0L),
-  "n_events" -> lit(0L), "dur_us" -> lit(0L), "converted" -> lit(0L))
+object SessionSink extends UserSetStore("start_us", "n_events", "dur_us",
+  "converted")

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   *  - `rows`: each batch's per-doc token ledger (doc_id, token, tf,
   *    ing) as an [[IngestSegments]] row store; `ing` is the writing
-  *    batch's id persisted as DATA and `tf = -1` rows are TOMBSTONES
-  *    (tf ≥ 1 by construction, so the sentinel is unreachable). The
+  *    batch's id persisted as DATA, and retracted docs are tombstoned
+  *    in the `tomb` side table. The
   *    ledger exists ONLY to make retraction exact — serving reads
   *    never touch it; its per-batch cost is the batch's distinct
   *    (doc, token) pairs, and folds drop dead rows so it tracks the
@@ -36,8 +36,6 @@ import org.apache.spark.sql.functions._
   * one admission live).
   */
 object VocabSink extends LedgerStore("doc_id",
-    IngestSegments.TombStat.NonNegative("tf"),
-    fill = Seq("token" -> lit(""), "tf" -> lit(-1L)),
     dedup = Seq("doc_id", "token"), ledger = "/rows",
     agg = Some("agg" -> new SumStore(Seq("token"), Seq("freq", "df"))(
       (rows, _) => graft.functions.TextOps.vocabFromRows(rows)))) {

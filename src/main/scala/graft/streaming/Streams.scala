@@ -494,22 +494,11 @@ object Streams {
     // branches — the branch-persist form still re-parsed every envelope
     // once per branch
     val parsed = graft.sources.Envelopes.parseCdc(batch).persist()
-    val decoded = graft.operators.CdcRouter.decode(parsed)
-    try {
-      publishBatch(graft.operators.CdcRouter.facts(decoded, facts),
-        s"$outDir/fact", batchId)
-      publishBatch(graft.operators.CdcRouter.dims(decoded, dims),
-        s"$outDir/dim", batchId)
-      // P4 for the CDC path: corrupt envelopes, unknown CDC types,
-      // unkeyable dim rows (no $.data.id — dims() excludes them), AND
-      // rows of tables in NEITHER config list (a new table emitting
-      // before the config catches up) reach an error sink instead of
-      // vanishing in the route's filters — after the batch commits,
-      // dropped rows are unrecoverable
-      publishBatch(graft.operators.CdcRouter.undecodable(parsed)
-          .unionByName(graft.operators.CdcRouter.unkeyedDims(decoded, dims))
-          .unionByName(graft.operators.CdcRouter.unrouted(decoded, facts ++ dims)),
-        s"$outDir/error", batchId)
+    // P4 for the CDC path: the route table's error route catches every
+    // row the fact/dim filters drop — after the batch commits, dropped
+    // rows are unrecoverable
+    try graft.operators.CdcRouter.routeParsed(parsed, facts, dims).foreach {
+      case (name, out) => publishBatch(out, s"$outDir/$name", batchId)
     } finally { parsed.unpersist(); () }
     // pin retention: replay can only ever target batches the checkpoint
     // has not committed — pins far older than the current batch are
@@ -537,12 +526,8 @@ object Streams {
     * replay. */
   def fanoutBatchWriter(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val parsed = graft.sources.Envelopes.parseLog(batch).persist()
-    try {
-      publishBatch(LogFanout.errors(parsed), s"$outDir/error", batchId)
-      publishBatch(LogFanout.pages(parsed), s"$outDir/page", batchId)
-      publishBatch(LogFanout.displays(parsed), s"$outDir/display", batchId)
-      publishBatch(LogFanout.actions(parsed), s"$outDir/action", batchId)
-      publishBatch(LogFanout.starts(parsed), s"$outDir/start", batchId)
+    try LogFanout.fanoutParsed(parsed).foreach {
+      case (name, out) => publishBatch(out, s"$outDir/$name", batchId)
     } finally parsed.unpersist()
   }
 }

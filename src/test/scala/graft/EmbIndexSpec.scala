@@ -16,16 +16,16 @@ class EmbIndexSpec extends SparkSpec {
     def rv() = Array.fill(32)(rnd.nextGaussian()).toSeq
     val base = rv()
     val dir = java.nio.file.Files.createTempDirectory("graft-emb32").toString
-    functions.SimilarityOps.buildEmbLshIndex(
+    functions.SimilarityOps.embIndex(32).build(
       ((0 to 30).map(i => (i.toLong, rv())) :+ (99L, base))
-        .toDF("vec_id", "v"), dir, dims = 32)
+        .toDF("vec_id", "v"), dir, -1L)
     // a near-duplicate of an indexed 32-dim vector is caught at width 32
     val probeBatch = Seq(
       (200L, base.map(x => x + 1e-4 * rnd.nextGaussian())),
       (201L, Seq.fill(64)(0.1))) // 64-dim: malformed FOR THIS index
       .toDF("vec_id", "v")
-    val dups = functions.SimilarityOps.probeEmbLshIndex(
-      probeBatch, dir, threshold = 0.9, dims = 32)
+    val dups = functions.SimilarityOps.embIndex(32).probe(
+      probeBatch, dir, 0.9, None)
     val hit = dups.select("new_vec", "dup_of")
       .as[(Long, Long)].collect().toSet
     assert(hit.contains((200L, 99L)),
@@ -52,8 +52,8 @@ class EmbIndexSpec extends SparkSpec {
 
   test("probe finds the planted near-dup of an indexed vector; novel vectors pass") {
     val idx = Files.createTempDirectory("emb_idx").toString + "/index"
-    SimilarityOps.buildEmbLshIndex(df(0L -> base, 1L -> other), idx)
-    val dups = SimilarityOps.probeEmbLshIndex(df(10L -> near, 11L -> third), idx)
+    SimilarityOps.embIndex(64).build(df(0L -> base, 1L -> other), idx, -1L)
+    val dups = SimilarityOps.embIndex(64).probe(df(10L -> near, 11L -> third), idx, 0.9, None)
       .select("new_vec", "dup_of").as[(Long, Long)].collect().toSet
     assert(dups == Set((10L, 0L)), s"got $dups")
   }
@@ -62,17 +62,17 @@ class EmbIndexSpec extends SparkSpec {
     val idx = Files.createTempDirectory("emb_compact").toString + "/index"
     // bootstrap (-1) indexes vec 0 v1 = base; batch 0 RE-INGESTS vec 0
     // as `near` (revised) + adds vec 5; batch 1 adds vec 9
-    SimilarityOps.buildEmbLshIndex(df(0L -> base), idx)
-    SimilarityOps.ingestEmbSegment(df(0L -> near, 5L -> other), idx, 0L)
-    SimilarityOps.ingestEmbSegment(df(9L -> third), idx, 1L)
-    def probeAll() = SimilarityOps.probeEmbLshIndex(df(100L -> near, 101L -> third), idx)
+    SimilarityOps.embIndex(64).build(df(0L -> base), idx, -1L)
+    SimilarityOps.embIndex(64).ingest(df(0L -> near, 5L -> other), idx, 0L)
+    SimilarityOps.embIndex(64).ingest(df(9L -> third), idx, 1L)
+    def probeAll() = SimilarityOps.embIndex(64).probe(df(100L -> near, 101L -> third), idx, 0.9, None)
       .select("new_vec", "dup_of", "cosine")
       .as[(Long, Long, Double)].collect().toSet
     val before = probeAll()
     // vec 0 must score against its LATEST (ingest-0, == near) version
     assert(before.exists { case (n, d, c) => n == 100L && d == 0L && c == 1.0 },
       s"latest-version scoring broken pre-compaction: $before")
-    SimilarityOps.compactEmbLshIndex(spark, idx)
+    SimilarityOps.embIndex(64).compact(spark, idx)
     def dirs(table: String) = graft.sinks.Hfs.childDirs(spark, s"$idx/$table", "ingest=")
       .map(_.stripPrefix("ingest=").toLong).toSet
     assert(dirs("bands") == Set(-2L, 1L) && dirs("vecs") == Set(-2L, 1L),
@@ -84,8 +84,8 @@ class EmbIndexSpec extends SparkSpec {
 
   test("probe partition-prunes the index to its bucket set and never shuffles the index side") {
     val idx = Files.createTempDirectory("emb_prune").toString + "/index"
-    SimilarityOps.buildEmbLshIndex(df(0L -> base, 1L -> other, 2L -> third), idx)
-    val cand = SimilarityOps.embProbeCandidates(df(10L -> near), idx)
+    SimilarityOps.embIndex(64).build(df(0L -> base, 1L -> other, 2L -> third), idx, -1L)
+    val cand = SimilarityOps.embIndex(64).candidates(df(10L -> near), idx, None)
     cand.collect()
     val plan = cand.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!plan.contains("Exchange hashpartitioning"),
@@ -109,25 +109,25 @@ class EmbIndexSpec extends SparkSpec {
     // representatives (mirrors LshIndexSpec's probe-cap case).
     val idx = Files.createTempDirectory("emb_cap").toString + "/index"
     val cluster = (0 until 100).map(i => i.toLong -> base.toSeq)
-    SimilarityOps.buildEmbLshIndex(df((cluster :+ (900L -> other)): _*), idx)
+    SimilarityOps.embIndex(64).build(df((cluster :+ (900L -> other)): _*), idx, -1L)
     val probe = df(1000L -> near)
-    val uncapped = SimilarityOps.embProbeCandidates(probe, idx).count()
+    val uncapped = SimilarityOps.embIndex(64).candidates(probe, idx, None).count()
     assert(uncapped >= 100L, s"fixture not hot enough ($uncapped candidates)")
     val cap = 4
-    val capped = SimilarityOps.embProbeCandidates(probe, idx, Some(cap)).count()
+    val capped = SimilarityOps.embIndex(64).candidates(probe, idx, Some(cap)).count()
     assert(capped <= 16L * cap, s"cap leaked: $capped candidates > ${16 * cap}")
-    val dups = SimilarityOps.probeEmbLshIndex(probe, idx, maxPerBucket = Some(cap))
+    val dups = SimilarityOps.embIndex(64).probe(probe, idx, 0.9, Some(cap))
       .select("new_vec", "dup_of").as[(Long, Long)].collect()
     assert(dups.nonEmpty && dups.forall { case (n, d) => n == 1000L && d < cap },
       s"admission lost or matched beyond-cap rows: ${dups.toSeq}")
-    assert(SimilarityOps.embProbeCandidates(probe, idx, None).count() == uncapped)
+    assert(SimilarityOps.embIndex(64).candidates(probe, idx, None).count() == uncapped)
   }
 
   test("replaying an ingest overwrites its own segment; bands table stays narrow") {
     val idx = Files.createTempDirectory("emb_replay").toString + "/index"
     val vecs = df(0L -> base, 1L -> other)
-    SimilarityOps.ingestEmbSegment(vecs, idx, ingestId = 7L)
-    SimilarityOps.ingestEmbSegment(vecs, idx, ingestId = 7L)
+    SimilarityOps.embIndex(64).ingest(vecs, idx, 7L)
+    SimilarityOps.embIndex(64).ingest(vecs, idx, 7L)
     // 2 vecs x 16 bands once in the narrow table; 2 vector rows once
     assert(spark.read.parquet(s"$idx/bands").count() == 32L)
     assert(spark.read.parquet(s"$idx/vecs").count() == 2L)
@@ -147,7 +147,7 @@ class EmbIndexSpec extends SparkSpec {
       2L -> base.take(32).map(java.lang.Double.valueOf),          // wrong length
       3L -> base.map(java.lang.Double.valueOf).updated(3, null: java.lang.Double))
     val withNull = rows.toDF("vec_id", "v")
-    SimilarityOps.buildEmbLshIndex(withNull, idx)
+    SimilarityOps.embIndex(64).build(withNull, idx, -1L)
     val banded = spark.read.parquet(s"$idx/bands")
       .select("vec_id").distinct().as[Long].collect().toSet
     assert(banded == Set(0L, 1L),
@@ -155,8 +155,8 @@ class EmbIndexSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/vecs")
       .select("vec_id").as[Long].collect().toSet == Set(0L, 1L))
     // probing with a malformed batch yields no candidates (and no crash)
-    val probeDups = SimilarityOps.probeEmbLshIndex(
-      withNull.filter(col("vec_id") >= 2), idx)
+    val probeDups = SimilarityOps.embIndex(64).probe(
+      withNull.filter(col("vec_id") >= 2), idx, 0.9, None)
     assert(probeDups.count() == 0L)
   }
 
@@ -167,7 +167,7 @@ class EmbIndexSpec extends SparkSpec {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
     val q = in.toDF().toDF("vec_id", "v").writeStream
       .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch(SimilarityOps.streamingEmbDedupWriter(idx, dir) _)
+      .foreachBatch(SimilarityOps.embIndex(64).writer(idx, dir, 0.9, None) _)
       .start()
     try {
       in.addData(0L -> base, 1L -> other)

@@ -195,24 +195,24 @@ class LayoutCompatSpec extends SparkSpec {
     val path = tmp("lc_textlsh") + "/idx"
     val base = ("the quick brown fox jumps over the lazy dog " * 8).trim
     val other = ("completely different content about spark engines " * 9).trim
-    DedupOps.buildLshIndex(Seq((0L, base)).toDF("doc_id", "text"), path)
-    DedupOps.ingestLshSegment(Seq((1L, other)).toDF("doc_id", "text"), path, 0L)
+    DedupOps.lshIndex.build(Seq((0L, base)).toDF("doc_id", "text"), path, -1L)
+    DedupOps.lshIndex.ingest(Seq((1L, other)).toDF("doc_id", "text"), path, 0L)
     val probeDocs = Seq(
       (10L, base.replaceFirst("lazy", "sleepy")),
       (11L, other.replaceFirst("spark", "flink"))).toDF("doc_id", "text")
     // reader 1: the candidate tier sees buckets from BOTH segments
-    val cands = DedupOps.lshProbeCandidates(probeDocs, path)
+    val cands = DedupOps.lshIndex.candidates(probeDocs, path, None)
       .select(col("new_doc"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(cands.contains((10L, 0L)) && cands.contains((11L, 1L)),
       s"candidates must span bulk AND ingest segments, got $cands")
     // reader 2: the verified probe
-    val before = DedupOps.probeLshIndex(probeDocs, path)
+    val before = DedupOps.lshIndex.probe(probeDocs, path, 0.5, None)
       .select(col("new_doc"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(before == Set((10L, 0L), (11L, 1L)))
-    DedupOps.compactLshIndex(spark, path)
-    val after = DedupOps.probeLshIndex(probeDocs, path)
+    DedupOps.lshIndex.compact(spark, path)
+    val after = DedupOps.lshIndex.probe(probeDocs, path, 0.5, None)
       .select(col("new_doc"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(after == before, "compaction must not change probe verdicts")
@@ -222,25 +222,25 @@ class LayoutCompatSpec extends SparkSpec {
 
   test("embedding lsh index: build/ingest/compact segments all read by candidate and verify probes") {
     val path = tmp("lc_emblsh") + "/idx"
-    SimilarityOps.buildEmbLshIndex(embFrame(1L to 6L), path, dims = 16)
-    SimilarityOps.ingestEmbSegment(embFrame(7L to 12L), path, 0L, dims = 16)
+    SimilarityOps.embIndex(16).build(embFrame(1L to 6L), path, -1L)
+    SimilarityOps.embIndex(16).ingest(embFrame(7L to 12L), path, 0L)
     val probeVecs = Seq(
       (100L, nearVec(2).toSeq),   // near-dup of indexed vec 2 (bulk seg)
       (101L, nearVec(9).toSeq))   // near-dup of indexed vec 9 (ingest seg)
       .toDF("vec_id", "v")
-    val cands = SimilarityOps.embProbeCandidates(probeVecs, path, dims = 16)
+    val cands = SimilarityOps.embIndex(16).candidates(probeVecs, path, None)
       .select(col("new_vec"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(cands.contains((100L, 2L)) && cands.contains((101L, 9L)),
       s"candidates must span bulk AND ingest segments, got $cands")
-    val before = SimilarityOps.probeEmbLshIndex(probeVecs, path,
-        threshold = 0.99, dims = 16)
+    val before = SimilarityOps.embIndex(16).probe(probeVecs, path,
+        0.99, None)
       .select(col("new_vec"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(before.contains((100L, 2L)) && before.contains((101L, 9L)))
-    SimilarityOps.compactEmbLshIndex(spark, path)
-    val after = SimilarityOps.probeEmbLshIndex(probeVecs, path,
-        threshold = 0.99, dims = 16)
+    SimilarityOps.embIndex(16).compact(spark, path)
+    val after = SimilarityOps.embIndex(16).probe(probeVecs, path,
+        0.99, None)
       .select(col("new_vec"), col("dup_of"))
       .as[(Long, Long)].collect().toSet
     assert(after == before, "compaction must not change probe verdicts")

@@ -103,13 +103,40 @@ class LedgerStoreSpec extends SparkSpec {
       }.toMap
   }
 
+  /** Tombstone-resolve jobs started while `f` runs: the jobs that
+    * materialize the resolve's checkpointed tombstone aggregate (their
+    * stage carries the checkpoint's call site in IngestSegments). */
+  private def resolveJobs(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.stageInfos.exists(
+            _.name.startsWith("localCheckpoint at IngestSegments.scala")))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.graft.ListenerBusHook.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    n.get()
+  }
+
   cases.foreach { c =>
     test(s"${c.name}: mixed CDC is delete-wins, a replayed hook rewrites identical bytes, retract/resurrect/compact/tail-retract equals the batch build") {
       val dir = java.nio.file.Files.createTempDirectory(s"ledger-${c.name}").toString
       def check(live: Seq[Long], what: String) =
         assert(rows(c.view(spark, dir)) == rows(c.batch(c.input(live))),
           s"${c.name}: $what must equal the batch build over keys $live")
-      c.writer(dir)(c.input(Seq(1L, 2L, 3L)), 0L)
+      c.cdc(dir)(cdcBatch(c, Seq(1L, 2L, 3L), Nil), 0L)
+      // a store that was only ever written (here by a CDC batch without
+      // deletes) has no tombstone side table, and serving it runs no
+      // tombstone-resolve job
+      assert(!new java.io.File(s"$dir/tomb").exists(),
+        s"${c.name}: a pure write created the tombstone side table")
+      assert(resolveJobs(check(Seq(1L, 2L, 3L), "the first write")) == 0,
+        s"${c.name}: a never-retracted store ran a tombstone-resolve job")
       // key 6 is inserted AND deleted in one batch: never admitted;
       // key 1 is retracted beside fresh inserts 4 and 5
       val mixed = cdcBatch(c, Seq(4L, 5L, 6L), Seq(6L, 1L))
@@ -125,12 +152,27 @@ class LedgerStoreSpec extends SparkSpec {
       check(Seq(2L, 3L, 4L, 5L), "a resurrection")
       c.compact(spark, dir)
       check(Seq(2L, 3L, 4L, 5L), "the fold")
+      // the fold dropped every row of keys 1 and 6, so their folded
+      // tombstones retired; batch 2's segment (keys 2 and 99; the
+      // registry's scope drops 99) is the side table's replayable
+      // newest and stays unfolded
+      val kept = sinks.IngestSegments.readLive(spark, s"$dir/tomb").get
+        .select(col(c.key), col("ingest")).as[(Long, Long)].collect().toSet
+      val batch2 = if (c.name == "registry") Set(2L) else Set(2L, 99L)
+      assert(kept == batch2.map(_ -> 2L),
+        s"${c.name}: the side table after the fold holds $kept")
       c.retract(dir)(keysOf(c, Seq(3L, 1L)), 4L)
       val tail = snapshot(dir)
       c.retract(dir)(keysOf(c, Seq(3L, 1L)), 4L)
       assert(snapshot(dir) == tail,
         s"${c.name}: a replayed retract hook must leave byte-identical segments")
       check(Seq(2L, 4L, 5L), "a live-tail retraction after the fold")
+      // a CDC batch without deletes resurrects key 1 and leaves no
+      // tombstone segment behind
+      c.cdc(dir)(cdcBatch(c, Seq(1L), Nil), 5L)
+      assert(!new java.io.File(s"$dir/tomb/ingest=5").exists(),
+        s"${c.name}: a batch without deletes wrote a tombstone segment")
+      check(Seq(1L, 2L, 4L, 5L), "a CDC re-ingest without deletes")
     }
   }
 

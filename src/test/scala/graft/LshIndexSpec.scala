@@ -17,9 +17,9 @@ class LshIndexSpec extends SparkSpec {
 
   test("probe finds near-dups of indexed docs; novel docs pass") {
     val idx = Files.createTempDirectory("lsh_idx").toString + "/index"
-    DedupOps.buildLshIndex(Seq((0L, base), (1L, other)).toDF("doc_id", "text"), idx)
-    val dups = DedupOps.probeLshIndex(
-      Seq((10L, near), (11L, third)).toDF("doc_id", "text"), idx)
+    DedupOps.lshIndex.build(Seq((0L, base), (1L, other)).toDF("doc_id", "text"), idx, -1L)
+    val dups = DedupOps.lshIndex.probe(
+      Seq((10L, near), (11L, third)).toDF("doc_id", "text"), idx, 0.5, None)
       .select("new_doc", "dup_of").as[(Long, Long)].collect().toSet
     assert(dups == Set((10L, 0L))) // near is a dup of base; third is novel
   }
@@ -31,7 +31,7 @@ class LshIndexSpec extends SparkSpec {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = in.toDF().toDF("doc_id", "text").writeStream
       .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch(DedupOps.streamingDedupWriter(idx, dir) _)
+      .foreachBatch(DedupOps.lshIndex.writer(idx, dir, 0.5, None) _)
       .start()
     try {
       in.addData((0L, base), (1L, other))
@@ -56,8 +56,8 @@ class LshIndexSpec extends SparkSpec {
   test("replaying an ingest overwrites its own segment (no duplicate index rows)") {
     val idx = Files.createTempDirectory("lsh_replay").toString + "/index"
     val docs = Seq((0L, base), (1L, other)).toDF("doc_id", "text")
-    DedupOps.ingestLshSegment(docs, idx, ingestId = 7L)
-    DedupOps.ingestLshSegment(docs, idx, ingestId = 7L) // retry of the same ingest
+    DedupOps.lshIndex.ingest(docs, idx, 7L)
+    DedupOps.lshIndex.ingest(docs, idx, 7L) // retry of the same ingest
     // 2 docs x 8 bands once in the narrow table; 2 hs rows once
     assert(spark.read.parquet(s"$idx/bands").count() == 16L)
     assert(spark.read.parquet(s"$idx/docs").count() == 2L)
@@ -75,38 +75,38 @@ class LshIndexSpec extends SparkSpec {
     // via the kept representatives.
     val idx = Files.createTempDirectory("lsh_cap").toString + "/index"
     val cluster = (0 until 200).map(i => (i.toLong, base))
-    DedupOps.buildLshIndex((cluster :+ (900L, other)).toDF("doc_id", "text"), idx)
+    DedupOps.lshIndex.build((cluster :+ (900L, other)).toDF("doc_id", "text"), idx, -1L)
     val probe = Seq((1000L, near)).toDF("doc_id", "text")
-    val uncapped = DedupOps.lshProbeCandidates(probe, idx).count()
+    val uncapped = DedupOps.lshIndex.candidates(probe, idx, None).count()
     assert(uncapped >= 200L, s"fixture not hot enough ($uncapped candidates)")
     val cap = 4
-    val capped = DedupOps.lshProbeCandidates(probe, idx, Some(cap)).count()
+    val capped = DedupOps.lshIndex.candidates(probe, idx, Some(cap)).count()
     assert(capped <= 8L * cap, s"cap leaked: $capped candidates > ${8 * cap}")
     // admission still detected, and only against kept (lowest-id) members
-    val dups = DedupOps.probeLshIndex(probe, idx, maxPerBucket = Some(cap))
+    val dups = DedupOps.lshIndex.probe(probe, idx, 0.5, Some(cap))
       .select("new_doc", "dup_of").as[(Long, Long)].collect()
     assert(dups.nonEmpty && dups.forall { case (n, d) => n == 1000L && d < cap },
       s"admission lost or matched beyond-cap rows: ${dups.toSeq}")
     // the exact path is untouched by the new parameter
-    assert(DedupOps.lshProbeCandidates(probe, idx, None).count() == uncapped)
+    assert(DedupOps.lshIndex.candidates(probe, idx, None).count() == uncapped)
   }
 
   test("compaction folds old segments; probe results and latest-version scoring unchanged") {
     val idx = Files.createTempDirectory("lsh_compact").toString + "/index"
     // bootstrap (-1) indexes doc 0 v1 = base; batch 0 RE-INGESTS doc 0
     // with revised text (near) + adds doc 5; batch 1 adds doc 9
-    DedupOps.buildLshIndex(Seq((0L, base)).toDF("doc_id", "text"), idx)
-    DedupOps.ingestLshSegment(Seq((0L, near), (5L, other)).toDF("doc_id", "text"), idx, 0L)
-    DedupOps.ingestLshSegment(Seq((9L, third)).toDF("doc_id", "text"), idx, 1L)
-    def probeAll() = DedupOps.probeLshIndex(
-      Seq((100L, near), (101L, third)).toDF("doc_id", "text"), idx)
+    DedupOps.lshIndex.build(Seq((0L, base)).toDF("doc_id", "text"), idx, -1L)
+    DedupOps.lshIndex.ingest(Seq((0L, near), (5L, other)).toDF("doc_id", "text"), idx, 0L)
+    DedupOps.lshIndex.ingest(Seq((9L, third)).toDF("doc_id", "text"), idx, 1L)
+    def probeAll() = DedupOps.lshIndex.probe(
+      Seq((100L, near), (101L, third)).toDF("doc_id", "text"), idx, 0.5, None)
       .select("new_doc", "dup_of", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     val before = probeAll()
     // doc 0 must score against its LATEST (ingest-0, == near) version
     assert(before.exists { case (n, d, j) => n == 100L && d == 0L && j == 1.0 },
       s"latest-version scoring broken pre-compaction: $before")
-    DedupOps.compactLshIndex(spark, idx)
+    DedupOps.lshIndex.compact(spark, idx)
     // folded {-1, 0} -> K=0 -> ingest=-2; newest batch (1) survives
     def dirs(table: String) = graft.sinks.Hfs.childDirs(spark, s"$idx/$table", "ingest=")
       .map(_.stripPrefix("ingest=").toLong).toSet
@@ -120,9 +120,9 @@ class LshIndexSpec extends SparkSpec {
 
   test("probe partition-prunes the index to its bucket set and never shuffles the index side") {
     val idx = Files.createTempDirectory("lsh_prune").toString + "/index"
-    DedupOps.buildLshIndex(
-      Seq((0L, base), (1L, other), (2L, third)).toDF("doc_id", "text"), idx)
-    val cand = DedupOps.lshProbeCandidates(Seq((10L, near)).toDF("doc_id", "text"), idx)
+    DedupOps.lshIndex.build(
+      Seq((0L, base), (1L, other), (2L, third)).toDF("doc_id", "text"), idx, -1L)
+    val cand = DedupOps.lshIndex.candidates(Seq((10L, near)).toDF("doc_id", "text"), idx, None)
     cand.collect()
     // AQE appends "== Initial Plan ==" — assert on the final plan only
     val plan = cand.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)

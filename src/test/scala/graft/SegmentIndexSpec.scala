@@ -42,14 +42,14 @@ class SegmentIndexSpec extends SparkSpec {
 
   private val families = Seq(
     // batch 0: 10 is a near-dup of the bootstrap's 0, 11 is novel
-    Family("text", Seq("bands", "docs"), DedupOps.buildLshIndex(_, _),
-      (idx, out) => DedupOps.streamingDedupWriter(idx, out) _,
+    Family("text", Seq("bands", "docs"), DedupOps.lshIndex.build(_, _, -1L),
+      (idx, out) => DedupOps.lshIndex.writer(idx, out, 0.5, None) _,
       Seq((0L, text), (1L, other)).toDF("doc_id", "text"),
       Seq((10L, text.replaceFirst("lazy", "sleepy")), (11L, third))
         .toDF("doc_id", "text"),
       Seq("doc_id"), Set("[11]")),
-    Family("emb", Seq("bands", "vecs"), SimilarityOps.buildEmbLshIndex(_, _),
-      (idx, out) => SimilarityOps.streamingEmbDedupWriter(idx, out) _,
+    Family("emb", Seq("bands", "vecs"), SimilarityOps.embIndex(64).build(_, _, -1L),
+      (idx, out) => SimilarityOps.embIndex(64).writer(idx, out, 0.9, None) _,
       Seq((0L, base), (1L, vecOther)).toDF("vec_id", "v"),
       Seq((10L, near), (11L, vecThird)).toDF("vec_id", "v"),
       Seq("vec_id"), Set("[11]")),

@@ -118,87 +118,4 @@ class TombstoneRouteSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("retraction history"))
   }
-
-  test("footer stats prove tombstone absence, and never presence") {
-    val root = java.nio.file.Files.createTempDirectory("graft-tombstat").toString
-    // numeric sentinel (pos < 0): a pure store proves, a retracted one
-    // cannot — whatever other rows surround the sentinel
-    Seq((1L, 4L, 0L), (2L, 9L, 0L)).toDF("doc_id", "pos", "ing")
-      .write.parquet(s"$root/pure")
-    Seq((1L, 4L, 0L), (3L, -1L, 1L)).toDF("doc_id", "pos", "ing")
-      .write.parquet(s"$root/tombed")
-    val pure = spark.read.parquet(s"$root/pure")
-    val tombed = spark.read.parquet(s"$root/tombed")
-    val posStat = IngestSegments.TombStat.NonNegative("pos")
-    assert(IngestSegments.statsProveNoTombstones(pure, posStat))
-    assert(!IngestSegments.statsProveNoTombstones(tombed, posStat))
-    // boolean flag (tomb = true)
-    Seq((1L, false), (2L, false)).toDF("user_id", "tomb")
-      .write.parquet(s"$root/bpure")
-    Seq((1L, false), (2L, true)).toDF("user_id", "tomb")
-      .write.parquet(s"$root/btombed")
-    val boolStat = IngestSegments.TombStat.NeverTrue("tomb")
-    assert(IngestSegments.statsProveNoTombstones(
-      spark.read.parquet(s"$root/bpure"), boolStat))
-    assert(!IngestSegments.statsProveNoTombstones(
-      spark.read.parquet(s"$root/btombed"), boolStat))
-    // a frame not backed by files is UNKNOWN, never a proof
-    assert(!IngestSegments.statsProveNoTombstones(
-      Seq((1L, 4L, 0L)).toDF("doc_id", "pos", "ing"), posStat))
-    // a missing column is unknown too
-    assert(!IngestSegments.statsProveNoTombstones(pure,
-      IngestSegments.TombStat.NonNegative("nope")))
-    // the driver-read bound: past maxFiles the proof abstains (huge
-    // stores keep the distributed aggregate instead)
-    spark.conf.set("spark.graft.tombstat.maxFiles", "0")
-    try assert(!IngestSegments.statsProveNoTombstones(pure, posStat))
-    finally spark.conf.unset("spark.graft.tombstat.maxFiles")
-  }
-
-  test("footer-proof cache: repeat serves stay correct, and a later retraction in NEW files fails the proof") {
-    IngestSegments.clearFooterProofCacheForTests()
-    val root = java.nio.file.Files.createTempDirectory("graft-tombcache").toString
-    Seq((1L, 4L, 0L), (2L, 9L, 0L)).toDF("doc_id", "pos", "ing")
-      .write.parquet(s"$root/store")
-    val posStat = IngestSegments.TombStat.NonNegative("pos")
-    val st = spark.read.parquet(s"$root/store")
-    assert(IngestSegments.statsProveNoTombstones(st, posStat))
-    // second serve rides the per-JVM proof cache — same verdict
-    assert(IngestSegments.statsProveNoTombstones(st, posStat))
-    // a retraction arrives as NEW part files (fresh per-job UUID names,
-    // never cached), so the re-listed frame fails the proof honestly
-    Seq((3L, -1L, 1L)).toDF("doc_id", "pos", "ing")
-      .write.mode("append").parquet(s"$root/store")
-    assert(!IngestSegments.statsProveNoTombstones(
-      spark.read.parquet(s"$root/store"), posStat))
-  }
-
-  test("stat-gated resolve equals the full resolve on pure AND tombstoned stores") {
-    val root = java.nio.file.Files.createTempDirectory("graft-tombstatr").toString
-    // two segments, a live version under each ing, plus (on the tombed
-    // store) a pos = -1 tombstone that kills doc 1's ing-0 rows only
-    Seq((1L, 4L, 7L, 0L), (2L, 9L, 8L, 0L), (1L, 5L, 7L, 2L))
-      .toDF("doc_id", "pos", "h", "ing").write.parquet(s"$root/pure")
-    Seq((1L, 4L, 7L, 0L), (2L, 9L, 8L, 0L), (1L, -1L, 0L, 1L),
-        (1L, 5L, 7L, 2L))
-      .toDF("doc_id", "pos", "h", "ing").write.parquet(s"$root/tombed")
-    val posStat = IngestSegments.TombStat.NonNegative("pos")
-    for (store <- Seq("pure", "tombed")) {
-      val raw = spark.read.parquet(s"$root/$store")
-      val slow = IngestSegments
-        .resolveTombstones(raw, "doc_id", "ing", $"pos" < 0)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      val fast = IngestSegments
-        .resolveTombstones(raw, "doc_id", "ing", $"pos" < 0, posStat)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(fast == slow, s"stat-gated resolve diverged on $store store")
-    }
-    // and the tombed resolve actually resolved (doc 1's ing-0 row died)
-    val tombedLive = IngestSegments.resolveTombstones(
-        spark.read.parquet(s"$root/tombed"), "doc_id", "ing", $"pos" < 0,
-        posStat)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(tombedLive == Set((2L, 9L, 8L, 0L), (1L, 5L, 7L, 2L)),
-      s"tombed store resolve drifted: $tombedLive")
-  }
 }

@@ -19,7 +19,8 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 if "--no-verify" not in sys.argv:
     r = subprocess.run(
-        ["sbt", f'runMain graft.Verify {SF} {OUT}'], cwd="/root/repo",
+        ["sbt", f'runMain graft.Verify {SF} {OUT}'],
+        cwd=Path(__file__).resolve().parent.parent,
         capture_output=True, text=True, timeout=1800)
     errs = [l for l in r.stdout.splitlines() if "[verify]" in l or "error]" in l]
     print("\n".join(errs[-20:]))
